@@ -161,7 +161,10 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     * IDENTICAL after projection hash equal by construction, so the frame is
     * deduplicated on the row id before the join — collapsing them is
     * semantics-preserving (the as-of pick among identical rows is identical)
-    * and keeps the final fetch join at exactly one row per entity row.
+    * and keeps the final fetch join at exactly one row per entity row. The
+    * dedup runs over the whole projected frame, payload included; with
+    * array features it plans as a sort aggregate, the one operator that
+    * sorts the payload.
     * Map-typed columns are serialized with `to_json` before hashing (Spark
     * rejects hash expressions over maps because map equality is
     * order-insensitive; `to_json` of our projected rows is deterministic for
@@ -181,15 +184,9 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
       }))
     if (!wide) AsOfJoin.windowed(acc, projected, spec, saltBuckets, hotKeys)
     else {
-      def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-        case _: MapType => true
-        case ArrayType(et, _) => containsMap(et)
-        case st: StructType => st.fields.exists(f => containsMap(f.dataType))
-        case _ => false
-      }
       val rowId = "__graft_rowid"
       val hashInputs = projected.schema.fields.toSeq.map(f =>
-        if (containsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
+        if (AsOfJoin.containsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
       val withId = projected
         .withColumn(rowId, xxhash64(hashInputs: _*))
         .dropDuplicates(rowId)

@@ -30,12 +30,12 @@ object Plans {
     val picks = Seq(
       "q01_pit_asof" -> "windowed as-of join: one exchange + one sort, no row explosion",
       "q03_pull_latest" -> "time-bounded latest: range filter pushed into the parquet scan",
-      "q35_late_asof" -> "late-materialized as-of: narrow window + broadcast-semi payload fetch",
+      "q35_late_asof" -> "late-materialized as-of: ONE narrow window (keys, ts, created, rowid), then a shuffle-hash payload fetch on the row id — the window is evaluated once",
       "q05_tumbling" -> "tumbling agg: partial/final HashAggregate (map-side combine)",
       "q21_rolling" -> "range-frame rolling window",
       "q17_knn" -> "brute-force top-k: broadcast of the query side, codegen'd cosine",
-      "q41_fs_tokens" -> "facade wide-payload routing: token arrays fetched AFTER the window (windowedLate), never sorted inside it",
-      "q47_two_wide_views" -> "entity-side late materialization: TWO array views, each windowing a narrow (key, ts, rowid) probe — no array column in any WINDOW exchange/sort; each payload crosses one hash-join exchange, and the only array-bearing sort is the rowid dedup SortAggregate over the semi-PRUNED fetch set (the windowedLate duplicate guard)",
+      "q41_fs_tokens" -> "facade wide-payload routing: token arrays fetched AFTER the single as-of window (windowedLate) by a shuffle-hash join, never sorted inside it",
+      "q47_two_wide_views" -> "entity-side late materialization: TWO array views, each windowing a narrow (key, ts, rowid) probe — no array column in any WINDOW exchange/sort; ONE as-of window per view; each payload crosses one hash-join exchange, and the only array-bearing sort is the rowid dedup SortAggregate over the whole projected payload (the windowedLate duplicate guard)",
       "q39_ann_ivf" -> "IVF assignment as literal-centroid projection: no join, no window, no xN expansion before the probe equi-join",
       "q37_pack_sequences" -> "two-level packing: per-(lang, shard) cumsum windows + tiny offsets join",
       "q48_hash_split" -> "deterministic hash split: pure codegen'd projection, zero shuffles/exchanges",

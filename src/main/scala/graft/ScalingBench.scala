@@ -91,9 +91,9 @@ object ScalingBench {
     * 4. salted windowed as-of join of the probes (hot key also owns 10% of
     *    probes — entity-salting splits them across buckets, replicating
     *    only the ~200 compacted feature rows);
-    * 5. late materialization: fetch token arrays for ONLY the matched
-    *    seq_ids via broadcast-semi prune + equi-join — the wide payload
-    *    never passes through a window sort;
+    * 5. late materialization: fetch token arrays by one shuffle-hash
+    *    equi-join on the matched seq_id — the wide payload never passes
+    *    through a window sort, and the as-of window is evaluated once;
     * 6. checksum aggregate (bit_xor of xxhash64 — order-independent,
     *    proves identical results across parallelism levels).
     *
@@ -141,11 +141,8 @@ object ScalingBench {
       saltBuckets = if (hot.nonEmpty) SaltBuckets else 1, hotKeys = hot)
 
     // (5) late-materialized token fetch by matched seq_id
-    // no .distinct before the broadcast: the hashed relation dedups keys
-    // itself, and skipping it saves a shuffle + a scheduling round-trip
-    val payload = seqs.select("seq_id", "tokens")
-      .join(broadcast(matched.select("seq_id").na.drop()), Seq("seq_id"), "left_semi")
-    val joined = matched.join(payload, Seq("seq_id"), "left")
+    val joined = matched.join(
+      seqs.select("seq_id", "tokens").hint("shuffle_hash"), Seq("seq_id"), "left")
 
     // checksum sink: forces full evaluation incl. token arrays
     val row = joined.agg(
@@ -256,8 +253,8 @@ object ScalingBench {
          |salted PIT as-of join of probe timestamps (ttl ${TtlSeconds}s,
          |created-ts tie-break, hot key doc_0 = ${HotSharePct}% of rows and
          |probes, salted ×$SaltBuckets) → late-materialized token fetch
-         |(broadcast-semi prune + equi-join on seq_id — wide arrays never
-         |pass through a window sort) → checksum aggregate over the joined
+         |(shuffle-hash equi-join on seq_id — wide arrays never pass through
+         |a window sort) → checksum aggregate over the joined
          |token arrays. Same input files, fresh JVM per level, via
          |spark-submit (see tools/scaling_bench.sh).
          |

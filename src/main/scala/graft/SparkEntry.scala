@@ -451,7 +451,7 @@ object SparkEntry {
 
   /** Facade retrieval of an ARRAY feature (token payload): the q18 scenario
     * driven through the public FeatureStore API — the store detects the wide
-    * payload and routes through windowedLate (narrow window + broadcast-semi
+    * payload and routes through windowedLate (narrow window + shuffle-hash
     * late fetch; see FeatureStore.joinView), so this gate row also proves
     * the wide-payload routing end-to-end. Same oracle as q18.
     */

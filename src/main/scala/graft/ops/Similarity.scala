@@ -105,8 +105,9 @@ object Similarity {
     * [[semDedupPairs]] — ONE definition so the two consumers can never
     * drift: Lloyd-trained centroids indexed 0..k-1 when `trainIters > 0`,
     * else the k lowest-id vectors as deterministic seeds. Returns the
-    * centroids plus the cell-id type; an empty corpus yields Nil for
-    * callers that short-circuit (trainCentroids itself rejects it).
+    * centroids plus the cell-id type. An empty corpus yields Nil for every
+    * `trainIters`, checked before training (trainCentroids itself rejects
+    * it), so both callers return their typed empty frame.
     */
   private def quantizerCentroids(
       df: DataFrame,
@@ -116,12 +117,12 @@ object Similarity {
       trainIters: Int,
       maxLiteralCentroids: Int): (Seq[(Any, Seq[Float])], org.apache.spark.sql.types.DataType) = {
     val cents: Seq[(Any, Seq[Float])] =
-      if (trainIters > 0)
-        trainCentroids(df, idCol, vecCol, k, trainIters, maxLiteralCentroids)
-          .zipWithIndex.map { case (v, i) => (i: Any, v.toSeq) }
-      else df.select(col(idCol), col(vecCol))
+      if (trainIters <= 0) df.select(col(idCol), col(vecCol))
         .orderBy(col(idCol)).limit(k).collect()
         .map(r => (r.get(0), r.getSeq[Float](1))).toSeq
+      else if (df.isEmpty) Nil
+      else trainCentroids(df, idCol, vecCol, k, trainIters, maxLiteralCentroids)
+        .zipWithIndex.map { case (v, i) => (i: Any, v.toSeq) }
     val cidType =
       if (trainIters > 0) org.apache.spark.sql.types.IntegerType
       else df.select(col(idCol)).schema.head.dataType

@@ -3,6 +3,7 @@ package graft.pit
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Point-in-time (as-of) join: for each entity row, attach the latest feature
   * row with `featureTs <= entityTs` and (if a TTL is set)
@@ -134,15 +135,9 @@ object AsOfJoin {
     // resolves the same tie deterministically — the two strategies must
     // agree bit-for-bit. (Map-typed features are not orderable; the facade
     // routes those through the wide path where the row id disambiguates.)
-    def orderable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case a: org.apache.spark.sql.types.ArrayType => orderable(a.elementType)
-      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => orderable(f.dataType))
-      case _ => true
-    }
     val featTie: Seq[Column] =
-      if (orderable(rightBase.schema(FEAT).dataType)) Seq(col(FEAT).asc_nulls_first)
-      else Nil
+      if (containsMap(rightBase.schema(FEAT).dataType)) Nil
+      else Seq(col(FEAT).asc_nulls_first)
     val w = Window
       .partitionBy(partCols.map(col): _*)
       .orderBy((Seq(col(TS).asc, col(TAG).asc, col("__graft_created").asc) ++ featTie): _*)
@@ -166,21 +161,25 @@ object AsOfJoin {
         featCols.map(f => col(s"__graft_pick.`$f`").as(f)): _*)
   }
 
+  /** Whether a type holds a map at any depth. Such values are neither
+    * orderable nor hashable in Spark (map equality is order-insensitive), so
+    * this one predicate decides the window's tie-break column, the salt
+    * source's inputs and the facade's row-id serialization.
+    */
+  private[graft] def containsMap(dt: DataType): Boolean = dt match {
+    case _: MapType => true
+    case ArrayType(et, _) => containsMap(et)
+    case st: StructType => st.fields.exists(f => containsMap(f.dataType))
+    case _ => false
+  }
+
   /** Per-entity-row salt source: hash of ts + every hashable entity column.
     * Package-visible so specs can assert bucket occupancy directly.
     */
-  private[graft] def saltSource(entity: DataFrame, spec: AsOfSpec): Column = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-    def hashable(dt: DataType): Boolean = dt match {
-      case _: MapType => false
-      case ArrayType(et, _) => hashable(et)
-      case st: StructType => st.fields.forall(f => hashable(f.dataType))
-      case _ => true
-    }
+  private[graft] def saltSource(entity: DataFrame, spec: AsOfSpec): Column =
     xxhash64((col(spec.leftTs) +:
-      entity.schema.fields.toSeq.filter(f => hashable(f.dataType))
+      entity.schema.fields.toSeq.filterNot(f => containsMap(f.dataType))
         .map(f => col(f.name))): _*)
-  }
 
   /** Salt the union sides: entity rows get a per-row bucket from the
     * row-unique salt source (ts + payload hash, computed in `windowed`),
@@ -220,20 +219,21 @@ object AsOfJoin {
 
   /** Late-materialized windowed as-of join: the shuffle/sort runs on a
     * NARROW projection (keys, ts, created, rowId); wide feature columns are
-    * fetched afterwards by an equi-join on `rowId` against the original
-    * feature frame, pruned by a broadcast semi-join of the matched ids.
+    * fetched afterwards by one shuffle-hash equi-join on `rowId` against the
+    * original feature frame.
     *
     * Shuffle and sort volume stay O(narrow bytes) regardless of payload
     * width — at 100 TB with ~KB token arrays per row this is the difference
     * between moving ~50 B/row twice and moving the full payload through
     * every exchange and sort (measured locally: the wide-through-the-window
-    * plan is I/O-bound and stops scaling with cores; this one scales).
+    * plan is I/O-bound and stops scaling with cores; this one scales). The
+    * matched frame feeds only the fetch join, so its exchange, sort and
+    * window are evaluated once; the payload is not pruned to the matched
+    * ids first — a prune built from `matched` would evaluate the window a
+    * second time.
     *
     * `rowId` must uniquely identify feature rows (a stable table key, e.g.
-    * a sequence id — never a nondeterministically generated id). When the
-    * matched-id set is too large to broadcast, pass
-    * `broadcastFetch = false`: the fetch becomes a shuffle equi-join —
-    * still far cheaper than sorting wide rows inside the window.
+    * a sequence id — never a nondeterministically generated id).
     */
   def windowedLate(
       entity: DataFrame,
@@ -241,25 +241,18 @@ object AsOfJoin {
       spec: AsOfSpec,
       rowId: String,
       saltBuckets: Int = 1,
-      hotKeys: Seq[Any] = Nil,
-      broadcastFetch: Boolean = true): DataFrame = {
+      hotKeys: Seq[Any] = Nil): DataFrame = {
     val narrowFeature = feature.select(
       (spec.keys ++ Seq(spec.rightTs) ++ spec.createdTs.toSeq :+ rowId)
         .distinct.map(col): _*)
     val matched = windowed(entity, narrowFeature, spec.copy(features = Seq(rowId)),
       saltBuckets, hotKeys)
     val payload = feature.select((rowId +: spec.features).distinct.map(col): _*)
-    val pruned =
-      if (broadcastFetch)
-        payload.join(
-          broadcast(matched.select(col(rowId)).na.drop().distinct()),
-          Seq(rowId), "left_semi")
-      else payload
     // shuffle-HASH fetch, not sort-merge: the wide payload crosses exactly
     // one exchange (to its rowId partition) and is never sorted — a
     // sort-merge fetch would re-sort every payload byte just to equi-join
     // on an 8-byte key
-    matched.join(pruned.hint("shuffle_hash"), Seq(rowId), "left")
+    matched.join(payload.hint("shuffle_hash"), Seq(rowId), "left")
   }
 
   /** Range-join strategy (reference SQL shape, bigquery.py:551-694 compressed
@@ -270,15 +263,13 @@ object AsOfJoin {
       entity: DataFrame,
       feature: DataFrame,
       spec: AsOfSpec,
-      rowId: String,
-      broadcastFeatures: Boolean = false): DataFrame = {
+      rowId: String): DataFrame = {
     val e = entity.alias("e")
-    val fRaw = feature.select(
+    val f0 = feature.select(
       (spec.keys.map(col) ++
         Seq(col(spec.rightTs).as(TS)) ++
         spec.createdTs.map(c => col(c).as("__graft_created")).toSeq ++
-        spec.features.map(col)): _*)
-    val f0 = (if (broadcastFeatures) broadcast(fRaw) else fRaw).alias("f")
+        spec.features.map(col)): _*).alias("f")
 
     val keyCond = spec.keys
       .map(k => col(s"e.`$k`") === col(s"f.`$k`"))

@@ -101,9 +101,12 @@ final class SnapshotTable(val root: String) {
     // -> exactly one file per non-empty bucket under bucketCol=<k>/
     df.repartition(org.apache.spark.sql.functions.col(bucketCol))
       .write.mode("errorifexists").partitionBy(bucketCol).parquet(dataDir.toString)
+    // the bucket comes from the file's own directory name, never from the
+    // rest of the path: a table root may itself contain a `<bucketCol>=`
+    // segment
     val bucketRe = (java.util.regex.Pattern.quote(bucketCol) + "=(\\d+)").r
     val files = listParquet(dataDir).map { p =>
-      val b = bucketRe.findFirstMatchIn(p.toString).map(_.group(1).toInt)
+      val b = bucketRe.unapplySeq(p.getParent.getFileName.toString).map(_.head.toInt)
         .getOrElse(throw new IllegalStateException(
           s"bucketed commit produced a file outside a $bucketCol= dir: $p"))
       FileStat(p.toString, parquetRowCount(p), Files.size(p), Some(b))

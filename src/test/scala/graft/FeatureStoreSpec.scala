@@ -108,11 +108,12 @@ class FeatureStoreSpec extends SparkSpec {
     assert(out(101L) == List(9))
     assert(out(102L) == Nil) // no history for driver 3 → null feature
 
-    // the physical plan must show the late-fetch shape: a broadcast
-    // semi-prune + equi-join fetch, not the array riding the window sort
-    val plan = store.getHistoricalFeatures(entity, Seq("seqs:toks"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), "expected broadcast-semi late fetch in plan")
+    // the executed plan must show the late-fetch shape: one as-of window
+    // over the narrow projection, the array fetched after it — never
+    // riding a window or a sort
+    val shape = PlanShape.lateFetchViolations(
+      store.getHistoricalFeatures(entity, Seq("seqs:toks")))
+    assert(shape.isEmpty, shape)
 
     // wide routing composes with salting: identical results
     val salted = store.getHistoricalFeatures(entity, Seq("seqs:toks", "seqs:rate"),

@@ -1,0 +1,129 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
+import graft.fixtures.TokenSeq
+
+/** Plan-shape fence of the late-materialized as-of path, read from EXECUTED
+  * plans (AQE final plans included):
+  *
+  *  - exactly one as-of `Window` (the one computing `__graft_last`): the
+  *    matched frame feeds only the fetch join, so nothing evaluates the
+  *    as-of exchange + sort + window a second time;
+  *  - no array column, at any depth, in the input of any `Window` or
+  *    `Sort`: the wide payload never rides a window and is never sorted
+  *    (a sort-merge fetch would sort it). The one exempt sort is the one
+  *    under a `SortAggregate` — FeatureStore's row-id dedup guard, which
+  *    must keep a whole payload row per id.
+  */
+object PlanShape extends AdaptiveSparkPlanHelper {
+
+  def asOfWindows(plan: SparkPlan): Seq[WindowExec] = collect(plan) {
+    case w: WindowExec if w.windowExpression.exists(_.name == "__graft_last") => w
+  }
+
+  private def hasArray(dt: DataType): Boolean = dt match {
+    case _: ArrayType => true
+    case st: StructType => st.fields.exists(f => hasArray(f.dataType))
+    case m: MapType => hasArray(m.keyType) || hasArray(m.valueType)
+    case _ => false
+  }
+
+  /** Window/Sort operators (outside the dedup guard) whose input carries an array. */
+  def arraySortsOrWindows(plan: SparkPlan): Seq[SparkPlan] = {
+    val dedupSorts = collect(plan) {
+      case a: SortAggregateExec => a.child match {
+        case w: WholeStageCodegenExec => w.child
+        case c => c
+      }
+    }
+    collect(plan) {
+      case w: WindowExec if w.child.output.exists(a => hasArray(a.dataType)) => w
+      case s: SortExec if !dedupSorts.exists(_ eq s) &&
+          s.child.output.exists(a => hasArray(a.dataType)) => s
+    }
+  }
+
+  /** Both fences on one executed plan; returns a failure message or "". */
+  def lateFetchViolations(plan: SparkPlan): String = {
+    val windows = asOfWindows(plan).size
+    val arrays = arraySortsOrWindows(plan)
+    Seq(
+      if (windows != 1) s"expected exactly one as-of Window, found $windows" else "",
+      if (arrays.nonEmpty) s"array column fed ${arrays.map(_.nodeName).mkString(", ")}" else "")
+      .filter(_.nonEmpty).mkString("; ")
+  }
+
+  /** Run `df` to completion, then check its final executed plan. */
+  def lateFetchViolations(df: DataFrame): String = {
+    df.collect()
+    lateFetchViolations(df.queryExecution.executedPlan)
+  }
+}
+
+class LatePlanShapeSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def t(min: Int) = java.sql.Timestamp.from(
+    java.time.Instant.parse("2021-04-12T00:00:00Z").plusSeconds(min * 60L))
+
+  test("q35 late as-of: one as-of window, no array in any window/sort input") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q35").toString
+    Seq(
+      (1L, t(0), 1L, "purchase", 5.0, "a"),
+      (2L, t(10), 1L, "signup", 0.0, ""),
+      (3L, t(20), 1L, "purchase", 7.0, "b"),
+      (4L, t(30), 1L, "signup", 0.0, ""),
+      (5L, t(5), 2L, "signup", 0.0, ""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val out = SparkEntry.queries("q35_late_asof")(spark, dir)
+    val v = PlanShape.lateFetchViolations(out)
+    assert(v.isEmpty, v)
+    val got = out.collect().map(r =>
+      r.getAs[Long]("event_id") -> Option(r.getAs[java.lang.Double]("purchase_value")).map(_.doubleValue))
+      .toMap
+    assert(got == Map(2L -> Some(5.0), 4L -> Some(7.0), 5L -> None))
+  }
+
+  test("timedJob: one as-of window, token arrays never enter a window or sort") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_timed").toString
+    TokenSeq.generate(spark, n = 3000, entities = 20, maxTokens = 16, hotSharePct = 10)
+      .write.parquet(s"$dir/sequences")
+    TokenSeq.entityProbes(spark, entities = 20, probesPerEntity = 200, hotSharePct = 30)
+      .write.parquet(s"$dir/probes")
+
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val probeRows =
+      try {
+        val rows = ScalingBench.timedJob(spark, dir)._2
+        // listener events arrive asynchronously; wait for the job's sink
+        eventually(timeout(30.seconds)) {
+          assert(plans.asScala.exists(p => PlanShape.asOfWindows(p).nonEmpty))
+        }
+        rows
+      } finally spark.listenerManager.unregister(listener)
+    assert(probeRows == 20L * 200)
+    val sink = plans.asScala.filter(p => PlanShape.asOfWindows(p).nonEmpty).toSeq
+    assert(sink.size == 1)
+    val v = PlanShape.lateFetchViolations(sink.head)
+    assert(v.isEmpty, v)
+  }
+}

@@ -176,4 +176,36 @@ class MaterializeSpec extends SparkSpec {
     // current stays fully readable
     assert(table.read(spark).count() == 32L)
   }
+
+  test("bucket ids come from each file's own directory, not a bucket-like table root") {
+    import java.nio.file.Files
+    // the table root itself contains a `__bucket=1/` segment
+    val root = Files.createTempDirectory("graft_bucket_root_spec")
+    val table = graft.table.SnapshotTable(s"$root/__bucket=1/t")
+    val plain = graft.table.SnapshotTable(s"$root/plain")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      df.collect().map(r => r.getAs[Long]("k") ->
+        ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
+    val bucketOf = pmod(xxhash64(col("k")), lit(8L)).cast("int")
+
+    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8)
+    Materialize.upsertLatest(plain, b1, Seq("k"), "ts")
+    val files = table.currentSnapshot.get.files
+    // every file records the bucket its keys hash to; the buckets are all
+    // those the batch occupies, not the root's `1`
+    files.foreach { f =>
+      val got = spark.read.parquet(f.path).select(bucketOf).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      assert(got == f.bucket.toSeq, s"${f.path} recorded ${f.bucket}, holds $got")
+    }
+    assert(files.flatMap(_.bucket).toSet ==
+      b1.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet)
+
+    // a following scoped upsert still equals a whole rewrite
+    val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
+    Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
+    Materialize.upsertLatest(plain, b2, Seq("k"), "ts")
+    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+  }
 }

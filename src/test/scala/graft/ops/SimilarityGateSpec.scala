@@ -108,4 +108,26 @@ class SimilarityGateSpec extends SparkSpec {
     assert(rows(lit) == rows(ker))
     assert(rows(lit).nonEmpty)
   }
+
+  test("empty corpus: ivfTopK and semDedupPairs return a typed empty frame for any trainIters") {
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    for (iters <- Seq(0, 3)) {
+      val ivf = Similarity.ivfTopK(empty, empty, "vec_id", "embedding",
+        k = 3, nCentroids = 4, nProbe = 2, trainIters = iters)
+      assert(ivf.count() == 0L)
+      assert(ivf.columns.toSeq == Seq("query_id", "neighbor_id", "cos", "rank"))
+      assert(ivf.schema("neighbor_id").dataType == org.apache.spark.sql.types.LongType)
+      val pairs = Similarity.semDedupPairs(empty, "vec_id", "embedding",
+        nCentroids = 4, threshold = 0.9, trainIters = iters)
+      assert(pairs.count() == 0L)
+      assert(pairs.columns.toSeq == Seq("id1", "id2", "cell", "cos"))
+      // cell ids are trained indices (int) or seed vector ids (the id type)
+      assert(pairs.schema("cell").dataType == (if (iters > 0)
+        org.apache.spark.sql.types.IntegerType else org.apache.spark.sql.types.LongType))
+    }
+    // direct callers of the trainer still get the loud contract
+    intercept[IllegalArgumentException] {
+      Similarity.trainCentroids(empty, "vec_id", "embedding", k = 4, iters = 3)
+    }
+  }
 }

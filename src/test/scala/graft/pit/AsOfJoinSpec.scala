@@ -164,13 +164,11 @@ class AsOfJoinSpec extends SparkSpec {
       .map { case (f, i) => (i.toLong, f.key, f.fts, f.created, f.v) }
       .toDF("fid", "key", "fts", "created", "v")
     val expected = runWindowed(ents, feats, Some(3600L))
-    def late(salt: Int, bcast: Boolean) = collectResult(
+    def late(salt: Int) = collectResult(
       AsOfJoin.windowedLate(ents.toDF(), featDf, spec(Some(3600L)), rowId = "fid",
-        saltBuckets = salt, hotKeys = if (salt > 1) Seq("k0") else Nil,
-        broadcastFetch = bcast))
-    assert(late(1, true) == expected)
-    assert(late(8, true) == expected)
-    assert(late(1, false) == expected)
+        saltBuckets = salt, hotKeys = if (salt > 1) Seq("k0") else Nil))
+    assert(late(1) == expected)
+    assert(late(8) == expected)
   }
 
   test("HOT key with ARRAY payload through windowedLate: salted ≡ unsalted, buckets occupied") {
