@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-round bench contract: ONE JSON line on stdout with per-query wall
@@ -61,16 +63,14 @@ object Bench {
       }
       name -> ((System.nanoTime() - t0) / 1e9, err)
     }
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val errs = results.collect { case (k, (_, Some(e))) => s"\"$k\":${jstr(e)}" }
-      .mkString("{", ",", "}")
+    val qs = ListMap(results.map { case (k, (v, _)) => k -> v }: _*)
+    val errs = ListMap(results.collect { case (k, (_, Some(e))) => k -> e }: _*)
     val nFailed = results.count(_._2._2.isDefined)
     val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
 
     if (only.isDefined) { // subset run: per-query times only, then exit
-      println(s"""{"metric":"subset","value":$total,"unit":"sec","queries":$qs,"failed":$nFailed,"errors":$errs,"sf":"$sfDir"}""")
+      println(Json.write(ListMap("metric" -> "subset", "value" -> total, "unit" -> "sec",
+        "queries" -> qs, "failed" -> nFailed, "errors" -> errs, "sf" -> sfDir)))
       spark.stop()
       return
     }
@@ -99,13 +99,12 @@ object Bench {
     val (nSeq, _, checksum, elapsed) = ScalingBench.timedJob(spark, seqDir)
     val rate = nSeq / elapsed
 
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""failed":$nFailed,"errors":$errs,""" +
-        s""""sf":"$sfDir","pit_fe_sequences_per_sec":$rate,""" +
-        s""""pit_fe_sequences":$nSeq,"pit_fe_elapsed_sec":$elapsed,""" +
-        s""""pit_fe_checksum":$checksum,""" +
-        s""""scaling_evidence":"BENCH/BASELINE.md"}""")
+    println(Json.write(ListMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> qs, "failed" -> nFailed, "errors" -> errs,
+      "sf" -> sfDir, "pit_fe_sequences_per_sec" -> rate,
+      "pit_fe_sequences" -> nSeq, "pit_fe_elapsed_sec" -> elapsed,
+      "pit_fe_checksum" -> checksum,
+      "scaling_evidence" -> "BENCH/BASELINE.md")))
     spark.stop()
   }
 }

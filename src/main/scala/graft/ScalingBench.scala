@@ -3,6 +3,9 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -172,10 +175,9 @@ object ScalingBench {
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
     val (nRows, outRows, checksum, elapsed) = timedJob(spark, dataDir)
     val rate = nRows / elapsed
-    val json =
-      s"""{"cores":$cores,"elapsed_sec":$elapsed,"sequences":$nRows,""" +
-        s""""probe_rows":$outRows,"checksum":$checksum,""" +
-        s""""sequences_per_sec":$rate}"""
+    val json = Json.write(ListMap("cores" -> cores, "elapsed_sec" -> elapsed,
+      "sequences" -> nRows, "probe_rows" -> outRows, "checksum" -> checksum,
+      "sequences_per_sec" -> rate))
     Files.createDirectories(Paths.get(outJson).toAbsolutePath.getParent)
     Files.write(Paths.get(outJson), json.getBytes(StandardCharsets.UTF_8))
     println(s"[run] $json")
@@ -210,11 +212,11 @@ object ScalingBench {
     val elapsed = (System.nanoTime() - t0) / 1e9
     // empty input: bit_xor/sum aggregate to NULL — report packs=0 with null
     // checksum instead of tripping getLong on a null cell
-    def optLong(i: Int): String = if (row.isNullAt(i)) "null" else row.getLong(i).toString
-    val json =
-      s"""{"cores":$cores,"sub_shards":$subShards,"elapsed_sec":$elapsed,""" +
-        s""""sequences":$nRows,"packs":${row.getLong(0)},"checksum":${optLong(1)},""" +
-        s""""tok_sum":${optLong(2)},"sequences_per_sec":${nRows / elapsed}}"""
+    def optLong(i: Int): Option[Long] = if (row.isNullAt(i)) None else Some(row.getLong(i))
+    val json = Json.write(ListMap("cores" -> cores, "sub_shards" -> subShards,
+      "elapsed_sec" -> elapsed, "sequences" -> nRows, "packs" -> row.getLong(0),
+      "checksum" -> optLong(1), "tok_sum" -> optLong(2),
+      "sequences_per_sec" -> (nRows / elapsed)))
     Files.createDirectories(Paths.get(outJson).toAbsolutePath.getParent)
     Files.write(Paths.get(outJson), json.getBytes(StandardCharsets.UTF_8))
     println(s"[pack] $json")
@@ -222,13 +224,11 @@ object ScalingBench {
   }
 
   def report(loJson: String, hiJson: String, outMd: String, extraJsons: Seq[String] = Nil): Unit = {
-    def field(j: String, k: String): Double =
-      s""""$k":([-0-9.eE]+)""".r.findFirstMatchIn(j).get.group(1).toDouble
+    def field(j: JsonNode, k: String): Double = j.get(k).asDouble
     // 64-bit values (checksum, probe_rows) must compare exactly — Double's
     // 53-bit mantissa would silently equate checksums differing in low bits
-    def fieldLong(j: String, k: String): Long =
-      s""""$k":(-?[0-9]+)""".r.findFirstMatchIn(j).get.group(1).toLong
-    def load(p: String) = new String(Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
+    def fieldLong(j: JsonNode, k: String): Long = j.get(k).asLong
+    def load(p: String) = Json.mapper.readTree(Files.readAllBytes(Paths.get(p)))
     val lo = load(loJson)
     val hi = load(hiJson)
     val extras = extraJsons.map(load)

@@ -3,11 +3,14 @@ package graft.fe
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.sql.Timestamp
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Json
 import graft.materialize.Materialize
 import graft.table.SnapshotTable
 
@@ -28,8 +31,12 @@ final case class IntervalMetrics(
 
 object Backfill {
 
-  /** Checkpoint log: one JSON line per completed interval, append-only,
-    * flushed per interval so a crash loses at most the in-flight interval.
+  /** Checkpoint log: one JSON line per completed interval (.jsonl),
+    * append-only, flushed per interval so a crash loses at most the
+    * in-flight interval. A torn last line is skipped; the table watermark
+    * then heals that interval. POSIX paths only: the log stays on
+    * `java.nio` because Hadoop's local filesystem is a `ChecksumFileSystem`,
+    * whose `append` throws `UnsupportedOperationException`.
     */
   final class CheckpointLog(path: String) {
     // toAbsolutePath: a bare relative filename has a null getParent
@@ -37,15 +44,14 @@ object Backfill {
     def completed: Set[String] =
       if (!Files.exists(Paths.get(path))) Set.empty
       else Files.readAllLines(Paths.get(path)).asScala
-        .flatMap(l => """"intervalId":"([^"]+)"""".r.findFirstMatchIn(l).map(_.group(1)))
+        .flatMap(l => Try(Json.mapper.readTree(l).get("intervalId").asText).toOption)
         .toSet
     def append(m: IntervalMetrics): Unit = {
-      val parts = m.partitions.map { case (p, n) => s"""{"pid":$p,"rows":$n}""" }
-        .mkString("[", ",", "]")
-      val line =
-        s"""{"intervalId":"${m.intervalId}","rows":${m.rows},"bytes":${m.bytes},""" +
-          s""""snapshotId":${m.snapshotId},"partitions":$parts}""" + "\n"
-      Files.write(Paths.get(path), line.getBytes(StandardCharsets.UTF_8),
+      val line = Json.write(ListMap(
+        "intervalId" -> m.intervalId, "rows" -> m.rows, "bytes" -> m.bytes,
+        "snapshotId" -> m.snapshotId,
+        "partitions" -> m.partitions.map { case (p, n) => ListMap("pid" -> p, "rows" -> n) }))
+      Files.write(Paths.get(path), (line + "\n").getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
   }
@@ -62,7 +68,7 @@ object Backfill {
     val log = new CheckpointLog(checkpointPath)
     val lastEnd = log.completed
       .flatMap(_.split('_') match {
-        case Array(_, hi) => scala.util.Try(java.time.Instant.parse(hi).toEpochMilli).toOption
+        case Array(_, hi) => Try(java.time.Instant.parse(hi).toEpochMilli).toOption
         case _ => None
       })
     lastEnd.maxOption.map(new Timestamp(_)).getOrElse {

@@ -66,9 +66,9 @@ object Materialize {
   /** Compacting keyed upsert into a snapshot table — the batch-engine
     * counterpart of the reference online store's per-(entity_key, feature)
     * UPDATE-then-INSERT (sqlite.py:76-128). The incoming batch is merged
-    * with the table's CURRENT contents and re-resolved to latest-per-key,
+    * with the table's current contents and re-resolved to latest-per-key,
     * then committed as ONE new snapshot: reads see exactly one row per key
-    * with no read-time resolution, the manifest pointer makes each upsert
+    * with no read-time resolution, the manifest publish makes each upsert
     * atomic (a reader never observes a half-merged table), and time travel
     * to pre-upsert snapshots keeps working. An incoming row LOSES to a
     * stored row with a newer (ts, tie) — order-independent convergence, not

@@ -1,24 +1,43 @@
 package graft.table
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.io.FileNotFoundException
+import java.util.{ConcurrentModificationException, UUID}
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+
+import graft.Json
 
 /** Iceberg-style snapshot-manifest table layer.
   *
   * No Iceberg runtime jar ships in this sandbox (offline coursier), so the
   * snapshot semantics the north rule needs — snapshot isolation, time-travel
   * to a snapshot id, resumable per-partition checkpoints, and per-partition
-  * lineage/row-count/byte metrics — are provided by a minimal manifest layer:
-  * each commit writes parquet files into an immutable `data/<snapshotId>/`
-  * directory and appends a JSON manifest recording the file list + stats.
+  * lineage/row-count/byte metrics — are provided by a minimal manifest layer
+  * on the Hadoop `FileSystem` of `root` (`/local/path`, `file://`, `hdfs://`):
+  *
+  *  - layout: `data/<id>/<attempt>/` holds one commit attempt's parquet
+  *    files; `meta/snap-<id>.json` is the published manifest of snapshot
+  *    `<id>` (file list + stats, one Jackson-encoded [[Snapshot]]);
+  *  - publish: each attempt stages its manifest in its own tmp file and
+  *    renames it onto `meta/snap-<id>.json` WITHOUT overwrite. Exactly one
+  *    attempt per id wins; a loser deletes only its own attempt dir and tmp
+  *    file and throws `ConcurrentModificationException`;
+  *  - current snapshot = the highest published manifest id; there is no
+  *    pointer file to tear, and a crash anywhere before the rename leaves
+  *    only unreferenced files.
+  *
   * Readers select files through a manifest, never by directory listing, so
   * concurrent/failed writers can't corrupt a read (same contract as Iceberg's
-  * metadata tree, radically simplified). Swap-in point for a real Iceberg
-  * catalog is this trait boundary.
+  * metadata tree, radically simplified). The one-winner guarantee is only as
+  * strong as the store's no-overwrite rename: HDFS refuses an existing
+  * destination atomically; Hadoop's local filesystem (a checksum layer over
+  * an overwriting POSIX rename) checks the destination first, so two renames
+  * of one id in the same instant can both pass that check. On stores
+  * without atomic rename (`s3a`) the single-writer rule still applies: one
+  * committer per table at a time.
+  * Swap-in point for a real Iceberg catalog is this class boundary.
   *
   * Reference counterpart: the registry's materialization_intervals
   * (Cimpress-MCP/feast registry.py:208-246) — the reference's only
@@ -34,7 +53,9 @@ final case class FileStat(path: String, rows: Long, bytes: Long,
     bucket: Option[Int] = None)
 final case class Snapshot(
     snapshotId: Long,
-    parentId: Option[Long],
+    // without the content type Jackson fills the erased Option with an
+    // Integer, and the first `parentId.get + 1L` throws ClassCastException
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) parentId: Option[Long],
     files: Seq[FileStat],
     // checkpoint payload: arbitrary key (e.g. interval id) -> done marker
     watermark: Option[String],
@@ -47,34 +68,40 @@ final case class Snapshot(
   def totalBytes: Long = files.map(_.bytes).sum
 }
 
+/** A commit attempt whose files are written and whose manifest is staged
+  * at `tmp`, not yet published.
+  */
+private[table] final case class Staged(snapshot: Snapshot, attemptDir: Path, tmp: Path)
+
 object SnapshotTable {
   def apply(root: String): SnapshotTable = new SnapshotTable(root)
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  // `.crc` sidecars and staged `.snap-*.tmp` files never match
+  private val Manifest = """snap-(\d{9,})\.json""".r
 }
 
 final class SnapshotTable(val root: String) {
-  private def metaDir: Path = Paths.get(root, "meta")
-  private def manifestPath(id: Long): Path = metaDir.resolve(f"snap-$id%09d.json")
-  private def currentPtr: Path = metaDir.resolve("CURRENT")
+  private val rootPath = new Path(root)
+  private lazy val fs: FileSystem = rootPath.getFileSystem(SnapshotTable.hadoopConf)
+  private def metaDir = new Path(rootPath, "meta")
+  private def dataDir(id: Long) = new Path(rootPath, f"data/$id%09d")
+  private def manifestPath(id: Long) = new Path(metaDir, f"snap-$id%09d.json")
 
   /** Append a new snapshot: write df as parquet into a fresh immutable dir,
     * collect per-file stats from the parquet footers (no data re-scan), then
-    * atomically publish the manifest. `numFiles` sizes the write parallelism
+    * publish the manifest. `numFiles` sizes the write parallelism
     * (row-group/file sizing — reference loaders/ingest.py:51-79).
     */
-  def commit(df: DataFrame, numFiles: Int = 0, watermark: Option[String] = None): Snapshot = {
-    Files.createDirectories(metaDir)
-    val parent = currentSnapshotId
-    val id = parent.getOrElse(0L) + 1L
-    val dataDir = Paths.get(root, "data", f"$id%09d")
-    clearOrphan(dataDir)
-    val toWrite = if (numFiles > 0) df.repartition(numFiles) else df
-    toWrite.write.mode("errorifexists").parquet(dataDir.toString)
-    val files = listParquet(dataDir).map { p =>
-      FileStat(p.toString, parquetRowCount(p), Files.size(p))
+  def commit(df: DataFrame, numFiles: Int = 0, watermark: Option[String] = None): Snapshot =
+    publish(stageCommit(df, numFiles, watermark))
+
+  private[table] def stageCommit(df: DataFrame, numFiles: Int,
+      watermark: Option[String]): Staged =
+    stage(watermark) { dir =>
+      val toWrite = if (numFiles > 0) df.repartition(numFiles) else df
+      toWrite.write.mode("errorifexists").parquet(dir.toString)
+      listParquet(dir).map(fileStat(_, None))
     }
-    publish(id, parent, files, watermark)
-  }
 
   /** Bucket-partitioned commit, the write half of
     * [[graft.materialize.Materialize.upsertLatestBucketed]]: `df`'s rows are
@@ -92,65 +119,69 @@ final class SnapshotTable(val root: String) {
       modulus: Int,
       carryForward: Seq[FileStat] = Nil,
       watermark: Option[String] = None): Snapshot = {
-    Files.createDirectories(metaDir)
-    val parent = currentSnapshotId
-    val id = parent.getOrElse(0L) + 1L
-    val dataDir = Paths.get(root, "data", f"$id%09d")
-    clearOrphan(dataDir)
-    // one shuffle on the bucket key -> every bucket lands whole in one task
-    // -> exactly one file per non-empty bucket under bucketCol=<k>/
-    df.repartition(org.apache.spark.sql.functions.col(bucketCol))
-      .write.mode("errorifexists").partitionBy(bucketCol).parquet(dataDir.toString)
     // the bucket comes from the file's own directory name, never from the
     // rest of the path: a table root may itself contain a `<bucketCol>=`
     // segment
     val bucketRe = (java.util.regex.Pattern.quote(bucketCol) + "=(\\d+)").r
-    val files = listParquet(dataDir).map { p =>
-      val b = bucketRe.unapplySeq(p.getParent.getFileName.toString).map(_.head.toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"bucketed commit produced a file outside a $bucketCol= dir: $p"))
-      FileStat(p.toString, parquetRowCount(p), Files.size(p), Some(b))
-    }
-    publish(id, parent, carryForward ++ files, watermark, Some(modulus))
+    publish(stage(watermark, Some(modulus), carryForward) { dir =>
+      // one shuffle on the bucket key -> every bucket lands whole in one
+      // task -> exactly one file per non-empty bucket under bucketCol=<k>/
+      df.repartition(org.apache.spark.sql.functions.col(bucketCol))
+        .write.mode("errorifexists").partitionBy(bucketCol).parquet(dir.toString)
+      listParquet(dir).map { s =>
+        val b = bucketRe.unapplySeq(s.getPath.getParent.getName).map(_.head.toInt)
+          .getOrElse(throw new IllegalStateException(
+            s"bucketed commit produced a file outside a $bucketCol= dir: ${s.getPath}"))
+        fileStat(s, Some(b))
+      }
+    })
   }
 
-  /** Remove leftovers of a CRASHED (never published) commit: `id` was
-    * computed as CURRENT+1, so anything already at its data dir belongs to
-    * a writer that died between its parquet write and its manifest publish.
-    * Without this the retry dies forever on mode("errorifexists"),
-    * defeating the resume contract (the data dir name is derived from the
-    * published CURRENT, so the retry is otherwise idempotent).
+  /** Write one commit attempt: `write` fills the attempt's own
+    * `data/<id>/<attempt>/` dir, and the manifest (carried files first) is
+    * staged in an attempt-unique tmp file next to the published ones.
     */
-  private def clearOrphan(dataDir: Path): Unit =
-    if (Files.exists(dataDir)) {
-      val walk = Files.walk(dataDir)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      finally walk.close()
+  private def stage(watermark: Option[String], bucketModulus: Option[Int] = None,
+      carryForward: Seq[FileStat] = Nil)(write: Path => Seq[FileStat]): Staged = {
+    fs.mkdirs(metaDir)
+    val parent = currentSnapshotId
+    val id = parent.getOrElse(0L) + 1L
+    val attempt = UUID.randomUUID().toString
+    val dir = new Path(dataDir(id), attempt)
+    val snap = Snapshot(id, parent, carryForward ++ write(dir), watermark, bucketModulus)
+    val tmp = new Path(metaDir, s".snap-$id-$attempt.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(Json.mapper.writeValueAsBytes(snap)) finally out.close()
+    Staged(snap, dir, tmp)
+  }
+
+  /** Publish a staged attempt by renaming its manifest onto
+    * `meta/snap-<id>.json` without overwrite. If another attempt already
+    * published that id, remove this attempt's files and throw.
+    */
+  private[table] def publish(s: Staged): Snapshot = {
+    val id = s.snapshot.snapshotId
+    if (!fs.rename(s.tmp, manifestPath(id))) {
+      fs.delete(s.attemptDir, true)
+      fs.delete(s.tmp, false)
+      throw new ConcurrentModificationException(
+        s"snapshot $id of $root was published by another writer; this commit was discarded")
     }
-
-  private def publish(id: Long, parent: Option[Long], files: Seq[FileStat],
-      watermark: Option[String], bucketModulus: Option[Int] = None): Snapshot = {
-    val snap = Snapshot(id, parent, files, watermark, bucketModulus)
-    val tmp = metaDir.resolve(s".snap-$id.tmp")
-    Files.write(tmp, toJson(snap).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(id))
-    Files.write(
-      currentPtr, id.toString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    snap
+    s.snapshot
   }
 
+  /** Highest published manifest id. */
   def currentSnapshotId: Option[Long] =
-    if (Files.exists(currentPtr))
-      Some(new String(Files.readAllBytes(currentPtr), StandardCharsets.UTF_8).trim.toLong)
-    else None
+    try fs.listStatus(metaDir).iterator.map(_.getPath.getName)
+      .collect { case SnapshotTable.Manifest(id) => id.toLong }.maxOption
+    catch { case _: FileNotFoundException => None }
 
-  def snapshot(id: Long): Option[Snapshot] = {
-    val p = manifestPath(id)
-    if (Files.exists(p)) Some(fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
-    else None
-  }
+  def snapshot(id: Long): Option[Snapshot] =
+    try {
+      val in = fs.open(manifestPath(id))
+      try Some(Json.mapper.readValue(in: java.io.InputStream, classOf[Snapshot]))
+      finally in.close()
+    } catch { case _: FileNotFoundException => None }
 
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshot)
 
@@ -172,14 +203,12 @@ final class SnapshotTable(val root: String) {
 
   /** Full snapshot chain, newest first (lineage). */
   def history: Seq[Snapshot] =
-    currentSnapshotId.toSeq.flatMap { cur =>
-      Iterator.iterate(snapshot(cur))(s => s.flatMap(_.parentId).flatMap(snapshot))
-        .takeWhile(_.isDefined).flatten.toSeq
-    }
+    Iterator.iterate(currentSnapshot)(_.flatMap(_.parentId).flatMap(snapshot))
+      .takeWhile(_.isDefined).flatten.toSeq
 
   /** Small-file compaction (the Iceberg `rewrite_data_files` analogue — the
     * table-maintenance op that keeps a 100 TB table scannable after many
-    * small incremental commits): rewrite the CURRENT snapshot's rows into
+    * small incremental commits): rewrite the current snapshot's rows into
     * ~`targetBytes` files and commit the result as a NEW snapshot. Data is
     * unchanged (one distributed read + write, no driver materialization);
     * older snapshots remain time-travelable until [[expireSnapshots]]
@@ -204,118 +233,67 @@ final class SnapshotTable(val root: String) {
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val chain = history
-    val live = chain.take(keepLast).flatMap(_.files.map(_.path)).toSet
-    val expired = chain.drop(keepLast)
+    val (kept, expired) = chain.splitAt(keepLast)
+    // recorded paths and listed paths compare in one qualified form
+    def qualified(f: FileStat) = fs.makeQualified(new Path(f.path))
+    val live = kept.flatMap(_.files.map(qualified)).toSet
     // Deletion is driven by the expired MANIFESTS' file lists, not by
     // snapshot-id-derived directories: a carried-forward file lives in its
     // WRITER's data/<id>/ dir but may only become unreferenced when a LATER
     // snapshot that re-referenced it expires — walking only the expired ids'
     // own dirs would orphan it forever. data/ dirs are also swept for
-    // non-live stragglers (_SUCCESS markers, files from expired-earlier
-    // snapshots whose ids are no longer in the chain).
-    val dead = expired.flatMap(_.files.map(_.path)).toSet -- live
-    dead.foreach(p => Files.deleteIfExists(Paths.get(p)))
-    val dataRoot = Paths.get(root, "data")
-    val keptIds = chain.take(keepLast).map(s => f"${s.snapshotId}%09d").toSet
-    val currentId = currentSnapshotId.getOrElse(0L)
-    if (Files.exists(dataRoot)) {
-      val walk = Files.walk(dataRoot)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.filter(_ != dataRoot).foreach { p =>
-          val ownDir = dataRoot.relativize(p).getName(0).toString
-          // a dir with id > current belongs to an UNPUBLISHED in-flight
-          // commit — never sweep it (its files are live-to-be)
-          val published = ownDir.toLongOption.exists(_ <= currentId)
-          if (Files.isRegularFile(p)) {
-            // only sweep inside published dirs owned by NO kept snapshot: a
-            // kept snapshot's dir may hold files a future expiry still needs
-            if (published && !keptIds.contains(ownDir) && !live.contains(p.toString))
-              Files.deleteIfExists(p)
-          } else if (published) {
-            val ls = Files.list(p)
-            val empty = try !ls.iterator().hasNext finally ls.close()
-            if (empty) Files.deleteIfExists(p)
-          }
-        }
-      finally walk.close()
+    // non-live stragglers (_SUCCESS markers, discarded attempts, files from
+    // expired-earlier snapshots whose ids are no longer in the chain).
+    (expired.flatMap(_.files.map(qualified)).toSet -- live).foreach(fs.delete(_, false))
+    val keptIds = kept.map(_.snapshotId).toSet
+    val currentId = chain.headOption.fold(0L)(_.snapshotId)
+    val dataRoot = new Path(rootPath, "data")
+    if (fs.exists(dataRoot)) fs.listStatus(dataRoot).foreach { s =>
+      // only sweep published dirs owned by NO kept snapshot: a dir with
+      // id > current belongs to an in-flight commit (its files are
+      // live-to-be), and a kept snapshot's dir may hold files a future
+      // expiry still needs
+      val id = s.getPath.getName.toLongOption
+      if (s.isDirectory && id.exists(i => i <= currentId && !keptIds(i))) sweep(s.getPath, live)
     }
     expired.map { s =>
-      Files.deleteIfExists(manifestPath(s.snapshotId))
+      fs.delete(manifestPath(s.snapshotId), false)
       s.snapshotId
     }
   }
 
-  private def listParquet(dir: Path): Seq[Path] =
-    Files.walk(dir).iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .toSeq.sortBy(_.toString)
+  /** Delete every non-live file under `dir`, then `dir` itself once empty. */
+  private def sweep(dir: Path, live: Set[Path]): Unit = {
+    fs.listStatus(dir).foreach { s =>
+      if (s.isDirectory) sweep(s.getPath, live)
+      else if (!live(s.getPath)) fs.delete(s.getPath, false)
+    }
+    if (fs.listStatus(dir).isEmpty) fs.delete(dir, true)
+  }
 
-  /** Row count from the parquet footer only — no data scan. The Hadoop
-    * Configuration is shared (loading one costs milliseconds — per-file
-    * construction was pure driver latency on every bucketed micro-batch
-    * commit).
+  /** Parquet files under `dir`, recursively. `listStatus`, not `listFiles`:
+    * the latter's located statuses load each local file's owner and
+    * permissions, which measurably slowed every commit.
     */
-  private def parquetRowCount(p: Path): Long = {
+  private def listParquet(dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory) listParquet(s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(s)
+      else Nil
+    }.sortBy(_.getPath.toString)
+
+  /** File stats for the manifest. A scheme-less root records plain absolute
+    * paths (the form earlier manifests hold); a URI root records qualified
+    * ones. The row count comes from the parquet footer only — no data scan.
+    */
+  private def fileStat(s: FileStatus, bucket: Option[Int]): FileStat = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), SnapshotTable.hadoopConf)
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
-  // -- tiny hand-rolled JSON (no extra deps available offline) --------------
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-  private def toJson(s: Snapshot): String = {
-    val fs = s.files.map { f =>
-      val b = f.bucket.map(k => s""","bucket":$k""").getOrElse("")
-      s"""{"path":"${esc(f.path)}","rows":${f.rows},"bytes":${f.bytes}$b}"""
-    }.mkString("[", ",", "]")
-    val par = s.parentId.map(_.toString).getOrElse("null")
-    val wm = s.watermark.map(w => "\"" + esc(w) + "\"").getOrElse("null")
-    val mod = s.bucketModulus.map(m => s""","bucketModulus":$m""").getOrElse("")
-    s"""{"snapshotId":${s.snapshotId},"parentId":$par,"watermark":$wm$mod,"files":$fs}"""
-  }
-  /** Full inverse of [[esc]] — backslash escapes AND \\uXXXX control chars;
-    * a partial unescape broke round-trips (a watermark with a quote no
-    * longer matched its own interval id, so Backfill's crash healing and
-    * `expireSnapshots`' live-path check silently failed for such keys).
-    */
-  private def unesc(s: String): String = {
-    val out = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => out.append('"'); i += 2
-          case '\\' => out.append('\\'); i += 2
-          case 'n' => out.append('\n'); i += 2
-          case 'u' if i + 5 < s.length =>
-            out.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => out.append(c).append(other); i += 2
-        }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
-  private def fromJson(j: String): Snapshot = {
-    def longField(k: String): Option[Long] =
-      s""""$k":\\s*(-?\\d+)""".r.findFirstMatchIn(j).map(_.group(1).toLong)
-    val id = longField("snapshotId").get
-    val parent = s""""parentId":\\s*(null|-?\\d+)""".r.findFirstMatchIn(j)
-      .map(_.group(1)).filter(_ != "null").map(_.toLong)
-    val wm = s""""watermark":\\s*"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(j)
-      .map(m => unesc(m.group(1)))
-    val fileRe = """\{"path":"((?:[^"\\]|\\.)*)","rows":(\d+),"bytes":(\d+)(?:,"bucket":(\d+))?\}""".r
-    val files = fileRe.findAllMatchIn(j).map { m =>
-      FileStat(unesc(m.group(1)),
-        m.group(2).toLong, m.group(3).toLong, Option(m.group(4)).map(_.toInt))
-    }.toSeq
-    Snapshot(id, parent, files, wm,
-      longField("bucketModulus").map(_.toInt))
+    val path =
+      if (rootPath.toUri.getScheme == null) Path.getPathWithoutSchemeAndAuthority(s.getPath)
+      else s.getPath
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, SnapshotTable.hadoopConf))
+    val rows = try r.getRecordCount finally r.close()
+    FileStat(path.toString, rows, s.getLen, bucket)
   }
 }

@@ -5,11 +5,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -65,6 +67,18 @@ object PlanShape extends AdaptiveSparkPlanHelper {
       if (arrays.nonEmpty) s"array column fed ${arrays.map(_.nodeName).mkString(", ")}" else "")
       .filter(_.nonEmpty).mkString("; ")
   }
+
+  /** Shuffle exchanges hash-partitioned on a string expression over
+    * `column`: the exchanges that would carry that text as their key.
+    */
+  def exchangesKeyedOn(plan: SparkPlan, column: String): Seq[ShuffleExchangeExec] =
+    collect(plan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(k =>
+          k.dataType == StringType && k.references.exists(_.name == column))
+        case _ => false
+      }) => e
+    }
 
   /** Run `df` to completion, then check its final executed plan. */
   def lateFetchViolations(df: DataFrame): String = {

@@ -3,9 +3,11 @@ package graft.fe
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.fixtures.TokenSeq
-import graft.table.SnapshotTable
+import graft.table.{FileStat, SnapshotTable}
 
 /** Resumable backfill + snapshot-table semantics: interval grid, crash/resume
   * (completed intervals are skipped on re-run), per-partition lineage metrics,
@@ -175,5 +177,42 @@ class BackfillSpec extends SparkSpec {
     // the expired snapshot's immutable data dir is physically gone
     assert(!Files.exists(Paths.get(root, "data", f"${s1.snapshotId}%09d")))
     assert(table.history.map(_.snapshotId) == Seq(s2.snapshotId))
+  }
+
+  test("round-5 manifests load: history walks them and parent ids are Longs") {
+    import spark.implicits._
+    val root = freshDir("snap_r5")
+    // round-5 layout: parquet straight under data/<id>/, a CURRENT pointer,
+    // manifests written by the hand-rolled codec
+    def part(id: Int, df: org.apache.spark.sql.DataFrame): (String, Long) = {
+      val dir = Paths.get(root, "data", f"$id%09d")
+      df.coalesce(1).write.parquet(dir.toString)
+      val p = Files.list(dir).iterator.asScala.find(_.toString.endsWith(".parquet")).get
+      (p.toString, Files.size(p))
+    }
+    val (p1, b1) = part(1, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val (p2, b2) = part(2, Seq((3L, "c")).toDF("k", "v"))
+    val meta = Files.createDirectories(Paths.get(root, "meta"))
+    Files.writeString(meta.resolve("snap-000000001.json"),
+      s"""{"snapshotId":1,"parentId":null,"watermark":"a\\"b","files":""" +
+        s"""[{"path":"$p1","rows":2,"bytes":$b1}]}""")
+    Files.writeString(meta.resolve("snap-000000002.json"),
+      s"""{"snapshotId":2,"parentId":1,"watermark":null,"bucketModulus":8,"files":""" +
+        s"""[{"path":"$p2","rows":1,"bytes":$b2,"bucket":3}]}""")
+    Files.writeString(meta.resolve("CURRENT"), "2")
+
+    val table = SnapshotTable(root)
+    val hist = table.history
+    assert(hist.map(_.snapshotId) == Seq(2L, 1L))
+    assert(hist.head.parentId.get + 1L == 2L)
+    assert(hist.last.parentId.isEmpty && hist.last.watermark.contains("a\"b"))
+    assert(hist.head.files == Seq(FileStat(p2, 1L, b2, Some(3))))
+    assert(hist.head.bucketModulus.contains(8) && hist.last.bucketModulus.isEmpty)
+    assert(hist.last.files == Seq(FileStat(p1, 2L, b1)))
+    assert(table.read(spark).count() == 1 && table.read(spark, asOf = Some(1L)).count() == 2)
+    // the next commit chains onto the loaded snapshots
+    val s3 = table.commit(Seq((4L, "d")).toDF("k", "v"))
+    assert(s3.snapshotId == 3L && s3.parentId.get + 1L == 3L)
+    assert(table.history.map(_.snapshotId) == Seq(3L, 2L, 1L))
   }
 }

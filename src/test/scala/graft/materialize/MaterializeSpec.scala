@@ -208,4 +208,38 @@ class MaterializeSpec extends SparkSpec {
     Materialize.upsertLatest(plain, b2, Seq("k"), "ts")
     assert(rows(table.read(spark)) == rows(plain.read(spark)))
   }
+
+  test("a file:// URI root: commit, bucketed upsert, time travel, reference-aware expiry") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_uri_root_spec")
+    val table = graft.table.SnapshotTable(s"${dir.toUri}t") // file:///tmp/.../t
+    def exists(p: String) = Files.exists(Paths.get(java.net.URI.create(p)))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      df.collect().map(r => r.getAs[Long]("k") ->
+        ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
+
+    val b0 = (1L to 32L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val s1 = table.commit(b0)
+    // the first bucketed upsert rewrites the unbucketed file once ...
+    val s2 = Materialize.upsertLatestBucketed(table,
+      Seq((2L, t(40), 2.5)).toDF("k", "ts", "v"), Seq("k"), "ts", nBuckets = 8)
+    // ... the second carries every untouched bucket file forward
+    val s3 = Materialize.upsertLatestBucketed(table,
+      Seq((1L, t(50), 1.5)).toDF("k", "ts", "v"), Seq("k"), "ts", nBuckets = 8)
+    assert((s1.files ++ s2.files ++ s3.files).forall(_.path.startsWith("file:/")))
+    val expected = rows(b0) ++ Map(2L -> ((t(40).getTime, 2.5)), 1L -> ((t(50).getTime, 1.5)))
+    assert(rows(table.read(spark)) == expected)
+    assert(rows(table.read(spark, asOf = Some(s1.snapshotId))) == rows(b0))
+
+    val live = s3.files.map(_.path).toSet
+    val carried = live.intersect(s2.files.map(_.path).toSet)
+    val dead = (s1.files ++ s2.files).map(_.path).toSet -- live
+    assert(carried.nonEmpty && dead.nonEmpty)
+    assert(table.expireSnapshots(keepLast = 1) == Seq(s2.snapshotId, s1.snapshotId))
+    live.foreach(p => assert(exists(p), s"live file deleted: $p"))
+    dead.foreach(p => assert(!exists(p), s"dead file kept: $p"))
+    assert(!Files.exists(dir.resolve(f"t/data/${s1.snapshotId}%09d")))
+    assert(rows(table.read(spark)) == expected)
+    assert(table.history.map(_.snapshotId) == Seq(s3.snapshotId))
+  }
 }

@@ -4,13 +4,18 @@
 # variance cancels pair-wise. Used to produce the "Host drift vs code"
 # table in BENCH/BASELINE.md (the judged round-2 jar vs HEAD).
 #
-# usage: tools/ab_bench.sh <jarA> <jarB> [pairs=3] [cores=8]
+# usage: tools/ab_bench.sh <jarA> <jarB> [pairs=3] [cores]
+# cores defaults to $SPARK_GRAFT_CPUS, else nproc; the driver heap is
+# $SPARK_DRIVER_MEM (default 8g, as in build.sbt); spark-submit comes from
+# $SPARK_HOME.
 # Build an old-rev jar with:
 #   git worktree add /tmp/abwt <sha> && (cd /tmp/abwt && sbt -batch package)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-JARA=$1; JARB=$2; PAIRS=${3:-3}; CORES=${4:-8}
+JARA=$1; JARB=$2; PAIRS=${3:-3}; CORES=${4:-${SPARK_GRAFT_CPUS:-$(nproc)}}
+MEM=${SPARK_DRIVER_MEM:-8g}
+: "${SPARK_HOME:?SPARK_HOME must name the Spark installation}"
 DATA=${AB_DATA_DIR:-/tmp/graft_bench_seq}
 OUT=${AB_OUT_DIR:-/tmp/graft_ab}
 mkdir -p "$OUT"
@@ -21,7 +26,7 @@ if [ ! -d "$DATA/sequences" ]; then
 fi
 
 run() { # jar, tag, pair
-  /opt/spark/bin/spark-submit --master "local[$CORES]" --driver-memory 16g \
+  "$SPARK_HOME/bin/spark-submit" --master "local[$CORES]" --driver-memory "$MEM" \
     --conf spark.sql.session.timeZone=UTC --conf spark.ui.enabled=false \
     --driver-java-options "-XX:ParallelGCThreads=$CORES -XX:ConcGCThreads=2" \
     --class graft.ScalingBench "$1" run "$DATA" "$CORES" "$OUT/$2_$3.json" \
