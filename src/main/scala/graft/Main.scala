@@ -44,13 +44,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val existing = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the CLI at a deployment instead of local cores
+    val spark = LocalSession(conf = sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     try run(spark, args.toList)
     finally if (!existing) spark.stop()
   }

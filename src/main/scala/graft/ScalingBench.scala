@@ -29,7 +29,12 @@ import graft.pit.{AsOfJoin, AsOfSpec}
   * Modes:
   *   gen <dataDir> <nRows> <entities> <probes>   — write input tables
   *   run <dataDir> <cores> <outJson>             — timed end-to-end job
+  *   pack <dataDir> <cores> <subShards> <outJson> [aligned]
+  *                                               — timed sequence packing
   *   report <loJson> <hiJson> <outMd>            — compose BENCH/BASELINE.md
+  *
+  * Under spark-submit the session takes the submit's `--master`; `run` and
+  * `pack` size shuffle partitions themselves (fixed 64).
   */
 object ScalingBench {
 
@@ -43,28 +48,15 @@ object ScalingBench {
     case "run" :: dataDir :: cores :: outJson :: Nil =>
       run(dataDir, cores.toInt, outJson)
     case "pack" :: dataDir :: cores :: subShards :: outJson :: rest =>
-      runPack(dataDir, cores.toInt, subShards.toInt, outJson,
-        rest.contains("late"), rest.contains("aligned"))
+      runPack(dataDir, cores.toInt, subShards.toInt, outJson, rest.contains("aligned"))
     case "report" :: lo :: hi :: outMd :: extras =>
       report(lo, hi, outMd, extras)
     case other =>
       sys.error(s"usage: gen|run|pack|report ..., got $other")
   }
 
-  private def session(appName: String, conf: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder().appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    conf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def gen(dataDir: String, n: Long, entities: Int, probes: Long): Unit = {
-    val spark = session("graft-scaling-gen")
+    val spark = LocalSession()
     TokenSeq.generate(spark, n, entities, maxTokens = 64,
         hotSharePct = HotSharePct, dupPct = 10)
       .repartition(128)
@@ -168,7 +160,7 @@ object ScalingBench {
     // vs ~8 at local[8]: different task granularity per level silently
     // inflates the N-core baseline and breaks the plan-identity premise of
     // the comparison (AQE skew handling stays on).
-    val spark = session(s"graft-scaling-$cores",
+    val spark = LocalSession(cores,
       Map(
         "spark.sql.shuffle.partitions" ->
           sys.env.getOrElse("SCALING_PARTITIONS", "64"),
@@ -194,9 +186,8 @@ object ScalingBench {
     * fixed subShards.
     */
   def runPack(dataDir: String, cores: Int, subShards: Int, outJson: String,
-      lateFetch: Boolean = false, alignShards: Boolean = false): Unit = {
-    val spark = session(s"graft-pack-$cores",
-      Map("spark.sql.shuffle.partitions" -> "64"))
+      alignShards: Boolean = false): Unit = {
+    val spark = LocalSession(cores, Map("spark.sql.shuffle.partitions" -> "64"))
     val seqs = spark.read.parquet(s"$dataDir/sequences")
     val nRows = seqs.count() // warm FS metadata; not part of the timed job
     val t0 = System.nanoTime()
@@ -204,7 +195,7 @@ object ScalingBench {
       seqs, Seq("source"), "seq_id", "tokens", "n_tok", seqLen = 2048,
       subShards = subShards,
       shardExpr = if (subShards > 1) Some(pmod(col("seq_id"), lit(subShards))) else None,
-      lateFetch = lateFetch, alignShards = alignShards)
+      alignShards = alignShards)
     val row = packed.agg(
       count(lit(1)).as("packs"),
       expr("bit_xor(xxhash64(packed))").as("checksum"),

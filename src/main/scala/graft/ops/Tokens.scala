@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Token-sequence operators for large-scale training-data assembly, over the
   * engine's native payload shape (`tokens: array<int>`). All declarative
-  * column/window plans — no UDFs. Token arrays always travel through the
-  * final grouped aggregation; `packGreedy(lateFetch = true)` additionally
-  * keeps them out of the cumsum window's sort for multi-KB payloads (an
-  * extra narrow shuffle buys a narrow sort — measured worthwhile only
-  * beyond ~KB row widths, see BENCH/PACK.md).
+  * column/window plans — no UDFs. Token arrays travel through the cumsum
+  * window and the final grouped aggregation: the aggregation moves them
+  * anyway, and fetching them after the window by an extra join measured
+  * slowest of the packing plans (BENCH/PACK.md).
   */
 object Tokens {
 
@@ -50,7 +49,6 @@ object Tokens {
       seqLen: Int,
       subShards: Int = 1,
       shardExpr: Option[Column] = None,
-      lateFetch: Boolean = false,
       alignShards: Boolean = false): DataFrame = {
     val twoLevel = subShards > 1 || shardExpr.isDefined
     require(!alignShards || twoLevel, "alignShards requires sub-sharding")
@@ -62,25 +60,13 @@ object Tokens {
     val shard: Column =
       if (!twoLevel) lit(0)
       else shardExpr.getOrElse(pmod(xxhash64(col(orderCol)), lit(subShards)))
-    // With `lateFetch`, the cumsum window sees only (keys, shard, order,
-    // n_tok) and token arrays are fetched afterwards by an equi-join on
-    // (keys, orderCol) — which must therefore uniquely identify a row. The
-    // final groupBy moves token arrays either way, so late fetch trades an
-    // extra narrow shuffle for keeping the window SORT narrow: measured, it
-    // pays only for genuinely wide payloads (multi-KB token rows); for the
-    // ~130 B rows of the bench fixture the direct path is ~15% faster,
-    // hence default false. The shard column is computed BEFORE the narrow
-    // projection so a custom shardExpr may reference any input column.
     val sharded = df.withColumn("__shard", shard)
-    val narrow = if (lateFetch)
-      sharded.select((keys.map(col) :+ col(orderCol) :+ col(nTokCol) :+ col("__shard")): _*)
-    else sharded
 
     val withStart = if (!twoLevel) {
       val w = Window.partitionBy(keys.map(col): _*)
         .orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      narrow.withColumn("__cum_start", sum(col(nTokCol)).over(w) - col(nTokCol))
+      sharded.withColumn("__cum_start", sum(col(nTokCol)).over(w) - col(nTokCol))
     } else {
       // per-(keys, shard) token totals → running offset in shard order;
       // the offsets frame has keys × subShards rows (tiny — AQE broadcasts)
@@ -96,23 +82,17 @@ object Tokens {
         if (alignShards)
           floor((col("__tot") + lit(seqLen - 1)) / lit(seqLen)) * seqLen
         else col("__tot")
-      val offsets = narrow.groupBy((keys.map(col) :+ col("__shard")): _*)
+      val offsets = sharded.groupBy((keys.map(col) :+ col("__shard")): _*)
         .agg(sum(col(nTokCol)).as("__tot"))
         .withColumn("__offset", sum(span).over(offW) - span)
         .drop("__tot")
       val w = Window.partitionBy((keys :+ "__shard").map(col): _*)
         .orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      narrow.join(offsets, keys :+ "__shard")
+      sharded.join(offsets, keys :+ "__shard")
         .withColumn("__cum_start",
           sum(col(nTokCol)).over(w) - col(nTokCol) + col("__offset"))
     }
-
-    val withTokens = if (lateFetch)
-      withStart.join(
-        df.select((keys.map(col) :+ col(orderCol) :+ col(tokensCol)): _*),
-        keys :+ orderCol)
-    else withStart
 
     // with alignShards the shard is part of the grouping so the aggregate
     // reuses the window's partitioning (no second exchange); pack_id alone
@@ -121,7 +101,7 @@ object Tokens {
     val groupCols =
       if (alignShards) keys.map(col) :+ col("__shard") :+ col("pack_id")
       else keys.map(col) :+ col("pack_id")
-    withTokens
+    withStart
       .select((keys.map(col) :+ col("__shard") :+ col(orderCol) :+
         col(tokensCol).as("__t") :+ col(nTokCol).as("__n") :+ col("__cum_start")): _*)
       .withColumn("pack_id", floor(col("__cum_start") / seqLen).cast("long"))

@@ -6,7 +6,8 @@
 #
 # usage: tools/gate.sh <sfDir> <outDir>
 #   e.g. tools/gate.sh /path/to/testdata/sf0.01 /tmp/verify_out
-# SPARK_GRAFT_CPUS sets the local[N] parallelism of the Verify run (default 4).
+# SPARK_GRAFT_CPUS sets the local[N] parallelism of the Verify run (default:
+# the processors the JVM sees).
 set -uo pipefail
 cd "$(dirname "$0")/.."
 

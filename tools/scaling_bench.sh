@@ -2,7 +2,8 @@
 # North-rule scaling evidence: same job, same input, local[2] vs local[8]
 # (N vs 4N cores, both below the VM's memory-bandwidth knee), plus local[32]
 # as an extra beyond-the-knee data point; each level a fresh spark-submit
-# JVM. Writes BENCH/BASELINE.md.
+# JVM. Writes BENCH/BASELINE.md. spark-submit comes from $SPARK_HOME; the
+# driver heap is $SPARK_DRIVER_MEM (default 16g).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -11,6 +12,8 @@ DATA=${SCALING_DATA_DIR:-/tmp/graft_scaling}
 N=${SCALING_ROWS:-80000000}
 ENTITIES=${SCALING_ENTITIES:-50000}
 PROBES=${SCALING_PROBES:-2000000}
+MEM=${SPARK_DRIVER_MEM:-16g}
+: "${SPARK_HOME:?SPARK_HOME must name the Spark installation}"
 
 mkdir -p "$DATA"
 
@@ -24,9 +27,9 @@ submit() { # cores, then args...
   # threads of free GC help (measured 700%+ CPU) — inflating the N-core
   # baseline and corrupting the N->4N comparison. A real 2-core executor
   # does GC on its own 2 cores.
-  /opt/spark/bin/spark-submit \
+  "$SPARK_HOME/bin/spark-submit" \
     --master "local[$cores]" \
-    --driver-memory 16g \
+    --driver-memory "$MEM" \
     --conf spark.sql.session.timeZone=UTC \
     --conf spark.ui.enabled=false \
     --driver-java-options "-XX:ParallelGCThreads=$cores -XX:ConcGCThreads=1" \
