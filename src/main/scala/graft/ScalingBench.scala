@@ -74,7 +74,7 @@ object ScalingBench {
     * 1. narrow projection: the parquet scan prunes the token column away
     *    entirely (~50 B/row through every exchange, not ~520);
     * 2. PIT slot compaction (the reference's "early dedup before join",
-    *    feast file.py:163-177, as one hash aggregate): per (doc_id,
+    *    feast file.py:163-177, as one sort aggregate): per (doc_id,
     *    event_ts) keep the max-created row — for as-of semantics no other
     *    row can ever win — plus per-slot count/sum partials. Map-side
     *    combine means the hot key (10% of ALL rows in one doc_id) compacts

@@ -8,11 +8,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Json
 import graft.materialize.Materialize
-import graft.table.SnapshotTable
+import graft.table.{Snapshot, SnapshotTable}
 
 /** Resumable backfill materialization: walk an interval grid over a feature
   * history, materialize latest-per-key for each interval into a snapshot
@@ -27,7 +26,7 @@ final case class IntervalMetrics(
     rows: Long,
     bytes: Long,
     snapshotId: Long,
-    partitions: Seq[(Int, Long)]) // (partitionId, rowCount) lineage
+    partitions: Seq[(Int, Long)]) // (write partition id, rowCount) lineage
 
 object Backfill {
 
@@ -90,9 +89,9 @@ object Backfill {
   }
 
   /** Run (or resume) the backfill. Returns metrics for intervals executed in
-    * THIS run (skipped ones are absent). Per-partition row counts come from a
-    * spark_partition_id() rollup on the materialized (already small) latest
-    * frame — the lineage evidence the north rule asks for.
+    * THIS run (skipped ones are absent). One write job per interval: its
+    * per-partition lineage is read from the committed manifest
+    * ([[partitionRows]]), not from a cached second pass.
     */
   def run(
       spark: SparkSession,
@@ -110,29 +109,34 @@ object Backfill {
     grid(start, end, stepSeconds).flatMap { case (lo, hi) =>
       val id = s"${lo.toInstant}_${hi.toInstant}"
       if (done.contains(id)) None
-      // Crash healing: commit happened but the process died BEFORE the
-      // checkpoint append — the table's current watermark already carries
-      // this interval id. Re-committing would duplicate the snapshot; heal
-      // by appending the missing log line from the committed snapshot.
-      else if (table.currentSnapshot.exists(_.watermark.contains(id))) {
-        val snap = table.currentSnapshot.get
-        val m = IntervalMetrics(id, snap.totalRows, snap.totalBytes, snap.snapshotId, Nil)
+      else {
+        // Crash healing: commit happened but the process died BEFORE the
+        // checkpoint append — the table's current watermark already carries
+        // this interval id. Re-committing would duplicate the snapshot; heal
+        // by appending the missing log line from the committed snapshot.
+        val snap = table.currentSnapshot.filter(_.watermark.contains(id)).getOrElse(
+          table.commit(Materialize.pullLatest(source, keys, ts, createdTs, lo, hi),
+            watermark = Some(id)))
+        val m = IntervalMetrics(id, snap.totalRows, snap.totalBytes, snap.snapshotId,
+          partitionRows(snap))
         log.append(m)
         Some(m)
-      } else {
-        val latest = Materialize.pullLatest(source, keys, ts, createdTs, lo, hi)
-          .withColumn("__interval", lit(id))
-        val cached = latest.cache()
-        try {
-          val partCounts = cached
-            .groupBy(spark_partition_id().as("pid")).count()
-            .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
-          val snap = table.commit(cached.drop("__interval"), watermark = Some(id))
-          val m = IntervalMetrics(id, snap.totalRows, snap.totalBytes, snap.snapshotId, partCounts)
-          log.append(m)
-          Some(m)
-        } finally cached.unpersist()
       }
     }
   }
+
+  private val PartFile = """part-(\d+)-.*""".r
+
+  /** (partitionId, rowCount) per write task of `snap`: manifest row counts
+    * summed per id parsed from Spark's `part-<partition>-...` file names,
+    * dropping zero-row files (an empty write still leaves one).
+    */
+  def partitionRows(snap: Snapshot): Seq[(Int, Long)] =
+    snap.files.map { f =>
+      f.path.substring(f.path.lastIndexOf('/') + 1) match {
+        case PartFile(pid) => (pid.toInt, f.rows)
+        case name => throw new IllegalStateException(
+          s"snapshot ${snap.snapshotId} holds $name, not a Spark part-NNNNN- file")
+      }
+    }.filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
 }

@@ -86,6 +86,8 @@ final class SnapshotTable(val root: String) {
   private def metaDir = new Path(rootPath, "meta")
   private def dataDir(id: Long) = new Path(rootPath, f"data/$id%09d")
   private def manifestPath(id: Long) = new Path(metaDir, f"snap-$id%09d.json")
+  // built once: the options-less `ParquetFileReader.open` loads a fresh Hadoop conf per call
+  private lazy val readOptions = org.apache.parquet.HadoopReadOptions.builder(SnapshotTable.hadoopConf).build()
 
   /** Append a new snapshot: write df as parquet into a fresh immutable dir,
     * collect per-file stats from the parquet footers (no data re-scan), then
@@ -292,7 +294,7 @@ final class SnapshotTable(val root: String) {
     val path =
       if (rootPath.toUri.getScheme == null) Path.getPathWithoutSchemeAndAuthority(s.getPath)
       else s.getPath
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, SnapshotTable.hadoopConf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, SnapshotTable.hadoopConf), readOptions)
     val rows = try r.getRecordCount finally r.close()
     FileStat(path.toString, rows, s.getLen, bucket)
   }

@@ -4,11 +4,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
@@ -79,6 +80,33 @@ object PlanShape extends AdaptiveSparkPlanHelper {
         case _ => false
       }) => e
     }
+
+  /** `body`'s result and the final executed plans of the queries it ran,
+    * writes included.
+    */
+  def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result =
+      try {
+        val r = body
+        // listener events arrive asynchronously, on the bus thread
+        org.apache.spark.Listeners.drain(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    (result, plans.asScala.toSeq)
+  }
+
+  /** Executed plans that write files. */
+  def writes(plans: Seq[SparkPlan]): Seq[SparkPlan] =
+    plans.filter(p => find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+
+  def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    collect(plan) { case e: ShuffleExchangeExec => e }
 
   /** Run `df` to completion, then check its final executed plan. */
   def lateFetchViolations(df: DataFrame): String = {

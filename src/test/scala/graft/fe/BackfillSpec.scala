@@ -53,6 +53,43 @@ class BackfillSpec extends SparkSpec {
     assert(hist.head.parentId.contains(3L))
   }
 
+  test("lineage comes from the committed files: one write job per interval, no cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.PlanShape
+    val root = freshDir("snap_lineage")
+    val ckpt = s"${freshDir("ckpt_lineage")}/log.jsonl"
+    val src = TokenSeq.generate(spark, n = 9000, entities = 30)
+    val table = SnapshotTable(root)
+
+    // the first interval ends where the source's first row is: it is empty
+    val (metrics, plans) = PlanShape.executedPlans(spark) {
+      Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
+        Some("created_timestamp"), t(-3600), t(3 * 3600), 3600, table, ckpt)
+    }
+    assert(metrics.size == 4)
+    assert(metrics.head.rows == 0 && metrics.head.partitions.isEmpty)
+    assert(metrics.tail.forall(m => m.rows > 0 && m.partitions.nonEmpty))
+    val partIndex = """part-(\d+)-.*""".r
+    metrics.foreach { m =>
+      // per write task: the rows a scan finds in its files
+      val byTask = table.snapshot(m.snapshotId).get.files
+        .map(f => Paths.get(f.path).getFileName.toString match {
+          case partIndex(i) => (i.toInt, spark.read.parquet(f.path).count())
+        })
+        .filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _)
+      assert(m.partitions == byTask.toSeq.sortBy(_._1))
+      assert(m.partitions.map(_._2).sum == m.rows)
+      assert(table.read(spark, asOf = Some(m.snapshotId)).count() == m.rows)
+    }
+    val (queries, writes) = (plans.size, PlanShape.writes(plans).size)
+    assert(queries == metrics.size && writes == metrics.size,
+      s"expected one write job per interval, ran $queries queries ($writes writes)")
+    val cacheScans = plans.map(PlanShape.collect(_) { case s: InMemoryTableScanExec => s }.size).sum
+    assert(cacheScans == 0, "a backfill query read a cached relation")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+  }
+
   test("resume skips completed intervals and completes the remainder") {
     val root = freshDir("snap2")
     val ckpt = s"${freshDir("ckpt2")}/log.jsonl"
