@@ -90,8 +90,8 @@ object Backfill {
 
   /** Run (or resume) the backfill. Returns metrics for intervals executed in
     * THIS run (skipped ones are absent). One write job per interval: its
-    * per-partition lineage is read from the committed manifest
-    * ([[partitionRows]]), not from a cached second pass.
+    * per-partition lineage is read from the committed manifest's file
+    * stats, not from a cached second pass.
     */
   def run(
       spark: SparkSession,
@@ -131,7 +131,7 @@ object Backfill {
     * summed per id parsed from Spark's `part-<partition>-...` file names,
     * dropping zero-row files (an empty write still leaves one).
     */
-  def partitionRows(snap: Snapshot): Seq[(Int, Long)] =
+  private def partitionRows(snap: Snapshot): Seq[(Int, Long)] =
     snap.files.map { f =>
       f.path.substring(f.path.lastIndexOf('/') + 1) match {
         case PartFile(pid) => (pid.toInt, f.rows)

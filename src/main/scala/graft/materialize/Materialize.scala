@@ -13,11 +13,9 @@ import org.apache.spark.sql.functions._
 object Materialize {
 
   /** One row per key: the row with max (ts, created[, ties...]).
-    * Implemented as max_by(payload, struct(orderCols)), whose struct buffer
-    * rules out a hash aggregate: Spark plans a SortAggregate with a sort on
-    * each side of the exchange (PLANS.md q03). Its map-side partials still
-    * shrink each key to one row per task before the shuffle, unlike the
-    * row_number()=1 window, which shuffles and sorts every key's history.
+    * Implemented as max_by(payload, struct(orderCols)) — a SortAggregate
+    * (the struct buffer rules out hashing; PLANS.md q03) whose map-side
+    * partials shrink each key to one row per task before the exchange.
     */
   def latestPerKey(
       df: DataFrame,
@@ -86,8 +84,10 @@ object Materialize {
       createdTs: Option[String] = None,
       ties: Seq[String] = Nil,
       numFiles: Int = 0): graft.table.Snapshot = {
-    val merged =
-      table.currentSnapshot.fold(batch)(_ => table.read(batch.sparkSession).unionByName(batch))
+    val merged = table.currentSnapshot match {
+      case Some(_) => table.read(batch.sparkSession).unionByName(batch)
+      case None => batch
+    }
     table.commit(latestPerKey(merged, keys, ts, createdTs, ties), numFiles)
   }
 
@@ -114,12 +114,6 @@ object Materialize {
     * instead of silently carrying files whose bucket ids were computed
     * under a different modulus. The key COLUMNS must stay the same across
     * batches (they define the hash; the table has one key schema).
-    *
-    * Plan: ONE exchange, hash on the bucket, feeds both the bucketed write
-    * and the latest-per-key aggregate, grouped on bucket + keys (the bucket
-    * is a function of the keys, so no group changes): one sort, two stages.
-    * Trade-off: no map-side pre-combine, so every merged row crosses the
-    * exchange; with few rows per key per batch that beats a second exchange.
     */
   def upsertLatestBucketed(
       table: graft.table.SnapshotTable,
@@ -130,27 +124,35 @@ object Materialize {
       ties: Seq[String] = Nil,
       nBuckets: Int = 64): graft.table.Snapshot = {
     require(nBuckets >= 1, "nBuckets >= 1")
+    val spark = batch.sparkSession
     val bucketExpr =
       pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
     // planning-time scalar, bounded by nBuckets (the documented collect class)
     val touched = batch.select(bucketExpr.as("__bucket"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val current = table.currentSnapshot
-    // A file's bucket id only means something under the modulus it was
-    // written with: carrying a bucket=3-of-64 file past a nBuckets=16
-    // upsert would duplicate keys. On mismatch every file counts as
-    // touched once (full self-healing rewrite under the new modulus),
-    // then later upserts are bucket-scoped again.
-    val sameModulus = current.exists(_.bucketModulus.contains(nBuckets))
-    val (hit, carry) = current.toSeq.flatMap(_.files).partition(
-      f => f.bucket.isEmpty || !sameModulus || f.bucket.exists(touched.contains))
-    val merged =
-      if (hit.isEmpty) batch
-      else batch.sparkSession.read.schema(batch.schema).parquet(hit.map(_.path): _*)
-        .unionByName(batch)
-    val resolved = latestPerKey(
-      merged.withColumn("__bucket", bucketExpr).repartition(col("__bucket")),
-      "__bucket" +: keys, ts, createdTs, ties)
+    val (reread, carry) = table.currentSnapshot match {
+      case Some(snap) =>
+        // A file's bucket id only means something under the modulus it was
+        // written with: carrying a bucket=3-of-64 file past a nBuckets=16
+        // upsert would duplicate keys. On mismatch every file counts as
+        // touched once (full self-healing rewrite under the new modulus),
+        // then later upserts are bucket-scoped again.
+        val sameModulus = snap.bucketModulus.contains(nBuckets)
+        val (hit, miss) = snap.files.partition(
+          f => f.bucket.isEmpty || !sameModulus || f.bucket.exists(touched.contains))
+        val hitRows =
+          if (hit.isEmpty) None
+          else Some(spark.read.schema(batch.schema)
+            .parquet(hit.map(_.path): _*))
+        (hitRows, miss)
+      case None => (None, Nil)
+    }
+    val merged = reread match {
+      case Some(cur) => cur.unionByName(batch)
+      case None => batch
+    }
+    val resolved = latestPerKey(merged, keys, ts, createdTs, ties)
+      .withColumn("__bucket", bucketExpr)
     table.commitBucketed(resolved, "__bucket", modulus = nBuckets, carryForward = carry)
   }
 
@@ -183,8 +185,10 @@ object Materialize {
     val latest = latestPerKey(
       history.where(col(ts) <= lit(asOf)), keyCols, ts, createdTs, ties)
     val joined = keys.join(latest, keyCols, "left")
-    val expired =
-      ttlSeconds.fold(lit(false))(t => col(ts) < lit(asOf) - expr(s"INTERVAL $t SECONDS"))
+    val expired: Column = ttlSeconds match {
+      case Some(t) => col(ts) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
+      case None => lit(false)
+    }
     joined.withColumn(
       "status",
       when(col(ts).isNull, lit("NOT_FOUND"))
@@ -238,8 +242,10 @@ object Materialize {
         .withColumnRenamed(v.ts, tsOut)
         .select((v.keyCols.map(col) :+ col(tsOut)) ++ v.features.map(col): _*)
       val joined = acc.join(latest, v.keyCols, "left")
-      val expired =
-        v.ttlSeconds.fold(lit(false))(t => col(tsOut) < lit(asOf) - expr(s"INTERVAL $t SECONDS"))
+      val expired: Column = v.ttlSeconds match {
+        case Some(t) => col(tsOut) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
+        case None => lit(false)
+      }
       v.features.foldLeft(joined) { (d, f) =>
         val out = s"${v.name}__$f"
         d.withColumn(s"${out}__status",

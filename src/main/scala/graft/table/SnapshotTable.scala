@@ -5,6 +5,7 @@ import java.util.{ConcurrentModificationException, UUID}
 
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Json
@@ -76,6 +77,8 @@ private[table] final case class Staged(snapshot: Snapshot, attemptDir: Path, tmp
 object SnapshotTable {
   def apply(root: String): SnapshotTable = new SnapshotTable(root)
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  // built once: the options-less `ParquetFileReader.open` loads a fresh Hadoop conf per call
+  private lazy val readOptions = HadoopReadOptions.builder(hadoopConf).build()
   // `.crc` sidecars and staged `.snap-*.tmp` files never match
   private val Manifest = """snap-(\d{9,})\.json""".r
 }
@@ -86,8 +89,6 @@ final class SnapshotTable(val root: String) {
   private def metaDir = new Path(rootPath, "meta")
   private def dataDir(id: Long) = new Path(rootPath, f"data/$id%09d")
   private def manifestPath(id: Long) = new Path(metaDir, f"snap-$id%09d.json")
-  // built once: the options-less `ParquetFileReader.open` loads a fresh Hadoop conf per call
-  private lazy val readOptions = org.apache.parquet.HadoopReadOptions.builder(SnapshotTable.hadoopConf).build()
 
   /** Append a new snapshot: write df as parquet into a fresh immutable dir,
     * collect per-file stats from the parquet footers (no data re-scan), then
@@ -294,7 +295,8 @@ final class SnapshotTable(val root: String) {
     val path =
       if (rootPath.toUri.getScheme == null) Path.getPathWithoutSchemeAndAuthority(s.getPath)
       else s.getPath
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, SnapshotTable.hadoopConf), readOptions)
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(s, SnapshotTable.hadoopConf), SnapshotTable.readOptions)
     val rows = try r.getRecordCount finally r.close()
     FileStat(path.toString, rows, s.getLen, bucket)
   }

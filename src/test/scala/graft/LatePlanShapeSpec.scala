@@ -105,9 +105,6 @@ object PlanShape extends AdaptiveSparkPlanHelper {
   def writes(plans: Seq[SparkPlan]): Seq[SparkPlan] =
     plans.filter(p => find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
 
-  def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
-    collect(plan) { case e: ShuffleExchangeExec => e }
-
   /** Run `df` to completion, then check its final executed plan. */
   def lateFetchViolations(df: DataFrame): String = {
     df.collect()
