@@ -114,9 +114,10 @@ object Backfill {
         // checkpoint append — the table's current watermark already carries
         // this interval id. Re-committing would duplicate the snapshot; heal
         // by appending the missing log line from the committed snapshot.
-        val snap = table.currentSnapshot.filter(_.watermark.contains(id)).getOrElse(
+        val cur = table.currentSnapshot
+        val snap = cur.filter(_.watermark.contains(id)).getOrElse(
           table.commit(Materialize.pullLatest(source, keys, ts, createdTs, lo, hi),
-            watermark = Some(id)))
+            watermark = Some(id), parentId = cur.map(_.snapshotId)))
         val m = IntervalMetrics(id, snap.totalRows, snap.totalBytes, snap.snapshotId,
           partitionRows(snap))
         log.append(m)

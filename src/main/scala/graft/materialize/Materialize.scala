@@ -74,7 +74,11 @@ object Materialize {
     * stored row with a newer (ts, tie) — order-independent convergence, not
     * last-writer-wins. Rewrites the stored table once per batch, which is
     * the right trade for an ONLINE table (one row per entity — small);
-    * event history stays on the append + [[pullLatest]] path.
+    * event history stays on the append + [[pullLatest]] path. The merge
+    * reads one snapshot and commits on top of exactly that one: a snapshot
+    * another writer publishes in between makes this upsert fail
+    * (`ConcurrentModificationException`) instead of silently dropping the
+    * other writer's rows.
     */
   def upsertLatest(
       table: graft.table.SnapshotTable,
@@ -84,11 +88,13 @@ object Materialize {
       createdTs: Option[String] = None,
       ties: Seq[String] = Nil,
       numFiles: Int = 0): graft.table.Snapshot = {
-    val merged = table.currentSnapshot match {
-      case Some(_) => table.read(batch.sparkSession).unionByName(batch)
+    val cur = table.currentSnapshot
+    val merged = cur match {
+      case Some(snap) => table.read(batch.sparkSession, snap).unionByName(batch)
       case None => batch
     }
-    table.commit(latestPerKey(merged, keys, ts, createdTs, ties), numFiles)
+    table.commit(latestPerKey(merged, keys, ts, createdTs, ties), numFiles,
+      parentId = cur.map(_.snapshotId))
   }
 
   /** Key-bucket-scoped [[upsertLatest]] — the 100 TB shape. [[upsertLatest]]
@@ -113,7 +119,9 @@ object Materialize {
     * batches is safe — the mismatch forces one full rebucketing rewrite
     * instead of silently carrying files whose bucket ids were computed
     * under a different modulus. The key COLUMNS must stay the same across
-    * batches (they define the hash; the table has one key schema).
+    * batches (they define the hash; the table has one key schema). Like
+    * [[upsertLatest]], it commits on top of the snapshot it read and fails
+    * if another writer published first.
     */
   def upsertLatestBucketed(
       table: graft.table.SnapshotTable,
@@ -130,7 +138,8 @@ object Materialize {
     // planning-time scalar, bounded by nBuckets (the documented collect class)
     val touched = batch.select(bucketExpr.as("__bucket"))
       .distinct().collect().map(_.getInt(0)).toSet
-    val (reread, carry) = table.currentSnapshot match {
+    val cur = table.currentSnapshot
+    val (reread, carry) = cur match {
       case Some(snap) =>
         // A file's bucket id only means something under the modulus it was
         // written with: carrying a bucket=3-of-64 file past a nBuckets=16
@@ -153,7 +162,8 @@ object Materialize {
     }
     val resolved = latestPerKey(merged, keys, ts, createdTs, ties)
       .withColumn("__bucket", bucketExpr)
-    table.commitBucketed(resolved, "__bucket", modulus = nBuckets, carryForward = carry)
+    table.commitBucketed(resolved, "__bucket", modulus = nBuckets, carryForward = carry,
+      parentId = cur.map(_.snapshotId))
   }
 
   /** Online point-lookup emulation with per-row field status — the batch

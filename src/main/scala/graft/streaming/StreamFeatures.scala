@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -208,9 +208,7 @@ object StreamFeatures {
     * `batch-<batchId>/` subdirectory, so a batch replayed after a
     * crash-between-write-and-checkpoint rewrites the same files instead of
     * appending duplicates (a bare `mode("append")` to one directory would
-    * double the replayed rows). Readers use the glob
-    * `spark.read.parquet(s"$sinkPath/batch-*")` (plain nested dirs are not
-    * partition dirs, so a bare root read finds no files) and resolve
+    * double the replayed rows). Readers use [[readSink]] and resolve
     * latest-per-key across batches (q82's read contract; the compacting
     * alternative is `Materialize.upsertLatest`). Returned writer is not
     * started — callers pick trigger/checkpoint.
@@ -228,4 +226,19 @@ object StreamFeatures {
           .latestPerKey(batch, keys, ts)
           .write.mode("overwrite").parquet(s"$sinkPath/batch-$batchId")
       }
+
+  /** Every batch written by [[latestToSink]] into `sinkPath`, still one row
+    * per key per batch. The `batch-<batchId>/` dirs are listed through the
+    * sink's Hadoop `FileSystem` and read by name: plain nested dirs are not
+    * partition dirs, so a bare root read finds no files, and a `batch-*`
+    * glob makes Spark's sink-metadata probe log a `FileNotFoundException`
+    * warning on every read.
+    */
+  def readSink(spark: SparkSession, sinkPath: String): DataFrame = {
+    val sink = new org.apache.hadoop.fs.Path(sinkPath)
+    val batches = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(sink).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("batch-")).map(_.toString)
+    spark.read.parquet(batches: _*)
+  }
 }

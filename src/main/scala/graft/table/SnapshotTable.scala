@@ -94,13 +94,21 @@ final class SnapshotTable(val root: String) {
     * collect per-file stats from the parquet footers (no data re-scan), then
     * publish the manifest. `numFiles` sizes the write parallelism
     * (row-group/file sizing — reference loaders/ingest.py:51-79).
+    *
+    * `parentId` is the snapshot the new one follows (`None`: an empty
+    * table), by default the current one. A read-modify-write caller passes
+    * the snapshot it read: the commit then takes id `parent + 1`, so if
+    * another writer published that id in between, the publish fails with
+    * `ConcurrentModificationException` instead of landing the caller's
+    * stale result on top of the other writer's snapshot.
     */
-  def commit(df: DataFrame, numFiles: Int = 0, watermark: Option[String] = None): Snapshot =
-    publish(stageCommit(df, numFiles, watermark))
+  def commit(df: DataFrame, numFiles: Int = 0, watermark: Option[String] = None,
+      parentId: Option[Long] = currentSnapshotId): Snapshot =
+    publish(stageCommit(df, numFiles, watermark, parentId))
 
   private[table] def stageCommit(df: DataFrame, numFiles: Int,
-      watermark: Option[String]): Staged =
-    stage(watermark) { dir =>
+      watermark: Option[String], parentId: Option[Long] = currentSnapshotId): Staged =
+    stage(parentId, watermark) { dir =>
       val toWrite = if (numFiles > 0) df.repartition(numFiles) else df
       toWrite.write.mode("errorifexists").parquet(dir.toString)
       listParquet(dir).map(fileStat(_, None))
@@ -115,18 +123,20 @@ final class SnapshotTable(val root: String) {
     * the PARENT snapshot are re-referenced verbatim — those files are never
     * copied or rewritten; the new manifest just points at them. Snapshots
     * may therefore SHARE data files ([[expireSnapshots]] is reference-aware).
+    * `parentId` is the snapshot `carryForward` came from, as in [[commit]].
     */
   def commitBucketed(
       df: DataFrame,
       bucketCol: String,
       modulus: Int,
       carryForward: Seq[FileStat] = Nil,
-      watermark: Option[String] = None): Snapshot = {
+      watermark: Option[String] = None,
+      parentId: Option[Long] = currentSnapshotId): Snapshot = {
     // the bucket comes from the file's own directory name, never from the
     // rest of the path: a table root may itself contain a `<bucketCol>=`
     // segment
     val bucketRe = (java.util.regex.Pattern.quote(bucketCol) + "=(\\d+)").r
-    publish(stage(watermark, Some(modulus), carryForward) { dir =>
+    publish(stage(parentId, watermark, Some(modulus), carryForward) { dir =>
       // one shuffle on the bucket key -> every bucket lands whole in one
       // task -> exactly one file per non-empty bucket under bucketCol=<k>/
       df.repartition(org.apache.spark.sql.functions.col(bucketCol))
@@ -140,14 +150,15 @@ final class SnapshotTable(val root: String) {
     })
   }
 
-  /** Write one commit attempt: `write` fills the attempt's own
-    * `data/<id>/<attempt>/` dir, and the manifest (carried files first) is
-    * staged in an attempt-unique tmp file next to the published ones.
+  /** Write one commit attempt of snapshot `parent + 1`: `write` fills the
+    * attempt's own `data/<id>/<attempt>/` dir, and the manifest (carried
+    * files first) is staged in an attempt-unique tmp file next to the
+    * published ones.
     */
-  private def stage(watermark: Option[String], bucketModulus: Option[Int] = None,
-      carryForward: Seq[FileStat] = Nil)(write: Path => Seq[FileStat]): Staged = {
+  private def stage(parent: Option[Long], watermark: Option[String],
+      bucketModulus: Option[Int] = None, carryForward: Seq[FileStat] = Nil)(
+      write: Path => Seq[FileStat]): Staged = {
     fs.mkdirs(metaDir)
-    val parent = currentSnapshotId
     val id = parent.getOrElse(0L) + 1L
     val attempt = UUID.randomUUID().toString
     val dir = new Path(dataDir(id), attempt)
@@ -201,8 +212,12 @@ final class SnapshotTable(val root: String) {
       case None => currentSnapshot.getOrElse(
         throw new IllegalStateException(s"no snapshot in $root"))
     }
-    spark.read.parquet(snap.files.map(_.path): _*)
+    read(spark, snap)
   }
+
+  /** The rows of `snap`: the files its manifest lists. */
+  def read(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.read.parquet(snap.files.map(_.path): _*)
 
   /** Full snapshot chain, newest first (lineage). */
   def history: Seq[Snapshot] =
@@ -215,13 +230,16 @@ final class SnapshotTable(val root: String) {
     * ~`targetBytes` files and commit the result as a NEW snapshot. Data is
     * unchanged (one distributed read + write, no driver materialization);
     * older snapshots remain time-travelable until [[expireSnapshots]]
-    * drops them. Returns the compacted snapshot.
+    * drops them. Returns the compacted snapshot. A snapshot published by
+    * another writer during the rewrite makes the compaction fail
+    * (`ConcurrentModificationException`) rather than supersede it.
     */
   def compact(spark: SparkSession, targetBytes: Long = 128L * 1024 * 1024): Snapshot = {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no snapshot to compact in $root"))
     val nFiles = math.max(1L, (cur.totalBytes + targetBytes - 1) / targetBytes).toInt
-    commit(read(spark), numFiles = nFiles, watermark = cur.watermark)
+    commit(read(spark, cur), numFiles = nFiles, watermark = cur.watermark,
+      parentId = Some(cur.snapshotId))
   }
 
   /** Snapshot retention (the Iceberg `expire_snapshots` analogue): keep the

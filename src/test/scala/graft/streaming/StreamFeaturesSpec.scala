@@ -295,7 +295,7 @@ class StreamFeaturesSpec extends SparkSpec {
       s"$sink/data", s"$ckpt/cp").start()
     q.processAllAvailable()
     q.stop()
-    def readSink() = spark.read.parquet(s"$sink/data/batch-*")
+    def readSink() = StreamFeatures.readSink(spark, s"$sink/data")
     val got = readSink()
       .groupBy("user_id").agg(max("ts").as("ts"))
       .orderBy("user_id").collect().toSeq
