@@ -46,40 +46,20 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     val grouped = FeatureRefs.group(FeatureRefs.parse(featureRefs), views, fullFeatureNames)
     val bounds = Materialize.timestampBounds(entityNorm, tsCol)
 
-    // Split the fold: narrow scalar views fold directly onto the entity
-    // frame (their payload is cheap to carry through later windows); wide
-    // (array/binary/map/struct) views run ENTITY-SIDE LATE MATERIALIZED —
-    // each joins a distinct narrow (join keys, ts) probe keyed by a hash
-    // row-id, and the wide results stitch back by rowId equi-joins at the
-    // very end. Consequences at scale: NO wide column — neither an entity
-    // payload nor an earlier wide view's features — ever enters any window
-    // exchange/sort, for any number of wide views (round 2's fold put wide
-    // views last, but a second wide view still pushed the first one's
-    // payload through its window). The as-of result depends only on
-    // (join keys, ts), so stitching on hash(keys, ts) is exact up to 64-bit
-    // collisions between DISTINCT key-ts tuples (~n²/2⁶⁵ — the standard
-    // documented trade); legal duplicate entity rows share a rowId and each
-    // receives the single matched wide row, preserving multiplicity.
-    def isWide(view: FeatureView, feats: Seq[String]): Boolean =
-      view.features.exists(f =>
-        feats.contains(f.name) && (f.valueType match {
-          case _: ValueType.ListOf | _: ValueType.MapOf => true
-          case ValueType.BYTES => true
-          case _ => false
-        }))
-    def joinOne(acc: DataFrame, view: FeatureView, feats: Seq[String]): DataFrame = {
+    // One as-of core for every view. A narrow (scalar) view's values ride
+    // its own window and fold straight onto the entity frame. A wide
+    // (array/binary/map/struct) view is LATE MATERIALIZED in the shape of
+    // AsOfJoin.windowedLate: its window carries only a row id, and its
+    // payload is fetched by one shuffle-hash join on that id after EVERY
+    // window has run — so no window's exchange or sort carries any view's
+    // payload, for any number of wide views. Every entity row is windowed
+    // as it is, so duplicate rows each keep their match and a null key
+    // matches nothing (null features).
+    def asOf(acc: DataFrame, view: FeatureView, source: DataFrame,
+        feats: Seq[String]): DataFrame = {
       val keys = view.joinKeys
       keys.foreach(k => require(acc.columns.contains(k),
         s"entity frame is missing join key '$k' for view '${view.name}'"))
-      val raw = spark.read.parquet(view.source.path)
-      val mapped = FieldMapping(raw, view.source.fieldMapping)
-      val pruned = prunePartitions(
-        Materialize.pruneToEntityRange(
-          mapped, view.source.eventTimestampColumn, bounds, view.ttlSeconds),
-        view, bounds)
-      val projected = pruned.select(
-        (keys ++ Seq(view.source.eventTimestampColumn) ++
-          view.source.createdTimestampColumn.toSeq ++ feats).distinct.map(col): _*)
       val spec = AsOfSpec(
         keys = keys,
         leftTs = tsCol,
@@ -91,37 +71,35 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
         if (saltBuckets > 1 && autoDetectHotKeys)
           graft.exec.Skew.detectHotKeyTuples(entityDf, keys)
         else Nil
-      val joined = joinView(acc, projected, spec, feats,
+      AsOfJoin.windowed(acc, source, spec,
         if (hot.nonEmpty || (saltBuckets > 1 && !autoDetectHotKeys)) saltBuckets else 1,
         hot)
-      feats.foldLeft(joined) { (d, f) =>
+    }
+    def named(df: DataFrame, view: FeatureView, feats: Seq[String]): DataFrame =
+      feats.foldLeft(df) { (d, f) =>
         d.withColumnRenamed(f, FeatureRefs.outputName(view.name, f, fullFeatureNames))
       }
-    }
 
-    val (wideSeq, narrowSeq) =
-      grouped.toSeq.sortBy(_._1.name).partition { case (v, f) => isWide(v, f) }
-    val narrowAcc = narrowSeq.foldLeft(entityNorm) { case (acc, (view, feats)) =>
-      joinOne(acc, view, feats)
+    val sources = grouped.toSeq.sortBy(_._1.name).zipWithIndex.map {
+      case ((view, feats), i) =>
+        val rowId = s"__graft_rowid_$i"
+        (view, feats, rowId, source(view, feats, bounds, rowId))
     }
-    if (wideSeq.isEmpty) narrowAcc
-    else {
-      val rid = "__graft_ent_rowid"
-      // union of all wide views' join keys + the entity ts: the full
-      // determinant of every wide as-of result
-      val keyCols = (wideSeq.flatMap(_._1.joinKeys).distinct :+ tsCol).distinct
-      val probeBase = entityNorm.select(keyCols.map(col): _*)
-        .withColumn(rid, xxhash64(keyCols.map(col): _*))
-        .dropDuplicates(rid)
-      val wideJoined = wideSeq.map { case (view, feats) =>
-        val probe = probeBase.select(
-          ((view.joinKeys :+ tsCol).distinct :+ rid).map(col): _*)
-        val outNames = feats.map(f =>
-          FeatureRefs.outputName(view.name, f, fullFeatureNames))
-        joinOne(probe, view, feats).select((rid +: outNames).map(col): _*)
-      }
-      val accWithId = narrowAcc.withColumn(rid, xxhash64(keyCols.map(col): _*))
-      wideJoined.foldLeft(accWithId)((a, w) => a.join(w, Seq(rid), "left")).drop(rid)
+    val (wide, narrow) = sources.partition { case (_, feats, _, src) =>
+      src.schema.fields.exists(f => feats.contains(f.name) && (f.dataType match {
+        case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
+        case _ => false
+      }))
+    }
+    val narrowAcc = narrow.foldLeft(entityNorm) { case (acc, (view, feats, _, src)) =>
+      named(asOf(acc, view, src, feats), view, feats)
+    }
+    val matched = wide.foldLeft(narrowAcc) { case (acc, (view, _, rowId, src)) =>
+      asOf(acc, view, src, Seq(rowId))
+    }
+    wide.foldLeft(matched) { case (acc, (view, feats, rowId, src)) =>
+      val payload = src.select((rowId +: feats).map(col): _*)
+      named(AsOfJoin.fetch(acc, payload, rowId).drop(rowId), view, feats)
     }
   }
 
@@ -148,51 +126,34 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     Materialize.lookupMulti(keys, online, asOf)
   }
 
-  /** Route per payload width: narrow scalar features ride the single-shuffle
-    * windowed as-of join directly; views with array/binary/map/struct
-    * features go through [[AsOfJoin.windowedLate]] so wide payloads never
-    * pass through the window's exchange+sort (the round-1 facade pushed
-    * token arrays through the window — exactly the pattern windowedLate was
-    * built to avoid). The fetch row id is a deterministic hash of the full
-    * projected row: stable across the plan's two computations of the
-    * feature frame, unique up to 64-bit collisions (~n²/2⁶⁵ — a collision
-    * could duplicate one entity row with an identical-hash payload; at that
-    * probability this is the standard engineering trade). Rows that are
-    * IDENTICAL after projection hash equal by construction, so the frame is
-    * deduplicated on the row id before the join — collapsing them is
-    * semantics-preserving (the as-of pick among identical rows is identical)
-    * and keeps the final fetch join at exactly one row per entity row. The
-    * dedup runs over the whole projected frame, payload included; with
-    * array features it plans as a sort aggregate, the one operator that
-    * sorts the payload.
-    * Map-typed columns are serialized with `to_json` before hashing (Spark
-    * rejects hash expressions over maps because map equality is
-    * order-insensitive; `to_json` of our projected rows is deterministic for
-    * a given row value, which is all row-identity needs).
+  /** A view's feature rows: scan → field-map → prune to the entity time
+    * range → project join keys, timestamps, `feats` and `rowId`. The row id
+    * hashes the row's scan position (`_metadata.file_path`,
+    * `_metadata.row_index`): unique per physical row and computed without
+    * reading a payload byte, so identical duplicate rows stay distinct and
+    * the late fetch returns exactly one payload row per match. It is unique
+    * up to 64-bit collisions (~n²/2⁶⁵ — a collision could duplicate an
+    * entity row; at that probability this is the standard engineering
+    * trade). Rows fully tied on (ts, created) resolve to the larger row id
+    * (the as-of window's final tie-break), i.e. by scan position. Unused by
+    * narrow views, so Catalyst prunes it from their scans.
     */
-  private def joinView(
-      acc: DataFrame,
-      projected: DataFrame,
-      spec: AsOfSpec,
+  private def source(
+      view: FeatureView,
       feats: Seq[String],
-      saltBuckets: Int = 1,
-      hotKeys: Seq[Any] = Nil): DataFrame = {
-    val wide = projected.schema.fields.exists(f =>
-      feats.contains(f.name) && (f.dataType match {
-        case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
-        case _ => false
-      }))
-    if (!wide) AsOfJoin.windowed(acc, projected, spec, saltBuckets, hotKeys)
-    else {
-      val rowId = "__graft_rowid"
-      val hashInputs = projected.schema.fields.toSeq.map(f =>
-        if (AsOfJoin.containsMap(f.dataType)) to_json(col(f.name)) else col(f.name))
-      val withId = projected
-        .withColumn(rowId, xxhash64(hashInputs: _*))
-        .dropDuplicates(rowId)
-      AsOfJoin.windowedLate(acc, withId, spec, rowId = rowId,
-        saltBuckets = saltBuckets, hotKeys = hotKeys).drop(rowId)
-    }
+      bounds: (Any, Any),
+      rowId: String): DataFrame = {
+    val raw = spark.read.parquet(view.source.path)
+    val withId = raw.withColumn(rowId,
+      xxhash64(col("_metadata.file_path"), col("_metadata.row_index")))
+    val mapped = FieldMapping(withId, view.source.fieldMapping)
+    val pruned = prunePartitions(
+      Materialize.pruneToEntityRange(
+        mapped, view.source.eventTimestampColumn, bounds, view.ttlSeconds),
+      view, bounds)
+    pruned.select(
+      (view.joinKeys ++ Seq(view.source.eventTimestampColumn) ++
+        view.source.createdTimestampColumn.toSeq ++ feats :+ rowId).distinct.map(col): _*)
   }
 
   /** `date_partition_column` read-side pruning (reference:

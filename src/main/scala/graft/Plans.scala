@@ -26,8 +26,8 @@ object Plans {
       "q05_tumbling" -> "tumbling agg: partial/final HashAggregate (map-side combine)",
       "q21_rolling" -> "range-frame rolling window",
       "q17_knn" -> "brute-force top-k: broadcast of the query side, codegen'd cosine",
-      "q41_fs_tokens" -> "facade wide-payload routing: token arrays fetched AFTER the single as-of window (windowedLate) by a shuffle-hash join, never sorted inside it",
-      "q47_two_wide_views" -> "entity-side late materialization: TWO array views, each windowing a narrow (key, ts, rowid) probe — no array column in any WINDOW exchange/sort; ONE as-of window per view; each payload crosses one hash-join exchange, and the only array-bearing sort is the rowid dedup SortAggregate over the whole projected payload (the windowedLate duplicate guard)",
+      "q41_fs_tokens" -> "facade wide-payload routing: ONE as-of window over (lang, fts, src_doc, rowid), the rowid hashed from the scan position (_metadata.file_path, row_index); `tokens` is read by ONE scan and fetched after the window by a shuffle-hash join on the rowid — no aggregate, no sort of the payload, three exchanges",
+      "q47_two_wide_views" -> "facade late materialization over TWO array views: each view windows the accumulated entity frame against its narrow (key, ts, created, rowid) projection — ONE as-of window per view, no array in any Window/Sort input; both payloads are fetched after the last window by one shuffle-hash join each, every array column read by ONE scan",
       "q39_ann_ivf" -> "IVF assignment as literal-centroid projection: no join, no window, no xN expansion before the probe equi-join",
       "q37_pack_sequences" -> "two-level packing: per-(lang, shard) cumsum windows + tiny offsets join",
       "q48_hash_split" -> "deterministic hash split: pure codegen'd projection, zero shuffles/exchanges",

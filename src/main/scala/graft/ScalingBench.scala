@@ -136,8 +136,7 @@ object ScalingBench {
       saltBuckets = if (hot.nonEmpty) SaltBuckets else 1, hotKeys = hot)
 
     // (5) late-materialized token fetch by matched seq_id
-    val joined = matched.join(
-      seqs.select("seq_id", "tokens").hint("shuffle_hash"), Seq("seq_id"), "left")
+    val joined = AsOfJoin.fetch(matched, seqs.select("seq_id", "tokens"), "seq_id")
 
     // checksum sink: forces full evaluation incl. token arrays
     val row = joined.agg(

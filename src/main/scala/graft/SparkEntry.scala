@@ -39,7 +39,8 @@ object SparkEntry {
   private def ts(s: String) = java.sql.Timestamp.from(Instant.parse(s))
 
   /** Scratch directory for fixture-staging queries (q68 backfill table +
-    * checkpoint log, q70-q73 stream landing dirs, q74/q75 encoded payloads):
+    * checkpoint log, q70-q73 stream landing dirs and checkpoints, q74/q75
+    * encoded payloads):
     * registers a JVM-exit recursive delete so repeated Verify/Bench/Plans
     * runs don't accumulate orphaned temp data under /tmp. Deletion is
     * deferred to exit because callers return LAZY frames over these paths —
@@ -305,9 +306,10 @@ object SparkEntry {
 
     /** Facade retrieval of an ARRAY feature (token payload): the q18 scenario
       * driven through the public FeatureStore API — the store detects the wide
-      * payload and routes through windowedLate (narrow window + shuffle-hash
-      * late fetch; see FeatureStore.joinView), so this gate row also proves
-      * the wide-payload routing end-to-end. Same oracle as q18.
+      * payload and late-materializes it (narrow window on a scan-position
+      * row id + shuffle-hash fetch; see FeatureStore.getHistoricalFeatures),
+      * so this gate row also proves the wide-payload routing end-to-end.
+      * Same oracle as q18.
       */
     Gate("q41_fs_tokens", (spark, dir) => {
       val out = scratchDir("graft_q41_src").toString
@@ -397,11 +399,11 @@ object SparkEntry {
         |SELECT event_id, user_id, ts, value AS purchase_value FROM j WHERE rn = 1""".stripMargin),
 
     /** TWO wide (array) views through one retrieval — exercises the facade's
-      * entity-side late materialization end to end: each wide view as-of joins
-      * a distinct narrow (key, ts) probe and stitches back by hash row-id, so
-      * neither token array rides the other view's window exchange/sort (plan
-      * evidence in PLANS.md). Views use DIFFERENT entity keys (lang vs
-      * source), different TTLs, and different timestamp grids.
+      * late materialization end to end: each wide view windows only a row id,
+      * and both payloads are fetched after the last window, so neither token
+      * array rides any window exchange/sort (plan evidence in PLANS.md).
+      * Views use DIFFERENT entity keys (lang vs source), different TTLs, and
+      * different timestamp grids.
       */
     Gate("q47_two_wide_views", (spark, dir) => {
       val outA = scratchDir("graft_q47_src_a").toString
@@ -1770,11 +1772,13 @@ object SparkEntry {
 
   /** Run a bounded streaming frame to completion into a memory sink and
     * return the sink table (unique sink name per query — memory sinks are
-    * session-global).
+    * session-global). The checkpoint goes to a scratch dir, so Spark
+    * creates no temporary checkpoint location of its own.
     */
   private def runBoundedStream(spark: SparkSession, frame: DataFrame,
       sinkName: String, mode: String): DataFrame = {
     val q = frame.writeStream.format("memory").queryName(sinkName)
+      .option("checkpointLocation", scratchDir(s"graft_${sinkName}_ckpt").toString)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

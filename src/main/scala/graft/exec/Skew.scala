@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Sampled hot-key detection (SURVEY §4): find entity keys whose share of
   * the data exceeds `hotShare`, from a seeded sample — the planning input
   * for [[graft.pit.AsOfJoin]]'s selective salting. One aggregate over the
-  * sampled fraction; cost is O(sample), independent of table size, so it is
-  * cheap enough to run inline before every large as-of join.
+  * sampled fraction, thresholded in the same query — one job, no cache; cost
+  * is O(sample), independent of table size, so it is cheap enough to run
+  * inline before every large as-of join.
   *
   * Statistical note: with sampleFraction f, a key holding share s of N rows
   * appears ~s·f·N times in the sample; for the defaults (f = 0.01) any key
@@ -39,17 +40,13 @@ object Skew {
       hotShare: Double = 0.01,
       sampleFraction: Double = 0.01,
       seed: Long = 42L): Seq[Seq[Any]] = {
-    val counts = df.select(keyCols.map(col): _*)
+    // one job, no cache: each sampled key's count is thresholded by the
+    // sample total in the same plan (an empty sample yields no rows)
+    df.select(keyCols.map(col): _*)
       .sample(withReplacement = false, sampleFraction, seed)
       .groupBy(keyCols.map(col): _*).count()
-      .cache()
-    try {
-      // sum over zero rows is NULL — read null-safely before the guard
-      val row = counts.agg(sum(col("count"))).head()
-      val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-      if (total == 0) Seq.empty
-      else counts.where(col("count") >= lit(total * hotShare))
-        .collect().map(r => keyCols.indices.map(r.get).toSeq).toSeq
-    } finally counts.unpersist()
+      .withColumn("__graft_total", sum(col("count")).over())
+      .where(col("count") >= col("__graft_total") * hotShare)
+      .collect().map(r => keyCols.indices.map(r.get).toSeq).toSeq
   }
 }

@@ -163,8 +163,8 @@ object AsOfJoin {
 
   /** Whether a type holds a map at any depth. Such values are neither
     * orderable nor hashable in Spark (map equality is order-insensitive), so
-    * this one predicate decides the window's tie-break column, the salt
-    * source's inputs and the facade's row-id serialization.
+    * this one predicate decides the window's tie-break column and the salt
+    * source's inputs.
     */
   private[graft] def containsMap(dt: DataType): Boolean = dt match {
     case _: MapType => true
@@ -219,8 +219,7 @@ object AsOfJoin {
 
   /** Late-materialized windowed as-of join: the shuffle/sort runs on a
     * NARROW projection (keys, ts, created, rowId); wide feature columns are
-    * fetched afterwards by one shuffle-hash equi-join on `rowId` against the
-    * original feature frame.
+    * fetched afterwards by [[fetch]] against the original feature frame.
     *
     * Shuffle and sort volume stay O(narrow bytes) regardless of payload
     * width — at 100 TB with ~KB token arrays per row this is the difference
@@ -232,8 +231,11 @@ object AsOfJoin {
     * ids first — a prune built from `matched` would evaluate the window a
     * second time.
     *
-    * `rowId` must uniquely identify feature rows (a stable table key, e.g.
-    * a sequence id — never a nondeterministically generated id).
+    * `rowId` must uniquely identify feature rows (a stable table key, a
+    * sequence id, or a hash of the row's scan position as the
+    * [[graft.FeatureStore]] facade uses — never a nondeterministically
+    * generated id). Rows fully tied on (ts, created) resolve to the larger
+    * row id.
     */
   def windowedLate(
       entity: DataFrame,
@@ -247,13 +249,17 @@ object AsOfJoin {
         .distinct.map(col): _*)
     val matched = windowed(entity, narrowFeature, spec.copy(features = Seq(rowId)),
       saltBuckets, hotKeys)
-    val payload = feature.select((rowId +: spec.features).distinct.map(col): _*)
-    // shuffle-HASH fetch, not sort-merge: the wide payload crosses exactly
-    // one exchange (to its rowId partition) and is never sorted — a
-    // sort-merge fetch would re-sort every payload byte just to equi-join
-    // on an 8-byte key
-    matched.join(payload.hint("shuffle_hash"), Seq(rowId), "left")
+    fetch(matched, feature.select((rowId +: spec.features).distinct.map(col): _*), rowId)
   }
+
+  /** The late fetch: left-join the payload onto `matched` by `rowId`.
+    * Shuffle-HASH, not sort-merge: the wide payload crosses exactly one
+    * exchange (to its rowId partition) and is never sorted — a sort-merge
+    * fetch would re-sort every payload byte just to equi-join on an 8-byte
+    * key.
+    */
+  private[graft] def fetch(matched: DataFrame, payload: DataFrame, rowId: String): DataFrame =
+    matched.join(payload.hint("shuffle_hash"), Seq(rowId), "left")
 
   /** Range-join strategy (reference SQL shape, bigquery.py:551-694 compressed
     * to one aggregate). Entity frame must carry a unique row id in `rowId`

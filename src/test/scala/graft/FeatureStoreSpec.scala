@@ -288,6 +288,44 @@ class FeatureStoreSpec extends SparkSpec {
     assert(byId(101L) == List(4, 5))
   }
 
+  test("two wide views keep duplicate entity rows and give null-key rows null features") {
+    val d = java.nio.file.Files.createTempDirectory("graft_fs_two_wide").toString
+    // each source also holds a null-keyed row: it must never match
+    Seq(
+      (Option(1L), t(10), 1L, Seq(1, 2, 3)),
+      (Option(1L), t(20), 2L, Seq(4, 5)),
+      (Option.empty[Long], t(10), 3L, Seq(9)))
+      .toDF("driver_id", "event_timestamp", "created", "toks")
+      .write.parquet(s"$d/a.parquet")
+    Seq(
+      (Option(1L), t(15), 1L, Map("k" -> 7)),
+      (Option.empty[Long], t(5), 2L, Map("k" -> 8)))
+      .toDF("driver_id", "event_timestamp", "created", "props")
+      .write.parquet(s"$d/b.parquet")
+    def view(name: String, path: String, feat: Feature) =
+      FeatureView(name, Seq(Entity("driver", ValueType.INT64, Some("driver_id"))),
+        Seq(feat), BatchSource(path, "event_timestamp", Some("created")),
+        ttlSeconds = Some(3600L))
+    val store = new FeatureStore(spark, Map(
+      "a" -> view("a", s"$d/a.parquet", Feature("toks", ValueType.ListOf(ValueType.INT32))),
+      "b" -> view("b", s"$d/b.parquet",
+        Feature("props", ValueType.MapOf(ValueType.STRING, ValueType.INT32)))))
+    // order 100 appears twice (a legal duplicate entity row); 101 has no key
+    val entity = Seq(
+      (100L, Option(1L), t(25)), (100L, Option(1L), t(25)), (101L, Option.empty[Long], t(25)))
+      .toDF("order_id", "driver_id", "event_timestamp")
+    val out = store.getHistoricalFeatures(entity, Seq("a:toks", "b:props")).collect()
+      .map { r =>
+        val toks = Option(r.getAs[scala.collection.Seq[Int]]("toks")).map(_.toList)
+        val props = Option(r.getAs[scala.collection.Map[String, Int]]("props")).map(_.toMap)
+        (r.getAs[Long]("order_id"), toks, props)
+      }
+    assert(out.sortBy(_._1).toSeq == Seq(
+      (100L, Some(List(4, 5)), Some(Map("k" -> 7))),
+      (100L, Some(List(4, 5)), Some(Map("k" -> 7))),
+      (101L, None, None)))
+  }
+
   test("date_partition_column prunes partitions from the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fs_dpc").toString
     val rows = (0 until 20).map { d =>

@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -22,14 +21,12 @@ import graft.fixtures.TokenSeq
 /** Plan-shape fence of the late-materialized as-of path, read from EXECUTED
   * plans (AQE final plans included):
   *
-  *  - exactly one as-of `Window` (the one computing `__graft_last`): the
-  *    matched frame feeds only the fetch join, so nothing evaluates the
-  *    as-of exchange + sort + window a second time;
+  *  - one as-of `Window` (the one computing `__graft_last`) per as-of
+  *    join: the matched frame feeds only the fetch join, so nothing
+  *    evaluates the as-of exchange + sort + window a second time;
   *  - no array column, at any depth, in the input of any `Window` or
   *    `Sort`: the wide payload never rides a window and is never sorted
-  *    (a sort-merge fetch would sort it). The one exempt sort is the one
-  *    under a `SortAggregate` — FeatureStore's row-id dedup guard, which
-  *    must keep a whole payload row per id.
+  *    (a sort-merge fetch would sort it), with no exemption.
   */
 object PlanShape extends AdaptiveSparkPlanHelper {
 
@@ -44,27 +41,25 @@ object PlanShape extends AdaptiveSparkPlanHelper {
     case _ => false
   }
 
-  /** Window/Sort operators (outside the dedup guard) whose input carries an array. */
-  def arraySortsOrWindows(plan: SparkPlan): Seq[SparkPlan] = {
-    val dedupSorts = collect(plan) {
-      case a: SortAggregateExec => a.child match {
-        case w: WholeStageCodegenExec => w.child
-        case c => c
-      }
-    }
+  /** Window/Sort operators whose input carries an array. */
+  def arraySortsOrWindows(plan: SparkPlan): Seq[SparkPlan] =
     collect(plan) {
       case w: WindowExec if w.child.output.exists(a => hasArray(a.dataType)) => w
-      case s: SortExec if !dedupSorts.exists(_ eq s) &&
-          s.child.output.exists(a => hasArray(a.dataType)) => s
+      case s: SortExec if s.child.output.exists(a => hasArray(a.dataType)) => s
     }
-  }
+
+  /** For each array column read from a file, the number of scans that read it. */
+  def arrayColumnScans(plan: SparkPlan): Map[String, Int] =
+    collect(plan) { case s: FileSourceScanExec => s }
+      .flatMap(_.output.filter(a => hasArray(a.dataType)).map(_.name).distinct)
+      .groupBy(identity).map { case (c, scans) => c -> scans.size }
 
   /** Both fences on one executed plan; returns a failure message or "". */
-  def lateFetchViolations(plan: SparkPlan): String = {
+  def lateFetchViolations(plan: SparkPlan, asOfJoins: Int = 1): String = {
     val windows = asOfWindows(plan).size
     val arrays = arraySortsOrWindows(plan)
     Seq(
-      if (windows != 1) s"expected exactly one as-of Window, found $windows" else "",
+      if (windows != asOfJoins) s"expected $asOfJoins as-of Window(s), found $windows" else "",
       if (arrays.nonEmpty) s"array column fed ${arrays.map(_.nodeName).mkString(", ")}" else "")
       .filter(_.nonEmpty).mkString("; ")
   }
@@ -135,6 +130,33 @@ class LatePlanShapeSpec extends SparkSpec {
       r.getAs[Long]("event_id") -> Option(r.getAs[java.lang.Double]("purchase_value")).map(_.doubleValue))
       .toMap
     assert(got == Map(2L -> Some(5.0), 4L -> Some(7.0), 5L -> None))
+  }
+
+  test("q47 two wide views: one as-of window each, arrays never sorted, each read by one scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q47").toString
+    Seq(
+      (0L, "abcdef", "en", "web", 6L),
+      (1L, "ghij", "en", "web", 4L),
+      (2L, "klmnopq", "de", "wiki", 7L),
+      (3L, "rs", "en", "wiki", 2L),
+      (60L, "tuvw", "en", "web", 4L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val out = SparkEntry.queries("q47_two_wide_views")(spark, dir)
+    val rows = out.collect()
+    val plan = out.queryExecution.executedPlan
+    val v = PlanShape.lateFetchViolations(plan, asOfJoins = 2)
+    assert(v.isEmpty, v)
+    val scans = PlanShape.arrayColumnScans(plan)
+    assert(scans == Map("tokens" -> 1, "rev_toks" -> 1), s"array column scans: $scans")
+    val got = rows.map(r =>
+      r.getAs[Long]("probe_id") -> (r.getAs[String]("tokens_str"), r.getAs[String]("rev_str")))
+      .toMap
+    // probe p sits 90 s after doc p's feature row: lang view (ttl 1h) picks
+    // the latest same-lang doc, source view (45 s grid, ttl 30 min) likewise
+    assert(got(1L) == (("103,104,105,106", "106,105,104,103")))
+    assert(got(2L) == (("107,108,109,110,111,112,113", "115,114")))
+    assert(got(60L)._1 == "116,117,118,119")
   }
 
   test("timedJob: one as-of window, token arrays never enter a window or sort") {

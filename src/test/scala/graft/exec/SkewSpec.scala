@@ -1,6 +1,6 @@
 package graft.exec
 
-import graft.SparkSpec
+import graft.{PlanShape, SparkSpec}
 import graft.fixtures.TokenSeq
 
 /** Hot-key detection against the skewed/uniform TokenSeq fixtures. */
@@ -16,5 +16,18 @@ class SkewSpec extends SparkSpec {
     val uniform = TokenSeq.generate(spark, n = 20000, entities = 50, hotSharePct = 0)
     val hot = Skew.detectHotKeys(uniform, "doc_id", hotShare = 0.1, sampleFraction = 0.2)
     assert(hot.isEmpty, s"got $hot")
+  }
+
+  test("detection is one query and leaves nothing cached") {
+    spark.catalog.clearCache()
+    Seq(30 -> Seq("doc_0"), 0 -> Nil).foreach { case (hotSharePct, want) =>
+      val df = TokenSeq.generate(spark, n = 20000, entities = 50, hotSharePct = hotSharePct)
+      val (hot, plans) = PlanShape.executedPlans(spark) {
+        Skew.detectHotKeys(df, "doc_id", hotShare = 0.1, sampleFraction = 0.2)
+      }
+      assert(hot == want, s"hotSharePct $hotSharePct: got $hot")
+      assert(plans.size == 1, s"hotSharePct $hotSharePct: ${plans.size} queries ran")
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
   }
 }
