@@ -10,12 +10,21 @@ import graft.materialize.Materialize
 
 /** Facade re-creating the reference's `FeatureStore.get_historical_features`
   * (feast feature_store.py:276-341) as one declarative Catalyst plan:
-  * resolve refs → per-view (scan → field-map → prune to entity time range →
-  * as-of join) → fold left-joins onto the entity frame. Spark is the
+  * resolve refs → read each source path once → per view (field-map → prune
+  * to the entity time range) → ONE as-of window per join-key set, each view
+  * on those keys one side of it → late payload fetches. Spark is the
   * execution engine, so the "RetrievalJob" IR is simply the returned lazy
   * DataFrame.
   */
 final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
+
+  private val RowId = "__graft_rowid"
+
+  /** One view of a retrieval: its output feature `names`, its row-id
+    * column, its projected source rows and whether it is late-materialized.
+    */
+  private case class Side(
+      view: FeatureView, names: Seq[String], rowId: String, src: DataFrame, wide: Boolean)
 
   /** @param entityTsColumn the entity frame's event-timestamp column; empty
     *   string (the default) infers it from the schema the way the reference
@@ -24,7 +33,8 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     * @param saltBuckets with > 1 plus `autoDetectHotKeys`, entity keys whose
     *   sampled share exceeds ~1% are salted across this many sub-buckets in
     *   the as-of window (hot-key mitigation; correctness unchanged — see
-    *   AsOfJoin.windowed). Detection is one O(sample) aggregate per view.
+    *   AsOfJoin.windowed). Detection is one O(sample) aggregate per as-of
+    *   window, i.e. per join-key set.
     */
   def getHistoricalFeatures(
       entityDf: DataFrame,
@@ -46,61 +56,61 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     val grouped = FeatureRefs.group(FeatureRefs.parse(featureRefs), views, fullFeatureNames)
     val bounds = Materialize.timestampBounds(entityNorm, tsCol)
 
-    // One as-of core for every view. A narrow (scalar) view's values ride
-    // its own window and fold straight onto the entity frame. A wide
-    // (array/binary/map/struct) view is LATE MATERIALIZED in the shape of
-    // AsOfJoin.windowedLate: its window carries only a row id, and its
-    // payload is fetched by one shuffle-hash join on that id after EVERY
-    // window has run — so no window's exchange or sort carries any view's
-    // payload, for any number of wide views. Every entity row is windowed
-    // as it is, so duplicate rows each keep their match and a null key
-    // matches nothing (null features).
-    def asOf(acc: DataFrame, view: FeatureView, source: DataFrame,
-        feats: Seq[String]): DataFrame = {
-      val keys = view.joinKeys
-      keys.foreach(k => require(acc.columns.contains(k),
+    // Each distinct source path is read once; the views on it share the
+    // frame and its scan-position row id.
+    val reads: Map[String, DataFrame] = grouped.keys.map(_.source.path).toSeq.distinct
+      .map(p => p -> spark.read.parquet(p).withColumn(RowId,
+        xxhash64(col("_metadata.file_path"), col("_metadata.row_index")))).toMap
+    val all = grouped.toSeq.sortBy(_._1.name).zipWithIndex.map { case ((view, feats), i) =>
+      view.joinKeys.foreach(k => require(entityNorm.columns.contains(k),
         s"entity frame is missing join key '$k' for view '${view.name}'"))
-      val spec = AsOfSpec(
-        keys = keys,
-        leftTs = tsCol,
-        rightTs = view.source.eventTimestampColumn,
-        createdTs = view.source.createdTimestampColumn,
-        ttlSeconds = view.ttlSeconds,
-        features = feats)
+      val names = feats.distinct.map(FeatureRefs.outputName(view.name, _, fullFeatureNames))
+      val rowId = s"${RowId}_$i"
+      val src = source(view, feats.distinct, names, bounds, reads(view.source.path), rowId)
+      val wide = src.schema.fields.exists(f => names.contains(f.name) && (f.dataType match {
+        case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
+        case _ => false
+      }))
+      Side(view, names, rowId, src, wide)
+    }
+    val (wide, narrow) = all.partition(_.wide)
+
+    // One as-of core per join-key set: every view on those keys is one side
+    // of ONE window (one exchange, one sort, one Window operator). A narrow
+    // (scalar) view's values ride the window. A wide (array/binary/map/
+    // struct) view is LATE MATERIALIZED in the shape of
+    // AsOfJoin.windowedLate: its side carries only a row id, and its payload
+    // is fetched by one shuffle-hash join on that id after EVERY window has
+    // run — so no window's exchange or sort carries any view's payload.
+    // Every entity row is windowed as it is, so duplicate rows each keep
+    // their match and a null key matches nothing (null features).
+    val ordered = narrow ++ wide
+    val windows = ordered.map(_.view.joinKeys).distinct
+      .map(keys => ordered.filter(_.view.joinKeys == keys))
+    val matched = windows.foldLeft(entityNorm) { (acc, sides) =>
+      val keys = sides.head.view.joinKeys
       val hot: Seq[Any] =
         if (saltBuckets > 1 && autoDetectHotKeys)
           graft.exec.Skew.detectHotKeyTuples(entityDf, keys)
         else Nil
-      AsOfJoin.windowed(acc, source, spec,
+      val specs = sides.map(s => s.src -> AsOfSpec(
+        keys = keys,
+        leftTs = tsCol,
+        rightTs = s.view.source.eventTimestampColumn,
+        createdTs = s.view.source.createdTimestampColumn,
+        ttlSeconds = s.view.ttlSeconds,
+        features = if (s.wide) Seq(s.rowId) else s.names))
+      AsOfJoin.windowed(acc, specs,
         if (hot.nonEmpty || (saltBuckets > 1 && !autoDetectHotKeys)) saltBuckets else 1,
         hot)
     }
-    def named(df: DataFrame, view: FeatureView, feats: Seq[String]): DataFrame =
-      feats.foldLeft(df) { (d, f) =>
-        d.withColumnRenamed(f, FeatureRefs.outputName(view.name, f, fullFeatureNames))
-      }
-
-    val sources = grouped.toSeq.sortBy(_._1.name).zipWithIndex.map {
-      case ((view, feats), i) =>
-        val rowId = s"__graft_rowid_$i"
-        (view, feats, rowId, source(view, feats, bounds, rowId))
+    val fetched = wide.foldLeft(matched) { (acc, s) =>
+      AsOfJoin.fetch(acc, s.src.select((s.rowId +: s.names).map(col): _*), s.rowId)
+        .drop(s.rowId)
     }
-    val (wide, narrow) = sources.partition { case (_, feats, _, src) =>
-      src.schema.fields.exists(f => feats.contains(f.name) && (f.dataType match {
-        case _: ArrayType | _: BinaryType | _: MapType | _: StructType => true
-        case _ => false
-      }))
-    }
-    val narrowAcc = narrow.foldLeft(entityNorm) { case (acc, (view, feats, _, src)) =>
-      named(asOf(acc, view, src, feats), view, feats)
-    }
-    val matched = wide.foldLeft(narrowAcc) { case (acc, (view, _, rowId, src)) =>
-      asOf(acc, view, src, Seq(rowId))
-    }
-    wide.foldLeft(matched) { case (acc, (view, feats, rowId, src)) =>
-      val payload = src.select((rowId +: feats).map(col): _*)
-      named(AsOfJoin.fetch(acc, payload, rowId).drop(rowId), view, feats)
-    }
+    // entity columns, then narrow features, then wide features, each by view name
+    fetched.select(
+      (entityNorm.columns.toSeq ++ ordered.flatMap(_.names)).map(c => col(s"`$c`")): _*)
   }
 
   /** Online lookup through the registry — the reference's
@@ -126,9 +136,10 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     Materialize.lookupMulti(keys, online, asOf)
   }
 
-  /** A view's feature rows: scan → field-map → prune to the entity time
-    * range → project join keys, timestamps, `feats` and `rowId`. The row id
-    * hashes the row's scan position (`_metadata.file_path`,
+  /** A view's feature rows: field-map the shared read of its path → prune
+    * to the entity time range → project join keys, timestamps, `feats`
+    * (as their output `names`) and the path's row id (as `rowId`). The row
+    * id hashes the row's scan position (`_metadata.file_path`,
     * `_metadata.row_index`): unique per physical row and computed without
     * reading a payload byte, so identical duplicate rows stay distinct and
     * the late fetch returns exactly one payload row per match. It is unique
@@ -141,19 +152,19 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
   private def source(
       view: FeatureView,
       feats: Seq[String],
+      names: Seq[String],
       bounds: (Any, Any),
+      read: DataFrame,
       rowId: String): DataFrame = {
-    val raw = spark.read.parquet(view.source.path)
-    val withId = raw.withColumn(rowId,
-      xxhash64(col("_metadata.file_path"), col("_metadata.row_index")))
-    val mapped = FieldMapping(withId, view.source.fieldMapping)
+    val mapped = FieldMapping(read, view.source.fieldMapping)
     val pruned = prunePartitions(
       Materialize.pruneToEntityRange(
         mapped, view.source.eventTimestampColumn, bounds, view.ttlSeconds),
       view, bounds)
-    pruned.select(
-      (view.joinKeys ++ Seq(view.source.eventTimestampColumn) ++
-        view.source.createdTimestampColumn.toSeq ++ feats :+ rowId).distinct.map(col): _*)
+    val base = (view.joinKeys ++ Seq(view.source.eventTimestampColumn) ++
+      view.source.createdTimestampColumn.toSeq).distinct
+    val featCols = feats.zip(names).collect { case (f, n) if !base.contains(n) => col(f).as(n) }
+    pruned.select((base.map(col) ++ featCols :+ col(RowId).as(rowId)): _*)
   }
 
   /** `date_partition_column` read-side pruning (reference:

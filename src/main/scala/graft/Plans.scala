@@ -21,13 +21,14 @@ object Plans {
 
     val picks = Seq(
       "q01_pit_asof" -> "windowed as-of join: one exchange + one sort, no row explosion",
+      "q12_multi_view" -> "two views on user_id as two sides of ONE as-of window (one window per key set): one user_id exchange, one sort, one Window computing __graft_last and __graft_last_1, each side's TTL checked after it",
       "q03_pull_latest" -> "time-bounded latest: range filter pushed into the parquet scan",
       "q35_late_asof" -> "late-materialized as-of: ONE narrow window (keys, ts, created, rowid), then a shuffle-hash payload fetch on the row id — the window is evaluated once",
       "q05_tumbling" -> "tumbling agg: partial/final HashAggregate (map-side combine)",
       "q21_rolling" -> "range-frame rolling window",
       "q17_knn" -> "brute-force top-k: broadcast of the query side, codegen'd cosine",
-      "q41_fs_tokens" -> "facade wide-payload routing: ONE as-of window over (lang, fts, src_doc, rowid), the rowid hashed from the scan position (_metadata.file_path, row_index); `tokens` is read by ONE scan and fetched after the window by a shuffle-hash join on the rowid — no aggregate, no sort of the payload, three exchanges",
-      "q47_two_wide_views" -> "facade late materialization over TWO array views: each view windows the accumulated entity frame against its narrow (key, ts, created, rowid) projection — ONE as-of window per view, no array in any Window/Sort input; both payloads are fetched after the last window by one shuffle-hash join each, every array column read by ONE scan",
+      "q41_fs_tokens" -> "facade wide-payload routing, one as-of window per key set: ONE as-of window over (lang, fts, src_doc, rowid), the rowid hashed from the scan position (_metadata.file_path, row_index); `tokens` is read by ONE scan and fetched after the window by a shuffle-hash join on the rowid — no aggregate, no sort of the payload, three exchanges",
+      "q47_two_wide_views" -> "facade late materialization over TWO array views, one as-of window per key set: the views key on lang and on source, so each windows the accumulated entity frame against its narrow (key, ts, created, rowid) projection — TWO as-of windows, no array in any Window/Sort input; both payloads are fetched after the last window by one shuffle-hash join each, every array column read by ONE scan",
       "q39_ann_ivf" -> "IVF assignment as literal-centroid projection: no join, no window, no xN expansion before the probe equi-join",
       "q37_pack_sequences" -> "two-level packing: per-(lang, shard) cumsum windows + tiny offsets join",
       "q48_hash_split" -> "deterministic hash split: pure codegen'd projection, zero shuffles/exchanges",

@@ -80,8 +80,9 @@ object SparkEntry {
 
   // -- PIT / as-of joins -----------------------------------------------------
 
-  /** Multi-view composition (J4): two feature views folded onto one entity
-    * frame, different TTLs per view.
+  /** Multi-view composition (J4): two feature views on one entity key,
+    * different TTLs, as the two sides of ONE as-of window (one exchange, one
+    * sort, one Window) instead of one window per view.
     */
   private val multiView = Gate("q12_multi_view", (spark, dir) => {
     val ev = tbl(spark, dir, "events")
@@ -93,12 +94,12 @@ object SparkEntry {
     val errors = ev.where(col("event_type") === "error")
       .select(col("user_id"), col("ts"), col("value").as("error_value"),
         col("event_id").as("f_created"))
-    val step1 = AsOfJoin.windowed(entity, purchases,
-      AsOfSpec(Seq("user_id"), "ts", "ts", Some("f_created"), Some(6L * 3600),
-        Seq("purchase_value")))
-    AsOfJoin.windowed(step1, errors,
-      AsOfSpec(Seq("user_id"), "ts", "ts", Some("f_created"), Some(12L * 3600),
-        Seq("error_value")))
+    AsOfJoin.windowed(entity, Seq(
+      purchases -> AsOfSpec(Seq("user_id"), "ts", "ts", Some("f_created"), Some(6L * 3600),
+        Seq("purchase_value")),
+      errors -> AsOfSpec(Seq("user_id"), "ts", "ts", Some("f_created"), Some(12L * 3600),
+        Seq("error_value"))),
+      saltBuckets = 1, hotKeys = Nil)
   }, oracle =
     """WITH ent AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
       |p AS (SELECT event_id AS f_id, user_id, ts AS f_ts, value FROM events WHERE event_type = 'purchase'),

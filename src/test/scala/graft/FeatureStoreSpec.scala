@@ -154,6 +154,108 @@ class FeatureStoreSpec extends SparkSpec {
     assert(cols.indexOf("rate") < cols.indexOf("toks"))
   }
 
+  /** A narrow view with a TTL and a wide view over ONE source path, both
+    * keyed on `driver_id`: three drivers of history, the wide view first by
+    * name so a fold by name would window it first.
+    */
+  private def oneKeyOnePath(dir: String): FeatureStore = {
+    Seq(
+      (1L, t(10), t(10), Seq(1, 2, 3), 0.5),
+      (1L, t(20), t(21), Seq(4, 5), 0.7),
+      (2L, t(10), t(10), Seq(9), 0.9),
+      (3L, t(24), t(24), Seq(6), 0.3))
+      .toDF("driver_id", "event_timestamp", "created", "toks", "rate")
+      .write.parquet(s"$dir/src.parquet")
+    def src = BatchSource(s"$dir/src.parquet", "event_timestamp", Some("created"))
+    def keys = Seq(Entity("driver", ValueType.INT64, Some("driver_id")))
+    new FeatureStore(spark, Map(
+      "aaa_wide" -> FeatureView("aaa_wide", keys,
+        Seq(Feature("toks", ValueType.ListOf(ValueType.INT32))), src),
+      "zzz_narrow" -> FeatureView("zzz_narrow", keys,
+        Seq(Feature("rate", ValueType.DOUBLE)), src, ttlSeconds = Some(600L))))
+  }
+
+  test("views on one key share one as-of window and one read of their path") {
+    val store = oneKeyOnePath(
+      java.nio.file.Files.createTempDirectory("graft_fs_shared").toString)
+    val entity = Seq((100L, 1L, t(25)), (101L, 2L, t(25)), (102L, 3L, t(25)))
+      .toDF("order_id", "driver_id", "event_timestamp")
+    val out = store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate"))
+    val rows = out.collect().map { r =>
+      (r.getAs[Long]("order_id"),
+        Option(r.getAs[scala.collection.Seq[Int]]("toks")).map(_.toList),
+        Option(r.getAs[java.lang.Double]("rate")).map(_.doubleValue))
+    }.sortBy(_._1).toSeq
+    // driver 2's rate is 15 min old, past the narrow view's 10 min ttl; the
+    // wide view has no ttl
+    assert(rows == Seq(
+      (100L, Some(List(4, 5)), Some(0.7)),
+      (101L, Some(List(9)), None),
+      (102L, Some(List(6)), Some(0.3))))
+    // entity columns, then narrow, then wide features — the fold's order
+    assert(out.columns.toSeq == Seq("order_id", "driver_id", "event_timestamp", "rate", "toks"))
+    val plan = out.queryExecution.executedPlan
+    val v = PlanShape.lateFetchViolations(plan, asOfJoins = 1)
+    assert(v.isEmpty, v)
+    assert(PlanShape.arrayColumnScans(plan) == Map("toks" -> 1))
+  }
+
+  test("getHistoricalFeatures starts 3 jobs for a two-view, one-path request") {
+    // jobs started inside the call, before any action on its result: the
+    // entity time-bounds aggregate (two jobs under AQE: its shuffle stage,
+    // then the result) and one schema read of the shared path. One read per
+    // view made it 4.
+    val store = oneKeyOnePath(
+      java.nio.file.Files.createTempDirectory("graft_fs_jobs").toString)
+    val entity = Seq((100L, 1L, t(25))).toDF("order_id", "driver_id", "event_timestamp")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.Listeners.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate"))
+      org.apache.spark.Listeners.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 3)
+  }
+
+  test("salted retrieval detects hot keys once per as-of window, not once per view") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fs_salt_once").toString
+    val rows = (0 until 2000).map { i =>
+      val k = if (i % 2 == 0) 0L else (i % 50).toLong
+      (k, t(i % 500L), t(i % 500L), i.toDouble, (i % 7).toLong)
+    }
+    rows.toDF("driver_id", "event_timestamp", "created", "rate", "trips")
+      .write.parquet(s"$dir/src.parquet")
+    def view(name: String, feat: Feature, ttl: Long) = name -> FeatureView(name,
+      Seq(Entity("driver", ValueType.INT64, Some("driver_id"))), Seq(feat),
+      BatchSource(s"$dir/src.parquet", "event_timestamp", Some("created")),
+      ttlSeconds = Some(ttl))
+    val store = new FeatureStore(spark, Map(
+      view("rates", Feature("rate", ValueType.DOUBLE), 7200L),
+      view("trips", Feature("trips", ValueType.INT64), 1800L)))
+    // half the probes on driver 0: a 1% sample of 4,000 rows finds it
+    val entity = (0 until 4000).map { i =>
+      (i.toLong, if (i % 2 == 0) 0L else (i % 50).toLong, t(100 + i % 300L))
+    }.toDF("order_id", "driver_id", "event_timestamp")
+    val refs = Seq("rates:rate", "trips:trips")
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val plain = collect(store.getHistoricalFeatures(entity, refs))
+    val (salted, plans) = PlanShape.executedPlans(spark) {
+      collect(store.getHistoricalFeatures(entity, refs, saltBuckets = 4,
+        autoDetectHotKeys = true))
+    }
+    val sampled = plans.count(p => PlanShape.collect(p) {
+      case s: org.apache.spark.sql.execution.SampleExec => s
+    }.nonEmpty)
+    assert(sampled == 1, s"$sampled hot-key detection queries")
+    assert(salted == plain)
+  }
+
   test("facade salting (auto hot-key detection) preserves results exactly") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fs_salt").toString
     // one scorching key (0) with dense history + long tail

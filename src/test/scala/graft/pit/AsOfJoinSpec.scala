@@ -310,6 +310,47 @@ class AsOfJoinSpec extends SparkSpec {
     assert(r.isNullAt(0) && r.getDouble(1) == 2.0)
   }
 
+  test("N-side windowed ≡ per-side rangeJoin ≡ fold of single-side calls, salted and not") {
+    // three sides on one key: bigint created + ttl 1 h, timestamp created +
+    // no ttl, and an empty side (ttl 30 min); a small ts/created grid makes
+    // full (ts, created) ties common, and null keys sit on both sides
+    def key(rnd: scala.util.Random) =
+      if (rnd.nextInt(8) == 0) None else Some(s"k${rnd.nextInt(4)}")
+    for (seed <- Seq(2L, 19L)) {
+      val rnd = new scala.util.Random(seed)
+      val entRows = (0 until 60).map(i => (i.toLong, key(rnd), t(30 + rnd.nextInt(90).toLong)))
+      // duplicate entity rows: each must keep its own (equal) match
+      val ents = (entRows ++ entRows.take(8)).toDF("eid", "key", "ets")
+      val a = (0 until 80).map(_ => (key(rnd), t(rnd.nextInt(100).toLong),
+        rnd.nextInt(3).toLong, rnd.nextInt(5).toDouble))
+        .toDF("key", "fts", "ca", "va")
+      val b = (0 until 80).map(_ => (key(rnd), t(rnd.nextInt(100).toLong),
+        t(rnd.nextInt(3).toLong), s"s${rnd.nextInt(5)}"))
+        .toDF("key", "bts", "cb", "vb")
+      val c = Seq.empty[(Option[String], Timestamp, Long, Double)].toDF("key", "cts", "cc", "vc")
+      val sides = Seq(
+        a -> AsOfSpec(Seq("key"), "ets", "fts", Some("ca"), Some(3600L), Seq("va")),
+        b -> AsOfSpec(Seq("key"), "ets", "bts", Some("cb"), None, Seq("vb")),
+        c -> AsOfSpec(Seq("key"), "ets", "cts", Some("cc"), Some(1800L), Seq("vc")))
+      def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
+        df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val all = Seq("eid", "key", "ets", "va", "vb", "vc")
+      val fold = sides.foldLeft(ents) { case (acc, (f, sp)) => AsOfJoin.windowed(acc, f, sp) }
+      val want = rows(fold, all)
+      assert(want.count(!_.endsWith("|null|null|null")) > 20, "too few matches to test")
+      for ((salt, hot) <- Seq((1, Nil), (4, Nil), (8, Seq("k0")))) {
+        val multi = AsOfJoin.windowed(ents, sides, salt, hot)
+        assert(multi.columns.toSeq == all)
+        assert(rows(multi, all) == want, s"seed=$seed salt=$salt hot=$hot")
+        for ((f, sp) <- sides) {
+          val cols = Seq("eid", "key", "ets") ++ sp.features
+          assert(rows(multi, cols) == rows(AsOfJoin.rangeJoin(ents, f, sp, rowId = "eid"), cols),
+            s"seed=$seed salt=$salt side=${sp.features}")
+        }
+      }
+    }
+  }
+
   test("no row explosion: output columns carry no internal __graft names") {
     val (ents, feats) = scenario(5L, 10, 10, 2)
     val out = AsOfJoin.windowed(ents.toDF(), feats.toDF(), spec(Some(60L)))
