@@ -97,11 +97,12 @@ object AsOfJoin {
     *
     * Cost trade: one exchange and one sort of (entity + Σ side) rows, with N
     * `last` updates per row, against N exchanges and N sorts of the
-    * accumulating entity payload plus that side's rows. Measured at local[4]
-    * on `retrieval_wide`'s inputs (10k entity rows, 20k feature rows) with
-    * 6 narrow views of different TTLs plus one wide view on one key, one
-    * retrieval took 3.89–4.14 s as seven single-side windows and 2.09–2.45 s
-    * as one seven-side window.
+    * accumulating entity payload plus that side's rows. Measured with
+    * perfbench's session (local[4], 8 shuffle partitions, C1 JIT) on
+    * `retrieval_wide`'s inputs (10k entity rows, 20k feature rows), a
+    * retrieval of 6 narrow views with different TTLs plus one wide view on
+    * one key took 3.89–4.14 s as seven one-side windows and 2.09–2.45 s as
+    * one seven-side window.
     */
   def windowed(
       entity: DataFrame,
@@ -118,7 +119,7 @@ object AsOfJoin {
     require(featCols.distinct.size == featCols.size,
       s"as-of sides repeat a feature name: ${featCols.mkString(", ")}")
     val entityCols = entity.columns.toSeq
-    // side 0 keeps the one-side names, so a one-side plan is unchanged
+    // side 0 keeps the bare names, which plan fences and perfbench match
     def sfx(i: Int) = if (i == 0) "" else s"_$i"
     def created(i: Int) = s"__graft_created${sfx(i)}"
     def feat(i: Int) = s"$FEAT${sfx(i)}"

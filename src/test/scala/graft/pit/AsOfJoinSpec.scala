@@ -311,9 +311,10 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("N-side windowed ≡ per-side rangeJoin ≡ fold of single-side calls, salted and not") {
-    // three sides on one key: bigint created + ttl 1 h, timestamp created +
-    // no ttl, and an empty side (ttl 30 min); a small ts/created grid makes
-    // full (ts, created) ties common, and null keys sit on both sides
+    // three sides on one key: bigint created + ttl 10 min (it expires many
+    // picks), timestamp created + no ttl, and an empty side (ttl 30 min); a
+    // small ts/created grid makes full (ts, created) ties common, and null
+    // keys sit on both sides
     def key(rnd: scala.util.Random) =
       if (rnd.nextInt(8) == 0) None else Some(s"k${rnd.nextInt(4)}")
     for (seed <- Seq(2L, 19L)) {
@@ -329,7 +330,7 @@ class AsOfJoinSpec extends SparkSpec {
         .toDF("key", "bts", "cb", "vb")
       val c = Seq.empty[(Option[String], Timestamp, Long, Double)].toDF("key", "cts", "cc", "vc")
       val sides = Seq(
-        a -> AsOfSpec(Seq("key"), "ets", "fts", Some("ca"), Some(3600L), Seq("va")),
+        a -> AsOfSpec(Seq("key"), "ets", "fts", Some("ca"), Some(600L), Seq("va")),
         b -> AsOfSpec(Seq("key"), "ets", "bts", Some("cb"), None, Seq("vb")),
         c -> AsOfSpec(Seq("key"), "ets", "cts", Some("cc"), Some(1800L), Seq("vc")))
       def rows(df: DataFrame, cols: Seq[String]): Seq[String] =
@@ -338,6 +339,7 @@ class AsOfJoinSpec extends SparkSpec {
       val fold = sides.foldLeft(ents) { case (acc, (f, sp)) => AsOfJoin.windowed(acc, f, sp) }
       val want = rows(fold, all)
       assert(want.count(!_.endsWith("|null|null|null")) > 20, "too few matches to test")
+      assert(want.exists(_.contains("|null|s")), "side a's ttl expired no pick")
       for ((salt, hot) <- Seq((1, Nil), (4, Nil), (8, Seq("k0")))) {
         val multi = AsOfJoin.windowed(ents, sides, salt, hot)
         assert(multi.columns.toSeq == all)
