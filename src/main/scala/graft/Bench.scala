@@ -5,9 +5,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.ops.{Dedup, Similarity}
 
@@ -19,7 +18,6 @@ import graft.ops.{Dedup, Similarity}
   *   runMain graft.Bench dedup [nDocs]
   *   runMain graft.Bench digest [nDocs] [wordsPerDoc]
   *   runMain graft.Bench span [nDocs] [docLen] [n]
-  *   runMain graft.Bench ann-gate [nVectors]
   *
   * The per-round contract reports per-query wall times over
   * SPARK_GRAFT_SF_DIR, plus the headline BASELINE.md metric — end-to-end
@@ -27,9 +25,9 @@ import graft.ops.{Dedup, Similarity}
   * input (10M rows, generated once to /tmp and reused across rounds).
   * Scaling efficiency across parallelism levels is measured separately by
   * tools/scaling_bench.sh → BENCH/BASELINE.md (fresh JVM per level; can't be
-  * done inside one JVM). The operator modes feed BENCH/DEDUP.md and
-  * BENCH/ANN.md; each keeps its own fixture and cross-checks its competing
-  * plans with `require` before reporting.
+  * done inside one JVM). The operator modes feed BENCH/DEDUP.md; each
+  * keeps its own fixture and cross-checks its competing plans with
+  * `require` before reporting.
   */
 object Bench {
   type Result = ListMap[String, Any]
@@ -47,9 +45,8 @@ object Bench {
     case "dedup" :: rest => dedup(spark, rest)
     case "digest" :: rest => digest(spark, rest)
     case "span" :: rest => span(spark, rest)
-    case "ann-gate" :: rest => annGate(spark, rest)
     case other =>
-      sys.error(s"usage: Bench [cc|cosine|dedup|digest|span|ann-gate [args]], got $other")
+      sys.error(s"usage: Bench [cc|cosine|dedup|digest|span [args]], got $other")
   }
 
   /** Wall seconds of evaluating `f`, with its value. */
@@ -399,54 +396,5 @@ object Bench {
       "mask_sec" -> tMask, "masked_tokens" -> rMask,
       "naive_sec" -> tNaive, "naive_rows" -> rNaive,
       "naive_over_kernel" -> tNaive / tKernel)
-  }
-
-  /** Crossover of the IVF/PQ literal-projection gate
-    * ([[graft.ops.Similarity.defaultMaxLiteralCentroids]]): times `pqEncode`
-    * (the purest per-row k-argmin — m×k l2sq evaluations per row) through
-    * BOTH paths at growing codebook sizes on one synthetic corpus. The
-    * literal path inlines k centroid vectors into one generated method; the
-    * kernel path ships them once per executor as a task broadcast and loops.
-    * Both compute identical FP ops (SimilarityGateSpec proves byte-equal
-    * codes); this measures where the expression tree stops being the right
-    * carrier. Args: [nVectors], default 100000.
-    */
-  private def annGate(spark: SparkSession, args: List[String]): Result = {
-    val n = intArg(args, 0, 100000)
-    val dim = 32
-    val m = 4
-
-    // deterministic hash-derived vectors (no RNG state, same corpus at any
-    // parallelism)
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false))))
-    val corpus = spark.range(n.toLong).mapPartitions { it =>
-      it.map { r =>
-        val id = r
-        val v = Array.tabulate(dim) { j =>
-          val h = (id * 1315423911L + j * 2654435761L) * -7046029254386353131L
-          ((h >>> 40).toInt % 1000) / 500f - 1f
-        }
-        Row(id, v.toSeq)
-      }
-    }(Encoders.row(schema)).cache()
-    corpus.count()
-
-    // JVM/codegen warm
-    Similarity.pqEncode(corpus, "vec_id", "embedding",
-      Similarity.pqCodebooks(corpus, "vec_id", "embedding", m, 8)).count()
-
-    val points = Seq(16, 64, 256, 1024).map { k =>
-      val books = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m, k)
-      val (literalSec, _) = timed(Similarity.pqEncode(
-        corpus, "vec_id", "embedding", books, maxLiteralCentroids = k).count())
-      val (kernelSec, _) = timed(Similarity.pqEncode(
-        corpus, "vec_id", "embedding", books, maxLiteralCentroids = 1).count())
-      System.err.println(s"[anngate] k=$k literal=$literalSec kernel=$kernelSec")
-      ListMap("k" -> k, "literal_sec" -> literalSec, "kernel_sec" -> kernelSec)
-    }
-    ListMap("metric" -> "ann_gate_crossover", "n" -> n, "dim" -> dim, "m" -> m,
-      "points" -> points)
   }
 }

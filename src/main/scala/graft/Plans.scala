@@ -25,11 +25,11 @@ object Plans {
       "q03_pull_latest" -> "time-bounded latest: range filter pushed into the parquet scan",
       "q35_late_asof" -> "late-materialized as-of: ONE narrow window (keys, ts, created, rowid), then a shuffle-hash payload fetch on the row id — the window is evaluated once",
       "q05_tumbling" -> "tumbling agg: partial/final HashAggregate (map-side combine)",
-      "q21_rolling" -> "range-frame rolling window",
+      "q21_rolling" -> "range-frame rolling window: sum and count in ONE Window over ONE Sort on the unix_micros order key",
       "q17_knn" -> "brute-force top-k: broadcast of the query side, codegen'd cosine",
       "q41_fs_tokens" -> "facade wide-payload routing, one as-of window per key set: ONE as-of window over (lang, fts, src_doc, rowid), the rowid hashed from the scan position (_metadata.file_path, row_index); `tokens` is read by ONE scan and fetched after the window by a shuffle-hash join on the rowid — no aggregate, no sort of the payload, three exchanges",
       "q47_two_wide_views" -> "facade late materialization over TWO array views, one as-of window per key set: the views key on lang and on source, so each windows the accumulated entity frame against its narrow (key, ts, created, rowid) projection — TWO as-of windows, no array in any Window/Sort input; both payloads are fetched after the last window by one shuffle-hash join each, every array column read by ONE scan",
-      "q39_ann_ivf" -> "IVF assignment as literal-centroid projection: no join, no window, no xN expansion before the probe equi-join",
+      "q39_ann_ivf" -> "IVF assignment by the broadcast centroid kernel: one MapPartitions scan per side (corpus best cell, query nProbe cells), no join, no window, no xN expansion and no centroid literals in the plan before the probe equi-join",
       "q37_pack_sequences" -> "two-level packing: per-(lang, shard) cumsum windows + tiny offsets join",
       "q48_hash_split" -> "deterministic hash split: pure codegen'd projection, zero shuffles/exchanges",
       "q65_stratified" -> "exact stratified sample: ONE exchange on the stratum key — the rank window and the group-count window run in the same partitioning, then a codegen'd integral-div filter",
@@ -40,7 +40,7 @@ object Plans {
       "q63_decontaminate_bloom" -> "Bloom-prefiltered decontamination: might_contain_61(bitmap) sits in the Filter directly above the corpus shingle Generate — rows failing the probe never reach the exact-verify join's exchange; output identical to q44",
       "q64_shuffle_batches" -> "deterministic shuffle + length batching: mix61 order key and bucket in the scan projection, per-(bucket, shard) ROW_NUMBER windows (buckets × shards concurrent tasks), tiny offsets frame joined back — no global sort",
       "q69_dsir_weights" -> "DSIR importance weights: the corpus text is scanned ONCE into a cached (doc, bucket) count frame (InMemoryTableScan everywhere downstream); BOTH bag-of-words models come from a single 64-row aggregation over it (conditional sum), the log-ratio table broadcasts back, and the final per-doc sum is integer arithmetic",
-      "q79_semdedup_pairs" -> "SemDeDup: literal-centroid cell assignment in the scan projection, NARROW (id, cell) self-join on the cell key, vectors fetched only for surviving candidates, codegen'd cosine verify — embeddings never ride the candidate exchange",
+      "q79_semdedup_pairs" -> "SemDeDup: cell assignment by the broadcast centroid kernel, checkpointed once (the Scan ExistingRDD on both sides), NARROW (id, cell) self-join on the cell key, vectors fetched only for surviving candidates, codegen'd cosine verify — embeddings never ride the candidate exchange",
       "q83_pipeline" -> "full curation pipeline (gopher filter -> exact dedup -> hash split -> token budget) composed as ONE plan: the quality filter and the split are scan-stage/codegen projections (no shuffle of their own), the dedup is one content-hash aggregate, the budget one per-source window — TWO shuffles end to end (the dedup aggregate and the window; the dedup-ids fetch is a broadcast join)")
 
     val sb = new StringBuilder
@@ -57,8 +57,6 @@ object Plans {
         org.apache.spark.sql.execution.FormattedMode)
         .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]+",
           "0x<binary literal truncated>")
-        // q79's literal centroid vectors: keep the plan shape, not the floats
-        .replaceAll("\\[[-0-9.,Ee]{120,}\\]", "[<float-array literal truncated>]")
       sb.append(plan)
       sb.append("```\n")
     }

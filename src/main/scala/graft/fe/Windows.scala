@@ -73,7 +73,9 @@ object Windows {
     * The frame is ordered at MICROsecond precision (the fixtures' native
     * resolution) — ordering by whole seconds would let a same-second future
     * event leak into a point-in-time feature and stretch the bound by up to
-    * ~1 s ([[sessionize]] makes the same choice).
+    * ~1 s ([[sessionize]] makes the same choice). Sum and count are one
+    * `withColumns` over one order key, so a call plans one Sort and one
+    * Window.
     */
   def rolling(
       df: DataFrame,
@@ -85,8 +87,9 @@ object Windows {
       .partitionBy(key.map(col): _*)
       .orderBy(unix_micros(col(ts).cast("timestamp")))
       .rangeBetween(-windowSeconds * 1000000L, 0)
-    df.withColumn(s"${valueCol}_rolling_sum", sum(col(valueCol)).over(w))
-      .withColumn(s"${valueCol}_rolling_cnt", count(lit(1)).over(w))
+    df.withColumns(scala.collection.immutable.ListMap(
+      s"${valueCol}_rolling_sum" -> sum(col(valueCol)).over(w),
+      s"${valueCol}_rolling_cnt" -> count(lit(1)).over(w)))
   }
 
   /** Sessionization by inactivity gap: a new session starts when the gap to

@@ -42,55 +42,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def prettyName: String = "dot_f"
 }
 
-/** Native squared-L2 distance between float vectors: widens each element to
-  * double BEFORE subtracting and accumulates in index order — exactly the
-  * operations (and order) of the `zip_with` + `aggregate` higher-order
-  * formulation it replaces, so results are bit-identical while the loop
-  * runs inside whole-stage codegen instead of interpreted lambda evals.
-  * The hot kernel of PQ encode/ADC (m×k evaluations per row).
-  */
-case class L2SqDistance(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"l2sq_f expects (array<float>, array<float>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorOps$$.MODULE$$.l2sq($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): L2SqDistance =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "l2sq_f"
-}
-
 object VectorOps {
-  def l2sq(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  /** Column API for [[L2SqDistance]]. */
-  def l2sq_f(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftshim
-    graftshim.toColumn(L2SqDistance(graftshim.toExpression(a), graftshim.toExpression(b)))
-  }
-
   def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
@@ -102,12 +54,11 @@ object VectorOps {
     acc
   }
 
-  // -- Array[Float] twins of the ArrayData kernels --------------------------
-  // Used by the large-k scan kernels in [[graft.ops.Similarity]] (centroid
-  // counts past the literal-projection gate): SAME floating-point operations
-  // in the SAME order as the expression path, so cell assignments and
-  // distances are bit-identical across the two paths (proven in
-  // SimilarityGateSpec).
+  // -- Array[Float] kernels ---------------------------------------------------
+  // Used by the centroid scan kernels in [[graft.ops.Similarity]] (IVF cell
+  // assignment, PQ encode/ADC, SemDeDup cells, Lloyd training). `dot` and
+  // `cosine` run the SAME floating-point operations in the SAME order as the
+  // `dot_f` expression path, so a kernel cosine equals a Column cosine.
 
   def dot(x: Array[Float], y: Array[Float]): Double = {
     val n = math.min(x.length, y.length)

@@ -204,6 +204,8 @@ object FieldMapping {
 object Inference {
   import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.model.Inference")
+
   private def isTimestamp(dt: DataType): Boolean =
     dt == TimestampType || dt == TimestampNTZType
 
@@ -241,16 +243,21 @@ object Inference {
     * whose Spark type has no ValueType mapping — a date partition column
     * (DateType) or a decimal metric must not make the whole view
     * un-applyable when the user only wants the mappable columns
-    * (feature_view.py:262-294).
+    * (feature_view.py:262-294). Skipping is loud: one WARN names every
+    * skipped column and its Spark type.
     */
-  def features(schema: StructType, entityKeys: Set[String]): Seq[Feature] =
-    schema.fields.toSeq
+  def features(schema: StructType, entityKeys: Set[String]): Seq[Feature] = {
+    val mapped = schema.fields.toSeq
       .filterNot(f => entityKeys.contains(f.name))
       .filterNot(f => isTimestamp(f.dataType))
       .filterNot(_.name.startsWith("__"))
-      .flatMap(f =>
-        scala.util.Try(ValueType.fromSpark(f.dataType)).toOption
-          .map(Feature(f.name, _)))
+      .map(f => f -> scala.util.Try(ValueType.fromSpark(f.dataType)).toOption)
+    val skipped = mapped.collect { case (f, None) => s"${f.name} (${f.dataType.simpleString})" }
+    if (skipped.nonEmpty)
+      log.warn("feature inference skipped columns with no ValueType mapping: " +
+        skipped.mkString(", "))
+    mapped.collect { case (f, Some(vt)) => Feature(f.name, vt) }
+  }
 
   /** Entity value type from its join-key column (inference.py:12-59). */
   def entityType(schema: StructType, joinKey: String): ValueType =

@@ -95,11 +95,17 @@ final class Registry(spark: SparkSession, path: String) {
     ds.write.mode("overwrite").json(path)
   }
 
-  def load(): Map[String, FeatureView] =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) Map.empty
+  /** The applied views; empty before the first `apply`. Existence is
+    * tested through `path`'s Hadoop FileSystem — the one `apply` writes
+    * through — so `file://`, `hdfs://` and plain paths all read back.
+    */
+  def load(): Map[String, FeatureView] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
     else spark.read.schema(implicitly[org.apache.spark.sql.Encoder[RegistryRow]].schema)
       .json(path).as[RegistryRow]
       .collect().map(r => r.view -> fromRow(r)).toMap
+  }
 
   /** Convenience: a FeatureStore over the currently applied views. */
   def featureStore(): graft.FeatureStore = new graft.FeatureStore(spark, load())

@@ -18,31 +18,20 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Literal-projection gate for IVF/PQ centroid work: up to this many
-    * centroids, distances against the quantizer are inlined as LITERAL
-    * vectors in one codegen'd projection (no join, no row expansion — see
-    * [[ivfTopK]]/[[pqEncode]]). Past it that expression stops being viable:
-    * production IVF scale (k = 2^16 cells × 64 dims) would inline megabytes
-    * of literals into the plan and generate methods far past the JVM's
-    * 64 KB / JIT-inlining limits. Above the gate the operators switch to a
-    * broadcast-variable scan kernel — centroids ship once per executor,
-    * each row loops over them inside one `mapPartitions` pass (the
-    * genuinely-imperative per-row-argmin shape; zero shuffles either way).
-    * Both paths run IDENTICAL floating-point operations in IDENTICAL order
-    * (the `Array[Float]` twins in [[graft.functions.VectorOps]]), proven
-    * byte-equal in SimilarityGateSpec — same size-gate calculus as
-    * [[Dedup.connectedComponents]]'s driverMaxEdges.
-    */
-  val defaultMaxLiteralCentroids = 256
-
-  /** Scan-kernel cell ranking for centroid counts past the literal gate:
-    * emits (outId, __vec, __cells = the `nRanked` best cell ids, best
-    * first, ties by centroid order). `cents` MUST be sorted by cell id
-    * ascending (both producers are: lowest-id seeds arrive via
-    * `orderBy(id)`, trained centroids are indexed 0..k-1), which makes
-    * index-order tie-breaking identical to the literal path's cid-asc
-    * tie-break. Embeddings are assumed NaN-free (zero vectors would score
-    * NaN against every centroid in BOTH paths).
+  /** The centroid kernel of IVF, SemDeDup and Lloyd training: emits
+    * (outId, __vec, __cells = the `nRanked` best cell ids, best first, ties
+    * by centroid order). Centroids ship once per executor as a broadcast
+    * variable and each row loops over them inside one `mapPartitions` pass
+    * (the per-row argmin shape; no join, no ×k row expansion, no shuffle).
+    * It scales to production quantizers (k = 2^16 cells × 64 dims), which
+    * an expression with the centroids inlined as literals cannot: that form
+    * would carry megabytes of literals in the plan and generate methods far
+    * past the JVM's 64 KB / JIT-inlining limits, and it was slower at every
+    * k measured (BENCH/ANN.md). `cents` MUST be sorted by cell id ascending
+    * (both producers are: lowest-id seeds arrive via `orderBy(id)`, trained
+    * centroids are indexed 0..k-1), so ties go to the lowest cell id.
+    * Embeddings are assumed NaN-free (a zero vector scores NaN against
+    * every centroid).
     */
   private def rankedCellsScan(
       df: DataFrame,
@@ -87,62 +76,32 @@ object Similarity {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
-  /** Literal-path cell ranking: (sim, cid) structs sorted best-first —
-    * sim desc, ties by cid asc (the same order the round-1 window used).
-    */
-  private def rankedCellsExpr(vec: Column, cents: Seq[(Any, Seq[Float])]): Column =
-    array_sort(
-      array(cents.map { case (cid, cvec) =>
-        struct(cosine(vec, typedLit(cvec)).as("sim"), lit(cid).as("cid"))
-      }.toSeq: _*),
-      (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
-        .when(l.getField("sim") < r.getField("sim"), 1)
-        .when(l.getField("cid") < r.getField("cid"), -1)
-        .when(l.getField("cid") > r.getField("cid"), 1)
-        .otherwise(0))
-
   /** Shared quantizer-centroid derivation for [[ivfTopK]] and
     * [[semDedupPairs]] — ONE definition so the two consumers can never
     * drift: Lloyd-trained centroids indexed 0..k-1 when `trainIters > 0`,
     * else the k lowest-id vectors as deterministic seeds. Returns the
     * centroids plus the cell-id type. An empty corpus yields Nil for every
     * `trainIters`, checked before training (trainCentroids itself rejects
-    * it), so both callers return their typed empty frame.
+    * it), so both callers plan an empty, typed frame.
     */
   private def quantizerCentroids(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      trainIters: Int,
-      maxLiteralCentroids: Int): (Seq[(Any, Seq[Float])], org.apache.spark.sql.types.DataType) = {
+      trainIters: Int): (Seq[(Any, Seq[Float])], org.apache.spark.sql.types.DataType) = {
     val cents: Seq[(Any, Seq[Float])] =
       if (trainIters <= 0) df.select(col(idCol), col(vecCol))
         .orderBy(col(idCol)).limit(k).collect()
         .map(r => (r.get(0), r.getSeq[Float](1))).toSeq
       else if (df.isEmpty) Nil
-      else trainCentroids(df, idCol, vecCol, k, trainIters, maxLiteralCentroids)
+      else trainCentroids(df, idCol, vecCol, k, trainIters)
         .zipWithIndex.map { case (v, i) => (i: Any, v.toSeq) }
     val cidType =
       if (trainIters > 0) org.apache.spark.sql.types.IntegerType
       else df.select(col(idCol)).schema.head.dataType
     (cents, cidType)
   }
-
-  /** Nearest-cell assignment, gated like ivfTopK: (idCol, __cid). */
-  private def cellIds(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: Seq[(Any, Seq[Float])],
-      cidType: org.apache.spark.sql.types.DataType,
-      maxLiteralCentroids: Int): DataFrame =
-    if (cents.size <= maxLiteralCentroids)
-      df.select(col(idCol),
-        element_at(rankedCellsExpr(col(vecCol), cents), 1)
-          .getField("cid").as("__cid"))
-    else rankedCellsScan(df, idCol, idCol, vecCol, cents, 1, cidType)
-      .select(col(idCol), element_at(col("__cells"), 1).as("__cid"))
 
   /** Exact top-k cosine neighbors for each query vector.
     * `broadcastQueries = false` for query sets too large to broadcast: the
@@ -215,8 +174,8 @@ object Similarity {
   }
 
   /** Deterministic Lloyd's k-means for IVF coarse quantizers: seeds from
-    * the k lowest-id vectors, then `iters` rounds of (assign via the same
-    * literal-centroid projection ivfTopK uses → per-cell mean). Each round
+    * the k lowest-id vectors, then `iters` rounds of (assign via the
+    * centroid kernel ivfTopK uses → per-cell mean). Each round
     * is ONE map-side-combinable aggregation over the corpus — no windows,
     * no ×k expansion — and the driver holds only k vectors between rounds.
     * Deterministic end to end (no RNG; mean is computed with zip_with over
@@ -228,31 +187,19 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      iters: Int,
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids): Seq[Array[Float]] = {
+      iters: Int): Seq[Array[Float]] = {
     var cents: Seq[Array[Float]] = corpus.select(col(idCol), col(vecCol))
       .orderBy(col(idCol)).limit(k).collect()
       .map(_.getSeq[Float](1).toArray).toSeq
     require(cents.nonEmpty, "trainCentroids: corpus is empty — no vectors to seed centroids from")
     for (_ <- 0 until iters) {
-      // struct-free argmax (ties → smallest cid): first index whose cosine
-      // equals the greatest. array_position evaluates each cosine once;
-      // the when-chain fold it replaces duplicated every similarity into a
-      // k-deep CASE (2·k cosines in one expression tree — JIT-hostile, see
-      // pqEncode). Past the literal gate the assignment comes from the same
-      // broadcast scan kernel ivfTopK uses (identical argmax tie rule).
-      val assigned =
-        if (cents.size <= maxLiteralCentroids) {
-          val simArr = array(cents.map(cvec =>
-            cosine(col(vecCol), typedLit(cvec.toSeq))): _*)
-          val best = (array_position(simArr, array_max(simArr)) - 1).cast("int")
-          corpus.select(best.as("__cid"), posexplode(col(vecCol)))
-        } else rankedCellsScan(
-            corpus, idCol, "__id", vecCol,
-            cents.zipWithIndex.map { case (v, i) => (i: Any, v.toSeq) }, 1,
-            org.apache.spark.sql.types.IntegerType)
-          .select(element_at(col("__cells"), 1).as("__cid"),
-            posexplode(col("__vec")))
+      // nearest centroid, ties → smallest cid
+      val assigned = rankedCellsScan(
+          corpus, idCol, "__id", vecCol,
+          cents.zipWithIndex.map { case (v, i) => (i: Any, v.toSeq) }, 1,
+          org.apache.spark.sql.types.IntegerType)
+        .select(element_at(col("__cells"), 1).as("__cid"),
+          posexplode(col("__vec")))
       // per-dimension mean via posexplode: rows stay (cid, dim, x) narrow,
       // partials combine map-side; the re-assembled vector per cell is
       // bounded by the embedding dimension
@@ -276,12 +223,13 @@ object Similarity {
     * are reproducible without RNG state; swap in real k-means offline and
     * nothing else changes.
     *
-    * Cell assignment is a pure PROJECTION: the (tiny) centroid list is
-    * collected once at planning time and inlined as literal arrays, so each
-    * row computes its nCentroids cosines and picks the best cells inside
-    * one codegen'd expression — no join, no ×nCentroids row expansion, no
-    * per-row argmax window shuffle (round 1's plan expanded the corpus
-    * ×nCentroids and shuffled it just to take a max). The probe join stays
+    * Cell assignment is one scan: the centroid list is collected once at
+    * planning time and broadcast to the centroid kernel, so each row
+    * computes its nCentroids cosines and picks the best cells in one pass —
+    * no join, no ×nCentroids row expansion, no per-row argmax window
+    * shuffle (round 1's plan expanded the corpus ×nCentroids and shuffled
+    * it just to take a max). An empty corpus has no centroids and plans an
+    * empty, typed result. The probe join stays
     * an equi-join on centroid id — the 100 TB path alongside [[lshTopK]],
     * with recall controlled by nProbe (nProbe = nCentroids degenerates to
     * exact brute force).
@@ -295,51 +243,21 @@ object Similarity {
       nCentroids: Int,
       nProbe: Int,
       trainIters: Int = 0,
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids,
       excludeSelf: Boolean = true): DataFrame = {
     // planning-time collect of nCentroids rows — same class of driver-side
     // scalar as Skew.detectHotKeys / Materialize.timestampBounds. With
     // trainIters > 0 the quantizer is Lloyd-refined ([[trainCentroids]]);
     // either way centroids are deterministic.
-    val (cents, cidType0) =
-      quantizerCentroids(corpus, idCol, vecCol, nCentroids, trainIters, maxLiteralCentroids)
-    // empty corpus -> no centroids -> no neighbors: empty result, typed
-    if (cents.isEmpty) {
-      val qType = queries.select(col(idCol)).schema.head.dataType
-      val cType = corpus.select(col(idCol)).schema.head.dataType
-      return corpus.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id", qType),
-          org.apache.spark.sql.types.StructField("neighbor_id", cType),
-          org.apache.spark.sql.types.StructField("cos",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
-    }
-
-    val (corpusCells, queryCells) =
-      if (cents.size <= maxLiteralCentroids) (
-        corpus.select(
-          col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-          element_at(rankedCellsExpr(col(vecCol), cents), 1)
-            .getField("cid").as("__cid")),
-        queries.select(
-          col(idCol).as("query_id"), col(vecCol).as("__qv"),
-          explode(transform(slice(rankedCellsExpr(col(vecCol), cents), 1, nProbe),
-            c => c.getField("cid"))).as("__cid")))
-      else {
-        // past the literal gate: broadcast-kernel assignment (see
-        // defaultMaxLiteralCentroids) — same outputs, same single-scan shape
-        val cidType = cidType0
-        (rankedCellsScan(corpus, idCol, "neighbor_id", vecCol, cents, 1, cidType)
-           .select(col("neighbor_id"), col("__vec").as("__cv"),
-             element_at(col("__cells"), 1).as("__cid")),
-         rankedCellsScan(queries, idCol, "query_id", vecCol, cents, nProbe, cidType)
-           .select(col("query_id"), col("__vec").as("__qv"),
-             explode(col("__cells")).as("__cid")))
-      }
-
+    val (cents, cidType) =
+      quantizerCentroids(corpus, idCol, vecCol, nCentroids, trainIters)
+    val corpusCells =
+      rankedCellsScan(corpus, idCol, "neighbor_id", vecCol, cents, 1, cidType)
+        .select(col("neighbor_id"), col("__vec").as("__cv"),
+          element_at(col("__cells"), 1).as("__cid"))
+    val queryCells =
+      rankedCellsScan(queries, idCol, "query_id", vecCol, cents, nProbe, cidType)
+        .select(col("query_id"), col("__vec").as("__qv"),
+          explode(col("__cells")).as("__cid"))
     val scored = corpusCells.join(queryCells, Seq("__cid"))
       .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
       .withColumn("cos", cosine(col("__qv"), col("__cv")))
@@ -425,9 +343,9 @@ object Similarity {
     * like [[cosineNearDup]], so embeddings never ride the self-join); each
     * candidate is verified with exact cosine, so there are no false
     * positives — cell bounding only affects RECALL (cross-cell near-dups
-    * are missed, the paper's accepted trade). Cell assignment re-uses the
-    * gated literal/kernel path, so production centroid counts work
-    * unchanged.
+    * are missed, the paper's accepted trade). Cell assignment re-uses
+    * ivfTopK's centroid kernel, so production centroid counts work
+    * unchanged; an empty corpus plans an empty, typed result.
     *
     * The within-cell self-join is QUADRATIC in cell population — a
     * degenerate quantizer (every vector in one cell) silently turns it into
@@ -448,26 +366,13 @@ object Similarity {
       nCentroids: Int,
       threshold: Double,
       trainIters: Int = 0,
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids,
       maxCellRows: Long = 0L): DataFrame = {
     val (cents, cidType) =
-      quantizerCentroids(df, idCol, vecCol, nCentroids, trainIters, maxLiteralCentroids)
-    // empty corpus -> no centroids -> no cells: return the empty pairs
-    // frame directly (rankedCellsExpr cannot type a zero-centroid array)
-    if (cents.isEmpty) {
-      val idType = df.select(col(idCol)).schema.head.dataType
-      return df.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id1", idType),
-          org.apache.spark.sql.types.StructField("id2", idType),
-          org.apache.spark.sql.types.StructField("cell", cidType),
-          org.apache.spark.sql.types.StructField("cos",
-            org.apache.spark.sql.types.DoubleType))))
-    }
-    // checkpoint: the assignment projection (k cosines per row, or the
-    // kernel scan) feeds BOTH sides of the self-join — compute it once
-    val asg = cellIds(df, idCol, vecCol, cents, cidType, maxLiteralCentroids)
+      quantizerCentroids(df, idCol, vecCol, nCentroids, trainIters)
+    // checkpoint: the assignment scan feeds BOTH sides of the self-join —
+    // compute it once
+    val asg = rankedCellsScan(df, idCol, idCol, vecCol, cents, 1, cidType)
+      .select(col(idCol), element_at(col("__cells"), 1).as("__cid"))
       .localCheckpoint()
     if (maxCellRows > 0L) {
       // max() over zero rows is NULL — an empty corpus passes vacuously
@@ -504,10 +409,9 @@ object Similarity {
       nCentroids: Int,
       threshold: Double,
       trainIters: Int = 0,
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids,
       maxCellRows: Long = 0L): DataFrame = {
     val pairs = semDedupPairs(df, idCol, vecCol, nCentroids, threshold,
-      trainIters, maxLiteralCentroids, maxCellRows).select(col("id1"), col("id2"))
+      trainIters, maxCellRows).select(col("id1"), col("id2"))
     Dedup.dropNearDuplicates(df, idCol, pairs)
   }
 
@@ -535,86 +439,62 @@ object Similarity {
     (0 until m).map(s => seeds.map(v => v.slice(s * sub, (s + 1) * sub): Seq[Float]).toSeq)
   }
 
-  /** Squared L2 between a (float) sub-vector column and a literal centroid:
-    * widen to double BEFORE subtracting (exact for floats), accumulate in
-    * index order — bit-reproducible cross-engine. The native codegen
-    * [[graft.functions.L2SqDistance]] kernel performs those operations in
-    * that order, so it is bit-identical to the zip_with/aggregate
-    * formulation it replaced (m×k of these run per PQ-encoded row).
-    */
-  private def l2sq(a: Column, cvec: Seq[Float]): Column =
-    graft.functions.VectorOps.l2sq_f(a, typedLit(cvec))
-
   /** PQ-encode every vector to an m-byte code array: per subspace, argmin
-    * squared-L2 over the literal codebook (first index wins exact ties —
-    * same tie rule as ROW_NUMBER ORDER BY dist, code). A pure PROJECTION,
-    * exactly like [[ivfTopK]]'s cell assignment: each row computes m×k
-    * distances inside one codegen'd expression — no join, no row expansion.
-    * At 100 TB this replaces a 256-byte float vector with m bytes — the
-    * point of PQ — and the encode pass is embarrassingly parallel.
+    * squared-L2 over the codebook (first index wins exact ties — same tie
+    * rule as ROW_NUMBER ORDER BY dist, code). One scan, like [[ivfTopK]]'s
+    * cell assignment: the codebooks ship once per executor as a broadcast
+    * variable and each row loops over its m×k distances — no join, no row
+    * expansion. Squared L2 widens to double BEFORE subtracting (exact for
+    * floats) and accumulates in index order, so codes are reproducible
+    * cross-engine. At 100 TB this replaces a 256-byte float vector with m
+    * bytes — the point of PQ — and the encode pass is embarrassingly
+    * parallel.
     */
   def pqEncode(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      codebooks: Seq[Seq[Seq[Float]]],
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids): DataFrame = {
-    val m = codebooks.size
+      codebooks: Seq[Seq[Seq[Float]]]): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
     val sub = codebooks.head.head.size
-    if (codebooks.head.size <= maxLiteralCentroids) {
-      val codes = array((0 until m).map { s =>
-        val slc = slice(col(vecCol), s * sub + 1, sub)
-        // argmin with first-index-wins ties: array_position of the min value
-        // evaluates each of the k distances ONCE — the when-chain fold it
-        // replaces duplicated every distance into a k-deep CASE (2·k l2sq
-        // calls per subspace in one expression tree), blowing the generated
-        // method past JIT limits
-        val darr = array(codebooks(s).map(cvec => l2sq(slc, cvec)): _*)
-        (array_position(darr, array_min(darr)) - 1).cast("int")
-      }: _*)
-      corpus.select(col(idCol), codes.as("codes"))
-    } else {
-      // past the literal gate (see defaultMaxLiteralCentroids): broadcast
-      // codebooks, per-row argmin loop with the SAME strict-< first-index-
-      // wins tie rule and the same l2sq FP op order — byte-equal codes
-      import org.apache.spark.sql.{Encoders, Row}
-      import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
-      val bc = corpus.sparkSession.sparkContext.broadcast(
-        codebooks.map(_.map(_.toArray).toArray).toArray)
-      val base = corpus.select(col(idCol), col(vecCol).as("__vec"))
-      val outSchema = StructType(Seq(base.schema.head,
-        StructField("codes", ArrayType(IntegerType, containsNull = false))))
-      base.mapPartitions { it =>
-        val cbs = bc.value
-        it.map { r =>
-          val v = r.getSeq[Float](1).toArray
-          val codes = new Array[Int](cbs.length)
-          var s = 0
-          while (s < cbs.length) {
-            val slc = java.util.Arrays.copyOfRange(
-              v, math.min(v.length, s * sub), math.min(v.length, s * sub + sub))
-            val cb = cbs(s)
-            var best = 0
-            var bd = graft.functions.VectorOps.l2sq(slc, cb(0))
-            var j = 1
-            while (j < cb.length) {
-              val d = graft.functions.VectorOps.l2sq(slc, cb(j))
-              if (d < bd) { best = j; bd = d }
-              j += 1
-            }
-            codes(s) = best
-            s += 1
+    val bc = corpus.sparkSession.sparkContext.broadcast(
+      codebooks.map(_.map(_.toArray).toArray).toArray)
+    val base = corpus.select(col(idCol), col(vecCol).as("__vec"))
+    val outSchema = StructType(Seq(base.schema.head,
+      StructField("codes", ArrayType(IntegerType, containsNull = false))))
+    base.mapPartitions { it =>
+      val cbs = bc.value
+      it.map { r =>
+        val v = r.getSeq[Float](1).toArray
+        val codes = new Array[Int](cbs.length)
+        var s = 0
+        while (s < cbs.length) {
+          val slc = java.util.Arrays.copyOfRange(
+            v, math.min(v.length, s * sub), math.min(v.length, s * sub + sub))
+          val cb = cbs(s)
+          var best = 0
+          var bd = graft.functions.VectorOps.l2sq(slc, cb(0))
+          var j = 1
+          while (j < cb.length) {
+            val d = graft.functions.VectorOps.l2sq(slc, cb(j))
+            if (d < bd) { best = j; bd = d }
+            j += 1
           }
-          Row(r.get(0), codes.toSeq)
+          codes(s) = best
+          s += 1
         }
-      }(Encoders.row(outSchema))
-    }
+        Row(r.get(0), codes.toSeq)
+      }
+    }(Encoders.row(outSchema))
   }
 
   /** Asymmetric-distance (ADC) top-k: the corpus is scanned as m-byte codes
     * only; each query computes its exact sub-distances to every codebook
     * centroid and scores a row by summing the table entries its codes
-    * select. Queries broadcast (or shuffle-join when too many); distances
+    * select. Queries broadcast (or shuffle-join when too many); the
+    * codebooks ship as a broadcast variable and the ADC sum runs in one
+    * scan over the joined rows, subspaces summed left to right. Distances
     * round to 4 decimals BEFORE ranking so ordering is reproducible
     * cross-engine (sum order differs between engines by ulps).
     */
@@ -626,54 +506,37 @@ object Similarity {
       k: Int,
       codebooks: Seq[Seq[Seq[Float]]],
       broadcastQueries: Boolean = true,
-      maxLiteralCentroids: Int = defaultMaxLiteralCentroids,
       excludeSelf: Boolean = true): DataFrame = {
-    val m = codebooks.size
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val sub = codebooks.head.head.size
-    val c = pqEncode(corpus, idCol, vecCol, codebooks, maxLiteralCentroids)
+    val c = pqEncode(corpus, idCol, vecCol, codebooks)
       .select(col(idCol).as("neighbor_id"), col("codes"))
     val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val q = if (broadcastQueries) broadcast(q0) else q0
     val joined = c.join(q,
       if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
-    val scored =
-      if (codebooks.head.size <= maxLiteralCentroids) {
-        val dist = (0 until m).map { s =>
-          val qslc = slice(col("__qv"), s * sub + 1, sub)
-          // codebook s as a literal array-of-arrays; the row's code selects one
-          val cent = element_at(typedLit(codebooks(s)), element_at(col("codes"), s + 1) + 1)
-          graft.functions.VectorOps.l2sq_f(qslc, cent)
-        }.reduce[Column](_ + _)
-        joined.withColumn("dist", round(dist, 4))
-      } else {
-        // past the literal gate (see defaultMaxLiteralCentroids): broadcast
-        // codebooks and compute the ADC sum in a scan kernel — same l2sq op
-        // order, same left-to-right subspace summation (0.0 + d0 == d0 for
-        // the non-negative distances), rounding stays in the Column layer
-        import org.apache.spark.sql.{Encoders, Row}
-        import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-        val bc = corpus.sparkSession.sparkContext.broadcast(
-          codebooks.map(_.map(_.toArray).toArray).toArray)
-        val outSchema = StructType(joined.schema.fields :+
-          StructField("__rawdist", DoubleType))
-        joined.mapPartitions { it =>
-          val cbs = bc.value
-          it.map { r =>
-            val codes = r.getSeq[Int](r.fieldIndex("codes"))
-            val qv = r.getSeq[Float](r.fieldIndex("__qv")).toArray
-            var acc = 0.0
-            var s = 0
-            while (s < cbs.length) {
-              val qslc = java.util.Arrays.copyOfRange(
-                qv, math.min(qv.length, s * sub), math.min(qv.length, s * sub + sub))
-              acc += graft.functions.VectorOps.l2sq(qslc, cbs(s)(codes(s)))
-              s += 1
-            }
-            Row.fromSeq(r.toSeq :+ acc)
-          }
-        }(Encoders.row(outSchema))
-          .withColumn("dist", round(col("__rawdist"), 4))
+    val bc = corpus.sparkSession.sparkContext.broadcast(
+      codebooks.map(_.map(_.toArray).toArray).toArray)
+    val codesAt = joined.schema.fieldIndex("codes")
+    val qvAt = joined.schema.fieldIndex("__qv")
+    val scored = joined.mapPartitions { it =>
+      val cbs = bc.value
+      it.map { r =>
+        val codes = r.getSeq[Int](codesAt)
+        val qv = r.getSeq[Float](qvAt).toArray
+        var acc = 0.0
+        var s = 0
+        while (s < cbs.length) {
+          val qslc = java.util.Arrays.copyOfRange(
+            qv, math.min(qv.length, s * sub), math.min(qv.length, s * sub + sub))
+          acc += graft.functions.VectorOps.l2sq(qslc, cbs(s)(codes(s)))
+          s += 1
+        }
+        Row.fromSeq(r.toSeq :+ acc)
       }
+    }(Encoders.row(StructType(joined.schema.fields :+ StructField("__rawdist", DoubleType))))
+      .withColumn("dist", round(col("__rawdist"), 4))
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist").asc, col("neighbor_id").asc)
     scored
       .withColumn("__rn", row_number().over(w))

@@ -269,7 +269,7 @@ object TextStats {
     * joins back BROADCAST only while buckets² stays broadcast-sized
     * (≤ 2048 buckets ⇒ ≤ 4M pair cells); above that it is a plain shuffle
     * equi-join on (b1, b2) — the same size-gate calculus as
-    * [[graft.ops.Similarity.defaultMaxLiteralCentroids]]. The final score
+    * [[graft.ops.Dedup.connectedComponents]]'s driverMaxEdges. The final score
     * is one per-doc sum. Nothing driver-side.
     */
   def lmPerplexity(

@@ -61,14 +61,6 @@ class BenchSpec extends SparkSpec {
     assert(r("kernel_rows") == r("naive_rows"))
   }
 
-  test("ann-gate: literal and kernel timings for every codebook size") {
-    val r = runMode("ann-gate", "1500")
-    assert(r.keys.toSeq == Seq("metric", "n", "dim", "m", "points"))
-    val points = r("points").asInstanceOf[Seq[Bench.Result]]
-    assert(points.map(_("k")) == Seq(16, 64, 256, 1024))
-    assert(points.forall(_.keys.toSeq == Seq("k", "literal_sec", "kernel_sec")))
-  }
-
   test("an unknown mode fails with the usage") {
     val e = intercept[RuntimeException](Bench.run(spark, List("nope")))
     assert(e.getMessage.startsWith("usage: Bench"))

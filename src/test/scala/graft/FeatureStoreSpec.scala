@@ -208,18 +208,8 @@ class FeatureStoreSpec extends SparkSpec {
     val store = oneKeyOnePath(
       java.nio.file.Files.createTempDirectory("graft_fs_jobs").toString)
     val entity = Seq((100L, 1L, t(25))).toDF("order_id", "driver_id", "event_timestamp")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.Listeners.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate"))
-      org.apache.spark.Listeners.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 3)
+    assert(jobsDuring(
+      store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate"))) == 3)
   }
 
   test("salted retrieval detects hot keys once per as-of window, not once per view") {

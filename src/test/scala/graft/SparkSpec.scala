@@ -27,6 +27,26 @@ trait SparkSpec extends AnyFunSuite {
   def tsOf(s: String): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.parse(s))
 
+  /** Spark jobs started while `f` runs: a listener counts job starts, and
+    * the listener bus is drained before and after so no earlier job leaks
+    * in and no job of `f` is missed.
+    */
+  def jobsDuring(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.Listeners.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.Listeners.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   /** allclose contract from the reference's consistency tests
     * (test_offline_online_store_consistency.py:257): abs diff < 1e-6,
     * null == null.

@@ -104,4 +104,20 @@ class TokenSeqPitSpec extends SparkSpec {
     val hot = skewed.where(col("doc_id") === "doc_0").count().toDouble / 5000
     assert(hot > 0.35 && hot < 0.55, s"hot share was $hot")
   }
+
+  test("ScalingBench.timedJob: fixed jobs per call and checksum on a small fixture") {
+    // fence on the headline job's driver round trips (the metadata count,
+    // hot-key detection, the as-of window and fetch, the checksum action)
+    val dir = java.nio.file.Files.createTempDirectory("graft_timedjob_jobs").toString
+    TokenSeq.generate(spark, n = 3000, entities = 20, maxTokens = 16,
+        hotSharePct = ScalingBench.HotSharePct, dupPct = 10)
+      .write.parquet(s"$dir/sequences")
+    TokenSeq.entityProbes(spark, entities = 20, probesPerEntity = 10,
+        hotSharePct = ScalingBench.HotSharePct)
+      .write.parquet(s"$dir/probes")
+    var out: (Long, Long, Long, Double) = null
+    val jobs = jobsDuring { out = ScalingBench.timedJob(spark, dir) }
+    val (nRows, probeRows, checksum, _) = out
+    assert((nRows, probeRows, checksum, jobs) == (3000L, 200L, 3836380163743072528L, 14))
+  }
 }

@@ -78,6 +78,24 @@ class WindowsSpec extends SparkSpec {
     assert(out.values.map(_._1).sum == evs.size.toLong * k)
   }
 
+  test("rolling plans one Sort and one Window; lagLead then rolling plans two of each") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def shape(d: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      d.collect()
+      val plan = d.queryExecution.executedPlan
+      (graft.PlanShape.collect(plan) { case s: SortExec => s }.size,
+        graft.PlanShape.collect(plan) { case w: WindowExec => w }.size)
+    }
+    val df = events(4L, 200, 5).toDF()
+    val rolled = Windows.rolling(df, Seq("key"), "ts", 600L, "v")
+    assert(rolled.columns.toSeq == df.columns.toSeq ++ Seq("v_rolling_sum", "v_rolling_cnt"))
+    assert(shape(rolled) == (1, 1))
+    // timedJob's FE: lagLead orders by the raw ts, rolling by its µs key
+    assert(shape(Windows.rolling(
+      Windows.lagLead(df, Seq("key"), "ts", "v"), Seq("key"), "ts", 600L, "v")) == (2, 2))
+  }
+
   test("rolling range-frame equals trailing-window linear scan (inclusive bounds)") {
     // sub-second jitter on top of the second grid: the frame must compare
     // at full precision — second-truncated ordering would leak same-second

@@ -242,4 +242,28 @@ class MaterializeSpec extends SparkSpec {
     assert(rows(table.read(spark)) == expected)
     assert(table.history.map(_.snapshotId) == Seq(s3.snapshotId))
   }
+
+  test("upsertLatestBucketed jobs per call: an empty table and a bucket-scoped rewrite") {
+    // fence on the write path's driver round trips: the touched-bucket
+    // collect, the merge-and-write, and the commit's own jobs
+    val root = java.nio.file.Files.createTempDirectory("graft_upsert_jobs")
+    val table = graft.table.SnapshotTable(s"$root/t")
+    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
+    val first = jobsDuring(Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8))
+    val second = jobsDuring(Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8))
+    assert((first, second) == (5, 5))
+  }
+
+  test("lookupLatest jobs per call: none to plan, a fixed count to collect") {
+    val history = (1L to 200L).map(k => (k % 50, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val keys = (0L until 60L).toDF("k")
+    var looked: org.apache.spark.sql.DataFrame = null
+    val planJobs = jobsDuring {
+      looked = Materialize.lookupLatest(history, keys, Seq("k"), "ts", "v",
+        asOf = t(150), ttlSeconds = Some(3600L))
+    }
+    val collectJobs = jobsDuring(looked.collect())
+    assert((planJobs, collectJobs) == (0, 3))
+  }
 }

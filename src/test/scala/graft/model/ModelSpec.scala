@@ -121,6 +121,46 @@ class ModelSpec extends SparkSpec {
     assert(ValueType.fromName("FLOAT_LIST") == ValueType.ListOf(ValueType.FLOAT))
   }
 
+  test("registry: a file:// URI registry loads every view applied to it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_registry_uri")
+    val reg = new Registry(spark, s"${dir.toUri}registry") // file:///tmp/.../registry
+    assert(reg.load().isEmpty)
+    val a = FeatureView("a", Seq(Entity("k", ValueType.INT64)),
+      Seq(Feature("x", ValueType.DOUBLE)), BatchSource("/data/a.parquet", "ts"))
+    val b = a.copy(name = "b")
+    reg.apply(Seq(a))
+    reg.apply(Seq(b))
+    assert(reg.load() == Map("a" -> a, "b" -> b))
+  }
+
+  test("feature inference logs one WARN naming each skipped column and its type") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val appender = new AbstractAppender("capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("graft.model.Inference").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      val mixed = StructType(Seq(
+        StructField("k", LongType), StructField("ds", DateType),
+        StructField("amount", DecimalType(10, 2)), StructField("v", DoubleType)))
+      assert(Inference.features(mixed, Set("k")).map(_.name) == Seq("v"))
+      // nothing skipped: nothing logged
+      Inference.features(schema, Set("driver_id"))
+    } finally logger.removeAppender(appender)
+    val got = events.toArray(Array.empty[LogEvent]).toSeq
+    assert(got.size == 1)
+    assert(got.head.getLevel == org.apache.logging.log4j.Level.WARN)
+    val msg = got.head.getMessage.getFormattedMessage
+    assert(msg.contains("ds (date)") && msg.contains("amount (decimal(10,2))"), msg)
+    assert(!msg.contains("v ("), msg)
+  }
+
   test("ValueType name/fromName round-trips every shape incl. nested maps") {
     import ValueType._
     // the old underscore map encoding failed BOTH these: MAP_STRING_FLOAT_LIST

@@ -4,13 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The IVF/PQ literal-projection gate (Similarity.defaultMaxLiteralCentroids):
-  * above the gate, centroid assignment / PQ encode / ADC scoring switch from
-  * inlined-literal expressions to a broadcast-variable scan kernel. These
-  * specs force BOTH paths on the same corpus (gate = 1 forces the kernel;
-  * the default keeps the literal path for the small fixture ks) and assert
-  * byte-equality of every output — the contract the kernels were written to
-  * (identical FP ops in identical order, identical tie rules).
+/** SemDeDup over the centroid scan kernel: planted duplicates, the
+  * cell-size guard, and the empty-corpus contract shared with ivfTopK. The
+  * kernel's IVF/PQ/Lloyd outputs are checked against independent oracles in
+  * OpsSpec.
   */
 class SimilarityGateSpec extends SparkSpec {
   import spark.implicits._
@@ -20,45 +17,9 @@ class SimilarityGateSpec extends SparkSpec {
     (0L until 48L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
   }
   private lazy val df = vecs.toDF("vec_id", "embedding")
-  private lazy val queries = df.where(col("vec_id") < 6)
 
   private def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
     d.collect().map(_.toString).sorted.toSeq
-
-  test("ivfTopK: kernel path equals literal path exactly (seeded centroids)") {
-    val lit = Similarity.ivfTopK(df, queries, "vec_id", "embedding",
-      k = 3, nCentroids = 8, nProbe = 3)
-    val ker = Similarity.ivfTopK(df, queries, "vec_id", "embedding",
-      k = 3, nCentroids = 8, nProbe = 3, maxLiteralCentroids = 1)
-    assert(rows(lit) == rows(ker))
-    assert(rows(lit).nonEmpty)
-  }
-
-  test("ivfTopK: kernel path equals literal path exactly (trained centroids)") {
-    val lit = Similarity.ivfTopK(df, queries, "vec_id", "embedding",
-      k = 3, nCentroids = 4, nProbe = 2, trainIters = 2)
-    val ker = Similarity.ivfTopK(df, queries, "vec_id", "embedding",
-      k = 3, nCentroids = 4, nProbe = 2, trainIters = 2,
-      maxLiteralCentroids = 1)
-    assert(rows(lit) == rows(ker))
-    assert(rows(lit).nonEmpty)
-  }
-
-  test("trainCentroids: kernel assignment trains identical centroids") {
-    val lit = Similarity.trainCentroids(df, "vec_id", "embedding", k = 4, iters = 3)
-    val ker = Similarity.trainCentroids(df, "vec_id", "embedding", k = 4, iters = 3,
-      maxLiteralCentroids = 1)
-    assert(lit.map(_.toSeq) == ker.map(_.toSeq))
-  }
-
-  test("pqEncode: kernel codes are byte-equal to literal codes") {
-    val books = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 8)
-    val lit = Similarity.pqEncode(df, "vec_id", "embedding", books)
-    val ker = Similarity.pqEncode(df, "vec_id", "embedding", books,
-      maxLiteralCentroids = 1)
-    assert(rows(lit) == rows(ker))
-    assert(lit.count() == 48)
-  }
 
   test("semDedup: planted duplicates found within cells, one representative kept, kernel == literal") {
     val planted = Seq((100L, vecs(3)._2), (101L, vecs(3)._2)) // exact copies of vec 3
@@ -73,7 +34,7 @@ class SimilarityGateSpec extends SparkSpec {
     assert(kept.contains(3L) && !kept.contains(100L) && !kept.contains(101L))
     assert(kept.size == vecs.size) // everything else passes through
     val ker = Similarity.semDedupPairs(df2, "vec_id", "embedding",
-      nCentroids = 4, threshold = 0.999, maxLiteralCentroids = 1)
+      nCentroids = 4, threshold = 0.999)
     assert(rows(pairs) == rows(ker))
   }
 
@@ -98,15 +59,6 @@ class SimilarityGateSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     assert(Similarity.semDedupPairs(empty, "vec_id", "embedding",
       nCentroids = 4, threshold = 0.9, maxCellRows = 10L).count() == 0L)
-  }
-
-  test("pqTopK: kernel ADC ranking equals literal ADC ranking exactly") {
-    val books = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 8)
-    val lit = Similarity.pqTopK(df, queries, "vec_id", "embedding", k = 3, books)
-    val ker = Similarity.pqTopK(df, queries, "vec_id", "embedding", k = 3, books,
-      maxLiteralCentroids = 1)
-    assert(rows(lit) == rows(ker))
-    assert(rows(lit).nonEmpty)
   }
 
   test("empty corpus: ivfTopK and semDedupPairs return a typed empty frame for any trainIters") {
