@@ -209,7 +209,7 @@ class FeatureStoreSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_fs_jobs").toString)
     val entity = Seq((100L, 1L, t(25))).toDF("order_id", "driver_id", "event_timestamp")
     assert(jobsDuring(
-      store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate"))) == 3)
+      store.getHistoricalFeatures(entity, Seq("aaa_wide:toks", "zzz_narrow:rate")))._2 == 3)
   }
 
   test("salted retrieval detects hot keys once per as-of window, not once per view") {

@@ -27,11 +27,11 @@ trait SparkSpec extends AnyFunSuite {
   def tsOf(s: String): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.parse(s))
 
-  /** Spark jobs started while `f` runs: a listener counts job starts, and
-    * the listener bus is drained before and after so no earlier job leaks
-    * in and no job of `f` is missed.
+  /** `f`'s value and the Spark jobs started while it runs: a listener
+    * counts job starts, and the listener bus is drained before and after so
+    * no earlier job leaks in and no job of `f` is missed.
     */
-  def jobsDuring(f: => Any): Int = {
+  def jobsDuring[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -40,11 +40,12 @@ trait SparkSpec extends AnyFunSuite {
     }
     org.apache.spark.Listeners.drain(sc)
     sc.addSparkListener(listener)
-    try {
-      f
+    val out = try {
+      val v = f
       org.apache.spark.Listeners.drain(sc)
+      v
     } finally sc.removeSparkListener(listener)
-    jobs.get
+    (out, jobs.get)
   }
 
   /** allclose contract from the reference's consistency tests

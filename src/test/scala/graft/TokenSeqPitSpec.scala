@@ -115,9 +115,7 @@ class TokenSeqPitSpec extends SparkSpec {
     TokenSeq.entityProbes(spark, entities = 20, probesPerEntity = 10,
         hotSharePct = ScalingBench.HotSharePct)
       .write.parquet(s"$dir/probes")
-    var out: (Long, Long, Long, Double) = null
-    val jobs = jobsDuring { out = ScalingBench.timedJob(spark, dir) }
-    val (nRows, probeRows, checksum, _) = out
+    val ((nRows, probeRows, checksum, _), jobs) = jobsDuring(ScalingBench.timedJob(spark, dir))
     assert((nRows, probeRows, checksum, jobs) == (3000L, 200L, 3836380163743072528L, 14))
   }
 }

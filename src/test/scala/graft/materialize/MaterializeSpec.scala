@@ -250,20 +250,17 @@ class MaterializeSpec extends SparkSpec {
     val table = graft.table.SnapshotTable(s"$root/t")
     val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
-    val first = jobsDuring(Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8))
-    val second = jobsDuring(Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8))
+    val (_, first) = jobsDuring(Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8))
+    val (_, second) = jobsDuring(Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8))
     assert((first, second) == (5, 5))
   }
 
   test("lookupLatest jobs per call: none to plan, a fixed count to collect") {
     val history = (1L to 200L).map(k => (k % 50, t(k), k * 1.0)).toDF("k", "ts", "v")
     val keys = (0L until 60L).toDF("k")
-    var looked: org.apache.spark.sql.DataFrame = null
-    val planJobs = jobsDuring {
-      looked = Materialize.lookupLatest(history, keys, Seq("k"), "ts", "v",
-        asOf = t(150), ttlSeconds = Some(3600L))
-    }
-    val collectJobs = jobsDuring(looked.collect())
+    val (looked, planJobs) = jobsDuring(Materialize.lookupLatest(history, keys, Seq("k"), "ts", "v",
+      asOf = t(150), ttlSeconds = Some(3600L)))
+    val (_, collectJobs) = jobsDuring(looked.collect())
     assert((planJobs, collectJobs) == (0, 3))
   }
 }
