@@ -176,8 +176,7 @@ object Bench {
     // the production route: hash-min head + star fallback (what
     // connectedComponents actually runs above the driver gate)
     val (escSec, escSum) = timed(checksum(Dedup.connectedComponents(
-      e.select(col("a").as("id1"), col("b").as("id2")),
-      maxIter = 25, driverMaxEdges = 0L)))
+      e.select(col("a").as("id1"), col("b").as("id2")), driverMaxEdges = 0L)))
     require(escSum == starSum, s"escalation checksum diverges: $escSum vs $starSum")
 
     ListMap("metric" -> "cc_long_chain", "n_chains" -> nChains, "len" -> len,

@@ -116,21 +116,16 @@ object Main {
       println(s"Exported registry to $outPath")
 
     case "teardown" :: registryPath :: Nil =>
-      val root = java.nio.file.Paths.get(registryPath)
       // the registry is a directory of JSON part files; interval logs are
-      // siblings named intervals_<view>.log — remove both, nothing else
-      val logs = Option(root.toAbsolutePath.getParent).toSeq
-        .flatMap { parent =>
-          val d = parent.toFile.listFiles()
-          if (d == null) Nil
-          else d.toSeq.filter(f => f.getName.startsWith("intervals_") && f.getName.endsWith(".log"))
-        }
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      logs.foreach(rm)
-      if (root.toFile.exists()) rm(root.toFile)
+      // siblings named intervals_<view>.log — remove both, nothing else,
+      // through the path's own FileSystem (plain paths, file://, hdfs://)
+      val path = new org.apache.hadoop.fs.Path(registryPath)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val root = fs.makeQualified(path)
+      val logs = Option(root.getParent).filter(fs.exists).toSeq
+        .flatMap(fs.listStatus(_).toSeq.map(_.getPath))
+        .filter(p => p.getName.startsWith("intervals_") && p.getName.endsWith(".log"))
+      (logs :+ root).foreach(fs.delete(_, true))
       println(s"Removed registry at $registryPath")
 
     case other =>

@@ -33,16 +33,27 @@ object Backfill {
   /** Checkpoint log: one JSON line per completed interval (.jsonl),
     * append-only, flushed per interval so a crash loses at most the
     * in-flight interval. A torn last line is skipped; the table watermark
-    * then heals that interval. POSIX paths only: the log stays on
+    * then heals that interval. Local files only — a scheme-less path or a
+    * `file:` URI; any other scheme fails at construction. The log stays on
     * `java.nio` because Hadoop's local filesystem is a `ChecksumFileSystem`,
     * whose `append` throws `UnsupportedOperationException`.
     */
   final class CheckpointLog(path: String) {
+    private val file = {
+      val uri = new org.apache.hadoop.fs.Path(path).toUri
+      uri.getScheme match {
+        case null => Paths.get(path)
+        case "file" => Paths.get(uri.getPath)
+        case other => throw new IllegalArgumentException(
+          s"checkpoint log $path: scheme '$other' is not a local file; " +
+            "use a plain path or a file: URI")
+      }
+    }
     // toAbsolutePath: a bare relative filename has a null getParent
-    Files.createDirectories(Paths.get(path).toAbsolutePath.getParent)
+    Files.createDirectories(file.toAbsolutePath.getParent)
     def completed: Set[String] =
-      if (!Files.exists(Paths.get(path))) Set.empty
-      else Files.readAllLines(Paths.get(path)).asScala
+      if (!Files.exists(file)) Set.empty
+      else Files.readAllLines(file).asScala
         .flatMap(l => Try(Json.mapper.readTree(l).get("intervalId").asText).toOption)
         .toSet
     def append(m: IntervalMetrics): Unit = {
@@ -50,7 +61,7 @@ object Backfill {
         "intervalId" -> m.intervalId, "rows" -> m.rows, "bytes" -> m.bytes,
         "snapshotId" -> m.snapshotId,
         "partitions" -> m.partitions.map { case (p, n) => ListMap("pid" -> p, "rows" -> n) }))
-      Files.write(Paths.get(path), (line + "\n").getBytes(StandardCharsets.UTF_8),
+      Files.write(file, (line + "\n").getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
   }

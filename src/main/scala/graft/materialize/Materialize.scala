@@ -86,14 +86,13 @@ object Materialize {
       keys: Seq[String],
       ts: String,
       createdTs: Option[String] = None,
-      ties: Seq[String] = Nil,
-      numFiles: Int = 0): graft.table.Snapshot = {
+      ties: Seq[String] = Nil): graft.table.Snapshot = {
     val cur = table.currentSnapshot
     val merged = cur match {
       case Some(snap) => table.read(batch.sparkSession, snap).unionByName(batch)
       case None => batch
     }
-    table.commit(latestPerKey(merged, keys, ts, createdTs, ties), numFiles,
+    table.commit(latestPerKey(merged, keys, ts, createdTs, ties),
       parentId = cur.map(_.snapshotId))
   }
 
@@ -194,17 +193,26 @@ object Materialize {
       ties: Seq[String] = Nil): DataFrame = {
     val latest = latestPerKey(
       history.where(col(ts) <= lit(asOf)), keyCols, ts, createdTs, ties)
-    val joined = keys.join(latest, keyCols, "left")
+    keys.join(latest, keyCols, "left")
+      .withColumn("status", lookupStatus(ts, valueCol, asOf, ttlSeconds))
+  }
+
+  /** The one online field status of [[lookupLatest]] and [[lookupMulti]]
+    * for a looked-up row with matched timestamp `tsCol` and value `value`.
+    */
+  private def lookupStatus(
+      tsCol: String,
+      value: String,
+      asOf: java.sql.Timestamp,
+      ttlSeconds: Option[Long]): Column = {
     val expired: Column = ttlSeconds match {
-      case Some(t) => col(ts) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
+      case Some(t) => col(tsCol) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
       case None => lit(false)
     }
-    joined.withColumn(
-      "status",
-      when(col(ts).isNull, lit("NOT_FOUND"))
-        .when(expired, lit("OUTSIDE_MAX_AGE"))
-        .when(col(valueCol).isNull, lit("NULL_VALUE"))
-        .otherwise(lit("PRESENT")))
+    when(col(tsCol).isNull, lit("NOT_FOUND"))
+      .when(expired, lit("OUTSIDE_MAX_AGE"))
+      .when(col(value).isNull, lit("NULL_VALUE"))
+      .otherwise(lit("PRESENT"))
   }
 
   /** One view's worth of online-lookup inputs for [[Materialize.lookupMulti]]:
@@ -251,18 +259,9 @@ object Materialize {
         projected.where(col(v.ts) <= lit(asOf)), v.keyCols, v.ts, v.createdTs, v.ties)
         .withColumnRenamed(v.ts, tsOut)
         .select((v.keyCols.map(col) :+ col(tsOut)) ++ v.features.map(col): _*)
-      val joined = acc.join(latest, v.keyCols, "left")
-      val expired: Column = v.ttlSeconds match {
-        case Some(t) => col(tsOut) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
-        case None => lit(false)
-      }
-      v.features.foldLeft(joined) { (d, f) =>
+      v.features.foldLeft(acc.join(latest, v.keyCols, "left")) { (d, f) =>
         val out = s"${v.name}__$f"
-        d.withColumn(s"${out}__status",
-          when(col(tsOut).isNull, lit("NOT_FOUND"))
-            .when(expired, lit("OUTSIDE_MAX_AGE"))
-            .when(col(f).isNull, lit("NULL_VALUE"))
-            .otherwise(lit("PRESENT")))
+        d.withColumn(s"${out}__status", lookupStatus(tsOut, f, asOf, v.ttlSeconds))
           .withColumnRenamed(f, out)
       }.drop(tsOut)
     }

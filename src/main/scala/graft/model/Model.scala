@@ -26,8 +26,9 @@ object ValueType {
     require(!elem.isInstanceOf[ListOf], "only one list nesting level (type_map.py:154-159)")
   }
   /** Engine extension beyond the reference's proto enum: map-typed feature
-    * payloads (Spark MapType is first-class; the facade hashes them via
-    * to_json on the wide path).
+    * payloads (Spark MapType is first-class). The facade routes them like
+    * array/binary/struct features: the as-of window carries only a row id
+    * and the map is fetched once after it ([[graft.pit.AsOfJoin.fetch]]).
     */
   final case class MapOf(key: ValueType, value: ValueType)
     extends ValueType(MapType(key.sparkType, value.sparkType))

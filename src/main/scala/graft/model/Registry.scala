@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Flat JSON row for one applied FeatureView — the serde currency of the
@@ -100,7 +101,7 @@ final class Registry(spark: SparkSession, path: String) {
     * through — so `file://`, `hdfs://` and plain paths all read back.
     */
   def load(): Map[String, FeatureView] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
     else spark.read.schema(implicitly[org.apache.spark.sql.Encoder[RegistryRow]].schema)
       .json(path).as[RegistryRow]
@@ -110,13 +111,15 @@ final class Registry(spark: SparkSession, path: String) {
   /** Convenience: a FeatureStore over the currently applied views. */
   def featureStore(): graft.FeatureStore = new graft.FeatureStore(spark, load())
 
-  /** Conventional per-view checkpoint-log location under the registry
-    * (reference keeps materialization intervals IN the registry,
+  /** Conventional per-view checkpoint-log location: a sibling of the
+    * registry (reference keeps materialization intervals IN the registry,
     * registry.py:208-246; here the hot append path stays a log file and
-    * the registry reads through).
+    * the registry reads through). Taken with Hadoop `Path`, so a `file://`
+    * registry gets an absolute `file:` sibling; a scheme-less registry path
+    * gets a scheme-less one.
     */
   def intervalLogPath(view: String): String =
-    java.nio.file.Paths.get(path).resolveSibling(s"intervals_$view.log").toString
+    new Path(new Path(path).getParent, s"intervals_$view.log").toString
 
   /** Completed materialization intervals for a view, sorted ascending —
     * the registry's answer to "what's materialized?". Reads the view's

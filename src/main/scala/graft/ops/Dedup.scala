@@ -3,18 +3,21 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Deduplication family for large-scale training-data curation, all as
-  * declarative DataFrame plans (shuffle-keyed, map-side combinable):
+/** Deduplication for training-data curation, as declarative DataFrame
+  * plans: exact ([[exact]], [[exactByDigest]]), n-gram Jaccard
+  * ([[ngramJaccard]], [[ngramJaccardPrefix]]), decontamination
+  * ([[containment]], [[containmentBloom]]), MinHash LSH ([[minhashLsh]]
+  * over [[minhashSignatures]]), SimHash ([[simhash]], [[simhashPairs]]),
+  * clustering ([[connectedComponents]], [[dropNearDuplicates]]) and line /
+  * span dedup ([[lineDedup]], [[duplicatedSpans]], [[maskDuplicatedSpans]]).
   *
-  *  - exact: hash-groupBy on content, keep canonical representative
-  *  - n-gram Jaccard: exact set similarity via shingle inverted index
-  *  - MinHash + LSH: near-dup at scale — shingle → k minhashes → bands →
-  *    bucket self-join on band signature → exact-verify candidates
-  *  - SimHash: 64-bit weighted-projection fingerprint, hamming-bucket join
-  *
-  * Scale notes (100 TB posture): every self-join here goes through an
-  * inverted index (shingle or bucket), never a cross join; candidate
-  * verification is bounded by bucket size; `idCol < idCol` halves pair space.
+  * The pair miners share one candidate → verify → rank core: candidates
+  * from [[Candidates.sharingKey]] (pairs sharing a shingle) or
+  * [[Candidates.banded]] (banded LSH, also behind
+  * [[Similarity.cosineNearDup]]), Jaccard scores from `thresholdJaccard`,
+  * containment scores from `containmentOver`. Every self-join goes through
+  * an inverted index (shingle or bucket), never a cross join, and
+  * `id1 < id2` halves the pair space.
   */
 object Dedup {
 
@@ -31,25 +34,14 @@ object Dedup {
       .select(col(idCol), col(contentCol), col("n_dups"))
 
   /** Exact dedup keyed on a 128-bit content digest — the 100 TB shape of
-    * [[exact]]: the aggregate's shuffle carries only
-    * `(digest_hi, digest_lo, id)` narrow rows (two xxhash64 lanes over the
-    * content, the second re-seeded by a fixed salt prefix — a 128-bit
-    * fingerprint), never the content itself. Collision calculus: under the
-    * random-oracle idealization ~n²/2¹²⁹ colliding pairs (< 10⁻¹⁰ at a
-    * trillion documents); the two lanes are re-seeded runs of the SAME
-    * non-cryptographic function, not formally independent, so an
-    * ADVERSARIAL corpus could target XXH64's structure — for untrusted
-    * input or audit-grade runs set `verifyCollisions = true` (or swap the
-    * second lane for `sha2`). A collision can only MERGE two distinct
-    * documents into one group (one extra row dropped), never duplicate.
-    * Same contract as [[exact]] ("identical content → one representative",
-    * the file.py:163-177 dedup analogue) minus the content column in the
-    * output: returns one `(id, n_dups)` row per distinct content, id = min.
-    *
-    * `verifyCollisions = true` adds a paranoia cross-check: one extra
-    * aggregate over the content column asserting `distinct(content)` equals
-    * the digest-group count — it costs the text shuffle this method exists
-    * to avoid, so it is for audits, not the hot path.
+    * [[exact]]: the aggregate shuffles `(digest_hi, digest_lo, id)` rows
+    * (two xxhash64 lanes, the second salted), never the content. ~n²/2¹²⁹
+    * colliding pairs under a random-oracle idealization; the lanes are runs
+    * of the SAME non-cryptographic hash, so for adversarial input set
+    * `verifyCollisions = true`: one extra aggregate over the content
+    * asserting `distinct(content)` equals the digest-group count (it costs
+    * the text shuffle, so it is for audits). A collision can only MERGE two
+    * documents. Returns one `(id, n_dups)` row per distinct content, id = min.
     */
   def exactByDigest(
       df: DataFrame,
@@ -74,25 +66,15 @@ object Dedup {
     groups
   }
 
-  /** Word shingles as 61-bit hashes: distinct n-grams of whitespace-split
-    * words per doc, each shingle hashed with the portable
-    * [[graft.functions.RollingHash]] recurrence over the space-joined n-gram
-    * — all of a document's shingle hashes come from ONE
-    * [[graft.functions.SpanHashes]] prefix scan (O(doc chars), whole-stage
-    * codegen; no joined strings, no per-shingle lambda), so every downstream
-    * shuffle/join moves 8-byte longs instead of text. Set semantics (and therefore Jaccard
-    * counts) are preserved up to hash collisions: ~d²/2⁶² expected colliding
-    * pairs for d distinct shingles — zero in practice below ~10⁹ distinct
-    * shingles, and a bounded count undercount of ±1 per collision beyond
-    * that (acceptable for near-dup mining; deterministic and seed-stable).
-    * The rolling hash (vs round 2's xxhash64) is ENGINE-PORTABLE — plain
-    * modular arithmetic any engine reproduces — which is what gives the
-    * MinHash/SimHash gate queries exact DuckDB oracles (`rh61` in
-    * [[graft.functions.Mix61.oracleMacros]]).
-    * Tokenization: split on `\s+` with empty tokens dropped — so
-    * leading/trailing/consecutive whitespace never produces a phantom ""
-    * word, and the DuckDB oracles mirror it exactly with
-    * `list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')`.
+  /** Word shingles as 61-bit hashes: the distinct n-grams of a doc's
+    * `\s+`-split words (empty tokens dropped), each the portable
+    * [[graft.functions.RollingHash]] of the space-joined n-gram, all from ONE
+    * codegen'd [[graft.functions.SpanHashes]] scan — downstream shuffles
+    * move 8-byte longs, not text. Hash collisions (~d²/2⁶² pairs for d
+    * distinct shingles) can undercount an intersection by one. The hash is
+    * plain modular arithmetic, so DuckDB oracles replay it (`rh61` in
+    * [[graft.functions.Mix61.oracleMacros]]; words via
+    * `list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')`).
     */
   def wordShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val words = filter(split(col(textCol), "\\s+"), w => length(w) > 0)
@@ -103,18 +85,14 @@ object Dedup {
       .distinct()
   }
 
-  /** Score intersection counts into thresholded Jaccard pairs. */
-  private def scorePairs(
-      inter: DataFrame, // (id1, id2, __ix)
-      sizes: DataFrame, // (idCol, __n)
-      idCol: String,
-      threshold: Double): DataFrame =
-    inter
-      .join(sizes.select(col(idCol).as("id1"), col("__n").as("__n1")), Seq("id1"))
-      .join(sizes.select(col(idCol).as("id2"), col("__n").as("__n2")), Seq("id2"))
-      .withColumn(
-        "jaccard",
-        round(col("__ix").cast("double") / (col("__n1") + col("__n2") - col("__ix")), 6))
+  /** The one Jaccard verify tail: `round(ix / (n1 + n2 - ix), 6)` from the
+    * pair rows' intersection size `__ix` and set sizes `n1`, `n2`,
+    * thresholded on the rounded score.
+    */
+  private def thresholdJaccard(
+      pairs: DataFrame, n1: Column, n2: Column, threshold: Double): DataFrame =
+    pairs
+      .withColumn("jaccard", round(col("__ix").cast("double") / (n1 + n2 - col("__ix")), 6))
       .where(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
 
@@ -128,16 +106,10 @@ object Dedup {
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("__ix"))
 
-  /** Exact verification of candidate pairs against per-doc shingle-HASH
-    * arrays: each doc's distinct shingle hashes roll up to one sorted
-    * `array<long>` row (~8·|set| bytes — wildly smaller than round 1's
-    * string `collect_set`, whose re-join broke q40's pruning payoff), the
-    * candidate list joins that relation twice, and the intersection size is
-    * one codegen'd `array_intersect` per pair. The docset relation is tiny
-    * relative to the corpus (one row per doc), so AQE picks a broadcast
-    * join here at bench scale and a shuffle join beyond — no explicit hint
-    * needed, and cost is O(|cand| · avg set size) either way, never the
-    * Σ df² of a full index join.
+  /** Exact Jaccard of candidate pairs: each candidate doc's shingle hashes
+    * roll up to one sorted `array<long>` row, the candidates join it twice
+    * and the intersection is one codegen'd `array_intersect` per pair —
+    * O(|cand| · avg set size), never the Σ df² of a full index join.
     */
   private def verifyJaccard(
       cand: DataFrame, // (id1, id2)
@@ -152,31 +124,23 @@ object Dedup {
     val docsets = sh.join(candIds, Seq(idCol), "left_semi")
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("shingle"))).as("__set"))
-    cand
+    thresholdJaccard(cand
       .join(docsets.select(col(idCol).as("id1"), col("__set").as("__s1")), Seq("id1"))
       .join(docsets.select(col(idCol).as("id2"), col("__set").as("__s2")), Seq("id2"))
-      .withColumn("__ix", size(array_intersect(col("__s1"), col("__s2"))))
-      .withColumn(
-        "jaccard",
-        round(col("__ix").cast("double") / (size(col("__s1")) + size(col("__s2")) - col("__ix")), 6))
-      .where(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), col("jaccard"))
+      .withColumn("__ix", size(array_intersect(col("__s1"), col("__s2")))),
+      size(col("__s1")), size(col("__s2")), threshold)
   }
 
-  /** Exact n-gram Jaccard pairs with similarity >= threshold.
-    * Inverted-index join on shingle: |candidate pairs| is sum over shingles
-    * of c², not |docs|² — the standard scalable exact-Jaccard plan.
+  /** Exact n-gram Jaccard pairs with similarity >= threshold, by an
+    * inverted-index join on the shingle (Σ c² rows over shingles, not
+    * |docs|²).
     *
-    * `maxDf` is the frequent-shingle guard for corpus scale: a shingle
-    * occurring in c docs contributes c² candidate rows, so one boilerplate
-    * trigram shared by 1M docs would alone produce 10¹² join rows. With a
-    * cap, shingles with document frequency > maxDf are excluded from
-    * CANDIDATE GENERATION only (they are non-discriminative); candidates are
-    * then re-verified with exact counts over ALL shingles, so every reported
-    * score is still exact Jaccard. The only semantic change is that pairs
-    * sharing *solely* over-cap shingles are not reported. When no shingle
-    * exceeds the cap — checked with one cheap aggregate over the shingle
-    * index — the single-phase exact plan runs unchanged.
+    * `maxDf` guards against boilerplate: a shingle in c docs adds c² join
+    * rows. Shingles in more than `maxDf` docs are left out of CANDIDATE
+    * generation only; candidates are verified over ALL shingles, so scores
+    * stay exact, and only pairs sharing nothing but over-cap shingles are
+    * lost. When no shingle exceeds the cap (one aggregate) the single-phase
+    * plan runs.
     */
   def ngramJaccard(
       df: DataFrame,
@@ -203,32 +167,24 @@ object Dedup {
         !row.isNullAt(0) && row.getLong(0) > cap
       case _ => false
     }
-    if (!capExceeded) scorePairs(indexIntersections(sh, idCol), sizes, idCol, threshold)
+    if (!capExceeded) thresholdJaccard(indexIntersections(sh, idCol)
+      .join(sizes.select(col(idCol).as("id1"), col("__n").as("__n1")), Seq("id1"))
+      .join(sizes.select(col(idCol).as("id2"), col("__n").as("__n2")), Seq("id2")),
+      col("__n1"), col("__n2"), threshold)
     else {
       val rare = sh.join(dfreq.get.where(col("__df") <= maxDf.get), "shingle")
         .select(col(idCol), col("shingle"))
-      val cand = rare.select(col(idCol).as("id1"), col("shingle"))
-        .join(rare.select(col(idCol).as("id2"), col("shingle")), Seq("shingle"))
-        .where(col("id1") < col("id2"))
-        .select(col("id1"), col("id2"))
-        .distinct()
-      verifyJaccard(cand, sh, idCol, threshold)
+      verifyJaccard(Candidates.sharingKey(rare, idCol, Seq("shingle")), sh, idCol, threshold)
     }
   }
 
-  /** Prefix-filtered exact n-gram Jaccard (All-Pairs/PPJoin-style): same
-    * output as [[ngramJaccard]], far fewer candidate pairs at moderate-to-
-    * high thresholds.
-    *
-    * Shingles get a global canonical order (document frequency ascending,
-    * then hash value); each document indexes only its first
-    * `|s| - ceil(t*|s|) + 1` shingles. Prefix-filtering principle: if
-    * J(A,B) >= t then |A∩B| >= ceil(t*max(|A|,|B|)), and two sets with that
-    * much overlap must share an element inside both prefixes — so joining
-    * prefixes only is LOSSLESS, and the exact set verification afterwards
-    * makes it false-positive free. At t=0.8 a document indexes ~20% of its
-    * shingles, shrinking the inverted-index join quadratically; at very low
-    * t it degenerates gracefully toward [[ngramJaccard]]'s full index.
+  /** Prefix-filtered exact n-gram Jaccard (PPJoin-style): same output as
+    * [[ngramJaccard]], far fewer candidates at moderate-to-high thresholds.
+    * Shingles are ordered globally (document frequency, then hash) and each
+    * doc indexes only its first `|s| - ceil(t*|s|) + 1`: J(A,B) >= t needs
+    * |A∩B| >= ceil(t*max(|A|,|B|)), so such pairs share a prefix element —
+    * the prefix join is LOSSLESS and the exact verify removes false
+    * positives.
     */
   def ngramJaccardPrefix(
       df: DataFrame,
@@ -238,9 +194,7 @@ object Dedup {
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    // localCheckpoint (eager), not cache(): the shingle index feeds both
-    // candidate generation and verification, and its blocks are released
-    // when the frame is GC'd instead of pinning storage for the session
+    // localCheckpoint, not cache() — see ngramJaccard's note
     val sh = wordShingles(df, idCol, textCol, n).localCheckpoint()
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
     // rank shingles per doc by (df asc, hash asc) — the canonical global
@@ -256,26 +210,16 @@ object Dedup {
     // Candidate join on prefixes only, with the PPJoin LENGTH filter:
     // J(A,B) >= t ⇒ |A∩B| >= t·max(|A|,|B|) and |A∩B| <= min(|A|,|B|),
     // so min >= t·max — size-incompatible pairs are pruned in the join.
-    val cand = pref.as("x").join(pref.as("y"), Seq("shingle"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol") &&
-        least(col("x.__n"), col("y.__n")) >=
-          lit(threshold) * greatest(col("x.__n"), col("y.__n")))
-      .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"))
-      .distinct()
+    val cand = Candidates.sharingKey(pref, idCol, Seq("shingle"),
+      least(col("x.__n"), col("y.__n")) >= lit(threshold) * greatest(col("x.__n"), col("y.__n")))
     verifyJaccard(cand, sh, idCol, threshold)
   }
 
-  /** Benchmark decontamination (train/eval overlap removal — the C4/GPT
-    * pipeline step): report (corpus doc, benchmark doc) pairs whose n-gram
-    * CONTAINMENT of the benchmark doc meets the threshold,
-    * `C(bench, doc) = |S(bench) ∩ S(doc)| / |S(bench)|` — containment, not
-    * Jaccard, because a short eval question embedded in a long training
-    * document must still trip the filter.
-    *
-    * Plan: inverted-index join of corpus shingles against BENCHMARK
-    * shingles — the benchmark side is small (an eval set), so the join
-    * broadcasts and the corpus never shuffles; candidate rows are bounded
-    * by Σ over benchmark shingles of their corpus document frequency.
+  /** Benchmark decontamination: (corpus doc, benchmark doc) pairs whose
+    * n-gram CONTAINMENT `|S(bench) ∩ S(doc)| / |S(bench)|` meets the
+    * threshold — containment, not Jaccard, so a short eval question inside
+    * a long document still trips it. The benchmark side is small, so the
+    * inverted-index join broadcasts it and the corpus never shuffles.
     */
   def containment(
       corpus: DataFrame,
@@ -283,13 +227,26 @@ object Dedup {
       idCol: String,
       textCol: String,
       n: Int,
-      threshold: Double): DataFrame = {
+      threshold: Double): DataFrame =
+    containmentOver(corpus, benchmark, idCol, textCol, n, threshold)((corpusSh, _) => corpusSh)
+
+  /** The scoring tail of [[containment]] and [[containmentBloom]]:
+    * `prefilter(corpusShingles, benchShingles)` narrows the corpus side,
+    * then the exact join counts each (doc, bench) intersection.
+    */
+  private def containmentOver(
+      corpus: DataFrame,
+      benchmark: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int,
+      threshold: Double)(prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val corpusSh = wordShingles(corpus, idCol, textCol, n)
       .select(col(idCol).as("doc_id_"), col("shingle"))
     val benchSh = wordShingles(benchmark, idCol, textCol, n)
       .select(col(idCol).as("bench_id"), col("shingle"))
     val benchSizes = benchSh.groupBy(col("bench_id")).agg(count(lit(1)).as("__bn"))
-    corpusSh.join(benchSh, "shingle")
+    prefilter(corpusSh, benchSh).join(benchSh, "shingle")
       .groupBy(col("doc_id_"), col("bench_id"))
       .agg(count(lit(1)).as("__ix"))
       .join(benchSizes, "bench_id")
@@ -298,18 +255,13 @@ object Dedup {
       .select(col("doc_id_").as("doc_id"), col("bench_id"), col("containment"))
   }
 
-  /** [[containment]] with a Bloom pre-filter on the corpus side — the
-    * 100 TB decontamination shape when the benchmark shingle set is too
-    * large to broadcast as a join hash table. The benchmark shingles fold
-    * into an `mBits` bitmap (distributed `bit_or` build, driver cost
-    * bounded by the bitmap — [[graft.functions.BloomFilter61.build]]); the
-    * corpus probes it inside the scan stage via the codegen
-    * `might_contain_61` expression, so only the surviving minority of
-    * corpus shingles ever reaches the exact join. Bloom false positives are
-    * killed by that join, so the OUTPUT IS EXACTLY [[containment]]'s —
-    * same rows, same scores, same oracle — only the plan differs: shuffle
-    * volume drops from |corpus shingles| to |survivors| ≈ |true hits| +
-    * fpr·|corpus shingles|.
+  /** [[containment]] over Bloom-prefiltered corpus shingles — the shape
+    * for a benchmark shingle set too large to broadcast. The benchmark
+    * shingles fold into an `mBits` bitmap
+    * ([[graft.functions.BloomFilter61.build]]) that the corpus probes in its
+    * scan stage, so only survivors (≈ true hits + fpr·corpus) reach the
+    * exact join, which drops the false positives: the OUTPUT IS EXACTLY
+    * [[containment]]'s.
     */
   def containmentBloom(
       corpus: DataFrame,
@@ -319,24 +271,13 @@ object Dedup {
       n: Int,
       threshold: Double,
       mBits: Long = 1L << 22,
-      k: Int = 4): DataFrame = {
-    val corpusSh = wordShingles(corpus, idCol, textCol, n)
-      .select(col(idCol).as("doc_id_"), col("shingle"))
-    val benchSh = wordShingles(benchmark, idCol, textCol, n)
-      .select(col(idCol).as("bench_id"), col("shingle"))
-    val benchSizes = benchSh.groupBy(col("bench_id")).agg(count(lit(1)).as("__bn"))
-    val bitmap = graft.functions.BloomFilter61.build(
-      benchSh.select(col("shingle")).distinct(), "shingle", mBits, k)
-    val survivors = corpusSh.where(graft.functions.BloomFilter61.might_contain_61(
-      lit(bitmap), col("shingle"), k))
-    survivors.join(benchSh, "shingle") // exact verify: false positives drop here
-      .groupBy(col("doc_id_"), col("bench_id"))
-      .agg(count(lit(1)).as("__ix"))
-      .join(benchSizes, "bench_id")
-      .withColumn("containment", round(col("__ix").cast("double") / col("__bn"), 6))
-      .where(col("containment") >= threshold)
-      .select(col("doc_id_").as("doc_id"), col("bench_id"), col("containment"))
-  }
+      k: Int = 4): DataFrame =
+    containmentOver(corpus, benchmark, idCol, textCol, n, threshold) { (corpusSh, benchSh) =>
+      val bitmap = graft.functions.BloomFilter61.build(
+        benchSh.select(col("shingle")).distinct(), "shingle", mBits, k)
+      corpusSh.where(graft.functions.BloomFilter61.might_contain_61(
+        lit(bitmap), col("shingle"), k))
+    }
 
   /** MinHash signatures: k independent permutations simulated as
     * min(mix61(shingle, seed_i)) per doc — [[graft.functions.Mix61]] is
@@ -376,16 +317,8 @@ object Dedup {
       (b * rows until (b + 1) * rows).foldLeft(lit(0L): Column) { (h, i) =>
         graft.functions.Mix61.mix61(h + col(s"mh_$i"), lit(17L))
       }
-    val banded = sig.select(
-      col(idCol),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"), bandSig(b).as("sig"))
-      }: _*)).as("bs"))
-      .select(col(idCol), col("bs.band"), col("bs.sig"))
-    val cand = banded.as("x").join(banded.as("y"), Seq("band", "sig"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"))
-      .distinct()
+    val cand = Candidates.banded(sig, idCol, (0 until bands).map(bandSig),
+      "bs", ("band", "sig"), ("band", "sig"))
     // exact verification of candidates only, via hashed docset arrays
     verifyJaccard(cand, sh, idCol, threshold)
   }
@@ -435,43 +368,33 @@ object Dedup {
     agg.select(col(idCol), fp.as("simhash"))
   }
 
-  /** Connected components over a near-duplicate pair list: every node gets
-    * `component` = the minimum id reachable through the pair graph — the
-    * clustering step every dedup pipeline runs after pair mining, so one
+  /** Hash-min rounds [[connectedComponents]] tries before it escalates. */
+  private val HashMinHead = 4
+
+  /** Round budget of [[starComponents]] (a diameter-64 chain takes at most
+    * 8, OpsSpec); past it the run fails loudly.
+    */
+  private val StarMaxRounds = 25
+
+  /** Connected components over a near-duplicate pair list: every node's
+    * `component` is the minimum id reachable through the pairs, so one
     * representative per duplicate CLUSTER survives (pairwise removal alone
     * over-deletes on chains a~b~c).
     *
-    * Algorithm above the gate — STAGED ESCALATION (BENCH/DEDUP.md
-    * "Long-chain CC" has both sides of the measurement): hash-min label
-    * propagation ([[hashMinComponents]]) costs ~half a star round per
-    * round and converges in graph-DIAMETER rounds, and near-dup graphs are
-    * usually shallow cliques — so it gets `hashMinHead` rounds first; a
-    * graph still unconverged is diameter-shaped, and the run restarts on
-    * large-star/small-star ([[starComponents]], Kiveris et al. SoCC 2014),
-    * whose O(log² n) round bound holds at ANY diameter. The escalation
-    * penalty is bounded (hashMinHead cheap rounds); the shallow-graph
-    * saving is ~2×; and no input shape can stall the job. Both loops are
-    * driver-side with a per-round convergence action and `localCheckpoint`
-    * to keep plans flat.
-    *
-    * Size-gated driver path: a near-dup pair list is a tiny fraction of the
-    * corpus (pair mining already reduced 100 TB of documents to the rows
-    * that matched), so when the deduplicated edge list is small — counted
-    * first, same calculus as a broadcast-join threshold — the iterative
-    * cluster rounds are replaced by one collect + union-find on the driver
-    * (O(E α(E)) work; collected Rows are boxed, so budget ~100-200 B/edge
-    * transient). The distributed loop remains the path for edge lists above
-    * the gate, where the driver could not hold them.
+    * Up to `driverMaxEdges` distinct undirected edges (default 2M, a few
+    * hundred MB of boxed rows) the edge list is collected and solved by
+    * union-find on the driver. Above it the run is a STAGED ESCALATION
+    * (BENCH/DEDUP.md "Long-chain CC"): hash-min label propagation
+    * ([[hashMinComponents]]) is ~2× cheaper per round but needs DIAMETER
+    * rounds, and near-dup graphs are usually shallow cliques, so it gets
+    * [[HashMinHead]] rounds; a graph still unconverged restarts on
+    * [[starComponents]], whose round count holds at any diameter. Both
+    * loops checkpoint each round to keep plans flat.
     *
     * @param pairs (id1, id2) rows; direction irrelevant.
-    * @param driverMaxEdges collect+union-find below this many distinct
-    *        undirected edges (default 2M ≈ a few hundred MB transient on a
-    *        driver sized like an executor); distributed large-star/
-    *        small-star contraction above it.
     * @return one row per node appearing in `pairs`: (id, component).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      driverMaxEdges: Long = 2000000L, hashMinHead: Int = 4): DataFrame = {
+  def connectedComponents(pairs: DataFrame, driverMaxEdges: Long = 2000000L): DataFrame = {
     // canonicalize direction first so the gate counts (and the driver path
     // collects) each undirected edge exactly ONCE — the documented budget
     val undirected = pairs.select(
@@ -479,32 +402,22 @@ object Dedup {
         greatest(col("id1"), col("id2")).as("b"))
       .distinct().localCheckpoint()
     if (undirected.count() <= driverMaxEdges) driverComponents(undirected)
-    else hashMinAttempt(undirected, hashMinHead,
+    else hashMinAttempt(undirected, HashMinHead,
         new java.util.concurrent.atomic.AtomicInteger)
-      .getOrElse(starComponents(undirected, maxIter))
+      .getOrElse(starComponents(undirected))
   }
 
-  /** Distributed large-star/small-star CC (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014) — the above-the-gate
-    * path of [[connectedComponents]]. Per round:
-    *
-    *  - large-star: every node u links each STRICTLY LARGER neighbor to the
-    *    minimum of its closed neighborhood (one groupBy-min + one join on
-    *    the bidirectional edge list);
-    *  - small-star: every node u links its ≤ neighbors AND ITSELF to the
-    *    minimum of its small-neighborhood (one groupBy-min + one join on
-    *    the canonical big→small list).
-    *
-    * Both phases preserve connectivity and strictly contract the graph
-    * toward stars; convergence is O(log² n) ROUNDS REGARDLESS OF DIAMETER —
-    * vs hash-min's diameter rounds, which is the difference between 6 and
-    * 64+ joins on a chain-shaped duplicate graph (BENCH/DEDUP.md
-    * "Long-chain CC"). Fixpoint = the edge set stops changing (each round's
-    * check is one count + one left_anti probe on the checkpointed narrow
-    * (a,b) frame). Labels come off the converged star set: every edge is
-    * (node → component-min), roots appear only on the min side.
+  /** Distributed large-star/small-star CC (Kiveris et al., SoCC 2014), the
+    * above-the-gate path of [[connectedComponents]]. Per round, large-star
+    * links each node's STRICTLY LARGER neighbors to the minimum of its
+    * closed neighborhood, and small-star links its ≤ neighbors and itself
+    * to the minimum of its small neighborhood (one groupBy-min + one join
+    * each). Convergence takes O(log² n) rounds at ANY diameter (6 vs 64+
+    * joins on a chain, BENCH/DEDUP.md "Long-chain CC"); the fixpoint is an
+    * unchanged edge set (one count + one left_anti probe). On the converged
+    * stars every edge is (node → component min).
     */
-  private[graft] def starComponents(undirected: DataFrame, maxIter: Int = 25,
+  private[graft] def starComponents(undirected: DataFrame, maxIter: Int = StarMaxRounds,
       rounds: java.util.concurrent.atomic.AtomicInteger =
         new java.util.concurrent.atomic.AtomicInteger): DataFrame = {
     // self-pairs (id1 == id2) carry no connectivity; re-added as self-labels.
@@ -800,18 +713,11 @@ object Dedup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, shingleN: Int, maxHamming: Int): DataFrame = {
     require(maxHamming < 4, "block LSH with 4 blocks guarantees recall only for hamming <= 3")
     val fps = simhash(wordShingles(df, idCol, textCol, shingleN), idCol)
-    val blocks = fps.select(
-      col(idCol), col("simhash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("blk"), shiftright(col("simhash"), b * 15).bitwiseAND(0x7FFFL).as("key"))
-      }: _*)).as("bk"))
-      .select(col(idCol), col("simhash"), col("bk.blk"), col("bk.key"))
-    val cand = blocks.as("x").join(blocks.as("y"), Seq("blk", "key"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(
-        col(s"x.$idCol").as("id1"), col(s"y.$idCol").as("id2"),
-        col("x.simhash").as("__f1"), col("y.simhash").as("__f2"))
-      .distinct()
+    // the fingerprints ride the candidate join (8 bytes each), so the
+    // popcount verify needs no re-fetch join
+    val cand = Candidates.banded(fps, idCol,
+      (0 until 4).map(b => shiftright(col("simhash"), b * 15).bitwiseAND(0x7FFFL)),
+      "bk", ("blk", "key"), ("blk", "key"), carry = Seq("simhash" -> "__f"))
     cand
       .withColumn("hamming", bit_count(col("__f1").bitwiseXOR(col("__f2"))))
       .where(col("hamming") <= maxHamming)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -64,17 +64,20 @@ object PlanShape extends AdaptiveSparkPlanHelper {
       .filter(_.nonEmpty).mkString("; ")
   }
 
-  /** Shuffle exchanges hash-partitioned on a string expression over
-    * `column`: the exchanges that would carry that text as their key.
+  /** Shuffle exchanges hash-partitioned on an expression over `column`:
+    * the exchanges that carry that column as (part of) their key.
     */
   def exchangesKeyedOn(plan: SparkPlan, column: String): Seq[ShuffleExchangeExec] =
     collect(plan) {
       case e: ShuffleExchangeExec if (e.outputPartitioning match {
-        case h: HashPartitioning => h.expressions.exists(k =>
-          k.dataType == StringType && k.references.exists(_.name == column))
+        case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == column))
         case _ => false
       }) => e
     }
+
+  /** The array columns, at any depth, in `node`'s output. */
+  def arrayColumns(node: SparkPlan): Seq[String] =
+    node.output.filter(a => hasArray(a.dataType)).map(_.name)
 
   /** `body`'s result and the final executed plans of the queries it ran,
     * writes included.

@@ -112,6 +112,36 @@ class MainSpec extends SparkSpec {
     assert(row.getString(row.fieldIndex("tier")) == "silver")
   }
 
+  test("a file:// registry keeps its interval log beside it; teardown removes both") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_uri").toString
+    (0 until 48).map(h => (1L + h % 2, t(h * 60L), t(h * 60L), h.toDouble))
+      .toDF("driver_id", "event_timestamp", "created", "rate")
+      .write.parquet(s"$dir/src.parquet")
+    val uri = s"file://$dir/registry"
+    val reg = new Registry(spark, uri)
+    reg.apply(Seq(FeatureView("driver_stats",
+      Seq(Entity("driver", ValueType.INT64, Some("driver_id"))),
+      Seq(Feature("rate", ValueType.DOUBLE)),
+      BatchSource(s"$dir/src.parquet", "event_timestamp", Some("created")))))
+    val view = reg.load()("driver_stats")
+    val log = reg.intervalLogPath("driver_stats")
+    assert(log == s"file:$dir/intervals_driver_stats.log")
+    graft.fe.Backfill.run(spark, spark.read.parquet(s"$dir/src.parquet"), view.joinKeys,
+      "event_timestamp", Some("created"), t(0), t(48 * 60L), 24L * 3600,
+      SnapshotTable(s"$dir/table"), log)
+    assert(new java.io.File(s"$dir/intervals_driver_stats.log").isFile)
+    assert(reg.materializedIntervals("driver_stats").map(_._1.toString) ==
+      Seq("2021-04-12T00:00:00Z", "2021-04-13T00:00:00Z"))
+
+    Main.run(spark, List("teardown", uri))
+    assert(!new java.io.File(s"$dir/registry").exists())
+    assert(!new java.io.File(s"$dir/intervals_driver_stats.log").exists())
+    assert(new java.io.File(s"$dir/src.parquet").exists()) // nothing else goes
+    assert(new Registry(spark, uri).load().isEmpty)
+    // any scheme but file: is refused instead of written under the cwd
+    intercept[IllegalArgumentException](new graft.fe.Backfill.CheckpointLog("hdfs://nn/x/ckpt.log"))
+  }
+
   test("get-online-features / entities list / init / teardown subcommands") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli_onl").toString
     Seq((1L, t(10), t(10), 0.5), (1L, t(20), t(21), 0.7), (2L, t(200), t(200), 0.9))

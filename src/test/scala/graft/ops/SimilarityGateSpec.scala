@@ -3,9 +3,10 @@ package graft.ops
 import graft.SparkSpec
 
 /** SemDeDup over the centroid scan kernel: planted duplicates, the
-  * cell-size guard, and the empty-corpus contract shared with ivfTopK. The
-  * kernel's IVF/PQ/Lloyd outputs are checked against independent oracles in
-  * OpsSpec.
+  * one-cell result against an all-pairs cosine oracle (which fences the
+  * shared cosine verify tail), the cell-size guard, and the empty-corpus
+  * contract shared with ivfTopK. The kernel's IVF/PQ/Lloyd outputs are
+  * checked against independent oracles in OpsSpec.
   */
 class SimilarityGateSpec extends SparkSpec {
   import spark.implicits._
@@ -19,8 +20,9 @@ class SimilarityGateSpec extends SparkSpec {
   private def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
     d.collect().map(_.toString).sorted.toSeq
 
-  test("semDedup: planted duplicates found within cells, one representative kept, kernel == literal") {
-    val planted = Seq((100L, vecs(3)._2), (101L, vecs(3)._2)) // exact copies of vec 3
+  private val planted = Seq((100L, vecs(3)._2), (101L, vecs(3)._2)) // exact copies of vec 3
+
+  test("semDedup: planted duplicates found within cells, one representative kept") {
     val df2 = (vecs ++ planted).toDF("vec_id", "embedding")
     val pairs = Similarity.semDedupPairs(df2, "vec_id", "embedding",
       nCentroids = 4, threshold = 0.999)
@@ -31,9 +33,31 @@ class SimilarityGateSpec extends SparkSpec {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept.contains(3L) && !kept.contains(100L) && !kept.contains(101L))
     assert(kept.size == vecs.size) // everything else passes through
-    val ker = Similarity.semDedupPairs(df2, "vec_id", "embedding",
-      nCentroids = 4, threshold = 0.999)
-    assert(rows(pairs) == rows(ker))
+  }
+
+  test("semDedupPairs with one cell equals an in-memory all-pairs cosine oracle") {
+    // one centroid (the lowest id, 0) puts every vector in cell 0, so the
+    // operator must return exactly the all-pairs cosine join: double dot
+    // products in index order, the threshold on the UNROUNDED cosine, then
+    // the output rounded half-up to 4 decimals
+    val all = vecs ++ planted
+    def dot(a: Array[Float], b: Array[Float]): Double =
+      a.indices.map(i => a(i).toDouble * b(i).toDouble).sum
+    val threshold = 0.2
+    val expected = (for {
+      (i, a) <- all
+      (j, b) <- all
+      if i < j
+      cos = dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+      if cos >= threshold
+    } yield (i, j, 0L,
+      BigDecimal(cos).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).sorted
+    val got = Similarity.semDedupPairs(all.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      nCentroids = 1, threshold = threshold)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq.sorted
+    assert(expected.size > 100, s"oracle too sparse to fence the verify tail: ${expected.size}")
+    assert(got == expected)
   }
 
   test("semDedup cell-size guard: a degenerate one-cell quantizer fails fast") {
