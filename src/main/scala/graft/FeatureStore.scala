@@ -78,10 +78,10 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     // One as-of core per join-key set: every view on those keys is one side
     // of ONE window (one exchange, one sort, one Window operator). A narrow
     // (scalar) view's values ride the window. A wide (array/binary/map/
-    // struct) view is LATE MATERIALIZED in the shape of
-    // AsOfJoin.windowedLate: its side carries only a row id, and its payload
-    // is fetched by one shuffle-hash join on that id after EVERY window has
-    // run — so no window's exchange or sort carries any view's payload.
+    // struct) view is LATE MATERIALIZED (see AsOfJoin.fetch): its side
+    // carries only a row id, and its payload is fetched by one shuffle-hash
+    // join on that id after EVERY window has run — so no window's exchange
+    // or sort carries any view's payload.
     // Every entity row is windowed as it is, so duplicate rows each keep
     // their match and a null key matches nothing (null features).
     val ordered = narrow ++ wide

@@ -25,7 +25,7 @@ object Plans {
       "q03_pull_latest" -> "time-bounded latest: range filter pushed into the parquet scan",
       "q35_late_asof" -> "late-materialized as-of: ONE narrow window (keys, ts, created, rowid), then a shuffle-hash payload fetch on the row id — the window is evaluated once",
       "q05_tumbling" -> "tumbling agg: partial/final HashAggregate (map-side combine)",
-      "q21_rolling" -> "range-frame rolling window: sum and count in ONE Window over ONE Sort on the unix_micros order key",
+      "q21_rolling" -> "range-frame rolling window: sum and count in ONE Window over ONE Sort on the event time itself (cast(ts as timestamp), ts being NTZ here), with an interval frame of 3600 s (1 hour) PRECEDING to CURRENT ROW",
       "q17_knn" -> "brute-force top-k: broadcast of the query side, codegen'd cosine",
       "q41_fs_tokens" -> "facade wide-payload routing, one as-of window per key set: ONE as-of window over (lang, fts, src_doc, rowid), the rowid hashed from the scan position (_metadata.file_path, row_index); `tokens` is read by ONE scan and fetched after the window by a shuffle-hash join on the rowid — no aggregate, no sort of the payload, three exchanges",
       "q47_two_wide_views" -> "facade late materialization over TWO array views, one as-of window per key set: the views key on lang and on source, so each windows the accumulated entity frame against its narrow (key, ts, created, rowid) projection — TWO as-of windows, no array in any Window/Sort input; both payloads are fetched after the last window by one shuffle-hash join each, every array column read by ONE scan",

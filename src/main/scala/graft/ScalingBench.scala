@@ -82,10 +82,13 @@ object ScalingBench {
     *    no single-task 1M-row window anywhere in the plan;
     * 3. windowed FE over the compacted timeline: lag(n_tok) + trailing-1h
     *    rolling token sum assembled two-level from the slot partials
-    *    (exact raw-row semantics, scalable on hot keys);
+    *    (exact raw-row semantics, scalable on hot keys). lagLead and
+    *    rolling order by the same event_timestamp key, so both run in ONE
+    *    sort and ONE Window operator;
     * 4. salted windowed as-of join of the probes (hot key also owns 10% of
     *    probes — entity-salting splits them across buckets, replicating
-    *    only the ~200 compacted feature rows);
+    *    only the ~200 compacted feature rows); the hot probe keys come from
+    *    one sketch aggregate over a 1% sample (two jobs, no hash exchange);
     * 5. late materialization: fetch token arrays by one shuffle-hash
     *    equi-join on the matched seq_id — the wide payload never passes
     *    through a window sort, and the as-of window is evaluated once;
@@ -118,8 +121,9 @@ object ScalingBench {
         col("__latest.seq_id").as("seq_id"), col("__latest.n_tok").as("n_tok"),
         col("slot_tok_sum"))
 
-    // (3) windowed FE on the compacted timeline; rolling is two-level:
-    // range frame over slot partials = exact trailing-1h raw-row token sum
+    // (3) windowed FE on the compacted timeline, one sort + one Window;
+    // rolling is two-level: range frame over slot partials = exact
+    // trailing-1h raw-row token sum
     val enriched = Windows.rolling(
         Windows.lagLead(slotted, Seq("doc_id"), "event_timestamp", "n_tok", n = 1),
         Seq("doc_id"), "event_timestamp", 3600L, "slot_tok_sum")

@@ -226,9 +226,10 @@ object SparkEntry {
         |        AND f.f_ts <= e.ts AND f.f_ts >= e.ts - INTERVAL 2 HOUR)
         |SELECT event_id, user_id, ts, value AS click_value FROM j WHERE rn = 1""".stripMargin),
 
-    /** Late-materialized as-of join (the wide-payload strategy): the window
-      * sorts only (user_id, ts, event_id); value/props payloads are fetched
-      * afterwards by equi-join on the matched event ids.
+    /** Late-materialized as-of join (the wide-payload strategy): `windowed`
+      * over the narrow (user_id, ts, event_id) projection, so the window
+      * sorts only those; `fetch` then joins the value/props payloads on the
+      * matched event ids.
       */
     Gate("q35_late_asof", (spark, dir) => {
       val ev = tbl(spark, dir, "events")
@@ -237,10 +238,13 @@ object SparkEntry {
       val feature = ev.where(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("value").as("purchase_value"),
           col("props").as("purchase_props"), col("event_id").as("purchase_event"))
-      AsOfJoin.windowedLate(entity, feature,
+      val matched = AsOfJoin.windowed(entity,
+        feature.select(col("user_id"), col("ts"), col("purchase_event")),
         AsOfSpec(Seq("user_id"), "ts", "ts", Some("purchase_event"), Some(12L * 3600),
-          Seq("purchase_value", "purchase_props")),
-        rowId = "purchase_event")
+          Seq("purchase_event")))
+      AsOfJoin.fetch(matched,
+        feature.select(col("purchase_event"), col("purchase_value"), col("purchase_props")),
+        "purchase_event")
     }, oracle =
       """WITH ent AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'signup'),
         |feat AS (SELECT event_id AS pe, user_id, ts AS f_ts, value, props FROM events WHERE event_type = 'purchase'),
@@ -1771,20 +1775,28 @@ object SparkEntry {
       .withColumn("ts", col("ts").cast("timestamp"))
   }
 
-  /** Run a bounded streaming frame to completion into a memory sink and
-    * return the sink table (unique sink name per query — memory sinks are
-    * session-global). The checkpoint goes to a scratch dir, so Spark
-    * creates no temporary checkpoint location of its own.
+  /** Run a bounded streaming frame to completion and return its result,
+    * landed by `foreachBatch` in a scratch parquet directory: each batch
+    * overwrites it in `complete` mode and appends to it in `append` mode.
+    * Read back from files, the result stays off the driver (a memory sink is
+    * a driver-side local table, which a downstream write ships inside its
+    * tasks: a 2 MB task for q71 at sf0.01). The checkpoint goes to a scratch
+    * dir, so Spark creates no temporary checkpoint location of its own.
     */
   private def runBoundedStream(spark: SparkSession, frame: DataFrame,
       sinkName: String, mode: String): DataFrame = {
-    val q = frame.writeStream.format("memory").queryName(sinkName)
+    val out = scratchDir(s"graft_${sinkName}_out").toString
+    val writeMode = if (mode == "complete") "overwrite" else "append"
+    frame.writeStream
       .option("checkpointLocation", scratchDir(s"graft_${sinkName}_ckpt").toString)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode(writeMode).parquet(out)
+      }
       .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+      .awaitTermination()
+    spark.read.schema(frame.schema).parquet(out)
   }
 
   private val streamingGates: Seq[Gate] = Seq(

@@ -1,8 +1,12 @@
 package graft.fe
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, graftshim}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, CurrentRow, Literal, RangeFrame,
+  SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.unsafe.types.CalendarInterval
 
 /** Windowed feature engineering over keyed event streams (north-rule axis B):
   * lag/lead features, tumbling & sliding time-window aggregates,
@@ -70,12 +74,23 @@ object Windows {
 
   /** Rolling (range-frame) aggregate: for each event, aggregate over the
     * trailing `windowSeconds` of its own key's history (inclusive bounds).
-    * The frame is ordered at MICROsecond precision (the fixtures' native
-    * resolution) — ordering by whole seconds would let a same-second future
-    * event leak into a point-in-time feature and stretch the bound by up to
-    * ~1 s ([[sessionize]] makes the same choice). Sum and count are one
-    * `withColumns` over one order key, so a call plans one Sort and one
-    * Window.
+    * The frame is `RANGE BETWEEN <windowSeconds> s PRECEDING AND CURRENT
+    * ROW` over the event time itself, at MICROsecond precision (the
+    * fixtures' native resolution) — ordering by whole seconds would let a
+    * same-second future event leak into a point-in-time feature and stretch
+    * the bound by up to ~1 s ([[sessionize]] makes the same choice).
+    *
+    * The order key is `ts` when it already is a TIMESTAMP, else
+    * `cast(ts as timestamp)` (NTZ, string and epoch-second numeric inputs).
+    * A TIMESTAMP key is the same sort order as [[lagLead]]'s, so a
+    * `lagLead` → `rolling` chain plans one Sort and one Window. Sum and
+    * count are one `withColumns` over one frame.
+    *
+    * The bound is a calendar interval of microseconds only, which Spark adds
+    * as exact µs in any session time zone; `WindowSpec.rangeBetween` takes
+    * numeric bounds only, and a SQL `INTERVAL '<w>' SECOND` literal adds its
+    * whole days in session-local time (a 1-day frame across a DST change
+    * would span 23 or 25 hours).
     */
   def rolling(
       df: DataFrame,
@@ -83,13 +98,20 @@ object Windows {
       ts: String,
       windowSeconds: Long,
       valueCol: String): DataFrame = {
-    val w = Window
-      .partitionBy(key.map(col): _*)
-      .orderBy(unix_micros(col(ts).cast("timestamp")))
-      .rangeBetween(-windowSeconds * 1000000L, 0)
+    val order = df.select(col(ts)).schema.head.dataType match {
+      case TimestampType => col(ts)
+      case _ => col(ts).cast("timestamp")
+    }
+    val spec = WindowSpecDefinition(
+      key.map(k => graftshim.toExpression(col(k))),
+      Seq(SortOrder(graftshim.toExpression(order), Ascending)),
+      SpecifiedWindowFrame(RangeFrame,
+        Literal(new CalendarInterval(0, 0, -windowSeconds * 1000000L)), CurrentRow))
+    def over(f: Column): Column =
+      graftshim.toColumn(WindowExpression(graftshim.toExpression(f), spec))
     df.withColumns(scala.collection.immutable.ListMap(
-      s"${valueCol}_rolling_sum" -> sum(col(valueCol)).over(w),
-      s"${valueCol}_rolling_cnt" -> count(lit(1)).over(w)))
+      s"${valueCol}_rolling_sum" -> over(sum(col(valueCol))),
+      s"${valueCol}_rolling_cnt" -> over(count(lit(1)))))
   }
 
   /** Sessionization by inactivity gap: a new session starts when the gap to

@@ -275,46 +275,21 @@ object AsOfJoin {
     (saltedLeft, saltedRight, keys :+ SALT)
   }
 
-  /** Late-materialized windowed as-of join: the shuffle/sort runs on a
-    * NARROW projection (keys, ts, created, rowId); wide feature columns are
-    * fetched afterwards by [[fetch]] against the original feature frame.
-    *
-    * Shuffle and sort volume stay O(narrow bytes) regardless of payload
-    * width — at 100 TB with ~KB token arrays per row this is the difference
-    * between moving ~50 B/row twice and moving the full payload through
-    * every exchange and sort (measured locally: the wide-through-the-window
-    * plan is I/O-bound and stops scaling with cores; this one scales). The
-    * matched frame feeds only the fetch join, so its exchange, sort and
-    * window are evaluated once; the payload is not pruned to the matched
-    * ids first — a prune built from `matched` would evaluate the window a
-    * second time.
-    *
-    * `rowId` must uniquely identify feature rows (a stable table key, a
-    * sequence id, or a hash of the row's scan position as the
-    * [[graft.FeatureStore]] facade uses — never a nondeterministically
-    * generated id). Rows fully tied on (ts, created) resolve to the larger
-    * row id.
-    */
-  def windowedLate(
-      entity: DataFrame,
-      feature: DataFrame,
-      spec: AsOfSpec,
-      rowId: String,
-      saltBuckets: Int = 1,
-      hotKeys: Seq[Any] = Nil): DataFrame = {
-    val narrowFeature = feature.select(
-      (spec.keys ++ Seq(spec.rightTs) ++ spec.createdTs.toSeq :+ rowId)
-        .distinct.map(col): _*)
-    val matched = windowed(entity, narrowFeature, spec.copy(features = Seq(rowId)),
-      saltBuckets, hotKeys)
-    fetch(matched, feature.select((rowId +: spec.features).distinct.map(col): _*), rowId)
-  }
-
   /** The late fetch: left-join the payload onto `matched` by `rowId`.
+    * Late materialization is [[windowed]] over a NARROW feature projection
+    * (keys, ts, created, rowId; `features = Seq(rowId)`), then this join
+    * against the wide columns: shuffle and sort volume stay O(narrow bytes)
+    * whatever the payload width, and the matched frame feeds only this
+    * join, so its exchange, sort and window are evaluated once.
+    *
     * Shuffle-HASH, not sort-merge: the wide payload crosses exactly one
     * exchange (to its rowId partition) and is never sorted — a sort-merge
     * fetch would re-sort every payload byte just to equi-join on an 8-byte
-    * key.
+    * key. `rowId` must uniquely identify feature rows (a stable table key, a
+    * sequence id, or a hash of the row's scan position as the
+    * [[graft.FeatureStore]] facade uses — never a nondeterministically
+    * generated id); rows fully tied on (ts, created) resolve to the larger
+    * row id.
     */
   private[graft] def fetch(matched: DataFrame, payload: DataFrame, rowId: String): DataFrame =
     matched.join(payload.hint("shuffle_hash"), Seq(rowId), "left")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.TokenSeq
@@ -105,9 +106,8 @@ class TokenSeqPitSpec extends SparkSpec {
     assert(hot > 0.35 && hot < 0.55, s"hot share was $hot")
   }
 
-  test("ScalingBench.timedJob: fixed jobs per call and checksum on a small fixture") {
-    // fence on the headline job's driver round trips (the metadata count,
-    // hot-key detection, the as-of window and fetch, the checksum action)
+  /** timedJob's input directory on a small fixture of its shape. */
+  private lazy val timedJobDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_timedjob_jobs").toString
     TokenSeq.generate(spark, n = 3000, entities = 20, maxTokens = 16,
         hotSharePct = ScalingBench.HotSharePct, dupPct = 10)
@@ -115,7 +115,23 @@ class TokenSeqPitSpec extends SparkSpec {
     TokenSeq.entityProbes(spark, entities = 20, probesPerEntity = 10,
         hotSharePct = ScalingBench.HotSharePct)
       .write.parquet(s"$dir/probes")
+    dir
+  }
+
+  test("ScalingBench.timedJob: fixed jobs per call and checksum on a small fixture") {
+    // fence on the headline job's driver round trips (the metadata count,
+    // hot-key detection, the as-of window and fetch, the checksum action)
+    val dir = timedJobDir // written before the count starts
     val ((nRows, probeRows, checksum, _), jobs) = jobsDuring(ScalingBench.timedJob(spark, dir))
-    assert((nRows, probeRows, checksum, jobs) == (3000L, 200L, 3836380163743072528L, 14))
+    assert((nRows, probeRows, checksum, jobs) == (3000L, 200L, 3836380163743072528L, 13))
+  }
+
+  test("ScalingBench.timedJob: four sorts in its executed plans, one for both FE windows") {
+    // slot compaction (partial + final sort aggregate), the FE windows and
+    // the as-of window; a sort per FE window made it five
+    val dir = timedJobDir
+    val (_, plans) = PlanShape.executedPlans(spark)(ScalingBench.timedJob(spark, dir))
+    val sorts = plans.flatMap(p => PlanShape.collect(p) { case s: SortExec => s })
+    assert(sorts.size == 4, sorts.map(_.simpleString(200)).mkString("\n"))
   }
 }

@@ -1,5 +1,8 @@
 package graft.exec
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.{PlanShape, SparkSpec}
 import graft.fixtures.TokenSeq
 
@@ -28,6 +31,23 @@ class SkewSpec extends SparkSpec {
       assert(hot == want, s"hotSharePct $hotSharePct: got $hot")
       assert(plans.size == 1, s"hotSharePct $hotSharePct: ${plans.size} queries ran")
       assert(spark.sharedState.cacheManager.isEmpty)
+    }
+  }
+
+  test("detection is two jobs with no hash-partitioned exchange, single and composite keys") {
+    val df = TokenSeq.generate(spark, n = 20000, entities = 50, hotSharePct = 30)
+    Seq(Seq("doc_id"), Seq("doc_id", "source")).foreach { keys =>
+      val ((hot, plans), jobs) = jobsDuring(PlanShape.executedPlans(spark) {
+        Skew.detectHotKeyTuples(df, keys, hotShare = 0.05, sampleFraction = 0.2)
+      })
+      // doc_0 holds 30% of the rows, spread over 4 sources
+      assert(hot.nonEmpty && hot.forall(_.head == "doc_0"), s"$keys: got $hot")
+      // a partial sketch per scan task, then one single-partition merge
+      val hashed = plans.flatMap(p => PlanShape.collect(p) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      })
+      assert(hashed.isEmpty, s"$keys: ${hashed.map(_.simpleString(200))}")
+      assert(jobs == 2, s"$keys: $jobs jobs")
     }
   }
 }

@@ -56,6 +56,18 @@ class AsOfJoinSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .toMap
 
+  /** Late materialization: `windowed` over the narrow (key, ts, created,
+    * rowId) projection, then `fetch` of `features` by the matched rowId.
+    */
+  private def runLate(ents: DataFrame, featDf: DataFrame, sp: AsOfSpec, rowId: String,
+      saltBuckets: Int, hotKeys: Seq[Any]): DataFrame = {
+    val narrow = featDf.select(
+      (sp.keys ++ Seq(sp.rightTs) ++ sp.createdTs.toSeq :+ rowId).map(col): _*)
+    val matched = AsOfJoin.windowed(ents, narrow, sp.copy(features = Seq(rowId)),
+      saltBuckets, hotKeys)
+    AsOfJoin.fetch(matched, featDf.select((rowId +: sp.features).map(col): _*), rowId)
+  }
+
   // deterministic pseudo-random scenario generator (no reliance on cluster RNG)
   private def scenario(seed: Long, nEnt: Int, nFeat: Int, nKeys: Int): (Seq[Ent], Seq[Feat]) = {
     val rnd = new scala.util.Random(seed)
@@ -158,22 +170,22 @@ class AsOfJoinSpec extends SparkSpec {
     assert(run(8, hot) == plain)
   }
 
-  test("windowedLate (late-materialized payload fetch) ≡ windowed, incl. salted + shuffle fetch") {
+  test("late materialization (narrow windowed + fetch) ≡ windowed, incl. salted") {
     val (ents, feats) = scenario(23L, nEnt = 80, nFeat = 120, nKeys = 6)
     val featDf = feats.zipWithIndex
       .map { case (f, i) => (i.toLong, f.key, f.fts, f.created, f.v) }
       .toDF("fid", "key", "fts", "created", "v")
     val expected = runWindowed(ents, feats, Some(3600L))
     def late(salt: Int) = collectResult(
-      AsOfJoin.windowedLate(ents.toDF(), featDf, spec(Some(3600L)), rowId = "fid",
+      runLate(ents.toDF(), featDf, spec(Some(3600L)), rowId = "fid",
         saltBuckets = salt, hotKeys = if (salt > 1) Seq("k0") else Nil))
     assert(late(1) == expected)
     assert(late(8) == expected)
   }
 
-  test("HOT key with ARRAY payload through windowedLate: salted ≡ unsalted, buckets occupied") {
+  test("HOT key with ARRAY payload through the late fetch: salted ≡ unsalted") {
     // round-3 gap: salting was gate-proven on the direct windowed path (q20)
-    // and windowedLate on scalar payloads, but no test drove a hot key's
+    // and the late fetch on scalar payloads, but no test drove a hot key's
     // WIDE (array) features through the late-materialized path
     val ents = ((0 until 60).map(i => (i.toLong, "hot", t(10 + i))) ++
       (60 until 70).map(i => (i.toLong, s"cold${i % 3}", t(10 + i))))
@@ -184,8 +196,7 @@ class AsOfJoinSpec extends SparkSpec {
     }.toDF("fid", "key", "fts", "created", "toks")
     val sp = AsOfSpec(Seq("key"), "ets", "fts", Some("created"), Some(3600L), Seq("toks"))
     def run(salt: Int, hot: Seq[Any]): Map[Long, Seq[Int]] =
-      AsOfJoin.windowedLate(ents, featDf, sp, rowId = "fid",
-        saltBuckets = salt, hotKeys = hot)
+      runLate(ents, featDf, sp, rowId = "fid", saltBuckets = salt, hotKeys = hot)
         .select(col("eid"), col("toks")).collect()
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) null else r.getSeq[Int](1))).toMap
