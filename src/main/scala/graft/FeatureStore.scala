@@ -57,8 +57,9 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     val bounds = Materialize.timestampBounds(entityNorm, tsCol)
 
     // Each distinct source path is read once; the views on it share the
-    // frame and its scan-position row id.
-    val reads: Map[String, DataFrame] = grouped.keys.map(_.source.path).toSeq.distinct
+    // frame and its scan-position row id. Reads go in view-name order, so
+    // a plan's expression ids do not depend on the paths' hash order.
+    val reads: Map[String, DataFrame] = grouped.keys.toSeq.sortBy(_.name).map(_.source.path).distinct
       .map(p => p -> spark.read.parquet(p).withColumn(RowId,
         xxhash64(col("_metadata.file_path"), col("_metadata.row_index")))).toMap
     val all = grouped.toSeq.sortBy(_._1.name).zipWithIndex.map { case ((view, feats), i) =>

@@ -17,11 +17,15 @@ import graft.table.SnapshotTable
   *                                        (spec = RegistryRow JSON lines —
   *                                        the registry file format itself)
   *   feature-views list <registry>        print applied views
-  *   materialize <registry> <view> <startIso> <endIso> <table> <checkpoint>
+  *   materialize <registry> <view> <startIso> <endIso>
   *                                        backfill latest-per-key snapshots
-  *                                        over daily intervals, resumable
-  *   materialize-incremental <registry> <view> <endIso> <table> <checkpoint>
-  *                                        resume from the checkpoint log's
+  *                                        over daily intervals into the
+  *                                        view's table (a sibling of the
+  *                                        registry, `table_<view>`); its
+  *                                        manifest is the checkpoint, so a
+  *                                        re-run skips completed intervals
+  *   materialize-incremental <registry> <view> <endIso>
+  *                                        resume from the end of the table's
   *                                        last completed interval
   *   retrieve <registry> <entityParquet> <ref,ref,...> <entityTsCol> <out>
   *                                        point-in-time historical features
@@ -34,7 +38,7 @@ import graft.table.SnapshotTable
   *   entities list <registry>             print distinct entities across views
   *   init <registry>                      create an empty registry
   *   teardown <registry>                  delete the registry and its
-  *                                        interval logs
+  *                                        views' tables
   *
   * Timestamps are ISO-8601 instants (e.g. 2024-01-10T00:00:00Z). The
   * SparkSession is created here only when none exists (spark-submit /
@@ -69,13 +73,14 @@ object Main {
           s"ttl=${v.ttlSeconds.map(t => s"${t}s").getOrElse("none")}")
       }
 
-    case "materialize" :: registryPath :: viewName :: start :: end :: table :: checkpoint :: Nil =>
-      materialize(spark, registryPath, viewName, ts(start), ts(end), table, checkpoint)
+    case "materialize" :: registryPath :: viewName :: start :: end :: Nil =>
+      materialize(spark, new Registry(spark, registryPath), viewName, ts(start), ts(end))
 
-    case "materialize-incremental" :: registryPath :: viewName :: end :: table :: checkpoint :: Nil =>
-      val view = loadView(spark, registryPath, viewName)
-      val start = Backfill.incrementalStart(checkpoint, ts(end), view.ttlSeconds)
-      materialize(spark, registryPath, viewName, start, ts(end), table, checkpoint)
+    case "materialize-incremental" :: registryPath :: viewName :: end :: Nil =>
+      val registry = new Registry(spark, registryPath)
+      val start = Backfill.incrementalStart(SnapshotTable(registry.tablePath(viewName)),
+        ts(end), loadView(registry, viewName).ttlSeconds)
+      materialize(spark, registry, viewName, start, ts(end))
 
     case "retrieve" :: registryPath :: entityPath :: refs :: tsCol :: out :: Nil =>
       val store = new Registry(spark, registryPath).featureStore()
@@ -116,16 +121,14 @@ object Main {
       println(s"Exported registry to $outPath")
 
     case "teardown" :: registryPath :: Nil =>
-      // the registry is a directory of JSON part files; interval logs are
-      // siblings named intervals_<view>.log — remove both, nothing else,
-      // through the path's own FileSystem (plain paths, file://, hdfs://)
-      val path = new org.apache.hadoop.fs.Path(registryPath)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val root = fs.makeQualified(path)
-      val logs = Option(root.getParent).filter(fs.exists).toSeq
-        .flatMap(fs.listStatus(_).toSeq.map(_.getPath))
-        .filter(p => p.getName.startsWith("intervals_") && p.getName.endsWith(".log"))
-      (logs :+ root).foreach(fs.delete(_, true))
+      // the registry is a directory of JSON part files; each applied view's
+      // table is its sibling — remove those, nothing else, through the
+      // path's own FileSystem (plain paths, file://, hdfs://)
+      val registry = new Registry(spark, registryPath)
+      val fs = new org.apache.hadoop.fs.Path(registryPath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      (registry.load().keys.map(registry.tablePath) ++ Seq(registryPath))
+        .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
       println(s"Removed registry at $registryPath")
 
     case other =>
@@ -135,25 +138,23 @@ object Main {
           s" (got: ${other.mkString(" ")})")
   }
 
-  private def loadView(spark: SparkSession, registryPath: String, name: String) =
-    new Registry(spark, registryPath).load().getOrElse(name,
+  private def loadView(registry: Registry, name: String) =
+    registry.load().getOrElse(name,
       throw new IllegalArgumentException(s"feature view '$name' not in registry"))
 
   private def materialize(
       spark: SparkSession,
-      registryPath: String,
+      registry: Registry,
       viewName: String,
       start: Timestamp,
-      end: Timestamp,
-      table: String,
-      checkpoint: String): Unit = {
-    val view = loadView(spark, registryPath, viewName)
+      end: Timestamp): Unit = {
+    val view = loadView(registry, viewName)
     val source = graft.model.FieldMapping(
       spark.read.parquet(view.source.path), view.source.fieldMapping)
     val metrics = Backfill.run(
       spark, source, view.joinKeys, view.source.eventTimestampColumn,
       view.source.createdTimestampColumn, start, end,
-      stepSeconds = 24L * 3600, SnapshotTable(table), checkpoint)
+      stepSeconds = 24L * 3600, SnapshotTable(registry.tablePath(viewName)))
     metrics.foreach(m => println(
       s"Materialized ${m.intervalId}: ${m.rows} rows, ${m.bytes} bytes, snapshot ${m.snapshotId}"))
     if (metrics.isEmpty) println("Nothing to materialize (all intervals checkpointed)")

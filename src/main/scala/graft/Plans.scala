@@ -51,12 +51,18 @@ object Plans {
     picks.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name — $note\n\n```\n")
-      // literal binary blobs (e.g. q63's Bloom bitmap) render as huge hex
-      // strings — truncate them, the plan SHAPE is the evidence
+      // the plan SHAPE is the evidence: truncate literal binary blobs (e.g.
+      // q63's Bloom bitmap), and mask what changes from run to run — JVM
+      // lambda identities, exchange plan ids (a JVM-wide counter that jobs
+      // run by earlier queries advance) and the random suffix of temp-dir
+      // sources — so a regeneration differs only where a plan did
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
         .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]+",
           "0x<binary literal truncated>")
+        .replaceAll("""\$\$Lambda\S*@[0-9a-f]+""", "\\$\\$Lambda<masked>")
+        .replaceAll("""(/graft_\w*?)\d{6,}""", "$1<masked>")
+        .replaceAll("""plan_id=\d+""", "plan_id=<masked>")
       sb.append(plan)
       sb.append("```\n")
     }

@@ -38,8 +38,8 @@ object SparkEntry {
 
   private def ts(s: String) = java.sql.Timestamp.from(Instant.parse(s))
 
-  /** Scratch directory for fixture-staging queries (q68 backfill table +
-    * checkpoint log, q70-q73 stream landing dirs and checkpoints, q74/q75
+  /** Scratch directory for fixture-staging queries (q68 backfill table,
+    * q70-q73 stream landing dirs and checkpoints, q74/q75
     * encoded payloads):
     * registers a JVM-exit recursive delete so repeated Verify/Bench/Plans
     * runs don't accumulate orphaned temp data under /tmp. Deletion is
@@ -2053,8 +2053,8 @@ object SparkEntry {
 
     /** North-rule resumability through the hard gate (not just BackfillSpec):
       * run a checkpointed backfill over the first half of the interval grid,
-      * then re-run over the FULL grid against the same checkpoint log — the
-      * second run must SKIP the completed intervals. A broken resume would
+      * then re-run over the FULL grid against the same table, whose manifest
+      * is the checkpoint — the second run must SKIP the completed intervals. A broken resume would
       * re-execute them and emit duplicate interval rows, failing the oracle's
       * fixed four-row grid. Output: per executed interval, its id, the
       * materialized row count (= distinct keys active in the interval — the
@@ -2069,12 +2069,10 @@ object SparkEntry {
     Gate("q68_backfill", (spark, dir) => {
       val root = scratchDir("graft_backfill").toString
       val table = SnapshotTable(s"$root/table")
-      val ckpt = s"$root/ckpt.jsonl"
       val ev = tbl(spark, dir, "events")
       def go(end: java.sql.Timestamp) =
         Backfill.run(spark, ev, Seq("user_id"), "ts", Some("event_id"),
-          ts("2024-01-01T00:00:00Z"), end, stepSeconds = 7L * 24 * 3600,
-          table = table, checkpointPath = ckpt)
+          ts("2024-01-01T00:00:00Z"), end, stepSeconds = 7L * 24 * 3600, table = table)
       val run1 = go(ts("2024-01-15T00:00:00Z"))
       val run2 = go(ts("2024-01-29T00:00:00Z"))
       import spark.implicits._

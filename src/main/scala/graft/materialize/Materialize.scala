@@ -92,8 +92,7 @@ object Materialize {
       case Some(snap) => table.read(batch.sparkSession, snap).unionByName(batch)
       case None => batch
     }
-    table.commit(latestPerKey(merged, keys, ts, createdTs, ties),
-      parentId = cur.map(_.snapshotId))
+    table.commit(latestPerKey(merged, keys, ts, createdTs, ties), parent = cur)
   }
 
   /** Key-bucket-scoped [[upsertLatest]] — the 100 TB shape. [[upsertLatest]]
@@ -162,7 +161,7 @@ object Materialize {
     val resolved = latestPerKey(merged, keys, ts, createdTs, ties)
       .withColumn("__bucket", bucketExpr)
     table.commitBucketed(resolved, "__bucket", modulus = nBuckets, carryForward = carry,
-      parentId = cur.map(_.snapshotId))
+      parent = cur)
   }
 
   /** Online point-lookup emulation with per-row field status — the batch

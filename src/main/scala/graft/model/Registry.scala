@@ -27,10 +27,10 @@ final case class RegistryRow(
   * 443-614): `apply` upserts view definitions, `load` returns the live map
   * consumed by [[graft.FeatureStore]]. Serialization is Spark's own JSON
   * reader/writer over [[RegistryRow]] (no extra deps, schema-checked by the
-  * encoder). Materialization intervals — the reference's resume log
-  * (registry.py:208-246) — live in [[graft.fe.Backfill.CheckpointLog]],
-  * which keeps the hot append path a local file op instead of a
-  * read-modify-write of this file.
+  * encoder). Materialization intervals — the reference keeps them in this
+  * file (registry.py:208-246) — live in the manifest of each view's
+  * snapshot table at [[tablePath]], where every backfill commit records the
+  * interval it completes; the registry reads them through.
   */
 final class Registry(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -111,31 +111,19 @@ final class Registry(spark: SparkSession, path: String) {
   /** Convenience: a FeatureStore over the currently applied views. */
   def featureStore(): graft.FeatureStore = new graft.FeatureStore(spark, load())
 
-  /** Conventional per-view checkpoint-log location: a sibling of the
-    * registry (reference keeps materialization intervals IN the registry,
-    * registry.py:208-246; here the hot append path stays a log file and
-    * the registry reads through). Taken with Hadoop `Path`, so a `file://`
-    * registry gets an absolute `file:` sibling; a scheme-less registry path
-    * gets a scheme-less one.
+  /** The snapshot table a view materializes into: a sibling of the
+    * registry, taken with Hadoop `Path` so it has the registry's scheme
+    * (`file://`, `hdfs://`, plain paths). Its manifest is the view's
+    * materialization checkpoint.
     */
-  def intervalLogPath(view: String): String =
-    new Path(new Path(path).getParent, s"intervals_$view.log").toString
+  def tablePath(view: String): String =
+    new Path(new Path(path).getParent, s"table_$view").toString
 
-  /** Completed materialization intervals for a view, sorted ascending —
-    * the registry's answer to "what's materialized?". Reads the view's
-    * conventional checkpoint log (or an explicit one).
+  /** Completed materialization intervals for a view, coalesced and sorted
+    * ascending — the registry's answer to "what's materialized?", read
+    * from the current manifest of the view's table.
     */
-  def materializedIntervals(
-      view: String,
-      checkpointPath: Option[String] = None): Seq[(java.time.Instant, java.time.Instant)] = {
-    val log = new graft.fe.Backfill.CheckpointLog(
-      checkpointPath.getOrElse(intervalLogPath(view)))
-    log.completed.toSeq
-      .flatMap(_.split('_') match {
-        case Array(lo, hi) =>
-          scala.util.Try((java.time.Instant.parse(lo), java.time.Instant.parse(hi))).toOption
-        case _ => None
-      })
-      .sortBy(_._1)
-  }
+  def materializedIntervals(view: String): Seq[(java.time.Instant, java.time.Instant)] =
+    graft.table.SnapshotTable(tablePath(view)).currentSnapshot.toSeq.flatMap(_.intervals)
+      .map(r => (java.time.Instant.ofEpochMilli(r.lo), java.time.Instant.ofEpochMilli(r.hi)))
 }

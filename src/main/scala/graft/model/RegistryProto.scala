@@ -177,7 +177,7 @@ object RegistryProto {
   }
 
   /** Export a [[Registry]]'s applied views (and each view's completed
-    * materialization intervals from its checkpoint log) to `outPath` in the
+    * materialization intervals from its table's manifest) to `outPath` in the
     * reference's registry wire format.
     */
   def exportTo(

@@ -3,6 +3,7 @@ package graft.table
 import java.io.FileNotFoundException
 import java.util.{ConcurrentModificationException, UUID}
 
+import com.fasterxml.jackson.annotation.JsonIgnoreProperties
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
@@ -14,7 +15,7 @@ import graft.Json
   *
   * No Iceberg runtime jar ships in this sandbox (offline coursier), so the
   * snapshot semantics the north rule needs — snapshot isolation, time-travel
-  * to a snapshot id, resumable per-partition checkpoints, and per-partition
+  * to a snapshot id, resumable per-interval checkpoints, and per-partition
   * lineage/row-count/byte metrics — are provided by a minimal manifest layer
   * on the Hadoop `FileSystem` of `root` (`/local/path`, `file://`, `hdfs://`):
   *
@@ -27,7 +28,11 @@ import graft.Json
   *    file and throws `ConcurrentModificationException`;
   *  - current snapshot = the highest published manifest id; there is no
   *    pointer file to tear, and a crash anywhere before the rename leaves
-  *    only unreferenced files.
+  *    only unreferenced files;
+  *  - checkpoint: every manifest carries the table's completed backfill
+  *    intervals ([[Snapshot.intervals]]), cumulative from its parent, so the
+  *    publish that lands an interval's rows is also its checkpoint record,
+  *    and [[expireSnapshots]] keeps it with the current snapshot.
   *
   * Readers select files through a manifest, never by directory listing, so
   * concurrent/failed writers can't corrupt a read (same contract as Iceberg's
@@ -42,7 +47,8 @@ import graft.Json
   *
   * Reference counterpart: the registry's materialization_intervals
   * (Cimpress-MCP/feast registry.py:208-246) — the reference's only
-  * resume/checkpoint primitive — generalized to file-level lineage.
+  * resume/checkpoint primitive — kept here in the snapshot metadata, where
+  * Iceberg keeps snapshot summary properties.
   */
 /** Per-file lineage: row/byte stats plus, for bucket-partitioned commits
   * ([[SnapshotTable.commitBucketed]]), the key-hash bucket the file holds —
@@ -52,14 +58,39 @@ import graft.Json
   */
 final case class FileStat(path: String, rows: Long, bytes: Long,
     bucket: Option[Int] = None)
+
+/** A completed backfill interval `[lo, hi)` in epoch milliseconds. The
+  * bounds are plain `Long` fields: a tuple or `Option[Long]` erases to
+  * `Object`, and Jackson would fill it with an Integer (the `parentId`
+  * note on [[Snapshot]]).
+  */
+final case class Interval(lo: Long, hi: Long)
+
+object Interval {
+  /** `ranges` (ascending, disjoint, not adjacent) with `iv` added:
+    * overlapping and adjacent ranges merge into one, a gap stays a gap.
+    */
+  def add(ranges: Seq[Interval], iv: Interval): Seq[Interval] = {
+    val (before, rest) = ranges.span(_.hi < iv.lo)
+    val (touching, after) = rest.span(_.lo <= iv.hi)
+    val merged = Interval((iv +: touching).map(_.lo).min, (iv +: touching).map(_.hi).max)
+    (before :+ merged) ++ after
+  }
+}
+
+// a manifest written before the intervals moved into it carries a
+// `watermark` (the last interval's id); the intervals were in a separate
+// log, so such a table resumes with none recorded
+@JsonIgnoreProperties(Array("watermark"))
 final case class Snapshot(
     snapshotId: Long,
     // without the content type Jackson fills the erased Option with an
     // Integer, and the first `parentId.get + 1L` throws ClassCastException
     @JsonDeserialize(contentAs = classOf[java.lang.Long]) parentId: Option[Long],
     files: Seq[FileStat],
-    // checkpoint payload: arbitrary key (e.g. interval id) -> done marker
-    watermark: Option[String],
+    // completed backfill intervals, coalesced and ascending: the table's
+    // checkpoint, carried forward from the parent by every commit path
+    intervals: Seq[Interval] = Nil,
     // modulus the files' buckets were computed under (bucketed commits
     // only). A per-file bucket id is meaningless without it: bucket 3 under
     // modulus 64 and bucket 3 under modulus 16 hold different key sets, so
@@ -67,6 +98,8 @@ final case class Snapshot(
     bucketModulus: Option[Int] = None) {
   def totalRows: Long = files.map(_.rows).sum
   def totalBytes: Long = files.map(_.bytes).sum
+  /** Whether a completed interval holds all of `iv`. */
+  def covers(iv: Interval): Boolean = intervals.exists(r => r.lo <= iv.lo && iv.hi <= r.hi)
 }
 
 /** A commit attempt whose files are written and whose manifest is staged
@@ -95,20 +128,22 @@ final class SnapshotTable(val root: String) {
     * publish the manifest. `numFiles` sizes the write parallelism
     * (row-group/file sizing — reference loaders/ingest.py:51-79).
     *
-    * `parentId` is the snapshot the new one follows (`None`: an empty
+    * `parent` is the snapshot the new one follows (`None`: an empty
     * table), by default the current one. A read-modify-write caller passes
     * the snapshot it read: the commit then takes id `parent + 1`, so if
     * another writer published that id in between, the publish fails with
     * `ConcurrentModificationException` instead of landing the caller's
-    * stale result on top of the other writer's snapshot.
+    * stale result on top of the other writer's snapshot. The new manifest
+    * carries the parent's completed intervals, plus `completes` when this
+    * commit lands a backfill interval.
     */
-  def commit(df: DataFrame, numFiles: Int = 0, watermark: Option[String] = None,
-      parentId: Option[Long] = currentSnapshotId): Snapshot =
-    publish(stageCommit(df, numFiles, watermark, parentId))
+  def commit(df: DataFrame, numFiles: Int = 0, completes: Option[Interval] = None,
+      parent: Option[Snapshot] = currentSnapshot): Snapshot =
+    publish(stageCommit(df, numFiles, completes, parent))
 
   private[table] def stageCommit(df: DataFrame, numFiles: Int,
-      watermark: Option[String], parentId: Option[Long] = currentSnapshotId): Staged =
-    stage(parentId, watermark) { dir =>
+      completes: Option[Interval] = None, parent: Option[Snapshot] = currentSnapshot): Staged =
+    stage(parent, completes) { dir =>
       val toWrite = if (numFiles > 0) df.repartition(numFiles) else df
       toWrite.write.mode("errorifexists").parquet(dir.toString)
       listParquet(dir).map(fileStat(_, None))
@@ -123,20 +158,19 @@ final class SnapshotTable(val root: String) {
     * the PARENT snapshot are re-referenced verbatim — those files are never
     * copied or rewritten; the new manifest just points at them. Snapshots
     * may therefore SHARE data files ([[expireSnapshots]] is reference-aware).
-    * `parentId` is the snapshot `carryForward` came from, as in [[commit]].
+    * `parent` is the snapshot `carryForward` came from, as in [[commit]].
     */
   def commitBucketed(
       df: DataFrame,
       bucketCol: String,
       modulus: Int,
       carryForward: Seq[FileStat] = Nil,
-      watermark: Option[String] = None,
-      parentId: Option[Long] = currentSnapshotId): Snapshot = {
+      parent: Option[Snapshot] = currentSnapshot): Snapshot = {
     // the bucket comes from the file's own directory name, never from the
     // rest of the path: a table root may itself contain a `<bucketCol>=`
     // segment
     val bucketRe = (java.util.regex.Pattern.quote(bucketCol) + "=(\\d+)").r
-    publish(stage(parentId, watermark, Some(modulus), carryForward) { dir =>
+    publish(stage(parent, None, Some(modulus), carryForward) { dir =>
       // one shuffle on the bucket key -> every bucket lands whole in one
       // task -> exactly one file per non-empty bucket under bucketCol=<k>/
       df.repartition(org.apache.spark.sql.functions.col(bucketCol))
@@ -152,17 +186,20 @@ final class SnapshotTable(val root: String) {
 
   /** Write one commit attempt of snapshot `parent + 1`: `write` fills the
     * attempt's own `data/<id>/<attempt>/` dir, and the manifest (carried
-    * files first) is staged in an attempt-unique tmp file next to the
-    * published ones.
+    * files first, the parent's intervals plus `completes`) is staged in an
+    * attempt-unique tmp file next to the published ones.
     */
-  private def stage(parent: Option[Long], watermark: Option[String],
+  private def stage(parent: Option[Snapshot], completes: Option[Interval],
       bucketModulus: Option[Int] = None, carryForward: Seq[FileStat] = Nil)(
       write: Path => Seq[FileStat]): Staged = {
     fs.mkdirs(metaDir)
-    val id = parent.getOrElse(0L) + 1L
+    val parentId = parent.map(_.snapshotId)
+    val id = parentId.getOrElse(0L) + 1L
     val attempt = UUID.randomUUID().toString
     val dir = new Path(dataDir(id), attempt)
-    val snap = Snapshot(id, parent, carryForward ++ write(dir), watermark, bucketModulus)
+    val done = parent.fold(Seq.empty[Interval])(_.intervals)
+    val snap = Snapshot(id, parentId, carryForward ++ write(dir),
+      completes.fold(done)(Interval.add(done, _)), bucketModulus)
     val tmp = new Path(metaDir, s".snap-$id-$attempt.tmp")
     val out = fs.create(tmp, false)
     try out.write(Json.mapper.writeValueAsBytes(snap)) finally out.close()
@@ -238,8 +275,7 @@ final class SnapshotTable(val root: String) {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no snapshot to compact in $root"))
     val nFiles = math.max(1L, (cur.totalBytes + targetBytes - 1) / targetBytes).toInt
-    commit(read(spark, cur), numFiles = nFiles, watermark = cur.watermark,
-      parentId = Some(cur.snapshotId))
+    commit(read(spark, cur), numFiles = nFiles, parent = Some(cur))
   }
 
   /** Snapshot retention (the Iceberg `expire_snapshots` analogue): keep the

@@ -80,7 +80,7 @@ class FeatureStoreSpec extends SparkSpec {
     assert(online(3L) == (("NOT_FOUND", "NOT_FOUND")))
   }
 
-  test("array features route through windowedLate and match the scalar-path result") {
+  test("array features via AsOfJoin.windowed + fetch match the scalar-path result") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fs_wide").toString
     Seq(
       (1L, t(10), 1L, Seq(1, 2, 3), 0.5),

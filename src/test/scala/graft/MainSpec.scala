@@ -37,11 +37,12 @@ class MainSpec extends SparkSpec {
     Main.run(spark, List("feature-views", "list", s"$dir/registry"))
     assert(new Registry(spark, s"$dir/registry").load().contains("driver_stats"))
 
-    // materialize day 1, then incrementally through day 2
+    // materialize day 1, then incrementally through day 2, into the view's
+    // table beside the registry
     Main.run(spark, List("materialize", s"$dir/registry", "driver_stats",
-      "2021-04-12T00:00:00Z", "2021-04-13T00:00:00Z",
-      s"$dir/table", s"$dir/ckpt.log"))
-    val afterDay1 = SnapshotTable(s"$dir/table").read(spark)
+      "2021-04-12T00:00:00Z", "2021-04-13T00:00:00Z"))
+    val table = SnapshotTable(s"$dir/table_driver_stats")
+    val afterDay1 = table.read(spark)
       .collect().map(r => r.getLong(r.fieldIndex("driver_id")) ->
         r.getDouble(r.fieldIndex("rate"))).toMap
     // latest within day 1 (minutes 0..47 → hours 0..23 at minute h*60? rows
@@ -49,24 +50,23 @@ class MainSpec extends SparkSpec {
     assert(afterDay1 == Map(1L -> 22.0, 2L -> 23.0))
 
     Main.run(spark, List("materialize-incremental", s"$dir/registry", "driver_stats",
-      "2021-04-14T00:00:00Z", s"$dir/table", s"$dir/ckpt.log"))
-    val afterDay2 = SnapshotTable(s"$dir/table").read(spark)
+      "2021-04-14T00:00:00Z"))
+    val afterDay2 = table.read(spark)
     // snapshot table holds the latest commit = day-2 latest per key
     val latest = afterDay2.collect().map(r =>
       r.getLong(r.fieldIndex("driver_id")) -> r.getDouble(r.fieldIndex("rate"))).toMap
     assert(latest == Map(1L -> 46.0, 2L -> 47.0))
     // re-running incrementally is a checkpointed no-op (no new snapshot)
-    val snapBefore = SnapshotTable(s"$dir/table").currentSnapshotId
+    val snapBefore = table.currentSnapshotId
     Main.run(spark, List("materialize-incremental", s"$dir/registry", "driver_stats",
-      "2021-04-14T00:00:00Z", s"$dir/table", s"$dir/ckpt.log"))
-    assert(SnapshotTable(s"$dir/table").currentSnapshotId == snapBefore)
+      "2021-04-14T00:00:00Z"))
+    assert(table.currentSnapshotId == snapBefore)
 
-    // the registry answers "what's materialized?" from the checkpoint log
-    val intervals = new Registry(spark, s"$dir/registry")
-      .materializedIntervals("driver_stats", Some(s"$dir/ckpt.log"))
-    assert(intervals.size == 2)
-    assert(intervals.head._1.toString == "2021-04-12T00:00:00Z")
-    assert(intervals.last._2.toString == "2021-04-14T00:00:00Z")
+    // the registry answers "what's materialized?" from the table's manifest:
+    // the two daily intervals, coalesced into one range
+    val intervals = new Registry(spark, s"$dir/registry").materializedIntervals("driver_stats")
+    assert(intervals.map { case (lo, hi) => (lo.toString, hi.toString) } ==
+      Seq(("2021-04-12T00:00:00Z", "2021-04-14T00:00:00Z")))
 
     // retrieve: CLI output equals the direct API result
     Seq((100L, 1L, t(30 * 60L)), (101L, 2L, t(30 * 60L)))
@@ -112,7 +112,7 @@ class MainSpec extends SparkSpec {
     assert(row.getString(row.fieldIndex("tier")) == "silver")
   }
 
-  test("a file:// registry keeps its interval log beside it; teardown removes both") {
+  test("a file:// registry keeps its view tables beside it; teardown removes both") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli_uri").toString
     (0 until 48).map(h => (1L + h % 2, t(h * 60L), t(h * 60L), h.toDouble))
       .toDF("driver_id", "event_timestamp", "created", "rate")
@@ -124,22 +124,19 @@ class MainSpec extends SparkSpec {
       Seq(Feature("rate", ValueType.DOUBLE)),
       BatchSource(s"$dir/src.parquet", "event_timestamp", Some("created")))))
     val view = reg.load()("driver_stats")
-    val log = reg.intervalLogPath("driver_stats")
-    assert(log == s"file:$dir/intervals_driver_stats.log")
+    val table = reg.tablePath("driver_stats")
+    assert(table == s"file:$dir/table_driver_stats")
     graft.fe.Backfill.run(spark, spark.read.parquet(s"$dir/src.parquet"), view.joinKeys,
-      "event_timestamp", Some("created"), t(0), t(48 * 60L), 24L * 3600,
-      SnapshotTable(s"$dir/table"), log)
-    assert(new java.io.File(s"$dir/intervals_driver_stats.log").isFile)
-    assert(reg.materializedIntervals("driver_stats").map(_._1.toString) ==
-      Seq("2021-04-12T00:00:00Z", "2021-04-13T00:00:00Z"))
+      "event_timestamp", Some("created"), t(0), t(48 * 60L), 24L * 3600, SnapshotTable(table))
+    assert(new java.io.File(s"$dir/table_driver_stats/meta").isDirectory)
+    assert(reg.materializedIntervals("driver_stats").map { case (lo, hi) =>
+      (lo.toString, hi.toString) } == Seq(("2021-04-12T00:00:00Z", "2021-04-14T00:00:00Z")))
 
     Main.run(spark, List("teardown", uri))
     assert(!new java.io.File(s"$dir/registry").exists())
-    assert(!new java.io.File(s"$dir/intervals_driver_stats.log").exists())
+    assert(!new java.io.File(s"$dir/table_driver_stats").exists())
     assert(new java.io.File(s"$dir/src.parquet").exists()) // nothing else goes
     assert(new Registry(spark, uri).load().isEmpty)
-    // any scheme but file: is refused instead of written under the cwd
-    intercept[IllegalArgumentException](new graft.fe.Backfill.CheckpointLog("hdfs://nn/x/ckpt.log"))
   }
 
   test("get-online-features / entities list / init / teardown subcommands") {

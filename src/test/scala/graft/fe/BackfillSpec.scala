@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.fixtures.TokenSeq
-import graft.table.{FileStat, SnapshotTable}
+import graft.table.{FileStat, Interval, SnapshotTable}
 
 /** Resumable backfill + snapshot-table semantics: interval grid, crash/resume
   * (completed intervals are skipped on re-run), per-partition lineage metrics,
@@ -33,12 +33,11 @@ class BackfillSpec extends SparkSpec {
 
   test("backfill materializes latest-per-key per interval with lineage metrics") {
     val root = freshDir("snap")
-    val ckpt = s"${freshDir("ckpt")}/log.jsonl"
     val src = TokenSeq.generate(spark, n = 9000, entities = 30)
     val table = SnapshotTable(root)
 
     val metrics = Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table, ckpt)
+      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table)
 
     assert(metrics.size == 4)
     assert(metrics.forall(_.rows > 0))
@@ -57,14 +56,13 @@ class BackfillSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import graft.PlanShape
     val root = freshDir("snap_lineage")
-    val ckpt = s"${freshDir("ckpt_lineage")}/log.jsonl"
     val src = TokenSeq.generate(spark, n = 9000, entities = 30)
     val table = SnapshotTable(root)
 
     // the first interval ends where the source's first row is: it is empty
     val (metrics, plans) = PlanShape.executedPlans(spark) {
       Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-        Some("created_timestamp"), t(-3600), t(3 * 3600), 3600, table, ckpt)
+        Some("created_timestamp"), t(-3600), t(3 * 3600), 3600, table)
     }
     assert(metrics.size == 4)
     assert(metrics.head.rows == 0 && metrics.head.partitions.isEmpty)
@@ -92,52 +90,49 @@ class BackfillSpec extends SparkSpec {
 
   test("resume skips completed intervals and completes the remainder") {
     val root = freshDir("snap2")
-    val ckpt = s"${freshDir("ckpt2")}/log.jsonl"
     val src = TokenSeq.generate(spark, n = 9000, entities = 30)
     val table = SnapshotTable(root)
 
     // first run: only the first 2 intervals (simulated partial run / crash)
     val first = Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table, ckpt)
+      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table)
     assert(first.size == 2)
 
     // resume over the FULL range: the 2 done intervals are skipped
     val resumed = Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table, ckpt)
+      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table)
     assert(resumed.size == 2, "resume must only execute the missing intervals")
     assert(resumed.map(_.intervalId).toSet.intersect(first.map(_.intervalId).toSet).isEmpty)
 
     // idempotent: a third run over the same range executes nothing
     val third = Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table, ckpt)
+      Some("created_timestamp"), t(0), t(4 * 3600), 3600, table)
     assert(third.isEmpty)
     assert(table.history.size == 4)
   }
 
-  test("crash between commit and checkpoint append heals without a duplicate snapshot") {
+  test("crash after a publish: the resume commits only the unpublished intervals") {
     val root = freshDir("snap3")
-    val ckpt = s"${freshDir("ckpt3")}/log.jsonl"
     val src = TokenSeq.generate(spark, n = 3000, entities = 10)
     val table = SnapshotTable(root)
 
-    // simulate the torn state: interval 1 committed to the table (its id is
-    // the current watermark) but the process died BEFORE log.append
-    val id = s"${t(0).toInstant}_${t(3600).toInstant}"
+    // interval 1 is published (its commit records it in the manifest), then
+    // the process dies before the run returns
     table.commit(
       graft.materialize.Materialize.pullLatest(
         src, Seq("doc_id"), "event_timestamp", Some("created_timestamp"), t(0), t(3600)),
-      watermark = Some(id))
+      completes = Some(Interval(t(0).getTime, t(3600).getTime)))
     assert(table.history.size == 1)
 
-    // the resume must NOT re-commit interval 1 — it heals the log from the
-    // committed snapshot and only executes interval 2
+    // the resume must NOT re-commit interval 1: it executes only interval 2
     val resumed = Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table, ckpt)
-    assert(resumed.map(_.intervalId) == Seq(id, s"${t(3600).toInstant}_${t(2 * 3600).toInstant}"))
-    assert(table.history.size == 2, "torn interval was re-committed as a duplicate snapshot")
-    // and the healed log makes the next run fully idempotent
+      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table)
+    assert(resumed.map(_.intervalId) == Seq(s"${t(3600).toInstant}_${t(2 * 3600).toInstant}"))
+    assert(table.history.size == 2, "the published interval was re-committed as a duplicate snapshot")
+    // and the next run is fully idempotent
     assert(Backfill.run(spark, src, Seq("doc_id"), "event_timestamp",
-      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table, ckpt).isEmpty)
+      Some("created_timestamp"), t(0), t(2 * 3600), 3600, table).isEmpty)
+    assert(table.history.size == 2)
   }
 
   test("a crash BEFORE publish leaves an orphan data dir; the retry commit clears it") {
@@ -155,15 +150,6 @@ class BackfillSpec extends SparkSpec {
       Materialize.pullLatest(src, Seq("doc_id"), "event_timestamp",
         Some("created_timestamp"), t(0), t(3600)))
     assert(snap.snapshotId == 1L && table.read(spark).count() > 0)
-  }
-
-  test("manifest watermark with JSON-escaped characters round-trips exactly") {
-    val root = freshDir("snap5")
-    val table = SnapshotTable(root)
-    val wm = "a\"b\\c\nd\te" // quote, backslash, newline, tab
-    import spark.implicits._
-    table.commit(Seq((1L, 1.0)).toDF("k", "v"), watermark = Some(wm))
-    assert(table.currentSnapshot.get.watermark.contains(wm))
   }
 
   test("snapshot table: time travel reads exactly the as-of snapshot's rows") {
@@ -242,7 +228,9 @@ class BackfillSpec extends SparkSpec {
     val hist = table.history
     assert(hist.map(_.snapshotId) == Seq(2L, 1L))
     assert(hist.head.parentId.get + 1L == 2L)
-    assert(hist.last.parentId.isEmpty && hist.last.watermark.contains("a\"b"))
+    assert(hist.last.parentId.isEmpty)
+    // their intervals were kept outside the manifest: none are recorded
+    assert(hist.forall(_.intervals == Nil))
     assert(hist.head.files == Seq(FileStat(p2, 1L, b2, Some(3))))
     assert(hist.head.bucketModulus.contains(8) && hist.last.bucketModulus.isEmpty)
     assert(hist.last.files == Seq(FileStat(p1, 2L, b1)))

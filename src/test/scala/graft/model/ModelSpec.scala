@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.fe.Backfill
 import graft.materialize.Materialize
+import graft.table.{Interval, SnapshotTable}
 
 /** Model-layer parity with the reference: schema inference rules
   * (feast inference.py:12-118, feature_view.py:262-294), feature-ref
@@ -188,19 +189,18 @@ class ModelSpec extends SparkSpec {
   }
 
   test("incrementalStart resumes from the newest checkpointed interval end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
-    val path = s"$dir/checkpoints.jsonl"
+    val table = SnapshotTable(java.nio.file.Files.createTempDirectory("graft_incr").toString)
     val end = tsOf("2021-04-13T00:00:00Z")
     // no history: fall back to end - ttl; unbounded ttl → epoch
-    assert(Backfill.incrementalStart(path, end, Some(3600L)) ==
+    assert(Backfill.incrementalStart(table, end, Some(3600L)) ==
       new Timestamp(end.getTime - 3600_000L))
-    assert(Backfill.incrementalStart(path, end, None) == new Timestamp(0L))
-    val log = new Backfill.CheckpointLog(path)
-    log.append(graft.fe.IntervalMetrics(
-      "2021-04-12T00:00:00Z_2021-04-12T06:00:00Z", 1, 1, 1, Nil))
-    log.append(graft.fe.IntervalMetrics(
-      "2021-04-12T06:00:00Z_2021-04-12T12:00:00Z", 1, 1, 2, Nil))
-    assert(Backfill.incrementalStart(path, end, Some(3600L)) ==
+    assert(Backfill.incrementalStart(table, end, None) == new Timestamp(0L))
+    // two published intervals with a gap between them: resume after the later
+    def publish(lo: String, hi: String) = table.commit(spark.range(1).toDF("k"),
+      completes = Some(Interval(tsOf(lo).getTime, tsOf(hi).getTime)))
+    publish("2021-04-12T06:00:00Z", "2021-04-12T12:00:00Z")
+    publish("2021-04-12T00:00:00Z", "2021-04-12T03:00:00Z")
+    assert(Backfill.incrementalStart(table, end, Some(3600L)) ==
       Timestamp.from(java.time.Instant.parse("2021-04-12T12:00:00Z")))
   }
 }

@@ -3,7 +3,7 @@ package graft.model
 import java.time.Instant
 
 import graft.SparkSpec
-import graft.fe.{Backfill, IntervalMetrics}
+import graft.table.{Interval, SnapshotTable}
 
 /** [[RegistryProto]] vs an INDEPENDENT proto3 wire reader written in this
   * spec (recursive-descent over tag varints, the inverse derivation of the
@@ -16,62 +16,7 @@ import graft.fe.{Backfill, IntervalMetrics}
   * `parquet_format {}` oneof arm).
   */
 class RegistryProtoSpec extends SparkSpec {
-
-  // ---- independent minimal proto3 reader ---------------------------------
-  /** One decoded field occurrence: Left = varint (wire type 0),
-    * Right = length-delimited payload (wire type 2).
-    */
-  private type FieldVal = Either[Long, Array[Byte]]
-
-  /** Decode one message level: field number -> occurrences in wire order. */
-  private def decode(b: Array[Byte]): Map[Int, Vector[FieldVal]] = {
-    var i = 0
-    def varint(): Long = {
-      var shift = 0; var acc = 0L; var more = true
-      while (more) {
-        val byte = b(i) & 0xff; i += 1
-        acc |= (byte & 0x7fL) << shift; shift += 7
-        more = (byte & 0x80) != 0
-      }
-      acc
-    }
-    var fields = Map.empty[Int, Vector[FieldVal]]
-    while (i < b.length) {
-      val tag = varint()
-      val field = (tag >>> 3).toInt
-      val v: FieldVal = (tag & 7L) match {
-        case 0L => Left(varint())
-        case 2L =>
-          val len = varint().toInt
-          val payload = java.util.Arrays.copyOfRange(b, i, i + len)
-          i += len
-          Right(payload)
-        case wt => fail(s"unexpected wire type $wt for field $field")
-      }
-      fields = fields.updated(field, fields.getOrElse(field, Vector.empty) :+ v)
-    }
-    fields
-  }
-
-  private def msgs(m: Map[Int, Vector[FieldVal]], f: Int): Vector[Map[Int, Vector[FieldVal]]] =
-    m.getOrElse(f, Vector.empty).map(v => decode(v.toOption.get))
-  private def msg1(m: Map[Int, Vector[FieldVal]], f: Int): Map[Int, Vector[FieldVal]] = {
-    val all = msgs(m, f); assert(all.size == 1, s"field $f: expected 1 message"); all.head
-  }
-  private def str(m: Map[Int, Vector[FieldVal]], f: Int): String =
-    m.get(f) match {
-      case None => ""
-      case Some(Vector(Right(bytes))) => new String(bytes, "UTF-8")
-      case other => fail(s"field $f: expected one string, got $other")
-    }
-  private def strs(m: Map[Int, Vector[FieldVal]], f: Int): Vector[String] =
-    m.getOrElse(f, Vector.empty).map(v => new String(v.toOption.get, "UTF-8"))
-  private def int(m: Map[Int, Vector[FieldVal]], f: Int): Long =
-    m.get(f) match {
-      case None => 0L // proto3: absent scalar reads as default
-      case Some(Vector(Left(v))) => v
-      case other => fail(s"field $f: expected one varint, got $other")
-    }
+  import RegistryProtoSpec._
 
   // ---- fixture views ------------------------------------------------------
   private val driver = Entity("driver", ValueType.INT64, joinKey = Some("driver_id"))
@@ -199,14 +144,16 @@ class RegistryProtoSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_regproto").toString
     val reg = new Registry(spark, s"$dir/registry.json")
     reg.apply(Seq(viewA, viewB))
-    new Backfill.CheckpointLog(reg.intervalLogPath("b_trips")).append(
-      IntervalMetrics("2021-06-01T00:00:00Z_2021-06-02T00:00:00Z", 10L, 100L, 1L, Nil))
+    // a backfill commit into the view's table records its interval
+    SnapshotTable(reg.tablePath("b_trips")).commit(spark.range(1).toDF("k"), completes = Some(
+      Interval(Instant.parse("2021-06-01T00:00:00Z").toEpochMilli,
+        Instant.parse("2021-06-02T00:00:00Z").toEpochMilli)))
     val out = s"$dir/registry.db"
     RegistryProto.exportTo(reg, out, project = "proj")
     val decoded = decode(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)))
     val specs = msgs(decoded, 6).map(v => msg1(v, 1))
     assert(specs.map(str(_, 1)) == Vector("a_rate", "b_trips"))
-    // the checkpoint-log interval surfaces in the exported meta
+    // the manifest's interval surfaces in the exported meta
     val meta = msg1(msgs(decoded, 6)(1), 2)
     assert(int(msg1(msg1(meta, 3), 1), 1) ==
       Instant.parse("2021-06-01T00:00:00Z").getEpochSecond)
@@ -219,4 +166,65 @@ class RegistryProtoSpec extends SparkSpec {
     assert(msgs(cli, 6).map(v => str(msg1(v, 1), 1)) == Vector("a_rate", "b_trips"))
     assert(int(msg1(cli, 5), 1) > 0L)
   }
+}
+
+/** The spec's independent proto3 reader, shared with the other specs that
+  * decode an export.
+  */
+object RegistryProtoSpec {
+  // ---- independent minimal proto3 reader ---------------------------------
+  /** One decoded field occurrence: Left = varint (wire type 0),
+    * Right = length-delimited payload (wire type 2).
+    */
+  type FieldVal = Either[Long, Array[Byte]]
+
+  /** Decode one message level: field number -> occurrences in wire order. */
+  def decode(b: Array[Byte]): Map[Int, Vector[FieldVal]] = {
+    var i = 0
+    def varint(): Long = {
+      var shift = 0; var acc = 0L; var more = true
+      while (more) {
+        val byte = b(i) & 0xff; i += 1
+        acc |= (byte & 0x7fL) << shift; shift += 7
+        more = (byte & 0x80) != 0
+      }
+      acc
+    }
+    var fields = Map.empty[Int, Vector[FieldVal]]
+    while (i < b.length) {
+      val tag = varint()
+      val field = (tag >>> 3).toInt
+      val v: FieldVal = (tag & 7L) match {
+        case 0L => Left(varint())
+        case 2L =>
+          val len = varint().toInt
+          val payload = java.util.Arrays.copyOfRange(b, i, i + len)
+          i += len
+          Right(payload)
+        case wt => throw new AssertionError(s"unexpected wire type $wt for field $field")
+      }
+      fields = fields.updated(field, fields.getOrElse(field, Vector.empty) :+ v)
+    }
+    fields
+  }
+
+  def msgs(m: Map[Int, Vector[FieldVal]], f: Int): Vector[Map[Int, Vector[FieldVal]]] =
+    m.getOrElse(f, Vector.empty).map(v => decode(v.toOption.get))
+  def msg1(m: Map[Int, Vector[FieldVal]], f: Int): Map[Int, Vector[FieldVal]] = {
+    val all = msgs(m, f); assert(all.size == 1, s"field $f: expected 1 message"); all.head
+  }
+  def str(m: Map[Int, Vector[FieldVal]], f: Int): String =
+    m.get(f) match {
+      case None => ""
+      case Some(Vector(Right(bytes))) => new String(bytes, "UTF-8")
+      case other => throw new AssertionError(s"field $f: expected one string, got $other")
+    }
+  def strs(m: Map[Int, Vector[FieldVal]], f: Int): Vector[String] =
+    m.getOrElse(f, Vector.empty).map(v => new String(v.toOption.get, "UTF-8"))
+  def int(m: Map[Int, Vector[FieldVal]], f: Int): Long =
+    m.get(f) match {
+      case None => 0L // proto3: absent scalar reads as default
+      case Some(Vector(Left(v))) => v
+      case other => throw new AssertionError(s"field $f: expected one varint, got $other")
+    }
 }

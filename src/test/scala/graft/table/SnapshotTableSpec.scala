@@ -53,7 +53,7 @@ class SnapshotTableSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_publish_race").toString
     val base = SnapshotTable(root).commit(Seq((0L, "base")).toDF("k", "v"))
     val writerA = SnapshotTable(root)
-    val a = writerA.stageCommit(Seq((1L, "a")).toDF("k", "v"), numFiles = 0, watermark = None)
+    val a = writerA.stageCommit(Seq((1L, "a")).toDF("k", "v"), numFiles = 0)
     val b = SnapshotTable(root).commit(Seq((2L, "b"), (3L, "b")).toDF("k", "v"))
     assert(a.snapshot.snapshotId == b.snapshotId && a.snapshot.parentId == b.parentId)
 
