@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
 
+import graft.fe.Timestamps
 import graft.model._
 import graft.pit.{AsOfJoin, AsOfSpec}
 import graft.materialize.Materialize
@@ -51,7 +52,7 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
     // Reference utils.py:6-11 semantics: tz-naive ⇒ UTC, tz-aware ⇒ convert
     // to UTC. String timestamps (the only representation that can mix
     // zones per value) are parsed and re-rendered as UTC wall time here.
-    val entityNorm = entityDf.withColumn(tsCol, graft.fe.Timestamps.normalizeUtc(
+    val entityNorm = entityDf.withColumn(tsCol, Timestamps.normalizeUtc(
       col(tsCol), entityDf.schema(tsCol).dataType))
     val grouped = FeatureRefs.group(FeatureRefs.parse(featureRefs), views, fullFeatureNames)
     val bounds = Materialize.timestampBounds(entityNorm, tsCol)
@@ -184,7 +185,7 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
       case Some(dpc) =>
         val (lo, hi) = bounds
         val lower: Column = view.ttlSeconds match {
-          case Some(ttl) => to_date(lit(lo) - expr(s"INTERVAL $ttl SECONDS"))
+          case Some(ttl) => to_date(Timestamps.minusSeconds(lit(lo), ttl))
           case None => lit(null) // unbounded lookback: no lower partition cut
         }
         val lowerOk = view.ttlSeconds match {

@@ -1937,13 +1937,11 @@ object SparkEntry {
 
     /** S10 streaming materialization sink through the hard gate (the last
       * spec-only streaming wrapper): the bounded events stream runs through
-      * `latestToSink`'s foreachBatch — per-batch latest-per-key written to a
-      * per-batch-overwrite (replay-idempotent) parquet sink with a
-      * checkpoint — then the sink is
-      * re-read and re-resolved, the documented read-side contract (the
-      * compacting alternative is q77's upsertLatest). The fixture has no
-      * (user_id, ts) ties, so per-batch resolution is deterministic; the
-      * oracle is the q02 latest SQL.
+      * `latestToSink`'s foreachBatch, which upserts each micro-batch into a
+      * snapshot table with the one keyed upsert (q77's), under a
+      * checkpoint. The read is the raw table: one row per user, no
+      * read-time resolution. The fixture has no (user_id, ts) ties, so the
+      * resolution is deterministic; the oracle is the q02 latest SQL.
       */
     Gate("q82_stream_materialize", (spark, dir) => {
       val root = scratchDir("graft_stream_mat")
@@ -1953,9 +1951,7 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Materialize.latestPerKey(
-        graft.streaming.StreamFeatures.readSink(spark, s"$root/sink"),
-        Seq("user_id"), "ts", ties = Seq("event_id"))
+      graft.table.SnapshotTable(s"$root/sink").read(spark)
     }, oracle =
       """SELECT user_id, event_id, ts, event_type, value, props FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
@@ -2092,7 +2088,8 @@ object SparkEntry {
 
     /** S10 keyed-upsert semantics of the online sink through the hard gate
       * (r3 "What's missing" #4): two OVERLAPPING batches are upserted
-      * sequentially into a snapshot table — click/view/signup first, then
+      * sequentially into a snapshot table by the one keyed upsert at its
+      * default bucket count — click/view/signup first, then
       * purchase/error, so for many users the SECOND batch's rows are OLDER
       * than already-stored rows and must LOSE the compaction (max (ts,
       * event_id) across commits, not last-writer-wins). The read is the raw
@@ -2103,10 +2100,10 @@ object SparkEntry {
       val table = graft.table.SnapshotTable(s"${scratchDir("graft_upsert")}/online")
       val ev = tbl(spark, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-      Materialize.upsertLatest(table,
+      Materialize.upsertLatestBucketed(table,
         ev.where(col("event_type").isin("click", "view", "signup")),
         Seq("user_id"), "ts", ties = Seq("event_id"))
-      Materialize.upsertLatest(table,
+      Materialize.upsertLatestBucketed(table,
         ev.where(col("event_type").isin("purchase", "error")),
         Seq("user_id"), "ts", ties = Seq("event_id"))
       table.read(spark)
@@ -2116,11 +2113,11 @@ object SparkEntry {
         |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
         |  FROM events) WHERE rn = 1""".stripMargin),
 
-    /** S10 at the 100 TB posture: q77's overlapping-batch upsert through the
-      * BUCKET-SCOPED path — the second batch rewrites only the data files
-      * whose key buckets it touches; every other file is carried into the new
-      * manifest by reference (Materialize.upsertLatestBucketed). Same oracle
-      * semantics as q77: latest (ts, event_id) per user across both batches.
+    /** S10 at the 100 TB posture: q77's overlapping-batch upsert with 8
+      * buckets, so the second batch can miss buckets — it rewrites only the
+      * data files whose key buckets it touches; every other file is carried
+      * into the new manifest by reference. Same oracle semantics as q77:
+      * latest (ts, event_id) per user across both batches.
       */
     Gate("q85_upsert_bucketed", (spark, dir) => {
       val table = graft.table.SnapshotTable(s"${scratchDir("graft_upsert_b")}/online")

@@ -16,6 +16,12 @@ import graft.table.{Interval, Snapshot, SnapshotTable}
   * published intervals — the Spark re-expression of the reference's
   * materialization_intervals (feast registry.py:208-246,
   * feature_store.py:343-422 materialize_incremental).
+  *
+  * Each interval's rows are committed as the WHOLE new snapshot, not
+  * upserted: the current snapshot holds the latest row per key of the last
+  * interval run, while its manifest records every completed interval. A key
+  * with no row in the last interval is read by time travel to the snapshot
+  * of an interval that holds it ([[IntervalMetrics.snapshotId]]).
   */
 final case class IntervalMetrics(
     intervalId: String,

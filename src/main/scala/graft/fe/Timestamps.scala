@@ -1,8 +1,10 @@
 package graft.fe
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, graftshim}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.CalendarInterval
 
 /** Entity-timestamp normalization re-creating the reference's tz handling
   * (feast utils.py:6-11 `make_tzaware` — tz-naive ⇒ assume UTC; tz-aware ⇒
@@ -29,4 +31,18 @@ object Timestamps {
     case other => throw new IllegalArgumentException(
       s"cannot normalize timestamp column of type $other")
   }
+
+  /** `seconds` back in time as a calendar interval of microseconds only,
+    * the one form in which the engine subtracts a TTL or a lookback. Spark
+    * adds it as exact µs in any session time zone, like the reference's
+    * `timedelta` on UTC instants. A SQL `INTERVAL '<n>' SECOND` literal is
+    * a day-time interval whose whole days Spark adds in session-local
+    * time, so a 24 h TTL across a DST change would span 23 or 25 hours.
+    */
+  def secondsBack(seconds: Long): Literal =
+    Literal(new CalendarInterval(0, 0, -seconds * 1000000L))
+
+  /** `ts` minus exactly `seconds` ([[secondsBack]]). */
+  def minusSeconds(ts: Column, seconds: Long): Column =
+    ts + graftshim.toColumn(secondsBack(seconds))
 }

@@ -1,12 +1,11 @@
 package graft.fe
 
 import org.apache.spark.sql.{Column, DataFrame, graftshim}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, CurrentRow, Literal, RangeFrame,
-  SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, CurrentRow, RangeFrame, SortOrder,
+  SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
-import org.apache.spark.unsafe.types.CalendarInterval
 
 /** Windowed feature engineering over keyed event streams (north-rule axis B):
   * lag/lead features, tumbling & sliding time-window aggregates,
@@ -86,11 +85,8 @@ object Windows {
     * `lagLead` → `rolling` chain plans one Sort and one Window. Sum and
     * count are one `withColumns` over one frame.
     *
-    * The bound is a calendar interval of microseconds only, which Spark adds
-    * as exact µs in any session time zone; `WindowSpec.rangeBetween` takes
-    * numeric bounds only, and a SQL `INTERVAL '<w>' SECOND` literal adds its
-    * whole days in session-local time (a 1-day frame across a DST change
-    * would span 23 or 25 hours).
+    * The bound is [[Timestamps.secondsBack]], exact µs in any session time
+    * zone; `WindowSpec.rangeBetween` takes numeric bounds only.
     */
   def rolling(
       df: DataFrame,
@@ -106,7 +102,7 @@ object Windows {
       key.map(k => graftshim.toExpression(col(k))),
       Seq(SortOrder(graftshim.toExpression(order), Ascending)),
       SpecifiedWindowFrame(RangeFrame,
-        Literal(new CalendarInterval(0, 0, -windowSeconds * 1000000L)), CurrentRow))
+        Timestamps.secondsBack(windowSeconds), CurrentRow))
     def over(f: Column): Column =
       graftshim.toColumn(WindowExpression(graftshim.toExpression(f), spec))
     df.withColumns(scala.collection.immutable.ListMap(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fe.Timestamps
+
 /** Latest-value materialization: collapse a feature history to one row per
   * entity key — the reference's `pull_latest_from_table_or_query`
   * (file.py:246-265 pandas sort+drop_duplicates keep-last; bigquery.py:71-92
@@ -63,50 +65,27 @@ object Materialize {
     latestPerKey(bounded, keys, ts, createdTs)
   }
 
-  /** Compacting keyed upsert into a snapshot table — the batch-engine
-    * counterpart of the reference online store's per-(entity_key, feature)
-    * UPDATE-then-INSERT (sqlite.py:76-128). The incoming batch is merged
-    * with the table's current contents and re-resolved to latest-per-key,
-    * then committed as ONE new snapshot: reads see exactly one row per key
-    * with no read-time resolution, the manifest publish makes each upsert
-    * atomic (a reader never observes a half-merged table), and time travel
-    * to pre-upsert snapshots keeps working. An incoming row LOSES to a
-    * stored row with a newer (ts, tie) — order-independent convergence, not
-    * last-writer-wins. Rewrites the stored table once per batch, which is
-    * the right trade for an ONLINE table (one row per entity — small);
-    * event history stays on the append + [[pullLatest]] path. The merge
-    * reads one snapshot and commits on top of exactly that one: a snapshot
-    * another writer publishes in between makes this upsert fail
-    * (`ConcurrentModificationException`) instead of silently dropping the
-    * other writer's rows.
-    */
-  def upsertLatest(
-      table: graft.table.SnapshotTable,
-      batch: DataFrame,
-      keys: Seq[String],
-      ts: String,
-      createdTs: Option[String] = None,
-      ties: Seq[String] = Nil): graft.table.Snapshot = {
-    val cur = table.currentSnapshot
-    val merged = cur match {
-      case Some(snap) => table.read(batch.sparkSession, snap).unionByName(batch)
-      case None => batch
-    }
-    table.commit(latestPerKey(merged, keys, ts, createdTs, ties), parent = cur)
-  }
-
-  /** Key-bucket-scoped [[upsertLatest]] — the 100 TB shape. [[upsertLatest]]
-    * rewrites the whole latest table per batch (fine while the online table
-    * is small); here the table's data files are partitioned by a
-    * deterministic key-hash bucket recorded per file in the snapshot
-    * manifest ([[graft.table.FileStat.bucket]]), and a batch rewrites ONLY
-    * the files whose buckets it touches — a merge-on-write restricted to
-    * intersecting files, exactly Iceberg's partition-scoped overwrite. The
-    * untouched files are carried into the new manifest by reference, never
-    * read, copied, or rewritten, so per-batch cost is O(touched buckets'
-    * rows), not O(table). Semantics are byte-identical to [[upsertLatest]]
-    * (same latest-per-key resolution, same order-independent convergence —
-    * an incoming row loses to a stored newer row), spec-asserted.
+  /** The keyed upsert into a snapshot table — the batch-engine counterpart
+    * of the reference online store's per-(entity_key, feature)
+    * UPDATE-then-INSERT (sqlite.py:76-128), and the engine's one keyed
+    * upsert, for batch callers and [[graft.streaming.StreamFeatures.latestToSink]].
+    * The incoming batch is merged with the stored rows it can collide with
+    * and re-resolved to latest-per-key, then committed as ONE new snapshot:
+    * reads see exactly one row per key with no read-time resolution, the
+    * manifest publish makes each upsert atomic (a reader never observes a
+    * half-merged table), and time travel to pre-upsert snapshots keeps
+    * working. An incoming row LOSES to a stored row with a newer (ts, tie)
+    * — order-independent convergence, not last-writer-wins — so upserting
+    * the same rows again leaves the table's rows unchanged.
+    *
+    * The table's data files are partitioned by a deterministic key-hash
+    * bucket recorded per file in the snapshot manifest
+    * ([[graft.table.FileStat.bucket]]), and a batch rewrites ONLY the files
+    * whose buckets it touches — a merge-on-write restricted to intersecting
+    * files, exactly Iceberg's partition-scoped overwrite. The untouched
+    * files are carried into the new manifest by reference, never read,
+    * copied, or rewritten, so per-batch cost is O(touched buckets' rows),
+    * not O(table).
     *
     * Size `nBuckets` so one bucket ≈ one comfortable task (rows/nBuckets ×
     * row width ~ 100-500 MB); a hot-key batch still only pays for the
@@ -117,9 +96,11 @@ object Materialize {
     * batches is safe — the mismatch forces one full rebucketing rewrite
     * instead of silently carrying files whose bucket ids were computed
     * under a different modulus. The key COLUMNS must stay the same across
-    * batches (they define the hash; the table has one key schema). Like
-    * [[upsertLatest]], it commits on top of the snapshot it read and fails
-    * if another writer published first.
+    * batches (they define the hash; the table has one key schema). The
+    * merge reads one snapshot and commits on top of exactly that one: a
+    * snapshot another writer publishes in between makes this upsert fail
+    * (`ConcurrentModificationException`) instead of silently dropping the
+    * other writer's rows.
     */
   def upsertLatestBucketed(
       table: graft.table.SnapshotTable,
@@ -205,7 +186,7 @@ object Materialize {
       asOf: java.sql.Timestamp,
       ttlSeconds: Option[Long]): Column = {
     val expired: Column = ttlSeconds match {
-      case Some(t) => col(tsCol) < lit(asOf) - expr(s"INTERVAL $t SECONDS")
+      case Some(t) => col(tsCol) < Timestamps.minusSeconds(lit(asOf), t)
       case None => lit(false)
     }
     when(col(tsCol).isNull, lit("NOT_FOUND"))
@@ -286,7 +267,7 @@ object Materialize {
       ttlSeconds: Option[Long]): DataFrame = {
     val (lo, hi) = bounds
     val lower: Column = ttlSeconds match {
-      case Some(ttl) => col(featureTs) >= (lit(lo) - expr(s"INTERVAL $ttl SECONDS"))
+      case Some(ttl) => col(featureTs) >= Timestamps.minusSeconds(lit(lo), ttl)
       case None => lit(true)
     }
     feature.where(lower && col(featureTs) <= lit(hi))

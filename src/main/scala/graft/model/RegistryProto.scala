@@ -178,7 +178,8 @@ object RegistryProto {
 
   /** Export a [[Registry]]'s applied views (and each view's completed
     * materialization intervals from its table's manifest) to `outPath` in the
-    * reference's registry wire format.
+    * reference's registry wire format, written through that path's Hadoop
+    * `FileSystem`, so any scheme works.
     */
   def exportTo(
       registry: Registry,
@@ -188,8 +189,9 @@ object RegistryProto {
     val views = registry.load().values.toSeq
     val intervals = views.map(v => v.name -> registry.materializedIntervals(v.name)).toMap
     val bytes = registryBytes(views, project, lastUpdated, intervals)
-    val p = java.nio.file.Paths.get(outPath)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.write(p, bytes)
+    val p = new org.apache.hadoop.fs.Path(outPath)
+    val out = p.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(bytes) finally out.close()
   }
 }

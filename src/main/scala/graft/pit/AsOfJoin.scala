@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
+import graft.fe.Timestamps
+
 /** Point-in-time (as-of) join: for each entity row, attach the latest feature
   * row with `featureTs <= entityTs` and (if a TTL is set)
   * `featureTs >= entityTs - ttl`, ties on featureTs broken by the greatest
@@ -207,7 +209,7 @@ object AsOfJoin {
     val valid = picked.select(col("*") +: sides.indices.map { i =>
       val ttlOk: Column = sides(i)._2.ttlSeconds match {
         case Some(ttl) =>
-          col(s"${lastOf(i)}.__ts") >= (col(TS) - expr(s"INTERVAL $ttl SECONDS"))
+          col(s"${lastOf(i)}.__ts") >= Timestamps.minusSeconds(col(TS), ttl)
         case None => lit(true)
       }
       when(col(lastOf(i)).isNotNull && ttlOk, col(lastOf(i))).as(pick(i))
@@ -315,7 +317,7 @@ object AsOfJoin {
       .reduce(_ && _)
     val lowerBound: Column = spec.ttlSeconds match {
       case Some(ttl) =>
-        col(s"f.$TS") >= (col(s"e.`${spec.leftTs}`") - expr(s"INTERVAL $ttl SECONDS"))
+        col(s"f.$TS") >= Timestamps.minusSeconds(col(s"e.`${spec.leftTs}`"), ttl)
       case None => lit(true)
     }
     val cond = keyCond && (col(s"f.$TS") <= col(s"e.`${spec.leftTs}`")) && lowerBound

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -33,8 +33,11 @@ final case class AsOfEnriched(
   * only *declares* stream sources (feast data_source.py:783-914 — Kafka and
   * Kinesis are registry metadata with no execution in the v0.11 snapshot);
   * here the batch semantics get a real streaming execution:
-  * watermarked tumbling/sliding aggregates and gap sessionization via
-  * `session_window`. Input is any streaming DataFrame with
+  * watermarked tumbling/sliding aggregates, gap sessionization via
+  * `session_window`, keyed as-of enrichment and dedup, and a latest-value
+  * sink that writes through the batch engine's one keyed upsert, so a
+  * streamed table and a batch-materialized one are the same kind of
+  * snapshot table. Input is any streaming DataFrame with
   * (key, event_timestamp, value) — `readStream.format("kafka")` +
   * `from_avro`/`from_json` upstream of this module in production.
   */
@@ -201,17 +204,16 @@ object StreamFeatures {
       .withWatermark(ts, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Streaming latest-per-key materialization into an idempotent sink:
-    * foreachBatch + batch latest-per-key, the streaming analogue of the
-    * reference's online-store upsert (sqlite.py:76-128). Idempotence is
-    * REAL, not aspirational: each micro-batch overwrites its own
-    * `batch-<batchId>/` subdirectory, so a batch replayed after a
-    * crash-between-write-and-checkpoint rewrites the same files instead of
-    * appending duplicates (a bare `mode("append")` to one directory would
-    * double the replayed rows). Readers use [[readSink]] and resolve
-    * latest-per-key across batches (q82's read contract; the compacting
-    * alternative is `Materialize.upsertLatest`). Returned writer is not
-    * started — callers pick trigger/checkpoint.
+  /** Streaming latest-per-key materialization: each micro-batch is upserted
+    * into the [[graft.table.SnapshotTable]] at `sinkPath` by
+    * [[graft.materialize.Materialize.upsertLatestBucketed]], the engine's one
+    * keyed write and the streaming analogue of the reference's online-store
+    * upsert (sqlite.py:76-128). The sink holds one row per key, each batch
+    * lands as one atomic snapshot (time travel, lost-update detection, any
+    * Hadoop scheme), and readers take `SnapshotTable.read` as is. A batch
+    * replayed after a crash between its upsert and its checkpoint upserts
+    * the same rows again, which leaves the table's rows unchanged. Returned
+    * writer is not started — callers pick trigger/checkpoint.
     */
   def latestToSink(
       stream: DataFrame,
@@ -221,24 +223,9 @@ object StreamFeatures {
       checkpoint: String) =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.materialize.Materialize
-          .latestPerKey(batch, keys, ts)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch-$batchId")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.materialize.Materialize.upsertLatestBucketed(
+          graft.table.SnapshotTable(sinkPath), batch, keys, ts)
+        () // foreachBatch's overloads resolve only for a Unit result
       }
-
-  /** Every batch written by [[latestToSink]] into `sinkPath`, still one row
-    * per key per batch. The `batch-<batchId>/` dirs are listed through the
-    * sink's Hadoop `FileSystem` and read by name: plain nested dirs are not
-    * partition dirs, so a bare root read finds no files, and a `batch-*`
-    * glob makes Spark's sink-metadata probe log a `FileNotFoundException`
-    * warning on every read.
-    */
-  def readSink(spark: SparkSession, sinkPath: String): DataFrame = {
-    val sink = new org.apache.hadoop.fs.Path(sinkPath)
-    val batches = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(sink).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch-")).map(_.toString)
-    spark.read.parquet(batches: _*)
-  }
 }

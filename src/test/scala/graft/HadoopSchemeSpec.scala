@@ -77,10 +77,11 @@ class HadoopSchemeSpec extends SparkSpec {
       Map(1L -> -1.0, 2L -> 47.0))
 
     assert(reg.materializedIntervals("driver_stats") == Seq((t(0).toInstant, t(48).toInstant)))
-    // the export file itself is written locally
-    val out = s"$local/registry.db"
+    val out = s"$dir/registry.db"
     Main.run(spark, List("export-registry", registry, out))
-    val meta = msg1(msgs(decode(Files.readAllBytes(Paths.get(out))), 6).head, 2)
+    val in = fs.open(new Path(out))
+    val exported = try in.readAllBytes() finally in.close()
+    val meta = msg1(msgs(decode(exported), 6).head, 2)
     val interval = msg1(meta, 3)
     assert(int(msg1(interval, 1), 1) == t(0).toInstant.getEpochSecond)
     assert(int(msg1(interval, 2), 1) == t(48).toInstant.getEpochSecond)

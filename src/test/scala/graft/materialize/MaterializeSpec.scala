@@ -57,17 +57,14 @@ class MaterializeSpec extends SparkSpec {
   test("upsertLatest: stale rows lose, new keys insert, snapshots time-travel") {
     val root = java.nio.file.Files.createTempDirectory("graft_upsert_spec")
     val table = graft.table.SnapshotTable(s"$root/online")
-    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
-      df.collect().map(r => r.getLong(0) ->
-        ((r.getTimestamp(1).getTime, r.getDouble(2)))).toMap
     // batch 1: keys 1, 2
-    Materialize.upsertLatest(table,
+    Materialize.upsertLatestBucketed(table,
       Seq((1L, t(10), 1.0), (1L, t(20), 1.2), (2L, t(15), 2.0))
         .toDF("k", "ts", "v"), Seq("k"), "ts")
     assert(rows(table.read(spark)) ==
       Map(1L -> ((t(20).getTime, 1.2)), 2L -> ((t(15).getTime, 2.0))))
     // batch 2: key 1 STALE (must lose), key 2 newer (must win), key 3 new
-    Materialize.upsertLatest(table,
+    Materialize.upsertLatestBucketed(table,
       Seq((1L, t(5), 9.9), (2L, t(30), 2.3), (3L, t(1), 3.0))
         .toDF("k", "ts", "v"), Seq("k"), "ts")
     assert(rows(table.read(spark)) ==
@@ -81,22 +78,27 @@ class MaterializeSpec extends SparkSpec {
     assert(table.currentSnapshot.get.totalRows == 3)
   }
 
+  /** The upsert's contract, the one the q77/q85 oracles state: the latest
+    * row per key over every batch upserted so far.
+    */
+  private def latestOver(batches: org.apache.spark.sql.DataFrame*): Map[Long, (Long, Double)] =
+    rows(Materialize.latestPerKey(batches.reduce(_ unionByName _), Seq("k"), "ts"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+    df.collect().map(r => r.getAs[Long]("k") ->
+      ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
+
   test("upsertLatestBucketed: small batch rewrites only intersecting files, " +
-      "carried files stay byte-identical, semantics equal upsertLatest") {
+      "carried files stay byte-identical, semantics equal latest-per-key over the batches") {
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("graft_upsert_bucketed_spec")
     val table = graft.table.SnapshotTable(s"$root/bucketed")
-    val plain = graft.table.SnapshotTable(s"$root/plain")
-    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
-      df.collect().map(r => r.getAs[Long]("k") ->
-        ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
     def sha(p: String): Seq[Byte] =
       java.security.MessageDigest.getInstance("SHA-256")
         .digest(Files.readAllBytes(Paths.get(p))).toSeq
 
     val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8)
-    Materialize.upsertLatest(plain, b1, Seq("k"), "ts")
     val snap1 = table.currentSnapshot.get
     assert(snap1.files.nonEmpty && snap1.files.forall(_.bucket.isDefined))
     val before = snap1.files.map(f => f.path -> sha(f.path)).toMap
@@ -104,7 +106,6 @@ class MaterializeSpec extends SparkSpec {
     // batch 2 touches at most two buckets: key 1 STALE (must lose) + key 41 new
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
-    Materialize.upsertLatest(plain, b2, Seq("k"), "ts")
     val snap2 = table.currentSnapshot.get
     val paths1 = snap1.files.map(_.path).toSet
     val carried = snap2.files.map(_.path).toSet.intersect(paths1)
@@ -114,8 +115,8 @@ class MaterializeSpec extends SparkSpec {
     assert(rewritten.size < snap1.files.size,
       s"rewrote ${rewritten.size} of ${snap1.files.size} files — not scoped")
     carried.foreach(p => assert(sha(p) == before(p), s"carried file mutated: $p"))
-    // read-back equals the whole-table-rewrite path exactly (stale row lost)
-    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+    // read-back equals latest-per-key over both batches (stale row lost)
+    assert(rows(table.read(spark)) == latestOver(b1, b2))
     assert(rows(table.read(spark))(1L) == ((t(1).getTime, 1.0)))
     assert(rows(table.read(spark))(41L) == ((t(41).getTime, 41.0)))
     // time travel still works across shared-file snapshots
@@ -123,7 +124,7 @@ class MaterializeSpec extends SparkSpec {
     // reference-aware expiry: snapshot 1 dies, but files it SHARES with the
     // current snapshot survive — current stays fully readable
     assert(table.expireSnapshots(keepLast = 1) == Seq(1L))
-    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+    assert(rows(table.read(spark)) == latestOver(b1, b2))
     intercept[IllegalStateException](table.read(spark, asOf = Some(1L)))
 
     // modulus change: bucket ids from nBuckets=8 mean nothing under
@@ -134,20 +135,18 @@ class MaterializeSpec extends SparkSpec {
     val preRebucket = table.currentSnapshot.get.files.map(_.path).toSet
     val b3 = Seq((2L, t(100), 2.5)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b3, Seq("k"), "ts", nBuckets = 4)
-    Materialize.upsertLatest(plain, b3, Seq("k"), "ts")
     val snap3 = table.currentSnapshot.get
     assert(snap3.bucketModulus.contains(4))
     assert(snap3.files.map(_.path).toSet.intersect(preRebucket).isEmpty,
       "files bucketed under modulus 8 were carried past a modulus-4 upsert")
-    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+    assert(rows(table.read(spark)) == latestOver(b1, b2, b3))
     // and the next modulus-4 upsert is scoped again
     val b4 = Seq((3L, t(101), 3.5)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b4, Seq("k"), "ts", nBuckets = 4)
-    Materialize.upsertLatest(plain, b4, Seq("k"), "ts")
     val snap4 = table.currentSnapshot.get
     assert(snap4.files.map(_.path).toSet.intersect(
       snap3.files.map(_.path).toSet).nonEmpty, "modulus-4 upsert not scoped")
-    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+    assert(rows(table.read(spark)) == latestOver(b1, b2, b3, b4))
   }
 
   test("expireSnapshots reclaims a shared file even after its writer snapshot expired") {
@@ -182,15 +181,10 @@ class MaterializeSpec extends SparkSpec {
     // the table root itself contains a `__bucket=1/` segment
     val root = Files.createTempDirectory("graft_bucket_root_spec")
     val table = graft.table.SnapshotTable(s"$root/__bucket=1/t")
-    val plain = graft.table.SnapshotTable(s"$root/plain")
-    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
-      df.collect().map(r => r.getAs[Long]("k") ->
-        ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
     val bucketOf = pmod(xxhash64(col("k")), lit(8L)).cast("int")
 
     val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8)
-    Materialize.upsertLatest(plain, b1, Seq("k"), "ts")
     val files = table.currentSnapshot.get.files
     // every file records the bucket its keys hash to; the buckets are all
     // those the batch occupies, not the root's `1`
@@ -202,11 +196,10 @@ class MaterializeSpec extends SparkSpec {
     assert(files.flatMap(_.bucket).toSet ==
       b1.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet)
 
-    // a following scoped upsert still equals a whole rewrite
+    // a following scoped upsert still equals latest-per-key over both batches
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
-    Materialize.upsertLatest(plain, b2, Seq("k"), "ts")
-    assert(rows(table.read(spark)) == rows(plain.read(spark)))
+    assert(rows(table.read(spark)) == latestOver(b1, b2))
   }
 
   test("a file:// URI root: commit, bucketed upsert, time travel, reference-aware expiry") {
@@ -214,9 +207,6 @@ class MaterializeSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_uri_root_spec")
     val table = graft.table.SnapshotTable(s"${dir.toUri}t") // file:///tmp/.../t
     def exists(p: String) = Files.exists(Paths.get(java.net.URI.create(p)))
-    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
-      df.collect().map(r => r.getAs[Long]("k") ->
-        ((r.getAs[Timestamp]("ts").getTime, r.getAs[Double]("v")))).toMap
 
     val b0 = (1L to 32L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     val s1 = table.commit(b0)

@@ -12,9 +12,9 @@ import graft.materialize.Materialize
   *      representative ids and duplicate counts on any corpus (duplicate
   *      mixes, unicode, empty strings, nulls), with and without the
   *      collision cross-check;
-  *   2. bucket-scoped upsert ≡ whole-table-rewrite upsert — byte-equal
-  *      read-back after any sequence of batches, including mid-sequence
-  *      bucket-modulus changes (the manifest guard path).
+  *   2. bucket-scoped upsert ≡ latest-per-key over the union of its
+  *      batches — equal read-back after any sequence of batches, including
+  *      mid-sequence bucket-modulus changes (the manifest guard path).
   */
 class OpsPropertiesSpec extends SparkSpec {
   import spark.implicits._
@@ -49,9 +49,9 @@ class OpsPropertiesSpec extends SparkSpec {
     assert(result.passed, s"property falsified: ${result.status}")
   }
 
-  test("upsertLatestBucketed ≡ upsertLatest over random batch sequences incl. modulus changes") {
+  test("upsertLatestBucketed ≡ latestPerKey over random batch sequences incl. modulus changes") {
     // v is globally unique per generated row, so the (ts, v) tie order is
-    // total and the latest-per-key winner is deterministic on both paths
+    // total and the latest-per-key winner is deterministic
     val genBatches = for {
       nBatches <- Gen.choose(1, 4)
       batches <- Gen.listOfN(nBatches, for {
@@ -65,20 +65,20 @@ class OpsPropertiesSpec extends SparkSpec {
     val prop = Prop.forAll(genBatches) { batches =>
       val root = java.nio.file.Files.createTempDirectory("graft_upsert_prop")
       val bucketed = graft.table.SnapshotTable(s"$root/b")
-      val plain = graft.table.SnapshotTable(s"$root/p")
       var seq = 0
-      batches.foreach { case (rows, nBuckets) =>
+      val dfs = batches.map { case (rows, nBuckets) =>
         val df = rows.map { case (k, ts) =>
           seq += 1; (k, t(ts), seq.toDouble)
         }.toDF("k", "ts", "v")
         Materialize.upsertLatestBucketed(
           bucketed, df, Seq("k"), "ts", ties = Seq("v"), nBuckets = nBuckets)
-        Materialize.upsertLatest(plain, df, Seq("k"), "ts", ties = Seq("v"))
+        df
       }
-      def rows(tbl: graft.table.SnapshotTable): Map[Long, (Long, Double)] =
-        tbl.read(spark).collect().map(r =>
+      def rows(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+        df.collect().map(r =>
           r.getLong(0) -> ((r.getTimestamp(1).getTime, r.getDouble(2)))).toMap
-      rows(bucketed) == rows(plain)
+      rows(bucketed.read(spark)) ==
+        rows(Materialize.latestPerKey(dfs.reduce(_ unionByName _), Seq("k"), "ts", ties = Seq("v")))
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(6).withMaxSize(40), prop)

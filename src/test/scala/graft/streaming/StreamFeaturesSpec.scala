@@ -287,32 +287,33 @@ class StreamFeaturesSpec extends SparkSpec {
 
   test("streaming latest-per-key foreachBatch sink materializes the maximum ts per key") {
     import spark.implicits._
-    val mem = MemoryStream[Ev](spark)
-    mem.addData(events: _*)
+    def at(min: Long) = new Timestamp(tsOf("2024-01-01T00:00:00Z").getTime + min * 60000L)
+    val first = Seq(Ev(1L, at(10), 1.0), Ev(1L, at(20), 1.2), Ev(2L, at(15), 2.0), Ev(3L, at(5), 3.0))
+    // user 1's row is older than the stored one and must lose; user 2's is newer and must win
+    val second = Seq(Ev(1L, at(12), 9.9), Ev(2L, at(30), 2.3))
     val sink = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
-    val q = StreamFeatures.latestToSink(mem.toDF(), Seq("user_id"), "ts",
-      s"$sink/data", s"$ckpt/cp").start()
-    q.processAllAvailable()
-    q.stop()
-    def readSink() = StreamFeatures.readSink(spark, s"$sink/data")
-    val got = readSink()
-      .groupBy("user_id").agg(max("ts").as("ts"))
-      .orderBy("user_id").collect().toSeq
-    val want = events.groupBy(_.user_id).view.mapValues(_.map(_.ts.getTime).max).toMap
-    assert(got.map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toMap == want)
-    // replay idempotence: re-running a batch overwrites its own batch dir
-    // instead of appending duplicates — simulate by re-running batch 0's
-    // content through a fresh query against the SAME sink with a FRESH
-    // checkpoint (forcing the batch to execute again as batchId 0)
-    val rowsBefore = readSink().count()
-    val mem2 = MemoryStream[Ev](spark)
-    mem2.addData(events: _*)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_stream_ckpt2").toString
-    val q2 = StreamFeatures.latestToSink(mem2.toDF(), Seq("user_id"), "ts",
-      s"$sink/data", s"$ckpt2/cp").start()
-    q2.processAllAvailable()
-    q2.stop()
-    assert(readSink().count() == rowsBefore, "replayed batch appended instead of overwriting")
+    val table = graft.table.SnapshotTable(s"$sink/data")
+    def run(batches: Seq[Ev]*): Unit = {
+      val mem = MemoryStream[Ev](spark)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
+      val q = StreamFeatures.latestToSink(mem.toDF(), Seq("user_id"), "ts",
+        table.root, s"$ckpt/cp").start()
+      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("user_id", "ts", "value").as[(Long, Timestamp, Double)].collect().toSeq
+
+    run(first, second)
+    val got = rows(table.read(spark))
+    assert(table.history.size == 2, "one snapshot per micro-batch")
+    assert(got.sortBy(_._1) == rows(graft.materialize.Materialize.latestPerKey(
+      (first ++ second).toDF(), Seq("user_id"), "ts")).sortBy(_._1))
+    assert(got.map(_._1).sorted == Seq(1L, 2L, 3L), "one row per key")
+    // replay: the second batch again through a fresh checkpoint, as after a
+    // crash between the upsert and the checkpoint — same rows, one snapshot
+    run(second)
+    assert(rows(table.read(spark)).sortBy(_._1) == got.sortBy(_._1))
+    assert(table.history.size == 3)
   }
 }

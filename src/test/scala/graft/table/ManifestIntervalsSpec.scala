@@ -60,7 +60,7 @@ class ManifestIntervalsSpec extends SparkSpec {
     t.commit(kv((1L, 10L, "a")), completes = Some(Interval(0L, 10L)))
     t.commit(kv((1L, 10L, "a"), (2L, 10L, "a")), completes = Some(Interval(20L, 30L)))
     val done = Seq(Interval(0L, 10L), Interval(20L, 30L))
-    Materialize.upsertLatest(t, kv((2L, 20L, "b")), Seq("k"), "ts")
+    Materialize.upsertLatestBucketed(t, kv((2L, 20L, "b")), Seq("k"), "ts")
     assert(intervals(r) == done)
     Materialize.upsertLatestBucketed(t, kv((3L, 20L, "c")), Seq("k"), "ts", nBuckets = 4)
     assert(intervals(r) == done)

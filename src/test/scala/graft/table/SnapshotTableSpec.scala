@@ -120,19 +120,6 @@ class SnapshotTableSpec extends SparkSpec {
   private def rowsOf(t: SnapshotTable): Set[(Long, Long, String)] =
     t.read(spark).select("k", "ts", "v").as[(Long, Long, String)].collect().toSet
 
-  test("upsertLatest on a superseded snapshot fails; the other writer's snapshot survives") {
-    var root: SnapshotTable = null
-    assertNoLostUpdate("graft_lost_upsert") { t =>
-      root = t
-      Materialize.upsertLatest(t, kv((1L, 10L, "a"), (2L, 10L, "a")), Seq("k"), "ts")
-    } { other =>
-      Materialize.upsertLatest(other, kv((3L, 20L, "b")), Seq("k"), "ts")
-    } { t =>
-      Materialize.upsertLatest(t, kv((2L, 30L, "c")), Seq("k"), "ts")
-    }
-    assert(rowsOf(root) == Set((1L, 10L, "a"), (2L, 10L, "a"), (3L, 20L, "b")))
-  }
-
   test("upsertLatestBucketed on a superseded snapshot fails; carried files are not republished") {
     var root: SnapshotTable = null
     def upsert(t: SnapshotTable, batch: DataFrame) =
