@@ -185,7 +185,7 @@ final class FeatureStore(spark: SparkSession, views: Map[String, FeatureView]) {
       case Some(dpc) =>
         val (lo, hi) = bounds
         val lower: Column = view.ttlSeconds match {
-          case Some(ttl) => to_date(Timestamps.minusSeconds(lit(lo), ttl))
+          case Some(ttl) => to_date(Timestamps.literalMinusSeconds(lo, ttl))
           case None => lit(null) // unbounded lookback: no lower partition cut
         }
         val lowerOk = view.ttlSeconds match {

@@ -1940,8 +1940,9 @@ object SparkEntry {
       * `latestToSink`'s foreachBatch, which upserts each micro-batch into a
       * snapshot table with the one keyed upsert (q77's), under a
       * checkpoint. The read is the raw table: one row per user, no
-      * read-time resolution. The fixture has no (user_id, ts) ties, so the
-      * resolution is deterministic; the oracle is the q02 latest SQL.
+      * read-time resolution. A (user_id, ts) tie goes to the larger
+      * payload, event_id first (the stream's column order), which is the
+      * oracle's `ORDER BY ts DESC, event_id DESC`: the q02 latest SQL.
       */
     Gate("q82_stream_materialize", (spark, dir) => {
       val root = scratchDir("graft_stream_mat")
@@ -2089,7 +2090,8 @@ object SparkEntry {
     /** S10 keyed-upsert semantics of the online sink through the hard gate
       * (r3 "What's missing" #4): two OVERLAPPING batches are upserted
       * sequentially into a snapshot table by the one keyed upsert at its
-      * default bucket count — click/view/signup first, then
+      * derived bucket count (one bucket: the table is small) —
+      * click/view/signup first, then
       * purchase/error, so for many users the SECOND batch's rows are OLDER
       * than already-stored rows and must LOSE the compaction (max (ts,
       * event_id) across commits, not last-writer-wins). The read is the raw

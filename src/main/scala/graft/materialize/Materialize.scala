@@ -87,11 +87,15 @@ object Materialize {
     * copied, or rewritten, so per-batch cost is O(touched buckets' rows),
     * not O(table).
     *
-    * Size `nBuckets` so one bucket ≈ one comfortable task (rows/nBuckets ×
-    * row width ~ 100-500 MB); a hot-key batch still only pays for the
-    * buckets it lands in. A legacy/compacted snapshot with unbucketed files
-    * is upgraded in place: those files count as touched once, then every
-    * later upsert is bucket-scoped. The manifest records the bucket modulus
+    * `nBuckets` = 0 (the default) sizes the buckets from the stored
+    * snapshot's bytes in its manifest ([[derivedBuckets]]): a small table
+    * is one bucket, one file, rewritten whole by each upsert, and the count
+    * doubles as the table grows. An empty table has no size to go by, so a
+    * large first load names its count: one bucket ≈ one comfortable task
+    * (rows/nBuckets × row width ~ 100-500 MB). A hot-key batch still only
+    * pays for the buckets it lands in. A legacy/compacted snapshot with
+    * unbucketed files is upgraded in place: those files count as touched
+    * once, then every later upsert is bucket-scoped. The manifest records the bucket modulus
     * ([[graft.table.Snapshot.bucketModulus]]); changing `nBuckets` between
     * batches is safe — the mismatch forces one full rebucketing rewrite
     * instead of silently carrying files whose bucket ids were computed
@@ -109,15 +113,18 @@ object Materialize {
       ts: String,
       createdTs: Option[String] = None,
       ties: Seq[String] = Nil,
-      nBuckets: Int = 64): graft.table.Snapshot = {
-    require(nBuckets >= 1, "nBuckets >= 1")
+      nBuckets: Int = 0): graft.table.Snapshot = {
+    require(nBuckets >= 0, "nBuckets >= 0")
     val spark = batch.sparkSession
-    val bucketExpr =
-      pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
-    // planning-time scalar, bounded by nBuckets (the documented collect class)
-    val touched = batch.select(bucketExpr.as("__bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
     val cur = table.currentSnapshot
+    val modulus = if (nBuckets > 0) nBuckets else derivedBuckets(cur)
+    val bucketExpr =
+      pmod(xxhash64(keys.map(col): _*), lit(modulus.toLong)).cast("int")
+    // planning-time scalar, bounded by the modulus (the documented collect
+    // class); under one bucket every batch touches it, so no job is needed
+    val touched =
+      if (modulus == 1) Set(0)
+      else batch.select(bucketExpr.as("__bucket")).distinct().collect().map(_.getInt(0)).toSet
     val (reread, carry) = cur match {
       case Some(snap) =>
         // A file's bucket id only means something under the modulus it was
@@ -125,7 +132,7 @@ object Materialize {
         // upsert would duplicate keys. On mismatch every file counts as
         // touched once (full self-healing rewrite under the new modulus),
         // then later upserts are bucket-scoped again.
-        val sameModulus = snap.bucketModulus.contains(nBuckets)
+        val sameModulus = snap.bucketModulus.contains(modulus)
         val (hit, miss) = snap.files.partition(
           f => f.bucket.isEmpty || !sameModulus || f.bucket.exists(touched.contains))
         val hitRows =
@@ -141,8 +148,23 @@ object Materialize {
     }
     val resolved = latestPerKey(merged, keys, ts, createdTs, ties)
       .withColumn("__bucket", bucketExpr)
-    table.commitBucketed(resolved, "__bucket", modulus = nBuckets, carryForward = carry,
+    table.commitBucketed(resolved, "__bucket", modulus = modulus, carryForward = carry,
       parent = cur)
+  }
+
+  /** Stored bytes per bucket that [[derivedBuckets]] keeps to. */
+  private val BucketBytes = 128L << 20
+
+  /** The bucket count of an upsert that names none: the smallest power of
+    * two that keeps the stored snapshot's buckets within [[BucketBytes]],
+    * and never below its stored modulus. A latest-value table only gains
+    * keys, so the count only grows, and each growth rewrites the table
+    * once; a table that shrinks keeps its count instead of flapping.
+    */
+  private[materialize] def derivedBuckets(cur: Option[graft.table.Snapshot]): Int = {
+    val need = (cur.fold(0L)(_.totalBytes) + BucketBytes - 1) / BucketBytes
+    val pow2 = Iterator.iterate(1)(_ * 2).dropWhile(_ < need).next()
+    pow2.max(cur.flatMap(_.bucketModulus).getOrElse(1))
   }
 
   /** Online point-lookup emulation with per-row field status — the batch
@@ -186,7 +208,7 @@ object Materialize {
       asOf: java.sql.Timestamp,
       ttlSeconds: Option[Long]): Column = {
     val expired: Column = ttlSeconds match {
-      case Some(t) => col(tsCol) < Timestamps.minusSeconds(lit(asOf), t)
+      case Some(t) => col(tsCol) < Timestamps.literalMinusSeconds(asOf, t)
       case None => lit(false)
     }
     when(col(tsCol).isNull, lit("NOT_FOUND"))
@@ -267,7 +289,7 @@ object Materialize {
       ttlSeconds: Option[Long]): DataFrame = {
     val (lo, hi) = bounds
     val lower: Column = ttlSeconds match {
-      case Some(ttl) => col(featureTs) >= Timestamps.minusSeconds(lit(lo), ttl)
+      case Some(ttl) => col(featureTs) >= Timestamps.literalMinusSeconds(lo, ttl)
       case None => lit(true)
     }
     feature.where(lower && col(featureTs) <= lit(hi))

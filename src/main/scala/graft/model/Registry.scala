@@ -102,11 +102,15 @@ final class Registry(spark: SparkSession, path: String) {
     */
   def load(): Map[String, FeatureView] = {
     val p = new Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
+    if (!fileSystem(p).exists(p)) Map.empty
     else spark.read.schema(implicitly[org.apache.spark.sql.Encoder[RegistryRow]].schema)
       .json(path).as[RegistryRow]
       .collect().map(r => r.view -> fromRow(r)).toMap
   }
+
+  /** `p`'s Hadoop FileSystem under this registry's session configuration. */
+  private[model] def fileSystem(p: Path): org.apache.hadoop.fs.FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Convenience: a FeatureStore over the currently applied views. */
   def featureStore(): graft.FeatureStore = new graft.FeatureStore(spark, load())

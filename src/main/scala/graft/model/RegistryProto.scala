@@ -179,7 +179,7 @@ object RegistryProto {
   /** Export a [[Registry]]'s applied views (and each view's completed
     * materialization intervals from its table's manifest) to `outPath` in the
     * reference's registry wire format, written through that path's Hadoop
-    * `FileSystem`, so any scheme works.
+    * `FileSystem` under the registry's own session, so any scheme works.
     */
   def exportTo(
       registry: Registry,
@@ -190,8 +190,7 @@ object RegistryProto {
     val intervals = views.map(v => v.name -> registry.materializedIntervals(v.name)).toMap
     val bytes = registryBytes(views, project, lastUpdated, intervals)
     val p = new org.apache.hadoop.fs.Path(outPath)
-    val out = p.getFileSystem(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration).create(p, true)
+    val out = registry.fileSystem(p).create(p, true)
     try out.write(bytes) finally out.close()
   }
 }

@@ -209,7 +209,8 @@ object AsOfJoin {
     val valid = picked.select(col("*") +: sides.indices.map { i =>
       val ttlOk: Column = sides(i)._2.ttlSeconds match {
         case Some(ttl) =>
-          col(s"${lastOf(i)}.__ts") >= Timestamps.minusSeconds(col(TS), ttl)
+          col(s"${lastOf(i)}.__ts") >=
+            Timestamps.minusSeconds(col(TS), picked.schema(TS).dataType, ttl)
         case None => lit(true)
       }
       when(col(lastOf(i)).isNotNull && ttlOk, col(lastOf(i))).as(pick(i))
@@ -317,7 +318,8 @@ object AsOfJoin {
       .reduce(_ && _)
     val lowerBound: Column = spec.ttlSeconds match {
       case Some(ttl) =>
-        col(s"f.$TS") >= Timestamps.minusSeconds(col(s"e.`${spec.leftTs}`"), ttl)
+        col(s"f.$TS") >= Timestamps.minusSeconds(
+          col(s"e.`${spec.leftTs}`"), entity.schema(spec.leftTs).dataType, ttl)
       case None => lit(true)
     }
     val cond = keyCond && (col(s"f.$TS") <= col(s"e.`${spec.leftTs}`")) && lowerBound

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -210,10 +211,17 @@ object StreamFeatures {
     * keyed write and the streaming analogue of the reference's online-store
     * upsert (sqlite.py:76-128). The sink holds one row per key, each batch
     * lands as one atomic snapshot (time travel, lost-update detection, any
-    * Hadoop scheme), and readers take `SnapshotTable.read` as is. A batch
-    * replayed after a crash between its upsert and its checkpoint upserts
-    * the same rows again, which leaves the table's rows unchanged. Returned
-    * writer is not started — callers pick trigger/checkpoint.
+    * Hadoop scheme), and readers take `SnapshotTable.read` as is. Rows that
+    * tie on (key, `ts`) are ordered by their orderable payload columns in
+    * schema order, so the stored winner does not depend on which batch a
+    * row came in with; only rows equal in every orderable column (they
+    * differ at most in a map) are left to the aggregate's pick. A batch
+    * replayed after a crash between its upsert and its checkpoint
+    * therefore upserts the same rows again and leaves the table's rows
+    * unchanged. The micro-batch is cached for the upsert, which reads it
+    * twice (its touched buckets, then the merge) once the sink has more
+    * than one bucket. Returned writer is not started — callers pick
+    * trigger/checkpoint.
     */
   def latestToSink(
       stream: DataFrame,
@@ -224,8 +232,14 @@ object StreamFeatures {
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.materialize.Materialize.upsertLatestBucketed(
-          graft.table.SnapshotTable(sinkPath), batch, keys, ts)
+        val ties = batch.schema.fields.toSeq.collect {
+          case f if !keys.contains(f.name) && f.name != ts &&
+              RowOrdering.isOrderable(f.dataType) => f.name
+        }
+        batch.persist()
+        try graft.materialize.Materialize.upsertLatestBucketed(
+          graft.table.SnapshotTable(sinkPath), batch, keys, ts, ties = ties)
+        finally batch.unpersist()
         () // foreachBatch's overloads resolve only for a Unit result
       }
 }

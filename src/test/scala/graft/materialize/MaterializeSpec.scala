@@ -245,6 +245,31 @@ class MaterializeSpec extends SparkSpec {
     assert((first, second) == (5, 5))
   }
 
+  test("upsertLatestBucketed without a bucket count: a small table is one file, a stored modulus stays") {
+    val root = java.nio.file.Files.createTempDirectory("graft_upsert_derived")
+    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
+    val small = graft.table.SnapshotTable(s"$root/small")
+    val snaps = Seq(b1, b2).map(Materialize.upsertLatestBucketed(small, _, Seq("k"), "ts"))
+    assert(snaps.map(s => (s.files.size, s.bucketModulus)) == Seq((1, Some(1)), (1, Some(1))))
+    assert(rows(small.read(spark)) == rows(Materialize.latestPerKey(b1.union(b2), Seq("k"), "ts")))
+
+    // a table written at 8 buckets keeps them: no rebucketing rewrite
+    val kept = graft.table.SnapshotTable(s"$root/kept")
+    val s1 = Materialize.upsertLatestBucketed(kept, b1, Seq("k"), "ts", nBuckets = 8)
+    val s2 = Materialize.upsertLatestBucketed(kept, b2, Seq("k"), "ts")
+    assert(s2.bucketModulus == Some(8))
+    assert(s2.files.count(s1.files.contains) >= s1.files.size - 2, "untouched buckets carried")
+
+    // the count doubles past 128 MB of stored bytes per bucket
+    def stored(mb: Long, modulus: Option[Int]) = Some(graft.table.Snapshot(1L, None,
+      Seq(graft.table.FileStat("f", 1L, mb << 20)), bucketModulus = modulus))
+    assert(Materialize.derivedBuckets(None) == 1)
+    assert(Seq(128L, 129L, 300L, 1024L).map(mb => Materialize.derivedBuckets(stored(mb, None))) ==
+      Seq(1, 2, 4, 8))
+    assert(Materialize.derivedBuckets(stored(300L, Some(16))) == 16)
+  }
+
   test("lookupLatest jobs per call: none to plan, a fixed count to collect") {
     val history = (1L to 200L).map(k => (k % 50, t(k), k * 1.0)).toDF("k", "ts", "v")
     val keys = (0L until 60L).toDF("k")

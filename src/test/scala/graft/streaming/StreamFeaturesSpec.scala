@@ -289,8 +289,10 @@ class StreamFeaturesSpec extends SparkSpec {
     import spark.implicits._
     def at(min: Long) = new Timestamp(tsOf("2024-01-01T00:00:00Z").getTime + min * 60000L)
     val first = Seq(Ev(1L, at(10), 1.0), Ev(1L, at(20), 1.2), Ev(2L, at(15), 2.0), Ev(3L, at(5), 3.0))
-    // user 1's row is older than the stored one and must lose; user 2's is newer and must win
-    val second = Seq(Ev(1L, at(12), 9.9), Ev(2L, at(30), 2.3))
+    // user 1's row is older than the stored one and must lose; user 2's is
+    // newer and must win; user 3's ties the stored (user_id, ts) and loses
+    // on its smaller payload, whichever batch it came in with
+    val second = Seq(Ev(1L, at(12), 9.9), Ev(2L, at(30), 2.3), Ev(3L, at(5), 2.5))
     val sink = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
     val table = graft.table.SnapshotTable(s"$sink/data")
     def run(batches: Seq[Ev]*): Unit = {
@@ -308,7 +310,8 @@ class StreamFeaturesSpec extends SparkSpec {
     val got = rows(table.read(spark))
     assert(table.history.size == 2, "one snapshot per micro-batch")
     assert(got.sortBy(_._1) == rows(graft.materialize.Materialize.latestPerKey(
-      (first ++ second).toDF(), Seq("user_id"), "ts")).sortBy(_._1))
+      (first ++ second).toDF(), Seq("user_id"), "ts", ties = Seq("value"))).sortBy(_._1))
+    assert(got.find(_._1 == 3L).map(_._3) == Some(3.0))
     assert(got.map(_._1).sorted == Seq(1L, 2L, 3L), "one row per key")
     // replay: the second batch again through a fresh checkpoint, as after a
     // crash between the upsert and the checkpoint — same rows, one snapshot
