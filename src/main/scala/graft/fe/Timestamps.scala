@@ -43,19 +43,15 @@ object Timestamps {
     Literal(new CalendarInterval(0, 0, -seconds * 1000000L))
 
   /** `ts`, of type `dt`, minus exactly `seconds` ([[secondsBack]]). A DATE
-    * is first cast to TIMESTAMP (midnight in the session time zone), as
-    * Spark's own `date - INTERVAL '<n>' SECOND` does: Spark adds a calendar
-    * interval to a DATE as date arithmetic, which rejects a sub-day
-    * interval under ANSI and truncates the result to a day without it.
+    * is cast to TIMESTAMP first: DATE plus a calendar interval is date
+    * arithmetic, which rejects a sub-day interval under ANSI.
     */
   def minusSeconds(ts: Column, dt: DataType, seconds: Long): Column = {
     val start = if (dt == DateType) ts.cast(TimestampType) else ts
     start + graftshim.toColumn(secondsBack(seconds))
   }
 
-  /** [[minusSeconds]] of a driver-side instant (an `asOf`, a collected
-    * entity bound), typed as `lit(value)` types it.
-    */
+  /** [[minusSeconds]] of a driver-side instant, typed as `lit` types it. */
   def literalMinusSeconds(value: Any, seconds: Long): Column = {
     val l = Literal(value)
     minusSeconds(graftshim.toColumn(l), l.dataType, seconds)

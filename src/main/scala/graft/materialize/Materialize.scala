@@ -87,11 +87,9 @@ object Materialize {
     * copied, or rewritten, so per-batch cost is O(touched buckets' rows),
     * not O(table).
     *
-    * `nBuckets` = 0 (the default) sizes the buckets from the stored
-    * snapshot's bytes in its manifest ([[derivedBuckets]]): a small table
-    * is one bucket, one file, rewritten whole by each upsert, and the count
-    * doubles as the table grows. An empty table has no size to go by, so a
-    * large first load names its count: one bucket ≈ one comfortable task
+    * `nBuckets` = 0 (the default) derives the count from the stored
+    * snapshot's bytes ([[derivedBuckets]]); an empty table has none, so a
+    * large first load names its count, one bucket ≈ one comfortable task
     * (rows/nBuckets × row width ~ 100-500 MB). A hot-key batch still only
     * pays for the buckets it lands in. A legacy/compacted snapshot with
     * unbucketed files is upgraded in place: those files count as touched
@@ -121,7 +119,7 @@ object Materialize {
     val bucketExpr =
       pmod(xxhash64(keys.map(col): _*), lit(modulus.toLong)).cast("int")
     // planning-time scalar, bounded by the modulus (the documented collect
-    // class); under one bucket every batch touches it, so no job is needed
+    // class); one bucket needs no job
     val touched =
       if (modulus == 1) Set(0)
       else batch.select(bucketExpr.as("__bucket")).distinct().collect().map(_.getInt(0)).toSet
@@ -152,17 +150,12 @@ object Materialize {
       parent = cur)
   }
 
-  /** Stored bytes per bucket that [[derivedBuckets]] keeps to. */
-  private val BucketBytes = 128L << 20
-
   /** The bucket count of an upsert that names none: the smallest power of
-    * two that keeps the stored snapshot's buckets within [[BucketBytes]],
-    * and never below its stored modulus. A latest-value table only gains
-    * keys, so the count only grows, and each growth rewrites the table
-    * once; a table that shrinks keeps its count instead of flapping.
+    * two that keeps the stored buckets within 128 MB, never below the
+    * stored modulus, so the count only grows (one rewrite per doubling).
     */
   private[materialize] def derivedBuckets(cur: Option[graft.table.Snapshot]): Int = {
-    val need = (cur.fold(0L)(_.totalBytes) + BucketBytes - 1) / BucketBytes
+    val need = (cur.fold(0L)(_.totalBytes) + (128L << 20) - 1) / (128L << 20)
     val pow2 = Iterator.iterate(1)(_ * 2).dropWhile(_ < need).next()
     pow2.max(cur.flatMap(_.bucketModulus).getOrElse(1))
   }

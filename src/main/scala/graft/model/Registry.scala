@@ -32,7 +32,7 @@ final case class RegistryRow(
   * snapshot table at [[tablePath]], where every backfill commit records the
   * interval it completes; the registry reads them through.
   */
-final class Registry(spark: SparkSession, path: String) {
+final class Registry(val spark: SparkSession, path: String) {
   import spark.implicits._
 
   private def toRow(v: FeatureView): RegistryRow = RegistryRow(
@@ -102,15 +102,11 @@ final class Registry(spark: SparkSession, path: String) {
     */
   def load(): Map[String, FeatureView] = {
     val p = new Path(path)
-    if (!fileSystem(p).exists(p)) Map.empty
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Map.empty
     else spark.read.schema(implicitly[org.apache.spark.sql.Encoder[RegistryRow]].schema)
       .json(path).as[RegistryRow]
       .collect().map(r => r.view -> fromRow(r)).toMap
   }
-
-  /** `p`'s Hadoop FileSystem under this registry's session configuration. */
-  private[model] def fileSystem(p: Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Convenience: a FeatureStore over the currently applied views. */
   def featureStore(): graft.FeatureStore = new graft.FeatureStore(spark, load())

@@ -190,7 +190,7 @@ object RegistryProto {
     val intervals = views.map(v => v.name -> registry.materializedIntervals(v.name)).toMap
     val bytes = registryBytes(views, project, lastUpdated, intervals)
     val p = new org.apache.hadoop.fs.Path(outPath)
-    val out = registry.fileSystem(p).create(p, true)
+    val out = p.getFileSystem(registry.spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(bytes) finally out.close()
   }
 }

@@ -211,17 +211,12 @@ object StreamFeatures {
     * keyed write and the streaming analogue of the reference's online-store
     * upsert (sqlite.py:76-128). The sink holds one row per key, each batch
     * lands as one atomic snapshot (time travel, lost-update detection, any
-    * Hadoop scheme), and readers take `SnapshotTable.read` as is. Rows that
-    * tie on (key, `ts`) are ordered by their orderable payload columns in
-    * schema order, so the stored winner does not depend on which batch a
-    * row came in with; only rows equal in every orderable column (they
-    * differ at most in a map) are left to the aggregate's pick. A batch
-    * replayed after a crash between its upsert and its checkpoint
-    * therefore upserts the same rows again and leaves the table's rows
-    * unchanged. The micro-batch is cached for the upsert, which reads it
-    * twice (its touched buckets, then the merge) once the sink has more
-    * than one bucket. Returned writer is not started — callers pick
-    * trigger/checkpoint.
+    * Hadoop scheme), and readers take `SnapshotTable.read` as is. A (key,
+    * `ts`) tie goes to the larger orderable payload (columns in schema
+    * order), so a batch replayed after a crash between its upsert and its
+    * checkpoint leaves the table's rows unchanged. The micro-batch is
+    * cached: a sink of more than one bucket reads it twice. Returned
+    * writer is not started — callers pick trigger/checkpoint.
     */
   def latestToSink(
       stream: DataFrame,
