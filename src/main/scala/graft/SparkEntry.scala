@@ -483,15 +483,18 @@ object SparkEntry {
 
   // -- materialization / latest-per-key / online lookup ----------------------
 
+  /** Latest event per user, ties to the larger event_id: q02's oracle. */
+  private val latestEventSql =
+    """SELECT user_id, event_id, ts, event_type, value, props FROM (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
+      |  FROM events) WHERE rn = 1""".stripMargin
+
   private val materializeGates: Seq[Gate] = Seq(
     /** A1/A2: latest event per user (max_by struct aggregate). */
     Gate("q02_latest_per_key", (spark, dir) =>
       Materialize.latestPerKey(
         tbl(spark, dir, "events"), Seq("user_id"), "ts", ties = Seq("event_id")),
-      oracle =
-        """SELECT user_id, event_id, ts, event_type, value, props FROM (
-          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-          |  FROM events) WHERE rn = 1""".stripMargin),
+      oracle = latestEventSql),
 
     /** P3+A1: pull_latest in [2024-01-10, 2024-01-20). */
     Gate("q03_pull_latest", (spark, dir) =>
@@ -539,10 +542,7 @@ object SparkEntry {
     Gate("q29_latest_windowed", (spark, dir) =>
       Materialize.latestPerKeyWindowed(
         tbl(spark, dir, "events"), Seq("user_id"), "ts", ties = Seq("event_id")),
-      oracle =
-        """SELECT user_id, event_id, ts, event_type, value, props FROM (
-          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-          |  FROM events) WHERE rn = 1""".stripMargin),
+      oracle = latestEventSql),
 
     /** Online-response statuses (J7 + FieldStatus): point lookup of the
       * latest value per requested key as of a fixed time, with
@@ -1953,10 +1953,7 @@ object SparkEntry {
         .start()
       q.awaitTermination()
       graft.table.SnapshotTable(s"$root/sink").read(spark)
-    }, oracle =
-      """SELECT user_id, event_id, ts, event_type, value, props FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-        |  FROM events) WHERE rn = 1""".stripMargin))
+    }, oracle = latestEventSql))
 
   // -- storage / wire formats ------------------------------------------------
 
@@ -1972,6 +1969,26 @@ object SparkEntry {
       unix_micros(col("ts").cast("timestamp")).as("ts_us"),
       col("event_type").as("tag"),
       col("value"))
+
+  /** Two OVERLAPPING event batches (click/view/signup, then
+    * purchase/error) upserted in turn into a fresh snapshot table by the one
+    * keyed upsert at `nBuckets` (0: derived), then read raw. The oracle is
+    * latest (ts, event_id) per user over the union.
+    */
+  private def twoBatchUpsert(name: String, nBuckets: Int): Gate = Gate(name, (spark, dir) => {
+    val table = graft.table.SnapshotTable(s"${scratchDir(s"graft_$name")}/online")
+    val ev = tbl(spark, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
+    Seq(Seq("click", "view", "signup"), Seq("purchase", "error")).foreach { types =>
+      Materialize.upsertLatestBucketed(table, ev.where(col("event_type").isin(types: _*)),
+        Seq("user_id"), "ts", ties = Seq("event_id"), nBuckets = nBuckets)
+    }
+    table.read(spark)
+  }, oracle =
+    """SELECT user_id, ts, event_id, event_type, value FROM (
+      |  SELECT user_id, ts, event_id, event_type, value,
+      |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
+      |  FROM events) WHERE rn = 1""".stripMargin)
 
   private val storageGates: Seq[Gate] = Seq(
     /** S7+F4: date-partitioned parquet sink, then a partition-pruned read-back
@@ -2043,10 +2060,7 @@ object SparkEntry {
       t.commit(latest, numFiles = 4)
       t.commit(latest.where(col("user_id") % 2 === 0), numFiles = 2)
       t.read(spark, asOf = Some(1L))
-    }, oracle =
-      """SELECT user_id, event_id, ts, event_type, value, props FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-        |  FROM events) WHERE rn = 1""".stripMargin),
+    }, oracle = latestEventSql),
 
     /** North-rule resumability through the hard gate (not just BackfillSpec):
       * run a checkpointed backfill over the first half of the interval grid,
@@ -2088,55 +2102,20 @@ object SparkEntry {
         |GROUP BY g.lo, g.hi""".stripMargin),
 
     /** S10 keyed-upsert semantics of the online sink through the hard gate
-      * (r3 "What's missing" #4): two OVERLAPPING batches are upserted
-      * sequentially into a snapshot table by the one keyed upsert at its
-      * derived bucket count (one bucket: the table is small) —
-      * click/view/signup first, then
-      * purchase/error, so for many users the SECOND batch's rows are OLDER
-      * than already-stored rows and must LOSE the compaction (max (ts,
+      * (r3 "What's missing" #4), at the derived bucket count (one bucket:
+      * the table is small). For many users the second batch's rows are
+      * OLDER than already-stored rows and must LOSE the compaction (max (ts,
       * event_id) across commits, not last-writer-wins). The read is the raw
-      * compacted table: exactly one row per user, no read-time resolution —
-      * the oracle is latest-per-key over the union.
+      * compacted table: exactly one row per user, no read-time resolution.
       */
-    Gate("q77_online_upsert", (spark, dir) => {
-      val table = graft.table.SnapshotTable(s"${scratchDir("graft_upsert")}/online")
-      val ev = tbl(spark, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-      Materialize.upsertLatestBucketed(table,
-        ev.where(col("event_type").isin("click", "view", "signup")),
-        Seq("user_id"), "ts", ties = Seq("event_id"))
-      Materialize.upsertLatestBucketed(table,
-        ev.where(col("event_type").isin("purchase", "error")),
-        Seq("user_id"), "ts", ties = Seq("event_id"))
-      table.read(spark)
-    }, oracle =
-      """SELECT user_id, ts, event_id, event_type, value FROM (
-        |  SELECT user_id, ts, event_id, event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-        |  FROM events) WHERE rn = 1""".stripMargin),
+    twoBatchUpsert("q77_online_upsert", nBuckets = 0),
 
     /** S10 at the 100 TB posture: q77's overlapping-batch upsert with 8
       * buckets, so the second batch can miss buckets — it rewrites only the
       * data files whose key buckets it touches; every other file is carried
-      * into the new manifest by reference. Same oracle semantics as q77:
-      * latest (ts, event_id) per user across both batches.
+      * into the new manifest by reference.
       */
-    Gate("q85_upsert_bucketed", (spark, dir) => {
-      val table = graft.table.SnapshotTable(s"${scratchDir("graft_upsert_b")}/online")
-      val ev = tbl(spark, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-      Materialize.upsertLatestBucketed(table,
-        ev.where(col("event_type").isin("click", "view", "signup")),
-        Seq("user_id"), "ts", ties = Seq("event_id"), nBuckets = 8)
-      Materialize.upsertLatestBucketed(table,
-        ev.where(col("event_type").isin("purchase", "error")),
-        Seq("user_id"), "ts", ties = Seq("event_id"), nBuckets = 8)
-      table.read(spark)
-    }, oracle =
-      """SELECT user_id, ts, event_id, event_type, value FROM (
-        |  SELECT user_id, ts, event_id, event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
-        |  FROM events) WHERE rn = 1""".stripMargin),
+    twoBatchUpsert("q85_upsert_bucketed", nBuckets = 8),
 
     /** §2.9 binary Avro decode through the hard gate (spec-only in r3): the
       * events table is ENCODED into real Avro wire payloads (GenericDatumWriter
