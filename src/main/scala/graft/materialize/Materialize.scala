@@ -65,44 +65,37 @@ object Materialize {
     latestPerKey(bounded, keys, ts, createdTs)
   }
 
-  /** The keyed upsert into a snapshot table — the batch-engine counterpart
+  /** The engine's one keyed upsert into a snapshot table, for batch callers
+    * and [[graft.streaming.StreamFeatures.latestToSink]] — the counterpart
     * of the reference online store's per-(entity_key, feature)
-    * UPDATE-then-INSERT (sqlite.py:76-128), and the engine's one keyed
-    * upsert, for batch callers and [[graft.streaming.StreamFeatures.latestToSink]].
-    * The incoming batch is merged with the stored rows it can collide with
-    * and re-resolved to latest-per-key, then committed as ONE new snapshot:
-    * reads see exactly one row per key with no read-time resolution, the
-    * manifest publish makes each upsert atomic (a reader never observes a
-    * half-merged table), and time travel to pre-upsert snapshots keeps
-    * working. An incoming row LOSES to a stored row with a newer (ts, tie)
-    * — order-independent convergence, not last-writer-wins — so upserting
+    * UPDATE-then-INSERT (sqlite.py:76-128). The incoming batch is merged
+    * with the stored rows it can collide with, re-resolved to
+    * latest-per-key and committed as ONE new snapshot: reads see one row
+    * per key with no read-time resolution, the manifest publish makes each
+    * upsert atomic, and time travel to pre-upsert snapshots keeps working.
+    * An incoming row LOSES to a stored row with a newer (ts, tie) —
+    * order-independent convergence, not last-writer-wins — so upserting
     * the same rows again leaves the table's rows unchanged.
     *
-    * The table's data files are partitioned by a deterministic key-hash
-    * bucket recorded per file in the snapshot manifest
-    * ([[graft.table.FileStat.bucket]]), and a batch rewrites ONLY the files
-    * whose buckets it touches — a merge-on-write restricted to intersecting
-    * files, exactly Iceberg's partition-scoped overwrite. The untouched
-    * files are carried into the new manifest by reference, never read,
-    * copied, or rewritten, so per-batch cost is O(touched buckets' rows),
+    * Data files are partitioned by a deterministic key-hash bucket recorded
+    * per file in the manifest ([[graft.table.FileStat.bucket]]), and a
+    * batch rewrites ONLY the files whose buckets it touches (Iceberg's
+    * partition-scoped overwrite); untouched files are carried into the new
+    * manifest by reference, so per-batch cost is O(touched buckets' rows),
     * not O(table).
     *
     * `nBuckets` = 0 (the default) derives the count from the stored
     * snapshot's bytes ([[derivedBuckets]]); an empty table has none, so a
-    * large first load names its count, one bucket ≈ one comfortable task
-    * (rows/nBuckets × row width ~ 100-500 MB). A hot-key batch still only
-    * pays for the buckets it lands in. A legacy/compacted snapshot with
-    * unbucketed files is upgraded in place: those files count as touched
-    * once, then every later upsert is bucket-scoped. The manifest records the bucket modulus
-    * ([[graft.table.Snapshot.bucketModulus]]); changing `nBuckets` between
-    * batches is safe — the mismatch forces one full rebucketing rewrite
-    * instead of silently carrying files whose bucket ids were computed
-    * under a different modulus. The key COLUMNS must stay the same across
-    * batches (they define the hash; the table has one key schema). The
-    * merge reads one snapshot and commits on top of exactly that one: a
-    * snapshot another writer publishes in between makes this upsert fail
-    * (`ConcurrentModificationException`) instead of silently dropping the
-    * other writer's rows.
+    * large first load names its count (one bucket ≈ one comfortable task,
+    * ~100-500 MB). A legacy/compacted snapshot's unbucketed files count as
+    * touched once, then every later upsert is bucket-scoped. The manifest
+    * records the modulus ([[graft.table.Snapshot.bucketModulus]]), so
+    * changing `nBuckets` between batches forces one full rebucketing
+    * rewrite instead of carrying files bucketed under another modulus. The
+    * key COLUMNS must stay the same across batches (they define the hash).
+    * The merge commits on top of exactly the snapshot it read: a snapshot
+    * another writer publishes in between makes this upsert fail
+    * (`ConcurrentModificationException`) instead of dropping its rows.
     */
   def upsertLatestBucketed(
       table: graft.table.SnapshotTable,

@@ -214,9 +214,9 @@ object StreamFeatures {
     * Hadoop scheme), and readers take `SnapshotTable.read` as is. A (key,
     * `ts`) tie goes to the larger orderable payload (columns in schema
     * order), so a batch replayed after a crash between its upsert and its
-    * checkpoint leaves the table's rows unchanged. The micro-batch is
-    * cached: a sink of more than one bucket reads it twice. Returned
-    * writer is not started — callers pick trigger/checkpoint.
+    * checkpoint leaves the rows unchanged, unless tied rows differ only in
+    * unorderable (map) columns. The micro-batch is cached: a sink of more
+    * than one bucket reads it twice. Returned writer is not started.
     */
   def latestToSink(
       stream: DataFrame,
