@@ -2,6 +2,15 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-quality evidence dump: formatted physical plans for the flagship
   * operators, written to PLANS.md. The points to verify by eye:
@@ -13,12 +22,15 @@ import java.nio.file.{Files, Paths}
   *  - aggregates show partial/final HashAggregate pairs (map-side combine);
   *  - scans/joins sit inside WholeStageCodegen spans.
   */
-object Plans {
+object Plans extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = LocalSession(cores = 4) // PLANS.md records 4-partition plans
 
+    val upsertWrite = "the last upsert's merge-and-write: the latest-per-key aggregate, then " +
+      "ONE REPARTITION_BY_NUM exchange on (keys, bucket count) straight into the parquet " +
+      "write — no Sort, each write task one bucket"
     val picks = Seq(
       "q01_pit_asof" -> "windowed as-of join: one exchange + one sort, no row explosion",
       "q12_multi_view" -> "two views on user_id as two sides of ONE as-of window (one window per key set): one user_id exchange, one sort, one Window computing __graft_last and __graft_last_1, each side's TTL checked after it",
@@ -41,7 +53,10 @@ object Plans {
       "q64_shuffle_batches" -> "deterministic shuffle + length batching: mix61 order key and bucket in the scan projection, per-(bucket, shard) ROW_NUMBER windows (buckets × shards concurrent tasks), tiny offsets frame joined back — no global sort",
       "q69_dsir_weights" -> "DSIR importance weights: the corpus text is scanned ONCE into a cached (doc, bucket) count frame (InMemoryTableScan everywhere downstream); BOTH bag-of-words models come from a single 64-row aggregation over it (conditional sum), the log-ratio table broadcasts back, and the final per-doc sum is integer arithmetic",
       "q79_semdedup_pairs" -> "SemDeDup: cell assignment by the broadcast centroid kernel, checkpointed once (the Scan ExistingRDD on both sides), NARROW (id, cell) self-join on the cell key, vectors fetched only for surviving candidates, codegen'd cosine verify — embeddings never ride the candidate exchange",
-      "q83_pipeline" -> "full curation pipeline (gopher filter -> exact dedup -> hash split -> token budget) composed as ONE plan: the quality filter and the split are scan-stage/codegen projections (no shuffle of their own), the dedup is one content-hash aggregate, the budget one per-source window — TWO shuffles end to end (the dedup aggregate and the window; the dedup-ids fetch is a broadcast join)")
+      "q83_pipeline" -> "full curation pipeline (gopher filter -> exact dedup -> hash split -> token budget) composed as ONE plan: the quality filter and the split are scan-stage/codegen projections (no shuffle of their own), the dedup is one content-hash aggregate, the budget one per-source window — TWO shuffles end to end (the dedup aggregate and the window; the dedup-ids fetch is a broadcast join)",
+      "q77_online_upsert" -> s"$upsertWrite; the derived count here is one bucket (SinglePartition)",
+      "q85_upsert_bucketed" -> s"$upsertWrite; 8 buckets",
+      "q82_stream_materialize" -> s"$upsertWrite; the streaming sink's last micro-batch, one bucket")
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of flagship operators\n\n")
@@ -49,20 +64,24 @@ object Plans {
       "`runMain graft.Plans <sfDir> PLANS.md`). What to check per plan is " +
       "noted inline; see Plans.scala scaladoc for the global checklist.\n")
     picks.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val (df, ran) = queryExecutions(spark)(SparkEntry.queries(name)(spark, sfDir))
+      // a query that writes while it is built (the upserts) shows its last write
+      val qe =
+        if (upsertWrites(name)) ran.filter(qe => isWrite(qe.executedPlan)).last
+        else df.queryExecution
       sb.append(s"\n## $name — $note\n\n```\n")
       // the plan SHAPE is the evidence: truncate literal binary blobs (e.g.
       // q63's Bloom bitmap), and mask what changes from run to run — JVM
       // lambda identities, exchange plan ids (a JVM-wide counter that jobs
       // run by earlier queries advance) and the random suffix of temp-dir
       // sources — so a regeneration differs only where a plan did
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
         .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]+",
           "0x<binary literal truncated>")
         .replaceAll("""\$\$Lambda\S*@[0-9a-f]+""", "\\$\\$Lambda<masked>")
         .replaceAll("""(/graft_\w*?)\d{6,}""", "$1<masked>")
         .replaceAll("""plan_id=\d+""", "plan_id=<masked>")
+        .replaceAll("""\b\p{XDigit}{8}(-\p{XDigit}{4}){3}-\p{XDigit}{12}\b""", "<uuid>")
       sb.append(plan)
       sb.append("```\n")
     }
@@ -70,4 +89,30 @@ object Plans {
     println(s"[plans] wrote $out")
     spark.stop()
   }
+
+  private val upsertWrites = Set("q77_online_upsert", "q85_upsert_bucketed", "q82_stream_materialize")
+
+  /** `body`'s result and the executions of the queries it ran, writes
+    * included, in the order they finished.
+    */
+  def queryExecutions[T](spark: SparkSession)(body: => T): (T, Seq[QueryExecution]) = {
+    val done = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = done.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result =
+      try {
+        val r = body
+        // listener events arrive asynchronously, on the bus thread
+        org.apache.spark.Listeners.drain(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    (result, done.asScala.toSeq)
+  }
+
+  /** Whether an executed plan writes files. */
+  def isWrite(plan: SparkPlan): Boolean =
+    find(plan)(_.isInstanceOf[DataWritingCommandExec]).isDefined
 }

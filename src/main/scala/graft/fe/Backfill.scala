@@ -105,18 +105,11 @@ object Backfill {
       checkpointPath: String): Seq[IntervalMetrics] =
     run(spark, source, keys, ts, createdTs, start, end, stepSeconds, table)
 
-  private val PartFile = """part-(\d+)-.*""".r
-
   /** (partitionId, rowCount) per write task of `snap`: manifest row counts
     * summed per id parsed from Spark's `part-<partition>-...` file names,
     * dropping zero-row files (an empty write still leaves one).
     */
   private def partitionRows(snap: Snapshot): Seq[(Int, Long)] =
-    snap.files.map { f =>
-      f.path.substring(f.path.lastIndexOf('/') + 1) match {
-        case PartFile(pid) => (pid.toInt, f.rows)
-        case name => throw new IllegalStateException(
-          s"snapshot ${snap.snapshotId} holds $name, not a Spark part-NNNNN- file")
-      }
-    }.filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
+    snap.files.map(f => (SnapshotTable.partIndex(f.path), f.rows))
+      .filter(_._2 > 0).groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
 }

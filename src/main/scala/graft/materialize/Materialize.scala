@@ -1,6 +1,6 @@
 package graft.materialize
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -77,21 +77,24 @@ object Materialize {
     * order-independent convergence, not last-writer-wins — so upserting
     * the same rows again leaves the table's rows unchanged.
     *
-    * Data files are partitioned by a deterministic key-hash bucket recorded
-    * per file in the manifest ([[graft.table.FileStat.bucket]]), and a
-    * batch rewrites ONLY the files whose buckets it touches (Iceberg's
-    * partition-scoped overwrite); untouched files are carried into the new
-    * manifest by reference, so per-batch cost is O(touched buckets' rows),
-    * not O(table).
+    * A row's bucket is the index of the Spark hash partition its keys go
+    * to ([[graft.table.SnapshotTable.bucketOf]]), recorded per file in the
+    * manifest ([[graft.table.FileStat.bucket]]): the merge ends in one hash
+    * exchange into the bucket count and a plain write, so each write task
+    * writes exactly its own bucket, with no sort. A batch rewrites ONLY the
+    * files whose buckets it touches (Iceberg's partition-scoped overwrite);
+    * untouched files are carried into the new manifest by reference, so
+    * per-batch cost is O(touched buckets' rows), not O(table).
     *
     * `nBuckets` = 0 (the default) derives the count from the stored
     * snapshot's bytes ([[derivedBuckets]]); an empty table has none, so a
     * large first load names its count (one bucket ≈ one comfortable task,
     * ~100-500 MB). A legacy/compacted snapshot's unbucketed files count as
     * touched once, then every later upsert is bucket-scoped. The manifest
-    * records the modulus ([[graft.table.Snapshot.bucketModulus]]), so
-    * changing `nBuckets` between batches forces one full rebucketing
-    * rewrite instead of carrying files bucketed under another modulus. The
+    * records the bucket count ([[graft.table.Snapshot.hashBuckets]]), so
+    * changing `nBuckets` between batches (or a table written before the
+    * buckets were hash partitions) forces one full rebucketing rewrite
+    * instead of carrying files bucketed under another function. The
     * key COLUMNS must stay the same across batches (they define the hash).
     * The merge commits on top of exactly the snapshot it read: a snapshot
     * another writer publishes in between makes this upsert fail
@@ -109,21 +112,20 @@ object Materialize {
     val spark = batch.sparkSession
     val cur = table.currentSnapshot
     val modulus = if (nBuckets > 0) nBuckets else derivedBuckets(cur)
-    val bucketExpr =
-      pmod(xxhash64(keys.map(col): _*), lit(modulus.toLong)).cast("int")
-    // planning-time scalar, bounded by the modulus (the documented collect
-    // class); one bucket needs no job
+    // the distinct buckets of each batch partition, at most `modulus` ints
+    // each: one stage, no exchange; one bucket needs no job
     val touched =
       if (modulus == 1) Set(0)
-      else batch.select(bucketExpr.as("__bucket")).distinct().collect().map(_.getInt(0)).toSet
+      else batch.select(graft.table.SnapshotTable.bucketOf(keys, modulus)).as(Encoders.scalaInt)
+        .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect().toSet
     val (reread, carry) = cur match {
       case Some(snap) =>
-        // A file's bucket id only means something under the modulus it was
-        // written with: carrying a bucket=3-of-64 file past a nBuckets=16
-        // upsert would duplicate keys. On mismatch every file counts as
-        // touched once (full self-healing rewrite under the new modulus),
-        // then later upserts are bucket-scoped again.
-        val sameModulus = snap.bucketModulus.contains(modulus)
+        // A file's bucket id only means something under the bucket count it
+        // was written with: carrying a bucket-3-of-64 file past a
+        // nBuckets=16 upsert would duplicate keys. On mismatch every file
+        // counts as touched once (full self-healing rewrite under the new
+        // count), then later upserts are bucket-scoped again.
+        val sameModulus = snap.hashBuckets.contains(modulus)
         val (hit, miss) = snap.files.partition(
           f => f.bucket.isEmpty || !sameModulus || f.bucket.exists(touched.contains))
         val hitRows =
@@ -137,10 +139,8 @@ object Materialize {
       case Some(cur) => cur.unionByName(batch)
       case None => batch
     }
-    val resolved = latestPerKey(merged, keys, ts, createdTs, ties)
-      .withColumn("__bucket", bucketExpr)
-    table.commitBucketed(resolved, "__bucket", modulus = modulus, carryForward = carry,
-      parent = cur)
+    table.commitBucketed(latestPerKey(merged, keys, ts, createdTs, ties), keys, modulus,
+      carryForward = carry, parent = cur)
   }
 
   /** The bucket count of an upsert that names none: the smallest power of
@@ -150,7 +150,7 @@ object Materialize {
   private[materialize] def derivedBuckets(cur: Option[graft.table.Snapshot]): Int = {
     val need = (cur.fold(0L)(_.totalBytes) + (128L << 20) - 1) / (128L << 20)
     val pow2 = Iterator.iterate(1)(_ * 2).dropWhile(_ < need).next()
-    pow2.max(cur.flatMap(_.bucketModulus).getOrElse(1))
+    pow2.max(cur.flatMap(_.hashBuckets).getOrElse(1))
   }
 
   /** Online point-lookup emulation with per-row field status — the batch

@@ -7,7 +7,9 @@ import com.fasterxml.jackson.annotation.JsonIgnoreProperties
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{graftshim, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.Json
 
@@ -51,10 +53,12 @@ import graft.Json
   * Iceberg keeps snapshot summary properties.
   */
 /** Per-file lineage: row/byte stats plus, for bucket-partitioned commits
-  * ([[SnapshotTable.commitBucketed]]), the key-hash bucket the file holds —
-  * the manifest-level stat that lets an upsert rewrite ONLY intersecting
-  * files (the Iceberg per-file partition-stats analogue). `None` = written
-  * by a plain commit (no bucket contract).
+  * ([[SnapshotTable.commitBucketed]]), the bucket the file holds: the
+  * index of the Spark hash partition ([[SnapshotTable.bucketOf]]) that
+  * wrote it, which is also the `part-NNNNN` index in its name. This is the
+  * manifest-level stat that lets an upsert rewrite ONLY intersecting files
+  * (the Iceberg per-file partition-stats analogue). `None` = written by a
+  * plain commit (no bucket contract).
   */
 final case class FileStat(path: String, rows: Long, bytes: Long,
     bucket: Option[Int] = None)
@@ -80,8 +84,11 @@ object Interval {
 
 // a manifest written before the intervals moved into it carries a
 // `watermark` (the last interval's id); the intervals were in a separate
-// log, so such a table resumes with none recorded
-@JsonIgnoreProperties(Array("watermark"))
+// log, so such a table resumes with none recorded. One written before the
+// buckets became hash partitions carries a `bucketModulus` (xxhash64
+// buckets under `__bucket=` dirs); it reads as unbucketed, so the next
+// upsert rewrites all of its files once.
+@JsonIgnoreProperties(Array("watermark", "bucketModulus"))
 final case class Snapshot(
     snapshotId: Long,
     // without the content type Jackson fills the erased Option with an
@@ -91,11 +98,12 @@ final case class Snapshot(
     // completed backfill intervals, coalesced and ascending: the table's
     // checkpoint, carried forward from the parent by every commit path
     intervals: Seq[Interval] = Nil,
-    // modulus the files' buckets were computed under (bucketed commits
-    // only). A per-file bucket id is meaningless without it: bucket 3 under
-    // modulus 64 and bucket 3 under modulus 16 hold different key sets, so
-    // an upsert must not carry files across a modulus change.
-    bucketModulus: Option[Int] = None) {
+    // number of hash partitions the files' buckets are indices of
+    // ([[SnapshotTable.bucketOf]]; bucketed commits only). A per-file
+    // bucket id is meaningless without it: bucket 3 of 64 and bucket 3 of
+    // 16 hold different key sets, so an upsert must not carry files across
+    // a change of this count.
+    hashBuckets: Option[Int] = None) {
   def totalRows: Long = files.map(_.rows).sum
   def totalBytes: Long = files.map(_.bytes).sum
   /** Whether a completed interval holds all of `iv`. */
@@ -114,6 +122,34 @@ object SnapshotTable {
   private lazy val readOptions = HadoopReadOptions.builder(hadoopConf).build()
   // `.crc` sidecars and staged `.snap-*.tmp` files never match
   private val Manifest = """snap-(\d{9,})\.json""".r
+  private val PartFile = """part-(\d+)-.*""".r
+
+  /** The index of the write task that produced a Spark output file, read
+    * from its `part-<index>-<job>-c00N...` name; only the file name counts,
+    * never the directories above it.
+    */
+  private[graft] def partIndex(path: String): Int =
+    path.substring(path.lastIndexOf('/') + 1) match {
+      case PartFile(i) => i.toInt
+      case _ => throw new IllegalStateException(s"$path is not a Spark part-NNNNN- file")
+    }
+
+  // the literal makes the exchange's partitioning differ from any
+  // `HashPartitioning(keys, n)` below it, so it is never removed as
+  // redundant, and as a REPARTITION_BY_NUM exchange AQE never coalesces it
+  private def bucketCols(keys: Seq[String], modulus: Int): Seq[Column] =
+    keys.map(col) :+ lit(modulus)
+
+  /** The bucket of a row under `modulus` buckets: the index of the
+    * partition that `repartition(modulus, keys :+ lit(modulus))` sends it
+    * to, `HashPartitioning`'s own partition-id expression (Murmur3, seed
+    * 42, pmod). That is `pmod(hash(keys :+ modulus), modulus)` except for
+    * strings of a non-binary collation, which the exchange hashes by
+    * collation key and `hash` by bytes.
+    */
+  def bucketOf(keys: Seq[String], modulus: Int): Column = graftshim.toColumn(
+    HashPartitioning(bucketCols(keys, modulus).map(graftshim.toExpression), modulus)
+      .partitionIdExpression)
 }
 
 final class SnapshotTable(val root: String) {
@@ -151,38 +187,28 @@ final class SnapshotTable(val root: String) {
 
   /** Bucket-partitioned commit, the write half of
     * [[graft.materialize.Materialize.upsertLatestBucketed]]: `df`'s rows are
-    * written into per-bucket parquet files (`bucketCol` becomes the
-    * directory key and is NOT stored in the files — manifest metadata
-    * only, so plain and bucketed snapshots share one table schema), each
-    * [[FileStat]] records its bucket, and `carryForward` file stats from
-    * the PARENT snapshot are re-referenced verbatim — those files are never
-    * copied or rewritten; the new manifest just points at them. Snapshots
-    * may therefore SHARE data files ([[expireSnapshots]] is reference-aware).
-    * `parent` is the snapshot `carryForward` came from, as in [[commit]].
+    * hash-partitioned on `keys` into `modulus` partitions and written with
+    * no sort, so write task `b` holds exactly bucket `b`
+    * ([[SnapshotTable.bucketOf]]) and names its file `part-<b>-...`; each
+    * [[FileStat]] records that index as its bucket (zero-row files are left
+    * out). `carryForward` file stats from the PARENT snapshot are
+    * re-referenced verbatim — those files are never copied or rewritten;
+    * the new manifest just points at them. Snapshots may therefore SHARE
+    * data files ([[expireSnapshots]] is reference-aware). `parent` is the
+    * snapshot `carryForward` came from, as in [[commit]].
     */
   def commitBucketed(
       df: DataFrame,
-      bucketCol: String,
+      keys: Seq[String],
       modulus: Int,
       carryForward: Seq[FileStat] = Nil,
-      parent: Option[Snapshot] = currentSnapshot): Snapshot = {
-    // the bucket comes from the file's own directory name, never from the
-    // rest of the path: a table root may itself contain a `<bucketCol>=`
-    // segment
-    val bucketRe = (java.util.regex.Pattern.quote(bucketCol) + "=(\\d+)").r
+      parent: Option[Snapshot] = currentSnapshot): Snapshot =
     publish(stage(parent, None, Some(modulus), carryForward) { dir =>
-      // one shuffle on the bucket key -> every bucket lands whole in one
-      // task -> exactly one file per non-empty bucket under bucketCol=<k>/
-      df.repartition(org.apache.spark.sql.functions.col(bucketCol))
-        .write.mode("errorifexists").partitionBy(bucketCol).parquet(dir.toString)
-      listParquet(dir).map { s =>
-        val b = bucketRe.unapplySeq(s.getPath.getParent.getName).map(_.head.toInt)
-          .getOrElse(throw new IllegalStateException(
-            s"bucketed commit produced a file outside a $bucketCol= dir: ${s.getPath}"))
-        fileStat(s, Some(b))
-      }
+      df.repartition(modulus, SnapshotTable.bucketCols(keys, modulus): _*)
+        .write.mode("errorifexists").parquet(dir.toString)
+      listParquet(dir).map(s => fileStat(s, Some(SnapshotTable.partIndex(s.getPath.getName))))
+        .filter(_.rows > 0)
     })
-  }
 
   /** Write one commit attempt of snapshot `parent + 1`: `write` fills the
     * attempt's own `data/<id>/<attempt>/` dir, and the manifest (carried
@@ -190,7 +216,7 @@ final class SnapshotTable(val root: String) {
     * attempt-unique tmp file next to the published ones.
     */
   private def stage(parent: Option[Snapshot], completes: Option[Interval],
-      bucketModulus: Option[Int] = None, carryForward: Seq[FileStat] = Nil)(
+      hashBuckets: Option[Int] = None, carryForward: Seq[FileStat] = Nil)(
       write: Path => Seq[FileStat]): Staged = {
     fs.mkdirs(metaDir)
     val parentId = parent.map(_.snapshotId)
@@ -199,7 +225,7 @@ final class SnapshotTable(val root: String) {
     val dir = new Path(dataDir(id), attempt)
     val done = parent.fold(Seq.empty[Interval])(_.intervals)
     val snap = Snapshot(id, parentId, carryForward ++ write(dir),
-      completes.fold(done)(Interval.add(done, _)), bucketModulus)
+      completes.fold(done)(Interval.add(done, _)), hashBuckets)
     val tmp = new Path(metaDir, s".snap-$id-$attempt.tmp")
     val out = fs.create(tmp, false)
     try out.write(Json.mapper.writeValueAsBytes(snap)) finally out.close()
@@ -328,16 +354,13 @@ final class SnapshotTable(val root: String) {
     if (fs.listStatus(dir).isEmpty) fs.delete(dir, true)
   }
 
-  /** Parquet files under `dir`, recursively. `listStatus`, not `listFiles`:
-    * the latter's located statuses load each local file's owner and
-    * permissions, which measurably slowed every commit.
+  /** Parquet files in `dir` (every commit writes them flat). `listStatus`,
+    * not `listFiles`: the latter's located statuses load each local file's
+    * owner and permissions, which measurably slowed every commit.
     */
   private def listParquet(dir: Path): Seq[FileStatus] =
-    fs.listStatus(dir).toSeq.flatMap { s =>
-      if (s.isDirectory) listParquet(s.getPath)
-      else if (s.getPath.getName.endsWith(".parquet")) Seq(s)
-      else Nil
-    }.sortBy(_.getPath.toString)
+    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.toString)
 
   /** File stats for the manifest. A scheme-less root records plain absolute
     * paths (the form earlier manifests hold); a URI root records qualified

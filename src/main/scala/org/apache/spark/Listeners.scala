@@ -2,8 +2,9 @@ package org.apache.spark
 
 import scala.jdk.CollectionConverters._
 
-/** Specs' access to a SparkContext's listener bus, which is
-  * `private[spark]`.
+/** Access to a SparkContext's listener bus, which is `private[spark]`:
+  * specs and [[graft.Plans]] wait on it for the events of the jobs and
+  * queries they ran.
   */
 object Listeners {
   def classNames(sc: SparkContext): Seq[String] =

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -83,25 +82,12 @@ object PlanShape extends AdaptiveSparkPlanHelper {
     * writes included.
     */
   def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val result =
-      try {
-        val r = body
-        // listener events arrive asynchronously, on the bus thread
-        org.apache.spark.Listeners.drain(spark.sparkContext)
-        r
-      } finally spark.listenerManager.unregister(listener)
-    (result, plans.asScala.toSeq)
+    val (result, ran) = Plans.queryExecutions(spark)(body)
+    (result, ran.map(_.executedPlan))
   }
 
   /** Executed plans that write files. */
-  def writes(plans: Seq[SparkPlan]): Seq[SparkPlan] =
-    plans.filter(p => find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+  def writes(plans: Seq[SparkPlan]): Seq[SparkPlan] = plans.filter(Plans.isWrite)
 
   /** Run `df` to completion, then check its final executed plan. */
   def lateFetchViolations(df: DataFrame): String = {

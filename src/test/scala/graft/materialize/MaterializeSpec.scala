@@ -2,6 +2,8 @@ package graft.materialize
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -131,12 +133,12 @@ class MaterializeSpec extends SparkSpec {
     // nBuckets=4 — the mismatch must force a full rebucketing rewrite
     // (nothing carried), keep exact semantics, and re-enable scoped
     // upserts under the new modulus
-    assert(table.currentSnapshot.get.bucketModulus.contains(8))
+    assert(table.currentSnapshot.get.hashBuckets.contains(8))
     val preRebucket = table.currentSnapshot.get.files.map(_.path).toSet
     val b3 = Seq((2L, t(100), 2.5)).toDF("k", "ts", "v")
     Materialize.upsertLatestBucketed(table, b3, Seq("k"), "ts", nBuckets = 4)
     val snap3 = table.currentSnapshot.get
-    assert(snap3.bucketModulus.contains(4))
+    assert(snap3.hashBuckets.contains(4))
     assert(snap3.files.map(_.path).toSet.intersect(preRebucket).isEmpty,
       "files bucketed under modulus 8 were carried past a modulus-4 upsert")
     assert(rows(table.read(spark)) == latestOver(b1, b2, b3))
@@ -176,30 +178,128 @@ class MaterializeSpec extends SparkSpec {
     assert(table.read(spark).count() == 32L)
   }
 
-  test("bucket ids come from each file's own directory, not a bucket-like table root") {
-    import java.nio.file.Files
-    // the table root itself contains a `__bucket=1/` segment
-    val root = Files.createTempDirectory("graft_bucket_root_spec")
-    val table = graft.table.SnapshotTable(s"$root/__bucket=1/t")
-    val bucketOf = pmod(xxhash64(col("k")), lit(8L)).cast("int")
+  // the bucket function the upsert documents, for the long key `k`: the
+  // index of the partition that Spark's hash exchange on (k, n) into n
+  // partitions gives a row
+  private def bucketOf(n: Int) = pmod(hash(col("k"), lit(n)), lit(n))
 
-    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
-    Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8)
-    val files = table.currentSnapshot.get.files
-    // every file records the bucket its keys hash to; the buckets are all
-    // those the batch occupies, not the root's `1`
-    files.foreach { f =>
-      val got = spark.read.parquet(f.path).select(bucketOf).distinct()
+  /** Every file of `table`'s current snapshot holds only the bucket it records. */
+  private def assertOwnBuckets(table: graft.table.SnapshotTable, n: Int): Unit =
+    table.currentSnapshot.get.files.foreach { f =>
+      val got = spark.read.parquet(f.path).select(bucketOf(n)).distinct()
         .collect().map(_.getInt(0)).toSeq
       assert(got == f.bucket.toSeq, s"${f.path} recorded ${f.bucket}, holds $got")
     }
-    assert(files.flatMap(_.bucket).toSet ==
-      b1.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet)
 
-    // a following scoped upsert still equals latest-per-key over both batches
+  test("every file holds only its recorded bucket, also under a bucket- or part-named root") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_bucket_root_spec")
+    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
-    Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
-    assert(rows(table.read(spark)) == latestOver(b1, b2))
+    // the table root itself contains a `__bucket=1/` or a `part-00001-` segment
+    Seq("__bucket=1/t", "part-00001-x/t").foreach { sub =>
+      val table = graft.table.SnapshotTable(s"$root/$sub")
+      Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8)
+      assertOwnBuckets(table, 8)
+      // the buckets are all those the batch occupies, one file each
+      val files = table.currentSnapshot.get.files
+      assert(files.flatMap(_.bucket).sorted ==
+        b1.select(bucketOf(8)).distinct().collect().map(_.getInt(0)).toSeq.sorted)
+      // a following scoped upsert still equals latest-per-key over both batches
+      Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
+      assertOwnBuckets(table, 8)
+      assert(rows(table.read(spark)) == latestOver(b1, b2))
+    }
+  }
+
+  test("buckets stay whole when the shuffle partitions equal the bucket count, AQE coalescing on") {
+    // the merge's aggregate exchange is then HashPartitioning(k, 16) too: a
+    // keys-only bucket exchange would be dropped as redundant, and AQE would
+    // coalesce the aggregate's 16 small partitions into one write task
+    val settings = Map("spark.sql.shuffle.partitions" -> "16", "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
+    val saved = settings.keys.map(k => k -> spark.conf.getOption(k))
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val table = graft.table.SnapshotTable(
+        java.nio.file.Files.createTempDirectory("graft_bucket_aqe_spec").resolve("t").toString)
+      val b1 = (1L to 700L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+      val b2 = (650L to 750L).map(k => (k, t(k + 1), k * 2.0)).toDF("k", "ts", "v")
+      Seq(b1, b2).foreach { b =>
+        Materialize.upsertLatestBucketed(table, b, Seq("k"), "ts", nBuckets = 16)
+        assertOwnBuckets(table, 16)
+      }
+      assert(table.currentSnapshot.get.files.flatMap(_.bucket).sorted == (0 until 16))
+      assert(rows(table.read(spark)) == latestOver(b1, b2))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a key of a case-insensitive collation: each batch touches the buckets its keys land in") {
+    val table = graft.table.SnapshotTable(
+      java.nio.file.Files.createTempDirectory("graft_bucket_collation_spec").resolve("t").toString)
+    def batch(name: Long => String, min: Long, v: Double, ks: Seq[Long]) =
+      ks.map(k => (name(k), t(min), v)).toDF("k", "ts", "v")
+        .selectExpr("k COLLATE UTF8_LCASE AS k", "ts", "v")
+    // later batches name keys 1..5 in upper case, one key each, with newer
+    // rows: under the collation they are the stored keys, not new ones
+    Materialize.upsertLatestBucketed(table, batch(k => s"Key_$k", 1, 1.0, 1L to 40L), Seq("k"), "ts",
+      nBuckets = 8)
+    (1L to 5L).foreach(k =>
+      Materialize.upsertLatestBucketed(table, batch(k => s"KEY_$k", 2, 2.0, Seq(k)), Seq("k"), "ts",
+        nBuckets = 8))
+    val got = table.read(spark).collect().map(r => r.getString(0).toLowerCase -> r.getDouble(2))
+    assert(got.length == 40, s"${got.length} rows for 40 keys")
+    assert(got.toMap == (1L to 40L).map(k => s"key_$k" -> (if (k <= 5) 2.0 else 1.0)).toMap)
+  }
+
+  test("the upsert's write: one REPARTITION_BY_NUM exchange into the bucket count, no Sort after it") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.PlanShape
+    val table = graft.table.SnapshotTable(
+      java.nio.file.Files.createTempDirectory("graft_bucket_plan_spec").resolve("t").toString)
+    val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val (_, plans) = PlanShape.executedPlans(spark)(
+      Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8))
+    val Seq(write) = PlanShape.writes(plans)
+    val bucketExchanges = PlanShape.collect(write) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(bucketExchanges.map(_.outputPartitioning.numPartitions) == Seq(8))
+    def sorts(p: SparkPlan) = PlanShape.collect(p) { case s: SortExec => s }.size
+    assert(sorts(write) == sorts(bucketExchanges.head), "a Sort between the bucket exchange and the write")
+  }
+
+  test("a table in the xxhash64 `__bucket=` layout is rewritten whole by the next upsert") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_legacy_bucket_spec")
+    // the earlier layout: xxhash64 buckets as `__bucket=<b>/` dirs under the
+    // attempt dir, each file's bucket and the modulus in the manifest
+    val old = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
+    val attempt = root.resolve("t/data/000000001/a")
+    old.withColumn("__bucket", pmod(xxhash64(col("k")), lit(8L)).cast("int"))
+      .repartition(col("__bucket")).write.partitionBy("__bucket").parquet(attempt.toString)
+    val legacy = Files.walk(attempt).iterator.asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    val stats = legacy.map { p =>
+      val bucket = p.getParent.getFileName.toString.stripPrefix("__bucket=")
+      s"""{"path":"$p","rows":${spark.read.parquet(p.toString).count()},""" +
+        s""""bytes":${Files.size(p)},"bucket":$bucket}"""
+    }
+    Files.createDirectories(root.resolve("t/meta"))
+    Files.writeString(root.resolve("t/meta/snap-000000001.json"),
+      s"""{"snapshotId":1,"parentId":null,"bucketModulus":8,"files":[${stats.mkString(",")}]}""")
+
+    val table = graft.table.SnapshotTable(root.resolve("t").toString)
+    assert(table.currentSnapshot.get.hashBuckets.isEmpty)
+    val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
+    val s2 = Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8)
+    assert(s2.hashBuckets.contains(8))
+    assert(s2.files.map(f => Paths.get(f.path)).intersect(legacy).isEmpty, "a legacy file was carried")
+    assertOwnBuckets(table, 8)
+    assert(rows(table.read(spark)) == latestOver(old, b2))
   }
 
   test("a file:// URI root: commit, bucketed upsert, time travel, reference-aware expiry") {
@@ -235,14 +335,15 @@ class MaterializeSpec extends SparkSpec {
 
   test("upsertLatestBucketed jobs per call: an empty table and a bucket-scoped rewrite") {
     // fence on the write path's driver round trips: the touched-bucket
-    // collect, the merge-and-write, and the commit's own jobs
+    // collect (one stage), then the aggregate's and the bucket exchange's
+    // map stages and the write
     val root = java.nio.file.Files.createTempDirectory("graft_upsert_jobs")
     val table = graft.table.SnapshotTable(s"$root/t")
     val b1 = (1L to 40L).map(k => (k, t(k), k * 1.0)).toDF("k", "ts", "v")
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
     val (_, first) = jobsDuring(Materialize.upsertLatestBucketed(table, b1, Seq("k"), "ts", nBuckets = 8))
     val (_, second) = jobsDuring(Materialize.upsertLatestBucketed(table, b2, Seq("k"), "ts", nBuckets = 8))
-    assert((first, second) == (5, 5))
+    assert((first, second) == (4, 4))
   }
 
   test("upsertLatestBucketed without a bucket count: a small table is one file, a stored modulus stays") {
@@ -251,19 +352,19 @@ class MaterializeSpec extends SparkSpec {
     val b2 = Seq((1L, t(0), 9.9), (41L, t(41), 41.0)).toDF("k", "ts", "v")
     val small = graft.table.SnapshotTable(s"$root/small")
     val snaps = Seq(b1, b2).map(Materialize.upsertLatestBucketed(small, _, Seq("k"), "ts"))
-    assert(snaps.map(s => (s.files.size, s.bucketModulus)) == Seq((1, Some(1)), (1, Some(1))))
+    assert(snaps.map(s => (s.files.size, s.hashBuckets)) == Seq((1, Some(1)), (1, Some(1))))
     assert(rows(small.read(spark)) == rows(Materialize.latestPerKey(b1.union(b2), Seq("k"), "ts")))
 
     // a table written at 8 buckets keeps them: no rebucketing rewrite
     val kept = graft.table.SnapshotTable(s"$root/kept")
     val s1 = Materialize.upsertLatestBucketed(kept, b1, Seq("k"), "ts", nBuckets = 8)
     val s2 = Materialize.upsertLatestBucketed(kept, b2, Seq("k"), "ts")
-    assert(s2.bucketModulus == Some(8))
+    assert(s2.hashBuckets == Some(8))
     assert(s2.files.count(s1.files.contains) >= s1.files.size - 2, "untouched buckets carried")
 
     // the count doubles past 128 MB of stored bytes per bucket
     def stored(mb: Long, modulus: Option[Int]) = Some(graft.table.Snapshot(1L, None,
-      Seq(graft.table.FileStat("f", 1L, mb << 20)), bucketModulus = modulus))
+      Seq(graft.table.FileStat("f", 1L, mb << 20)), hashBuckets = modulus))
     assert(Materialize.derivedBuckets(None) == 1)
     assert(Seq(128L, 129L, 300L, 1024L).map(mb => Materialize.derivedBuckets(stored(mb, None))) ==
       Seq(1, 2, 4, 8))

@@ -76,12 +76,11 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("file stats: footer rows equal a scan of the file, bytes its length, plain and bucketed") {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.functions.col
     val table = SnapshotTable(Files.createTempDirectory("graft_file_stats").toString)
     val df = spark.range(0, 500).select(col("id").as("k"), (col("id") % 7).as("v"))
     val plain = table.commit(df, numFiles = 3)
-    val bucketed = table.commitBucketed(
-      df.withColumn("b", pmod(col("k"), lit(5L)).cast("int")), "b", modulus = 5)
+    val bucketed = table.commitBucketed(df, Seq("k"), modulus = 5)
     assert(plain.files.size == 3 && bucketed.files.size == 5)
     (plain.files ++ bucketed.files).foreach { f =>
       assert(spark.read.parquet(f.path).count() == f.rows, f.path)
