@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
 
-import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.fe.Windows
@@ -15,26 +14,18 @@ import graft.pit.{AsOfJoin, AsOfSpec}
 
 /** North-rule scaling-efficiency harness: the SAME end-to-end job (PIT as-of
   * join + windowed feature materialization over the tokenized-sequence
-  * table) at two parallelism levels on identical pre-written input, run via
-  * spark-submit, reporting sequences/sec at both plus
-  * efficiency = (rate_hi / rate_lo) / (cores_hi / cores_lo).
-  *
-  * The sandbox has no multi-node cluster, so N vs 4N executors is evidenced
-  * as N vs 4N cores — local[2] vs local[8], both under the VM's measured
-  * memory-bandwidth knee (see the report's hardware-probe section), with
-  * local[32] reported as an extra point. Each level runs in a fresh JVM
-  * (fresh codegen, fresh JIT — no cross-level warm-up bias); input parquet
-  * is generated once by `gen` so all levels read the same bytes.
+  * table) at several parallelism levels on identical pre-written input, run
+  * via spark-submit, one fresh JVM per level (fresh codegen, fresh JIT — no
+  * cross-level warm-up bias). Each `run` writes one JSON; tools/scaling_bench.sh
+  * prints efficiency = (rate_hi / rate_lo) / (cores_hi / cores_lo) and
+  * whether the levels' checksums agree.
   *
   * Modes:
   *   gen <dataDir> <nRows> <entities> <probes>   — write input tables
   *   run <dataDir> <cores> <outJson>             — timed end-to-end job
-  *   pack <dataDir> <cores> <subShards> <outJson> [aligned]
-  *                                               — timed sequence packing
-  *   report <loJson> <hiJson> <outMd>            — compose BENCH/BASELINE.md
   *
-  * Under spark-submit the session takes the submit's `--master`; `run` and
-  * `pack` size shuffle partitions themselves (fixed 64).
+  * Under spark-submit the session takes the submit's `--master`; `run`
+  * sizes shuffle partitions itself (fixed 64).
   */
 object ScalingBench {
 
@@ -44,19 +35,24 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: dataDir :: n :: entities :: probes :: Nil =>
-      gen(dataDir, n.toLong, entities.toInt, probes.toLong)
+      val spark = LocalSession()
+      try writeInput(spark, dataDir, n.toLong, entities.toInt, probes.toLong)
+      finally spark.stop()
+      println(s"[gen] wrote $n sequences / ~$probes probes to $dataDir")
     case "run" :: dataDir :: cores :: outJson :: Nil =>
       run(dataDir, cores.toInt, outJson)
-    case "pack" :: dataDir :: cores :: subShards :: outJson :: rest =>
-      runPack(dataDir, cores.toInt, subShards.toInt, outJson, rest.contains("aligned"))
-    case "report" :: lo :: hi :: outMd :: extras =>
-      report(lo, hi, outMd, extras)
     case other =>
-      sys.error(s"usage: gen|run|pack|report ..., got $other")
+      sys.error(s"usage: gen|run ..., got $other")
   }
 
-  def gen(dataDir: String, n: Long, entities: Int, probes: Long): Unit = {
-    val spark = LocalSession()
+  /** Write [[timedJob]]'s two input tables under `dataDir`: `n` token
+    * sequences over `entities` doc ids (doc_0 holds [[HotSharePct]] % of
+    * the rows, 10% duplicate timestamps, at most 64 tokens a row) and
+    * `probes / entities` probes per entity. The per-round bench contract
+    * and `gen` both write their input with it.
+    */
+  def writeInput(spark: SparkSession, dataDir: String, n: Long, entities: Int,
+      probes: Long): Unit = {
     TokenSeq.generate(spark, n, entities, maxTokens = 64,
         hotSharePct = HotSharePct, dupPct = 10)
       .repartition(128)
@@ -65,8 +61,6 @@ object ScalingBench {
     TokenSeq.entityProbes(spark, entities, perEntity, hotSharePct = HotSharePct)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$dataDir/probes")
-    println(s"[gen] wrote $n sequences / ~$probes probes to $dataDir")
-    spark.stop()
   }
 
   /** The timed job — the scale-shaped plan:
@@ -177,126 +171,5 @@ object ScalingBench {
     Files.write(Paths.get(outJson), json.getBytes(StandardCharsets.UTF_8))
     println(s"[run] $json")
     spark.stop()
-  }
-
-  /** Sequence-packing scaling probe: pack the generated table into
-    * 2048-token packs grouped by `source` (only 4 distinct values — the
-    * straggler regime that single-level packing cannot parallelize past 4
-    * tasks). `subShards = 1` measures the single-level ceiling;
-    * `subShards > 1` measures the two-level plan whose window runs
-    * 4 × subShards concurrent tasks. bit_xor checksum over the packed
-    * arrays proves the layout is identical across parallelism levels for a
-    * fixed subShards.
-    */
-  def runPack(dataDir: String, cores: Int, subShards: Int, outJson: String,
-      alignShards: Boolean = false): Unit = {
-    val spark = LocalSession(cores, Map("spark.sql.shuffle.partitions" -> "64"))
-    val seqs = spark.read.parquet(s"$dataDir/sequences")
-    val nRows = seqs.count() // warm FS metadata; not part of the timed job
-    val t0 = System.nanoTime()
-    val packed = graft.ops.Tokens.packGreedy(
-      seqs, Seq("source"), "seq_id", "tokens", "n_tok", seqLen = 2048,
-      subShards = subShards,
-      shardExpr = if (subShards > 1) Some(pmod(col("seq_id"), lit(subShards))) else None,
-      alignShards = alignShards)
-    val row = packed.agg(
-      count(lit(1)).as("packs"),
-      expr("bit_xor(xxhash64(packed))").as("checksum"),
-      sum(col("n_tok")).as("tok_sum")).head()
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    // empty input: bit_xor/sum aggregate to NULL — report packs=0 with null
-    // checksum instead of tripping getLong on a null cell
-    def optLong(i: Int): Option[Long] = if (row.isNullAt(i)) None else Some(row.getLong(i))
-    val json = Json.write(ListMap("cores" -> cores, "sub_shards" -> subShards,
-      "elapsed_sec" -> elapsed, "sequences" -> nRows, "packs" -> row.getLong(0),
-      "checksum" -> optLong(1), "tok_sum" -> optLong(2),
-      "sequences_per_sec" -> (nRows / elapsed)))
-    Files.createDirectories(Paths.get(outJson).toAbsolutePath.getParent)
-    Files.write(Paths.get(outJson), json.getBytes(StandardCharsets.UTF_8))
-    println(s"[pack] $json")
-    spark.stop()
-  }
-
-  def report(loJson: String, hiJson: String, outMd: String, extraJsons: Seq[String] = Nil): Unit = {
-    def field(j: JsonNode, k: String): Double = j.get(k).asDouble
-    // 64-bit values (checksum, probe_rows) must compare exactly — Double's
-    // 53-bit mantissa would silently equate checksums differing in low bits
-    def fieldLong(j: JsonNode, k: String): Long = j.get(k).asLong
-    def load(p: String) = Json.mapper.readTree(Files.readAllBytes(Paths.get(p)))
-    val lo = load(loJson)
-    val hi = load(hiJson)
-    val extras = extraJsons.map(load)
-    val (cLo, cHi) = (field(lo, "cores"), field(hi, "cores"))
-    val (rLo, rHi) = (field(lo, "sequences_per_sec"), field(hi, "sequences_per_sec"))
-    val eff = (rHi / rLo) / (cHi / cLo)
-    val checksumsAgree = (hi +: extras).forall(j =>
-      fieldLong(lo, "checksum") == fieldLong(j, "checksum") &&
-        fieldLong(lo, "probe_rows") == fieldLong(j, "probe_rows"))
-    val extraRows = extras.map(j =>
-      s"| local[${field(j, "cores").toInt}] | ${f"${field(j, "elapsed_sec")}%.1f"} | " +
-        s"${f"${field(j, "sequences_per_sec")}%.0f"} | (beyond the VM's memory-bandwidth knee, see below) |")
-      .mkString("\n")
-    val md =
-      s"""# BENCH/BASELINE — measured scaling evidence
-         |
-         |End-to-end job: read tokenized-sequence parquet (token column
-         |pruned from the scan) → PIT slot compaction (max-created per
-         |(doc_id, event_ts) + slot partials, map-side combined — the hot
-         |key compacts before the shuffle) → windowed FE (lag + exact
-         |trailing-1h rolling token sum, two-level over slot partials) →
-         |salted PIT as-of join of probe timestamps (ttl ${TtlSeconds}s,
-         |created-ts tie-break, hot key doc_0 = ${HotSharePct}% of rows and
-         |probes, salted ×$SaltBuckets) → late-materialized token fetch
-         |(shuffle-hash equi-join on seq_id — wide arrays never pass through
-         |a window sort) → checksum aggregate over the joined
-         |token arrays. Same input files, fresh JVM per level, via
-         |spark-submit (see tools/scaling_bench.sh).
-         |
-         || parallelism | elapsed (s) | sequences/sec | role |
-         ||---|---|---|---|
-         || local[${cLo.toInt}] | ${f"${field(lo, "elapsed_sec")}%.1f"} | ${f"$rLo%.0f"} | N |
-         || local[${cHi.toInt}] | ${f"${field(hi, "elapsed_sec")}%.1f"} | ${f"$rHi%.0f"} | 4N |
-         |$extraRows
-         |
-         |scaling efficiency (rate_${cHi.toInt} / rate_${cLo.toInt}) / ${(cHi / cLo).toInt}
-         |= **${f"$eff%.3f"}** (north-rule target ≥ 0.8)
-         |
-         |output checksums across all levels agree: $checksumsAgree
-         |(identical probe_rows + identical bit_xor(xxhash64(tokens, rolling))
-         |checksum ⇒ parallelism does not change results)
-         |
-         |## Why N=2 / 4N=8, with local[32] reported as an extra point
-         |
-         |This sandbox is a single VM; N vs 4N *executors* is evidenced as N
-         |vs 4N cores on identical input (driver-sanctioned proxy). A direct
-         |hardware probe shows the VM's memory subsystem collapses under
-         |32-thread memory-heavy load — a parallel 256 MB copy benchmark
-         |sustains 3.7 GB/s aggregate at 2 workers and 15.7 GB/s at 8, but
-         |only 1.2 GB/s at 32 workers — so above ~8-16 threads *any*
-         |scan/shuffle workload on this box is bandwidth-starved regardless
-         |of engine. The N→4N comparison is therefore taken in the regime
-         |where the hardware itself scales (2 → 8 cores); the local[32] row
-         |shows the same job and same checksum beyond the knee. On a real
-         |multi-executor cluster each executor brings its own memory
-         |channels, which is exactly what this VM cannot emulate.
-         |
-         |## Run parameters
-         |
-         |${field(lo, "sequences").toLong} sequences (~6 GB parquet, avg 32
-         |tokens/row), 50,000 entities, ${field(lo, "probe_rows").toLong}
-         |probe rows; `spark.sql.shuffle.partitions=64` fixed across levels
-         |(identical physical plans — cores only change concurrent task
-         |slots); 16 GB heap per JVM (measured: a 64 GB G1 heap with 32
-         |mutator threads degrades the same job 2-6×; size the single-JVM
-         |heap like a real per-executor heap). The N-core point carries the
-         |most run-to-run variance (it holds 64 partitions' state longer per
-         |core, paying more GC/page-cache churn per task than the 4N run),
-         |so the efficiency number moves a few points between runs — values
-         |slightly above 1.0 have occurred and mean nothing more than that
-         |variance.
-         |""".stripMargin
-    Files.createDirectories(Paths.get(outMd).toAbsolutePath.getParent)
-    Files.write(Paths.get(outMd), md.getBytes(StandardCharsets.UTF_8))
-    println(md)
   }
 }

@@ -160,26 +160,21 @@ object TextStats {
     * ranking so ordering is reproducible cross-engine (ln differs by ulps
     * between libms).
     *
-    * `broadcastDf` gates the df-table join: the vocabulary of curated text
-    * is usually broadcast-sized, but raw web text is hapax-heavy (typos,
-    * URLs, ids — vocabulary grows ~linearly with the corpus), and a forced
-    * broadcast of a billion-term table is a driver OOM. Set false at that
-    * scale: tf and docFreq share the `term` hash partitioning, so the
-    * fallback shuffle join re-uses tf's exchange — same calculus as
-    * lmPerplexity's buckets-size gate.
+    * The df table joins back broadcast: the vocabulary of curated text is
+    * usually broadcast-sized. Raw web text is hapax-heavy (vocabulary grows
+    * ~linearly with the corpus), and a billion-term broadcast is a driver
+    * OOM.
     */
   def tfIdfTopTerms(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int,
-      broadcastDf: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val terms = df.select(col(idCol),
         explode(filter(split(lower(trim(col(textCol))), "\\s+"), w => length(w) > 0)).as("term"))
     val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val docFreq0 = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val docFreq = if (broadcastDf) broadcast(docFreq0) else docFreq0
+    val docFreq = broadcast(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
     val n = df.select(count(lit(1)).as("__n"))
     val scored = tf
       .join(docFreq, Seq("term"))
@@ -256,16 +251,12 @@ object TextStats {
     *
     * Shape at scale: the corpus is scanned ONCE into a compact
     * (doc, b1, b2, count) frame — it feeds both the model and the scoring,
-    * so by default it is localCheckpoint'ed (eager): materialized to
-    * executor-local blocks whose storage is released when the frame is
-    * GC'd, unlike `cache()`, which pins a relation in the storage layer for
-    * the session lifetime (repeated Verify/Bench calls would accumulate).
-    * At corpus scales where even the compact frame shouldn't sit in
-    * block storage, pass `persistIntermediate = false` and stage the input
-    * through a [[graft.table.SnapshotTable]] instead — the bigram scan then
-    * runs twice but nothing is pinned; the reference model is two
-    * map-side-combinable aggregates
-    * over it (≤ buckets² pair rows, ≤ buckets context rows). The model
+    * so it is localCheckpoint'ed (eager): materialized to executor-local
+    * blocks whose storage is released when the frame is GC'd, unlike
+    * `cache()`, which pins a relation in the storage layer for the session
+    * lifetime (repeated Verify/Bench calls would accumulate). The reference
+    * model is two map-side-combinable aggregates over it (≤ buckets² pair
+    * rows, ≤ buckets context rows). The model
     * joins back BROADCAST only while buckets² stays broadcast-sized
     * (≤ 2048 buckets ⇒ ≤ 4M pair cells); above that it is a plain shuffle
     * equi-join on (b1, b2) — the same size-gate calculus as
@@ -278,8 +269,7 @@ object TextStats {
       textCol: String,
       isRef: Column,
       buckets: Int,
-      seed: Long,
-      persistIntermediate: Boolean = true): DataFrame = {
+      seed: Long): DataFrame = {
     require(buckets > 0, "buckets > 0")
     import graft.functions.Mix61
     val ws = filter(split(col(textCol), "\\s+"), w => length(w) > 0)
@@ -289,13 +279,13 @@ object TextStats {
         zip_with(slice(bs, lit(1), size(bs) - 1), slice(bs, lit(2), size(bs) - 1),
           (a, b) => struct(a.as("b1"), b.as("b2"))))
       .otherwise(array().cast("array<struct<b1:bigint,b2:bigint>>"))
-    val perDoc0 = df
+    val perDoc = df
       .select(col(idCol), isRef.as("__r"), explode(prs).as("__p"))
       .select(col(idCol), col("__r"),
         col("__p.b1").as("__b1"), col("__p.b2").as("__b2"))
       .groupBy(col(idCol), col("__b1"), col("__b2"))
       .agg(count(lit(1)).as("__c"), max(col("__r")).as("__r"))
-    val perDoc = if (persistIntermediate) perDoc0.localCheckpoint() else perDoc0
+      .localCheckpoint()
     val refPairs0 = perDoc.where(col("__r"))
       .groupBy(col("__b1"), col("__b2")).agg(sum(col("__c")).as("__cp"))
     val refCtx0 = refPairs0.groupBy(col("__b1")).agg(sum(col("__cp")).as("__cc"))

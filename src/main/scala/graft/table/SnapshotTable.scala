@@ -190,8 +190,9 @@ final class SnapshotTable(val root: String) {
     * hash-partitioned on `keys` into `modulus` partitions and written with
     * no sort, so write task `b` holds exactly bucket `b`
     * ([[SnapshotTable.bucketOf]]) and names its file `part-<b>-...`; each
-    * [[FileStat]] records that index as its bucket (zero-row files are left
-    * out). `carryForward` file stats from the PARENT snapshot are
+    * [[FileStat]] records that index as its bucket (zero-row files, which
+    * Spark's task 0 leaves for an empty bucket 0, are deleted before the
+    * publish). `carryForward` file stats from the PARENT snapshot are
     * re-referenced verbatim — those files are never copied or rewritten;
     * the new manifest just points at them. Snapshots may therefore SHARE
     * data files ([[expireSnapshots]] is reference-aware). `parent` is the
@@ -206,8 +207,10 @@ final class SnapshotTable(val root: String) {
     publish(stage(parent, None, Some(modulus), carryForward) { dir =>
       df.repartition(modulus, SnapshotTable.bucketCols(keys, modulus): _*)
         .write.mode("errorifexists").parquet(dir.toString)
-      listParquet(dir).map(s => fileStat(s, Some(SnapshotTable.partIndex(s.getPath.getName))))
-        .filter(_.rows > 0)
+      listParquet(dir).flatMap { s =>
+        val f = fileStat(s, Some(SnapshotTable.partIndex(s.getPath.getName)))
+        if (f.rows > 0) Some(f) else { fs.delete(s.getPath, false); None }
+      }
     })
 
   /** Write one commit attempt of snapshot `parent + 1`: `write` fills the

@@ -116,6 +116,13 @@ class MaterializeSpec extends SparkSpec {
     assert(rewritten.nonEmpty && carried.nonEmpty)
     assert(rewritten.size < snap1.files.size,
       s"rewrote ${rewritten.size} of ${snap1.files.size} files — not scoped")
+    // snapshot 2's attempt dir holds exactly its manifest's new files: an
+    // empty bucket 0's zero-row part file does not stay behind
+    val attempts = Files.list(Paths.get(s"$root/bucketed/data/000000002")).iterator.asScala.toSeq
+    assert(attempts.size == 1)
+    val written = Files.list(attempts.head).iterator.asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSet
+    assert(written == rewritten, s"attempt dir holds ${written -- rewritten} beyond the manifest")
     carried.foreach(p => assert(sha(p) == before(p), s"carried file mutated: $p"))
     // read-back equals latest-per-key over both batches (stale row lost)
     assert(rows(table.read(spark)) == latestOver(b1, b2))

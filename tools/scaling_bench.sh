@@ -2,7 +2,8 @@
 # North-rule scaling evidence: same job, same input, local[2] vs local[8]
 # (N vs 4N cores, both below the VM's memory-bandwidth knee), plus local[32]
 # as an extra beyond-the-knee data point; each level a fresh spark-submit
-# JVM. Writes BENCH/BASELINE.md. spark-submit comes from $SPARK_HOME; the
+# JVM. Prints the local[8]/local[2] efficiency and whether every level's
+# checksum agrees (exit 1 if not). spark-submit comes from $SPARK_HOME; the
 # driver heap is $SPARK_DRIVER_MEM (default 16g).
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -45,9 +46,17 @@ fi
 submit 2  run "$DATA" 2  "$DATA/run2.json"
 submit 8  run "$DATA" 8  "$DATA/run8.json"
 submit 32 run "$DATA" 32 "$DATA/run32.json"
-# single-run report goes to a scratch file: BENCH/BASELINE.md carries the
-# hand-merged PAIRED-median table across sessions — merge new pairs into it
-# rather than overwriting (a round-3 regen once clobbered the protocol
-# section and pair history)
-submit 1  report "$DATA/run2.json" "$DATA/run8.json" BENCH/BASELINE_lastrun.md "$DATA/run32.json"
-echo "wrote BENCH/BASELINE_lastrun.md — merge the new pair into BENCH/BASELINE.md's table"
+# one run per level: BENCH/BASELINE.md carries the hand-merged PAIRED-median
+# table across sessions — merge a new pair into it rather than overwriting
+python3 - "$DATA/run2.json" "$DATA/run8.json" "$DATA/run32.json" <<'PY'
+import json, sys
+runs = [json.load(open(p)) for p in sys.argv[1:]]
+for r in runs:
+    print(f"local[{r['cores']}]: {r['elapsed_sec']:.1f} s, {r['sequences_per_sec']:.0f} sequences/s")
+lo, hi = runs[0], runs[1]
+eff = (hi["sequences_per_sec"] / lo["sequences_per_sec"]) / (hi["cores"] / lo["cores"])
+print(f"scaling efficiency local[{hi['cores']}] / local[{lo['cores']}]: {eff:.3f} (north-rule target >= 0.8)")
+agree = all((r["checksum"], r["probe_rows"]) == (lo["checksum"], lo["probe_rows"]) for r in runs)
+print(f"checksums agree across levels: {agree}")
+sys.exit(0 if agree else 1)
+PY
